@@ -129,7 +129,13 @@ object BenchExtra {
           }
         }
         spark.sparkContext.addSparkListener(sl)
-        val joinSec = (1 to 3).map(_ => t("full_join")(Bench.timeJoin(pts, covers))).min
+        // the log keeps the stages of the last repetition only
+        val joinSec = (1 to 3).map { _ =>
+          org.apache.spark.sql.graft.shim.drainListenerBus(spark)
+          stageLog.synchronized(stageLog.clear())
+          t("full_join")(Bench.timeJoin(pts, covers))
+        }.min
+        org.apache.spark.sql.graft.shim.drainListenerBus(spark)
         spark.sparkContext.removeSparkListener(sl)
         stageLog.foreach { case (id, nm, nt, run, wall) =>
           System.err.println(f"[stage] $id%4d $nm%-60s tasks=$nt%3d execRunMs=$run%7d wallMs=$wall%6d")
@@ -275,13 +281,14 @@ object BenchExtra {
         }
         spark.sparkContext.addSparkListener(sl)
         for (rep <- 1 to 2) {
-          stageLog.clear()
+          org.apache.spark.sql.graft.shim.drainListenerBus(spark)
+          stageLog.synchronized(stageLog.clear())
           SparkEntry.clearDupPairsMemo()
           spark.catalog.clearCache()
           val t0 = System.nanoTime()
           SparkEntry.queries(name)(spark, sfDir).count()
           val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300) // let stage-completed events drain
+          org.apache.spark.sql.graft.shim.drainListenerBus(spark)
           val (nstages, runMs, wallMs) = stageLog.synchronized {
             (stageLog.length, stageLog.map(_._3).sum, stageLog.map(_._4).sum)
           }

@@ -19,7 +19,9 @@ import graft.core.Htm
 object KernelBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 8000000L
-    def time(): Double = {
+    // descent depth: 27 is the full level-26 encode, 6 the prefix
+    // descent behind a level-6 join key (Htm.latLonToSidPrefix)
+    def time(depth: Int): Double = {
       var sink = 0L
       val t0 = System.nanoTime()
       var j = 0L
@@ -27,14 +29,16 @@ object KernelBench {
         val la = math.toRadians(-39.0 + (j % 7789) / 100.0)
         val lo = math.toRadians(-179.0 + (j % 35617) / 100.0)
         sink ^= Htm.xyzToSidScalar(
-          math.cos(la) * math.cos(lo), math.cos(la) * math.sin(lo), math.sin(la), 26)
+          math.cos(la) * math.cos(lo), math.cos(la) * math.sin(lo), math.sin(la), math.min(depth, 26), depth)
         j += 1
       }
       if (sink == 42L) System.err.println("") // keep the loop alive
       (System.nanoTime() - t0) / 1e9
     }
-    time() // warm-up
-    val sec = (1 to 3).map(_ => time()).min
-    println(f"""{"n":$n,"encode_sec":$sec%.3f,"encode_mrows_per_sec_core":${n / sec / 1e6}%.2f}""")
+    time(27); time(6) // warm-up
+    val sec = (1 to 3).map(_ => time(27)).min
+    val prefixSec = (1 to 3).map(_ => time(6)).min
+    println(f"""{"n":$n,"encode_sec":$sec%.3f,"encode_mrows_per_sec_core":${n / sec / 1e6}%.2f,""" +
+      f""""prefix6_sec":$prefixSec%.3f,"prefix6_mrows_per_sec_core":${n / prefixSec / 1e6}%.2f}""")
   }
 }

@@ -22,10 +22,17 @@ package graft.core
   *     c2=(v2,w1,w0), c3=(w0,w1,w2).
   *   - Point location: strict half-space tests (reject when
   *     cross(a,b)·p < 0, no epsilon), children tried in order 0,1,2 and
-  *     3 as the fallback. The descent always runs the full 27 levels;
-  *     the requested level only stamps the low 5 bits (verified: level-27
+  *     3 as the fallback. A full encode descends all 27 levels; the
+  *     requested level only stamps the low 5 bits (verified: level-27
   *     and level-20 encodes of one point share all location bits,
   *     spatial_conversions.py:216-221,261-266).
+  *   - Prefix property: descent step i depends only on steps 0..i-1, so
+  *     a descent stopped after L steps yields exactly the location bits
+  *     a full encode keeps above level L:
+  *     latLonToSidPrefix(lat, lon, L) == clearTo(latLonToSid(lat, lon, k), L)
+  *     for every k. The fused clear-of-encode join key
+  *     (StareClearToExpression over a literal-level stare_sid) uses it
+  *     to run L steps instead of 27.
   */
 object Htm {
   final val RotationDelta = -1.2e-8
@@ -88,6 +95,15 @@ object Htm {
     xyzToSidScalar(math.cos(la) * math.cos(lo), math.cos(la) * math.sin(lo), math.sin(la), level)
   }
 
+  /** lat/lon (degrees) -> the level-L trixel that contains the point
+    * (location bits finer than L zero, level field L): bit-equal to
+    * clearing a full encode to L, at L of the 27 descent steps. */
+  def latLonToSidPrefix(lat: Double, lon: Double, level: Int): Long = {
+    val la = math.toRadians(lat); val lo = math.toRadians(lon)
+    xyzToSidScalar(math.cos(la) * math.cos(lo), math.cos(la) * math.sin(lo), math.sin(la),
+      level, depth = level)
+  }
+
   def xyzToSid(p: Array[Double], level: Int): Long = xyzToSidScalar(p(0), p(1), p(2), level)
 
   /** (cross(a,b))·p with the exact operation order of the array-based
@@ -100,8 +116,11 @@ object Htm {
   /** Allocation-free encode: the hot path at scale. The boxed/array
     * variant allocated ~80 small arrays per call (3 normalized midpoints
     * x 27 levels) and made the encode phase GC-bound — measured SLOWER
-    * on 32 cores than on 8. Arithmetic is identical op-for-op. */
-  def xyzToSidScalar(px: Double, py: Double, pz: Double, level: Int): Long = {
+    * on 32 cores than on 8. Arithmetic is identical op-for-op.
+    * `depth` (0..27) bounds the descent; location bits below it stay
+    * zero (see the prefix property in the header). */
+  def xyzToSidScalar(px: Double, py: Double, pz: Double, level: Int,
+                     depth: Int = Sid.MaxLevel): Long = {
     var v0x = 0.0; var v0y = 0.0; var v0z = 0.0
     var v1x = 0.0; var v1y = 0.0; var v1z = 0.0
     var v2x = 0.0; var v2y = 0.0; var v2z = 0.0
@@ -124,7 +143,7 @@ object Htm {
     v2x = verts(fc(2))(0); v2y = verts(fc(2))(1); v2z = verts(fc(2))(2)
     var loc: Long = face.toLong
     var lev = 0
-    while (lev < Sid.MaxLevel) {
+    while (lev < depth) {
       // normalized midpoints, same op order as mid()
       var x = v1x + v2x; var y = v1y + v2y; var z = v1z + v2z
       var n = math.sqrt(x * x + y * y + z * z)
@@ -157,7 +176,7 @@ object Htm {
       loc = (loc << 2) | child
       lev += 1
     }
-    (loc << 5) | level
+    (loc << (5 + 2 * (Sid.MaxLevel - depth))) | level
   }
 
   /** Corner vertices (unit xyz) of a sid's trixel, at its own level. */

@@ -1,10 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.sql.graft.shim
+import org.apache.spark.sql.catalyst.expressions.graft.codegenShim
 
 /** Native Catalyst expressions for the hot kernels (SURVEY.md §4.3.2:
   * promote UDF hot paths to codegen expressions). Unlike a Scala UDF,
@@ -35,8 +38,70 @@ case class StareSidExpression(first: Expression, second: Expression, third: Expr
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-/** sid -> temporal-style clear to own level (dynamic-level variant of the
-  * clear; the fixed-level variant is pure bit-ops already). */
+/** sid -> the level-L trixel containing it: (sid & clearMask(L)) | L,
+  * the fixed-level clear behind every prefix equi-join key.
+  *
+  * Fused prefix encode: when the child is a literal-level stare_sid
+  * (pointJoin's key after CollapseProject is
+  * knownnotnull(stare_clear_to(stare_sid(lat, lon, 26), 6))), eval and
+  * codegen skip the child and run the descent for L levels only
+  * (Htm.latLonToSidPrefix): bit-equal to the clear of the full encode,
+  * since the clear drops every deeper bit. A child already computed as
+  * a common subexpression is reused instead. */
+case class StareClearToExpression(child: Expression, level: Int) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "stare_clear_to"
+  override def sql: String = s"$prettyName(${child.sql}, $level)"
+
+  private val mask = graft.core.Sid.clearMask(level)
+
+  /** (lat, lon) of a literal-level encode child the clear can fuse with */
+  @transient private lazy val fused: Option[(Expression, Expression)] = child match {
+    case StareSidExpression(lat, lon, lv)
+        if level >= 0 && level <= graft.core.Sid.MaxLevel && lv.foldable && lv.eval() != null =>
+      Some((lat, lon))
+    case _ => None
+  }
+
+  override def eval(input: InternalRow): Any = fused match {
+    case Some((lat, lon)) =>
+      val la = lat.eval(input)
+      if (la == null) null
+      else {
+        val lo = lon.eval(input)
+        if (lo == null) null
+        else graft.core.Htm.latLonToSidPrefix(la.asInstanceOf[Double], lo.asInstanceOf[Double], level)
+      }
+    case None => super.eval(input)
+  }
+
+  override protected def nullSafeEval(sid: Any): Any = (sid.asInstanceOf[Long] & mask) | level
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = fused match {
+    case Some((lat, lon)) if !codegenShim.isSubexpression(ctx, child) =>
+      val la = lat.genCode(ctx)
+      val lo = lon.genCode(ctx)
+      ev.copy(code = code"""
+        ${la.code}
+        boolean ${ev.isNull} = ${la.isNull};
+        long ${ev.value} = -1L;
+        if (!${ev.isNull}) {
+          ${lo.code}
+          ${ev.isNull} = ${lo.isNull};
+          if (!${ev.isNull}) {
+            ${ev.value} = graft.core.Htm.latLonToSidPrefix(${la.value}, ${lo.value}, $level);
+          }
+        }""")
+    case _ => defineCodeGen(ctx, ev, sid => s"(($sid) & ${mask}L) | ${level}L")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** sid -> temporal-style clear to own level (dynamic-level variant of
+  * StareClearToExpression). */
 case class StareClearExpression(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
@@ -79,6 +144,9 @@ object NativeExpressions {
     shim.column(StareSidExpression(
       shim.expression(lat.cast("double")), shim.expression(lon.cast("double")),
       shim.expression(level.cast("int"))))
+
+  def stareClearToNative(sid: Column, level: Int): Column =
+    shim.column(StareClearToExpression(shim.expression(sid.cast("long")), level))
 
   def stareClearNative(sid: Column): Column =
     shim.column(StareClearExpression(shim.expression(sid.cast("long"))))

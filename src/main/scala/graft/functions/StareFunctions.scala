@@ -6,10 +6,11 @@ import graft.core.{Cover, Geo, Htm, Sid, Tiv}
 
 /** Column-level STARE function library (SURVEY.md §2.5/§2.6).
   *
-  * Design: pure bit-field algebra (level/clear/coerce/location/interval
+  * Design: pure bit-field algebra (level/coerce/location/interval
   * bounds) is expressed with native Catalyst bitwise expressions so it
   * stays inside whole-stage codegen and remains usable in partition /
-  * zone-map pruning predicates. Loop-heavy kernels (HTM descent, cover
+  * zone-map pruning predicates; the fixed-level clear and the hot
+  * kernels are native codegen expressions. Loop-heavy kernels (cover
   * generation, trixel geometry, TIV calendar math) are Scala UDFs over
   * primitives — one JVM call per row, no Python boundary.
   */
@@ -24,9 +25,10 @@ object StareFunctions {
   def stareLocation(sid: Column): Column = sid.bitwiseAND(lit(Sid.LocMask))
 
   /** clear location bits below `level` and stamp the level field —
-    * the canonical equi-join / partition key. Native when level is a literal. */
+    * the canonical equi-join / partition key. One native expression,
+    * fused with a literal-level stareSid child into a prefix encode. */
   def stareClearTo(sid: Column, level: Int): Column =
-    sid.bitwiseAND(lit(Sid.clearMask(level))).bitwiseOR(lit(level.toLong))
+    NativeExpressions.stareClearToNative(sid, level)
 
   /** pod / partition id at a level: cleared location only. */
   def starePod(sid: Column, level: Int): Column =
@@ -259,7 +261,15 @@ object StareFunctions {
       ("stare_sid", 3, c(cs => NativeExpressions.stareSidNative(cs(0), cs(1), cs(2)))),
       ("stare_clear", 1, c(cs => stareClearToOwn(long(cs(0))))),
       ("stare_level", 1, c(cs => stareLevel(long(cs(0))))),
-      ("stare_clear_to", 2, c(cs => clearToDynUdf(long(cs(0)), int(cs(1))))),
+      // a foldable level takes the native (fusable) clear; a per-row
+      // level the UDF
+      ("stare_clear_to", 2, exprs => {
+        val level = if (!exprs(1).foldable) null
+          else org.apache.spark.sql.catalyst.expressions.Cast(
+            exprs(1), org.apache.spark.sql.types.IntegerType).eval()
+        if (level == null) c(cs => clearToDynUdf(long(cs(0)), int(cs(1))))(exprs)
+        else c(cs => stareClearTo(cs(0), level.asInstanceOf[Int]))(exprs)
+      }),
       ("stare_coerce", 2, c(cs =>
         long(cs(0)).bitwiseAND(lit(~Sid.LevelMask)).bitwiseOR(long(cs(1))))),
       ("stare_hex", 1, c(cs => stareHex(long(cs(0))))),

@@ -430,6 +430,14 @@ object Skew {
       else if (estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap)
         (rightRows.hint("shuffle_hash"), false)
       else (rightRows, false)
+    // The full-row keyed right side (right row columns attached to each
+    // keyed cell) has keyedRightRows rows, each carrying the whole right
+    // payload: a few rows with giant covers are small as rows but huge
+    // once keyed. Saturating, like rebaseCostTo.
+    val estRightFullBytes =
+      if (keyedRightRows > Long.MaxValue / rowBytesEst) Long.MaxValue
+      else keyedRightRows * rowBytesEst
+    val rightFullShjOk = estRightFullBytes / math.max(1, shufflePartitions) <= shjBuildCap
     // base levels probed unconditionally; split-child levels already in
     // the base set are matched by the base key (no gated duplicate — a
     // duplicate key value would double pairs); levels introduced ONLY
@@ -512,8 +520,7 @@ object Skew {
     // AQE's skew-join splitter still handles residual imbalance on the
     // non-broadcast strategies
     how match {
-      case "inner" if !assembleBroadcast &&
-        estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap =>
+      case "inner" if !assembleBroadcast && rightFullShjOk =>
         // Full-row keyed right (r6, guide §2.3/§8): when the join-back
         // cannot broadcast, assembling by row id re-SHUFFLES the entire
         // joined output (24M rows at the bench — its single largest
@@ -577,10 +584,10 @@ object Skew {
           .join(rBuild, col("__rid") === col("key_right"), "inner")
           .drop("__rid")
         val rightFull =
-          if (assembleBroadcast) org.apache.spark.sql.functions.broadcast(rightFullPlain)
-          else if (estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap)
-            rightFullPlain.hint("shuffle_hash")
-          else rightFullPlain
+          if (bcastThreshold > 0 && estRightFullBytes <= bcastThreshold)
+            org.apache.spark.sql.functions.broadcast(rightFullPlain)
+          else if (rightFullShjOk) rightFullPlain.hint("shuffle_hash")
+          else rightFullPlain // sort-merge: spills gracefully over both caps
         val out = l.withColumn("__lk", keyExprsFor(col(lSid)).head)
           .join(rightFull, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "left")
           .drop("__lk", "__rk")

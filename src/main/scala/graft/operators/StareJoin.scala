@@ -111,31 +111,39 @@ object StareJoin {
     // applies on the small-probe branch too — a handful of very fat
     // rows (huge text/sid payloads) must not reach the driver either.
     // Over either cap we delegate to the shuffle-path join, which
-    // shares the output contract.
+    // shares the output contract. A right frame that is already a
+    // driver-resident LocalRelation (covers built with toDF) needs no
+    // guard: its collect() plans no Spark job, so it is collected
+    // outright and only the caps are checked.
     val spark = left.sparkSession
     val probeCap = math.min(1000, maxBroadcastRows)
     val maxBroadcastBytes = 512L * 1024 * 1024
-    // persist only when the caller hasn't: an unconditional persist +
-    // unpersist would silently DROP a caller's own cache (KnnJoin
-    // persists its reusable sides across rounds)
-    val weCached = right.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (weCached) right.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def fits(sample: Array[org.apache.spark.sql.Row], n: Long): Boolean =
+      n <= maxBroadcastRows && approxRowBytes(sample) * n <= maxBroadcastBytes
+    def shuffled: DataFrame = Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
+      how = how, knownMinLeftLevel = knownMinLeftLevel)
     val collected: Array[org.apache.spark.sql.Row] =
-      try {
-        val probe = right.limit(probeCap + 1).collect()
-        if (probe.length <= probeCap) {
-          if (approxRowBytes(probe) * probe.length > maxBroadcastBytes)
-            return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
-              how = how, knownMinLeftLevel = knownMinLeftLevel)
-          probe
-        } else {
-          val n = right.count()
-          if (n > maxBroadcastRows || approxRowBytes(probe) * n > maxBroadcastBytes)
-            return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
-              how = how, knownMinLeftLevel = knownMinLeftLevel)
-          right.collect()
-        }
-      } finally if (weCached) right.unpersist(false)
+      if (org.apache.spark.sql.graft.shim.isLocalRelation(right)) {
+        val rows = right.collect()
+        if (!fits(rows, rows.length)) return shuffled
+        rows
+      } else {
+        // persist only when the caller hasn't: an unconditional persist +
+        // unpersist would silently DROP a caller's own cache (KnnJoin
+        // persists its reusable sides across rounds)
+        val weCached = right.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+        if (weCached) right.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val probe = right.limit(probeCap + 1).collect()
+          if (probe.length <= probeCap) {
+            if (!fits(probe, probe.length)) return shuffled
+            probe
+          } else {
+            if (!fits(probe, right.count())) return shuffled
+            right.collect()
+          }
+        } finally if (weCached) right.unpersist(false)
+      }
     // The cover side fits in a broadcast, so assign row ids
     // on the driver: deterministic across every reuse of the frame (no
     // monotonically_increasing_id re-evaluation hazard) and no lingering
@@ -149,15 +157,6 @@ object StareJoin {
         }: _*)
       spark.createDataFrame(rows, schema)
     }
-    // compress each cover first: canonical covers are non-nested, so a
-    // point matches at most one cover sid per right row — no pair dedup
-    // (and hence no join-back on a big-side row id) is ever needed.
-    val rightKeyed = rightRows
-      .withColumn("__cs", stareCompress(col(rightSids)))
-      .select(col("key_right").as("__rid"), explode(col("__cs")).as("__rs"))
-      .withColumn(RKey, stareClearToOwn(col("__rs")))
-      .select(col("__rid"), col(RKey))
-
     // cover cells per collected row, computed ONCE on the driver: they
     // feed the key set, the level set, and the per-ROW expansion budget
     // (a Spark distinct() job here re-evaluated the cover side again)
@@ -297,6 +296,14 @@ object StareJoin {
       return assemble(joined, rightRows, how, broadcastRight = true)
     }
 
+    // compress each cover first: canonical covers are non-nested, so a
+    // point matches at most one cover sid per right row — no pair dedup
+    // (and hence no join-back on a big-side row id) is ever needed.
+    val rightKeyed = rightRows
+      .withColumn("__cs", stareCompress(col(rightSids)))
+      .select(col("key_right").as("__rid"), explode(col("__cs")).as("__rs"))
+      .withColumn(RKey, stareClearToOwn(col("__rs")))
+      .select(col("__rid"), col(RKey))
     val joined = if (how == "inner") {
       // hot path: pure-native explode of the ancestor keys (one CASE+bit
       // op per cover level, whole-stage codegen, zero allocation) and an
@@ -324,15 +331,17 @@ object StareJoin {
   }
 
   /** Rough in-memory width of a collected row (bytes) — drives the
-    * dictionary-plan byte budget. Samples <= ~100 rows evenly. */
+    * dictionary-plan byte budget. Samples <= ~100 rows evenly. Array
+    * columns arrive as mutable ArraySeqs, hence the general collection
+    * types. */
   private[operators] def approxRowBytes(rows: Array[org.apache.spark.sql.Row]): Long = {
     if (rows.isEmpty) return 16L
     def sz(v: Any): Long = v match {
       case null          => 8L
       case s: String     => 40L + 2L * s.length
-      case a: Seq[_]     => 40L + a.iterator.map(sz).sum
+      case a: scala.collection.Seq[_] => 40L + a.iterator.map(sz).sum
       case a: Array[_]   => 40L + a.iterator.map(sz).sum
-      case m: Map[_, _]  => 48L + m.iterator.map { case (k, w) => sz(k) + sz(w) }.sum
+      case m: scala.collection.Map[_, _] => 48L + m.iterator.map { case (k, w) => sz(k) + sz(w) }.sum
       case r: org.apache.spark.sql.Row => 16L + r.toSeq.iterator.map(sz).sum
       case _             => 8L
     }

@@ -95,6 +95,22 @@ object shim {
     }
   }
 
+  /** True when the frame's optimized plan is a driver-resident
+    * LocalRelation (a `toDF`/`createDataFrame` of local rows): its
+    * collect() returns the rows without planning a Spark job. Optimizes
+    * a fresh query execution: forcing the frame's own would freeze its
+    * cache lookup before a later persist(). */
+  def isLocalRelation(df: DataFrame): Boolean = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    ds.sparkSession.sessionState.executePlan(ds.logicalPlan).optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+  }
+
+  /** Wait until every event posted so far has reached the listeners
+    * (the listener bus is private to Spark). */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession, timeoutMs: Long = 30000L): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
   /** Orderable per Catalyst's ordering rules (MapType is not). */
   def isOrderable(dt: org.apache.spark.sql.types.DataType): Boolean =
     org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(dt)

@@ -36,6 +36,43 @@ class ExtensionsSpec extends AnyFunSuite {
     } finally spark.stop()
   }
 
+  test("stare_clear_to with a literal level is the native clear, fused over stare_sid") {
+    val spark = SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-ext-clear-to")
+      .config("spark.sql.shuffle.partitions", 2)
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new StareExtensions)
+      .getOrCreate()
+    try {
+      // over range(), not VALUES: a LocalRelation would be constant-folded
+      spark.sql("""CREATE OR REPLACE TEMP VIEW pts AS SELECT id,
+        |  CASE id WHEN 1 THEN 20.0d WHEN 2 THEN -33.45d WHEN 3 THEN 90.0d END AS lat,
+        |  CASE id WHEN 1 THEN 10.5d WHEN 2 THEN -70.66d WHEN 3 THEN 180.0d ELSE 1.0d END AS lon
+        |FROM range(1, 5)""".stripMargin)
+      val fused = spark.sql(
+        "SELECT id, stare_clear_to(stare_sid(lat, lon, 26), 8) AS k FROM pts ORDER BY id")
+      assert(fused.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+        case graft.functions.StareClearToExpression(graft.functions.StareSidExpression(_, _, _), 8) => true
+        case _ => false
+      })), fused.queryExecution.optimizedPlan.treeString.replace("\n", " // "))
+      // two steps: encode, collect, then clear the literal sid
+      val sids = spark.sql("SELECT id, stare_sid(lat, lon, 26) FROM pts ORDER BY id").collect()
+      val twoStep = sids.map { r =>
+        if (r.isNullAt(1)) null
+        else spark.sql(s"SELECT stare_clear_to(${r.getLong(1)}L, 8)").collect()(0).get(0)
+      }
+      assert(fused.collect().map(_.get(1)).toSeq === twoStep.toSeq)
+      assert(twoStep(0) === ((graft.core.Htm.latLonToSid(20.0, 10.5, 26) & graft.core.Sid.clearMask(8)) | 8L))
+      assert(twoStep(3) === null)
+      // a per-row level still goes through the dynamic-level path
+      val dyn = spark.sql(
+        "SELECT stare_clear_to(stare_sid(lat, lon, 26), CAST(id AS INT) + 4) FROM pts ORDER BY id")
+        .collect().map(_.get(0))
+      assert(dyn(0) === ((graft.core.Htm.latLonToSid(20.0, 10.5, 26) & graft.core.Sid.clearMask(5)) | 5L))
+    } finally spark.stop()
+  }
+
   test("full SQL surface: cover join + geometry/TIV functions in pure SQL via --conf extension") {
     // the spark-submit path: extension by CONFIG STRING, no Scala column
     // API, no register() call — every statement below is plain SQL text

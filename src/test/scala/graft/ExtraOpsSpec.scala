@@ -506,6 +506,158 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty, "guard cache must be released")
   }
 
+  test("pointJoin over a local cover frame starts no Spark job at build time") {
+    import spark.implicits._
+    val shim = org.apache.spark.sql.graft.shim
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val unpersisted = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onUnpersistRDD(e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
+        unpersisted.incrementAndGet()
+    }
+    def buildJobs(right: org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, Int, Int) = {
+      val pts = Seq((1L, 10.0, 10.0), (2L, 48.0, 2.0), (3L, -60.0, 100.0)).toDF("id", "lat", "lon")
+        .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
+      shim.drainListenerBus(spark)
+      jobs.set(0); unpersisted.set(0)
+      val joined = graft.operators.StareJoin.pointJoin(pts, "sid", right, "sids",
+        how = "left", knownMinLeftLevel = Some(26))
+      shim.drainListenerBus(spark)
+      (joined, jobs.get(), unpersisted.get())
+    }
+    val coverA = Cover.coverFromBox(5.0, 15.0, 5.0, 15.0, 6).toSeq
+    val coverB = Cover.coverFromBox(-5.0, 5.0, 40.0, 50.0, 8).toSeq
+    val expected = Set((1L, "a"), (2L, "b"), (3L, null))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val local = Seq(("a", coverA), ("b", coverB)).toDF("name", "sids")
+      assert(shim.isLocalRelation(local))
+      val (joined, localJobs, _) = buildJobs(local)
+      assert(localJobs === 0, "a driver-resident cover frame needs no guard job")
+      assert(local.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+      assert(joined.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+        expected)
+      // a cover frame computed by Spark still takes the persisted guard
+      val computed = spark.range(2).select(
+        when(col("id") === 0, lit("a")).otherwise(lit("b")).as("name"),
+        when(col("id") === 0, typedLit(coverA)).otherwise(typedLit(coverB)).as("sids"))
+      assert(!shim.isLocalRelation(computed))
+      val (joined2, computedJobs, computedUnpersists) = buildJobs(computed)
+      assert(computedJobs > 0)
+      assert(computedUnpersists > 0, "the guard persist must be taken and released")
+      assert(computed.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+      assert(joined2.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+        expected)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("fused clear-of-encode keys equal interpreted eval and the unfused clear, nulls included") {
+    import spark.implicits._
+    val r = new scala.util.Random(7)
+    // an RDD-backed frame: over a LocalRelation the optimizer would
+    // fold the keys to constants before any eval or codegen mode ran
+    val pts = spark.sparkContext.parallelize(
+      (Seq.fill(300)((Option(r.nextDouble() * 180.0 - 90.0), Option(r.nextDouble() * 360.0 - 180.0))) ++
+        Seq((Some(90.0), Some(180.0)), (Some(-90.0), Some(-180.0)), (None, Some(1.0)), (Some(1.0), None),
+          (None, None))).zipWithIndex.map { case ((la, lo), i) => (i.toLong, la, lo) }, 3)
+      .toDF("id", "lat", "lon")
+    val levels = Seq(0, 1, 6, 8, 26, 27)
+    def keys(encodeLevel: Int) = pts.select(col("id") +: levels.map(l =>
+      stareClearTo(stareSid(col("lat"), col("lon"), encodeLevel), l).as(s"k$l")): _*)
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Any]] =
+      df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    // the optimized key really is a clear over a literal-level encode
+    assert(keys(26).queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+      case graft.functions.StareClearToExpression(graft.functions.StareSidExpression(_, _, _), _) => true
+      case _ => false
+    })))
+    // unfused: the clear of an already materialised sid column
+    val sids = pts.select(col("id"), stareSid(col("lat"), col("lon"), 26).as("sid")).collect()
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSeq
+      .toDF("id", "sid")
+    val unfused = rows(sids.select(col("id") +: levels.map(l => stareClearTo(col("sid"), l).as(s"k$l")): _*))
+    val modes = Seq(
+      "fused codegen" -> Map("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false"),
+      "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    modes.foreach { case (mode, conf) =>
+      val prior = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        Seq(26, 27, 10).foreach { el =>
+          val got = rows(keys(el))
+          assert(got === unfused, s"$mode, encode level $el")
+        }
+        if (mode == "fused codegen") {
+          def code(df: org.apache.spark.sql.DataFrame) =
+            org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
+          // one key runs the prefix descent; several keys over one encode
+          // share it as a common subexpression and clear its value
+          val one = pts.select(col("id"), stareClearTo(stareSid(col("lat"), col("lon"), 26), 6).as("k6"))
+          assert(code(one).contains("latLonToSidPrefix"))
+          assert(rows(one) === unfused.map { case (i, ks) => i -> Seq(ks(levels.indexOf(6))) })
+          assert(!code(keys(26)).contains("latLonToSidPrefix"))
+        }
+      } finally prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
+    val truth = pts.collect().map { row =>
+      val k = if (row.isNullAt(1) || row.isNullAt(2)) levels.map(_ => null)
+        else levels.map(l => (Htm.latLonToSid(row.getDouble(1), row.getDouble(2), 26) & Sid.clearMask(l)) | l)
+      row.getLong(0) -> k
+    }.toMap
+    assert(unfused === truth)
+    assert(Seq(302L, 303L, 304L).forall(i => unfused(i).forall(_ == null)))
+  }
+
+  test("shuffle left join with few rows of giant covers: full-row side sized by keyed rows") {
+    import spark.implicits._
+    // 3 cover rows of ~1k level-10 cells each: a few KB per row, over
+    // the 10 MB broadcast threshold once every keyed cell carries its
+    // row; that side must not be broadcast
+    val boxes = Seq(("a", 0.0, 1.5, 0.0, 1.5), ("b", 20.0, 21.5, 10.0, 11.5), ("c", -40.0, -38.5, -20.0, -18.5))
+    val covers = boxes.map { case (n, x0, x1, y0, y1) =>
+      (n, Sid.expandToLevel(Cover.coverFromBox(x0, x1, y0, y1, 10, marginDeg = 0.2), 10).toSeq) }
+    val right = covers.toDF("name", "sids")
+    val r = new scala.util.Random(11)
+    // points around each box (inside and just outside it)
+    val pts = Seq.tabulate(400) { i =>
+      val (_, x0, _, y0, _) = boxes(i % 3)
+      (i.toLong, y0 - 0.5 + r.nextDouble() * 2.5, x0 - 0.5 + r.nextDouble() * 2.5)
+    }.toDF("id", "lat", "lon").withColumn("sid", stareSid(col("lat"), col("lon"), 26))
+    val runs = covers.map { case (n, c) => n -> Sid.mergedIntervals(c.toArray) }
+    val brute = pts.collect().flatMap { p =>
+      val sid = p.getLong(3)
+      val hits = runs.collect { case (n, rr) if Sid.anyIntersects(Array(sid), rr) => n }
+      if (hits.isEmpty) Seq((p.getLong(0), null: String)) else hits.map(n => (p.getLong(0), n))
+    }.toSet
+    assert(brute.exists(_._2 != null) && brute.exists(_._2 == null))
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    def check(shjCap: Option[String], expectShj: Boolean): Unit = {
+      shjCap.foreach(spark.conf.set("spark.graft.join.shjMaxBuildBytesPerPartition", _))
+      try {
+        val out = graft.operators.Skew.shuffleJoin(pts, "sid", right, "sids", how = "left",
+          knownMinLeftLevel = Some(26))
+        val plan = out.queryExecution.sparkPlan
+        assert(plan.collect { case j: BroadcastHashJoinExec if j.joinType == LeftOuter => j }.isEmpty,
+          s"the keyed full-row side must not be broadcast:\n$plan")
+        val shj = plan.collect { case j: ShuffledHashJoinExec if j.joinType == LeftOuter => j }
+        val smj = plan.collect { case j: SortMergeJoinExec if j.joinType == LeftOuter => j }
+        if (expectShj) assert(shj.length === 1, plan.toString)
+        else assert(smj.length === 1 && shj.isEmpty, plan.toString)
+        assert(out.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet === brute)
+      } finally spark.conf.unset("spark.graft.join.shjMaxBuildBytesPerPartition")
+    }
+    check(None, expectShj = true)
+    check(Some((1L << 20).toString), expectShj = false)
+  }
+
   test("packed stable ids: unique, deterministic across re-evaluation, complex-type safe") {
     import spark.implicits._
     val base = spark.range(0, 20000).repartition(7)

@@ -108,6 +108,30 @@ class SidPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("prefix encode equals the clear of the full encode at every level 0..27") {
+    val r = rng
+    def clearTo(sid: Long, l: Int): Long = (sid & Sid.clearMask(l)) | l
+    val random = Seq.fill(20000)((r.nextDouble() * 180.0 - 90.0, r.nextDouble() * 360.0 - 180.0))
+    // adversarial: poles, the antimeridian, octahedron vertices, and
+    // trixel corners (points on descent edges, where side tests are 0)
+    val poles = for (lat <- Seq(90.0, -90.0, 89.999999999, -89.999999999); lon <- Seq(0.0, 180.0, -180.0, 45.0))
+      yield (lat, lon)
+    val meridian = Seq(180.0, -180.0, 179.999999999, -179.999999999, 0.0)
+      .flatMap(lon => Seq(0.0, 30.0, -60.0, 45.0).map(lat => (lat, lon)))
+    val vertices = Htm.verts.toSeq.map(Htm.xyzToLatLon)
+    val corners = (0 to 27).flatMap { l =>
+      Seq.fill(40)(Htm.sidToTriangle(randSid(r) & ~Sid.LevelMask | l).toSeq.map(Htm.xyzToLatLon)).flatten
+    }
+    val pts = random ++ poles ++ meridian ++ vertices ++ corners
+    pts.foreach { case (lat, lon) =>
+      val full = Htm.latLonToSid(lat, lon, 26)
+      (0 to Sid.MaxLevel).foreach { l =>
+        assert(Htm.latLonToSidPrefix(lat, lon, l) === clearTo(full, l), s"lat=$lat lon=$lon level=$l")
+      }
+    }
+    assert(corners.length === 28 * 40 * 3)
+  }
+
   test("tiv roundtrips whole-millisecond utc instants 1970..2100") {
     val r = rng
     (1 to N).foreach { _ =>
