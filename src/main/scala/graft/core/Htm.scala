@@ -30,7 +30,7 @@ package graft.core
   *     a descent stopped after L steps yields exactly the location bits
   *     a full encode keeps above level L:
   *     latLonToSidPrefix(lat, lon, L) == clearTo(latLonToSid(lat, lon, k), L)
-  *     for every k. The fused clear-of-encode join key
+  *     for every k in 0..27. The fused clear-of-encode join key
   *     (StareClearToExpression over a literal-level stare_sid) uses it
   *     to run L steps instead of 27.
   */

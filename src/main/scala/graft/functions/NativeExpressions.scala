@@ -56,12 +56,20 @@ case class StareClearToExpression(child: Expression, level: Int) extends UnaryEx
 
   private val mask = graft.core.Sid.clearMask(level)
 
-  /** (lat, lon) of a literal-level encode child the clear can fuse with */
-  @transient private lazy val fused: Option[(Expression, Expression)] = child match {
-    case StareSidExpression(lat, lon, lv)
-        if level >= 0 && level <= graft.core.Sid.MaxLevel && lv.foldable && lv.eval() != null =>
-      Some((lat, lon))
-    case _ => None
+  /** (lat, lon) of a literal-level encode child the clear can fuse
+    * with. Both levels must be in 0..MaxLevel: the encode ORs its level
+    * in, so a negative one sets every bit and one of 32 or more sets
+    * location bits, which the clear of the full encode keeps. */
+  @transient private lazy val fused: Option[(Expression, Expression)] = {
+    def inRange(l: Int) = l >= 0 && l <= graft.core.Sid.MaxLevel
+    child match {
+      case StareSidExpression(lat, lon, lv) if inRange(level) && lv.foldable =>
+        lv.eval() match {
+          case l: Int if inRange(l) => Some((lat, lon))
+          case _                    => None
+        }
+      case _ => None
+    }
   }
 
   override def eval(input: InternalRow): Any = fused match {

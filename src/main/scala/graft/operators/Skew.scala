@@ -430,14 +430,6 @@ object Skew {
       else if (estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap)
         (rightRows.hint("shuffle_hash"), false)
       else (rightRows, false)
-    // The full-row keyed right side (right row columns attached to each
-    // keyed cell) has keyedRightRows rows, each carrying the whole right
-    // payload: a few rows with giant covers are small as rows but huge
-    // once keyed. Saturating, like rebaseCostTo.
-    val estRightFullBytes =
-      if (keyedRightRows > Long.MaxValue / rowBytesEst) Long.MaxValue
-      else keyedRightRows * rowBytesEst
-    val rightFullShjOk = estRightFullBytes / math.max(1, shufflePartitions) <= shjBuildCap
     // base levels probed unconditionally; split-child levels already in
     // the base set are matched by the base key (no gated duplicate — a
     // duplicate key value would double pairs); levels introduced ONLY
@@ -520,7 +512,8 @@ object Skew {
     // AQE's skew-join splitter still handles residual imbalance on the
     // non-broadcast strategies
     how match {
-      case "inner" if !assembleBroadcast && rightFullShjOk =>
+      case "inner" if !assembleBroadcast &&
+        estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap =>
         // Full-row keyed right (r6, guide §2.3/§8): when the join-back
         // cannot broadcast, assembling by row id re-SHUFFLES the entire
         // joined output (24M rows at the bench — its single largest
@@ -575,22 +568,43 @@ object Skew {
         val l = clash.foldLeft(left)((df, c) => df.withColumnRenamed(c, c + "_left"))
         val r = clash.foldLeft(rightRows)((df, c) => df.withColumnRenamed(c, c + "_right"))
         val lSid = if (clash.contains(leftSid)) leftSid + "_left" else leftSid
-        // small x small build: broadcast the row side when it fits (two
-        // exchanges saved at fixed cost; same output either way)
-        val rBuild =
-          if (assembleBroadcast) org.apache.spark.sql.functions.broadcast(r)
-          else r.hint("shuffle_hash")
-        val rightFullPlain = rightKeyedFinal
-          .join(rBuild, col("__rid") === col("key_right"), "inner")
-          .drop("__rid")
-        val rightFull =
-          if (bcastThreshold > 0 && estRightFullBytes <= bcastThreshold)
-            org.apache.spark.sql.functions.broadcast(rightFullPlain)
-          else if (rightFullShjOk) rightFullPlain.hint("shuffle_hash")
-          else rightFullPlain // sort-merge: spills gracefully over both caps
-        val out = l.withColumn("__lk", keyExprsFor(col(lSid)).head)
-          .join(rightFull, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "left")
-          .drop("__lk", "__rk")
+        val keyedL = l.withColumn("__lk", keyExprsFor(col(lSid)).head)
+        val out =
+          if (assembleBroadcast && bcastThreshold > 0 && estKeyedBytes <= bcastThreshold) {
+            // both small sides fit: broadcast the (rid, key) pairs and the
+            // rows separately and probe them in turn, so the big side is
+            // never shuffled and the builds hold pairs + rows, not the
+            // pairs x payload product (a few rows of giant covers would
+            // repeat each whole cover once per cell)
+            keyedL
+              .join(org.apache.spark.sql.functions.broadcast(rightKeyedFinal),
+                StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "left")
+              .join(org.apache.spark.sql.functions.broadcast(r), col("__rid") === col("key_right"), "left")
+              .drop("__lk", "__rk", "__rid")
+          } else {
+            // small x small build: broadcast the row side when it fits (two
+            // exchanges saved at fixed cost; same output either way)
+            val rBuild =
+              if (assembleBroadcast) org.apache.spark.sql.functions.broadcast(r)
+              else r.hint("shuffle_hash")
+            val rightFullPlain = rightKeyedFinal
+              .join(rBuild, col("__rid") === col("key_right"), "inner")
+              .drop("__rid")
+            // The full-row keyed side has keyedRightRows rows, each carrying
+            // the whole right payload: a few rows with giant covers are
+            // small as rows but huge once keyed. Saturating, like
+            // rebaseCostTo.
+            val estRightFullBytes =
+              if (keyedRightRows > Long.MaxValue / rowBytesEst) Long.MaxValue
+              else keyedRightRows * rowBytesEst
+            val rightFull =
+              if (estRightFullBytes / math.max(1, shufflePartitions) <= shjBuildCap)
+                rightFullPlain.hint("shuffle_hash")
+              else rightFullPlain // sort-merge: spills gracefully over the cap
+            keyedL
+              .join(rightFull, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "left")
+              .drop("__lk", "__rk")
+          }
         val ordered = l.columns.filter(_ != "__lk").map(out(_)) ++
           Array(out("key_right")) ++ r.columns.filter(_ != "key_right").map(out(_))
         out.select(ordered.toIndexedSeq: _*)

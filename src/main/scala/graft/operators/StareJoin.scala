@@ -112,38 +112,34 @@ object StareJoin {
     // rows (huge text/sid payloads) must not reach the driver either.
     // Over either cap we delegate to the shuffle-path join, which
     // shares the output contract. A right frame that is already a
-    // driver-resident LocalRelation (covers built with toDF) needs no
-    // guard: its collect() plans no Spark job, so it is collected
-    // outright and only the caps are checked.
+    // driver-resident LocalRelation (covers built with toDF) is not
+    // persisted: the optimizer folds the probe's limit into the local
+    // rows, so its collect() plans no Spark job.
     val spark = left.sparkSession
     val probeCap = math.min(1000, maxBroadcastRows)
     val maxBroadcastBytes = 512L * 1024 * 1024
-    def fits(sample: Array[org.apache.spark.sql.Row], n: Long): Boolean =
-      n <= maxBroadcastRows && approxRowBytes(sample) * n <= maxBroadcastBytes
-    def shuffled: DataFrame = Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
-      how = how, knownMinLeftLevel = knownMinLeftLevel)
+    // persist only when the caller hasn't: an unconditional persist +
+    // unpersist would silently DROP a caller's own cache (KnnJoin
+    // persists its reusable sides across rounds)
+    val weCached = right.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
+      !org.apache.spark.sql.graft.shim.isLocalRelation(right)
+    if (weCached) right.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val collected: Array[org.apache.spark.sql.Row] =
-      if (org.apache.spark.sql.graft.shim.isLocalRelation(right)) {
-        val rows = right.collect()
-        if (!fits(rows, rows.length)) return shuffled
-        rows
-      } else {
-        // persist only when the caller hasn't: an unconditional persist +
-        // unpersist would silently DROP a caller's own cache (KnnJoin
-        // persists its reusable sides across rounds)
-        val weCached = right.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-        if (weCached) right.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val probe = right.limit(probeCap + 1).collect()
-          if (probe.length <= probeCap) {
-            if (!fits(probe, probe.length)) return shuffled
-            probe
-          } else {
-            if (!fits(probe, right.count())) return shuffled
-            right.collect()
-          }
-        } finally if (weCached) right.unpersist(false)
-      }
+      try {
+        val probe = right.limit(probeCap + 1).collect()
+        if (probe.length <= probeCap) {
+          if (approxRowBytes(probe) * probe.length > maxBroadcastBytes)
+            return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
+              how = how, knownMinLeftLevel = knownMinLeftLevel)
+          probe
+        } else {
+          val n = right.count()
+          if (n > maxBroadcastRows || approxRowBytes(probe) * n > maxBroadcastBytes)
+            return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
+              how = how, knownMinLeftLevel = knownMinLeftLevel)
+          right.collect()
+        }
+      } finally if (weCached) right.unpersist(false)
     // The cover side fits in a broadcast, so assign row ids
     // on the driver: deterministic across every reuse of the frame (no
     // monotonically_increasing_id re-evaluation hazard) and no lingering

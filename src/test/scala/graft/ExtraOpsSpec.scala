@@ -534,8 +534,9 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val local = Seq(("a", coverA), ("b", coverB)).toDF("name", "sids")
       assert(shim.isLocalRelation(local))
-      val (joined, localJobs, _) = buildJobs(local)
+      val (joined, localJobs, localUnpersists) = buildJobs(local)
       assert(localJobs === 0, "a driver-resident cover frame needs no guard job")
+      assert(localUnpersists === 0, "a driver-resident cover frame is not persisted")
       assert(local.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
       assert(joined.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
         expected)
@@ -578,6 +579,14 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSeq
       .toDF("id", "sid")
     val unfused = rows(sids.select(col("id") +: levels.map(l => stareClearTo(col("sid"), l).as(s"k$l")): _*))
+    // the clear of the full encode at any encode level, on the driver
+    val ptRows = pts.collect()
+    def truthAt(encodeLevel: Int): Map[Long, Seq[Any]] = ptRows.map { row =>
+      val k = if (row.isNullAt(1) || row.isNullAt(2)) levels.map(_ => null)
+        else levels.map(l =>
+          (Htm.latLonToSid(row.getDouble(1), row.getDouble(2), encodeLevel) & Sid.clearMask(l)) | l)
+      row.getLong(0) -> k
+    }.toMap
     val modes = Seq(
       "fused codegen" -> Map("spark.sql.codegen.wholeStage" -> "true",
         "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false"),
@@ -590,6 +599,13 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq(26, 27, 10).foreach { el =>
           val got = rows(keys(el))
           assert(got === unfused, s"$mode, encode level $el")
+        }
+        // out-of-range encode levels are ORed into the location bits,
+        // which the clear keeps: such keys are not fused
+        Seq(-1, 32, 40).foreach { el =>
+          val want = truthAt(el)
+          assert(want !== unfused, s"encode level $el must change some key")
+          assert(rows(keys(el)) === want, s"$mode, out-of-range encode level $el")
         }
         if (mode == "fused codegen") {
           def code(df: org.apache.spark.sql.DataFrame) =
@@ -606,12 +622,7 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         case (k, None)    => spark.conf.unset(k)
       }
     }
-    val truth = pts.collect().map { row =>
-      val k = if (row.isNullAt(1) || row.isNullAt(2)) levels.map(_ => null)
-        else levels.map(l => (Htm.latLonToSid(row.getDouble(1), row.getDouble(2), 26) & Sid.clearMask(l)) | l)
-      row.getLong(0) -> k
-    }.toMap
-    assert(unfused === truth)
+    assert(unfused === truthAt(26))
     assert(Seq(302L, 303L, 304L).forall(i => unfused(i).forall(_ == null)))
   }
 
@@ -619,7 +630,7 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // 3 cover rows of ~1k level-10 cells each: a few KB per row, over
     // the 10 MB broadcast threshold once every keyed cell carries its
-    // row; that side must not be broadcast
+    // row; that keyed full-row side must never be broadcast
     val boxes = Seq(("a", 0.0, 1.5, 0.0, 1.5), ("b", 20.0, 21.5, 10.0, 11.5), ("c", -40.0, -38.5, -20.0, -18.5))
     val covers = boxes.map { case (n, x0, x1, y0, y1) =>
       (n, Sid.expandToLevel(Cover.coverFromBox(x0, x1, y0, y1, 10, marginDeg = 0.2), 10).toSeq) }
@@ -639,23 +650,32 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(brute.exists(_._2 != null) && brute.exists(_._2 == null))
     import org.apache.spark.sql.catalyst.plans.LeftOuter
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
-    def check(shjCap: Option[String], expectShj: Boolean): Unit = {
-      shjCap.foreach(spark.conf.set("spark.graft.join.shjMaxBuildBytesPerPartition", _))
+    def check(conf: Map[String, String], expect: String): Unit = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         val out = graft.operators.Skew.shuffleJoin(pts, "sid", right, "sids", how = "left",
           knownMinLeftLevel = Some(26))
         val plan = out.queryExecution.sparkPlan
-        assert(plan.collect { case j: BroadcastHashJoinExec if j.joinType == LeftOuter => j }.isEmpty,
-          s"the keyed full-row side must not be broadcast:\n$plan")
+        val bhj = plan.collect { case j: BroadcastHashJoinExec if j.joinType == LeftOuter => j }
+        assert(bhj.forall { j =>
+          val built = j.right.output.map(_.name).toSet
+          !(built.contains("__rk") && built.contains("sids"))
+        }, s"the keyed full-row side must not be broadcast:\n$plan")
         val shj = plan.collect { case j: ShuffledHashJoinExec if j.joinType == LeftOuter => j }
         val smj = plan.collect { case j: SortMergeJoinExec if j.joinType == LeftOuter => j }
-        if (expectShj) assert(shj.length === 1, plan.toString)
-        else assert(smj.length === 1 && shj.isEmpty, plan.toString)
+        expect match {
+          // pairs and rows broadcast on their own, probed in turn
+          case "broadcast" => assert(bhj.length === 2 && shj.isEmpty && smj.isEmpty, plan.toString)
+          case "shj"       => assert(shj.length === 1 && bhj.isEmpty && smj.isEmpty, plan.toString)
+          case "smj"       => assert(smj.length === 1 && bhj.isEmpty && shj.isEmpty, plan.toString)
+        }
         assert(out.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet === brute)
-      } finally spark.conf.unset("spark.graft.join.shjMaxBuildBytesPerPartition")
+      } finally conf.keys.foreach(spark.conf.unset)
     }
-    check(None, expectShj = true)
-    check(Some((1L << 20).toString), expectShj = false)
+    check(Map.empty, "broadcast")
+    val noBroadcast = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    check(noBroadcast, "shj")
+    check(noBroadcast + ("spark.graft.join.shjMaxBuildBytesPerPartition" -> (1L << 20).toString), "smj")
   }
 
   test("packed stable ids: unique, deterministic across re-evaluation, complex-type safe") {
