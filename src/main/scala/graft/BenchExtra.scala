@@ -160,110 +160,6 @@ object BenchExtra {
           f""""scan_encode_sec":$encodeSec%.3f,"encode_clear_sec":$clearSec%.3f,""" +
           f""""join_noagg_sec":$joinNoAggSec%.3f,"join_slim_sec":$slimSec%.3f,""" +
           f""""full_join_sec":$joinSec%.3f}""")
-      case "joinlab" =>
-        // controlled matrix isolating the headline join's per-row cost
-        import graft.functions.StareFunctions._
-        import spark.implicits._
-        val amplify = sys.env.get("SPARK_GRAFT_AMPLIFY").map(_.toInt).getOrElse(-1)
-        val pts = Bench.buildPoints(spark, sfDir, amplify)
-        pts.persist().count()
-        def t(label: String)(f: => Unit): Unit = {
-          val secs = (1 to 3).map { _ =>
-            spark.sparkContext.setJobDescription(label)
-            val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-          }
-          System.err.println(f"[joinlab] $label%-22s ${secs.min}%6.2f s  (${secs.map(s => f"$s%.2f").mkString(",")})")
-        }
-        def noop(df: org.apache.spark.sql.DataFrame): Unit =
-          df.write.format("noop").mode("overwrite").save()
-        val indexed = pts.withColumn("sid", stareSid(col("lat"), col("lon"), 26))
-        val keyed = indexed.withColumn("k", stareClearTo(col("sid"), 6))
-        // manual dictionary: exactly the (key, region) pairs the pointJoin
-        // dictionary carries, built on the driver
-        val dict = SparkEntry.regions.flatMap { r =>
-          graft.core.Sid.expandToLevel(SparkEntry.regionCover(r, 6), 6)
-            .map(c => (c, r.name))
-        }.toDF("k", "region_name")
-        val covers = SparkEntry.coversDf(spark)
-        // warm-ups
-        noop(keyed); keyed.groupBy(col("k")).count().write.format("noop").mode("overwrite").save()
-        t("encode_clear_noop")(noop(keyed))
-        t("agg_nokey")(indexed.groupBy().count().collect())
-        t("agg_bykey")(keyed.groupBy(col("k")).agg(count(lit(1))).write.format("noop").mode("overwrite").save())
-        t("manual_join_agg")(keyed.join(broadcast(dict), Seq("k"))
-          .groupBy(col("region_name")).agg(count(lit(1))).collect())
-        t("manual_join_noagg")(noop(keyed.join(broadcast(dict), Seq("k"))))
-        t("pointjoin_agg")(Bench.timeJoin(pts, covers))
-        System.err.println(s"[joinlab] dict_rows=${dict.count()}")
-        // variant A: key materialized in the cache (no encode in the join stage)
-        val keyedMat = keyed.persist(); keyedMat.count()
-        t("matkey_join_agg")(keyedMat.join(broadcast(dict), Seq("k"))
-          .groupBy(col("region_name")).agg(count(lit(1))).collect())
-        // variant B: non-STARE key, same cardinality — isolates the encode
-        val hashKeyed = pts.withColumn("k", pmod(xxhash64(col("lat"), col("lon")), lit(7000)))
-        val dict2 = (0L until 7000L).map(i => (i, s"g${i % 8}")).toDF("k", "region_name")
-        t("hashkey_join_agg")(hashKeyed.join(broadcast(dict2), Seq("k"))
-          .groupBy(col("region_name")).agg(count(lit(1))).collect())
-        // variant C: stare key join with whole-stage codegen OFF
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        t("nowscg_join_agg")(keyedMat.join(broadcast(dict), Seq("k"))
-          .groupBy(col("region_name")).agg(count(lit(1))).collect())
-        spark.conf.set("spark.sql.codegen.wholeStage", "true")
-        keyedMat.unpersist()
-      case "q43parts" =>
-        // cold-cost bisection of q43's pipeline (jobs + codegen)
-        import graft.functions.StareFunctions._
-        def t(label: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime(); f
-          System.err.println(f"[q43parts] $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        }
-        val docs = SparkEntry.indexed(spark, sfDir)
-        t("indexed_count")(docs.count())
-        val joined = graft.operators.Skew.shuffleJoin(docs, "sid", SparkEntry.coversDf(spark),
-          "sids", splitHot = None, how = "left", knownMinLeftLevel = Some(26))
-        t("shufflejoin_count")(joined.count())
-        t("q43_full")(SparkEntry.queries("q43_shuffle_join_left")(spark, sfDir).count())
-        t("q43_warm")(SparkEntry.queries("q43_shuffle_join_left")(spark, sfDir).count())
-      case "q27parts" =>
-        // phase decomposition of the pods roundtrip (write / commit /
-        // pruned read) — guide §6
-        import graft.functions.StareFunctions._
-        def t(label: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime(); f
-          System.err.println(f"[q27parts] $label%-16s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        }
-        val out = s"/tmp/graft_q27parts"
-        graft.sources.Pods.trashAsync(java.nio.file.Paths.get(out))
-        val docs = SparkEntry.indexed(spark, sfDir).select(col("doc_id"), col("sid"),
-          col("lat"), col("lon"), col("warc_ts"), col("lang"))
-        t("indexed_count")(docs.count())
-        t("pods_write")(graft.sources.Pods.write(docs, out, "sid", podLevel = 2,
-          lineageId = s"q27parts-${System.nanoTime()}", tsCol = Some("warc_ts"),
-          chunkMs = 30L * 86400000L))
-        val r = SparkEntry.region("europe_c")
-        val t0 = 1700000600L; val t1 = 1700020000L
-        t("pruned_read")(graft.sources.Pods.read(spark, out, SparkEntry.regionCover(r),
-          timeRangeMs = Some((t0 * 1000, t1 * 1000)))
-          .filter(SparkEntry.inRegion(r) && unix_timestamp(col("warc_ts")).between(t0, t1))
-          .select(col("doc_id")).orderBy(col("doc_id")).count())
-        t("q27_full")(SparkEntry.queries("q27_pods_roundtrip")(spark, sfDir).count())
-        // commit-scan proxy: the read-back aggregation commitStore pays
-        t("commit_scan")(spark.read.parquet(out)
-          .groupBy(col("pod"), col("tchunk"))
-          .agg(min(col("sid")), max(col("sid")), count(lit(1)),
-            min(col("warc_ts")), max(col("warc_ts"))).collect())
-        // raw write-only proxy (no manifests): same repartition+sort+write
-        val out2 = "/tmp/graft_q27parts_raw"
-        graft.sources.Pods.trashAsync(java.nio.file.Paths.get(out2))
-        t("raw_write")(docs
-          .withColumn("pod", starePod(col("sid"), 2))
-          .withColumn("tchunk", floor((col("warc_ts").cast("double") * 1000).cast("long")
-            / (30L * 86400000L)).cast("long"))
-          .repartition(spark.sessionState.conf.numShufflePartitions, col("pod"), col("tchunk"))
-          .sortWithinPartitions(col("sid"))
-          .write.mode("overwrite")
-          .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-          .partitionBy("pod", "tchunk").parquet(out2))
       case "qstages" =>
         // per-stage wall/executor-time accounting for one query (cold
         // then warm) — locates CPU-bound stages vs scheduling/compile

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Sid
 import graft.functions.StareFunctions._
+import StareJoin.{Budgets, coverCells, minSidLevel}
 
 /** Explicit skew handling for the shuffle-path spatial join (SURVEY.md
   * §4.4 / north rule: hot cells — cities, coastlines — must not melt a
@@ -67,33 +68,25 @@ object Skew {
                             maxRowsPerCell: Long, sampleFraction: Double = 0.01,
                             maxExtraLevels: Int = 6,
                             knownMinLeftLevel: Option[Int] = None,
-                            wallClockGate: Boolean = true,
-                            assumedReduceRowsPerSec: Double = Double.NaN,
-                            assumedFixedOverheadSec: Double = Double.NaN): SplitResult = {
+                            wallClockGate: Boolean = true): SplitResult = {
     // per-cell sample counts (cells normalized at own level). The
     // groupBy also yields the exploded (row, cell) PAIR count — the
     // quantity the join actually shuffles/broadcasts (a distinct-cell
     // count under-sizes a many-row cover side sharing few cells).
-    val cellRows = right.select(explode(stareCompress(col(rightSids))).as("c"))
+    val cellRows = right.select(explode(coverCells(col(rightSids))).as("c"))
       .select(stareClearToOwn(col("c")).as("c")).groupBy("c").count().collect()
     val cells = cellRows.map(_.getLong(0))
     val rightPairCount = cellRows.map(_.getLong(1)).sum
     val levels = cells.map(Sid.level).distinct.sorted
     // callers that KNOW their point level (e.g. a level-26 indexed
     // table) pass it and skip the exact full-scan guard
-    val minLeftLevel = knownMinLeftLevel.getOrElse(
-      left.agg(min(stareLevel(col(leftSid)))).collect()(0) match {
-        case r if r.isNullAt(0) => Sid.MaxLevel // empty left: cap is irrelevant
-        case r                  => r.getLong(0).toInt
-      })
+    val minLeftLevel = knownMinLeftLevel.getOrElse(minSidLevel(left, leftSid))
     // persist the (small) sample: phase A and phase B both read it, and
     // an uncached sample re-SCANS THE FULL LEFT SIDE per phase — at any
     // scale the whole point of sampling is to pay the wide scan once
     val sample = left.sample(withReplacement = false, sampleFraction, seed = 42)
       .select(col(leftSid).as("s")).persist()
-    val keyed = sample.withColumn("k", explode(filter(
-      array(levels.map(l => when(stareLevel(col("s")) >= l, stareClearTo(col("s"), l))): _*),
-      c => c.isNotNull)))
+    val keyed = sample.withColumn("k", explode(StareJoin.ancestorKeys(col("s"), levels)))
     val cellSet = cells.toSet
     val isCell = udf((k: Long) => cellSet.contains(k))
     val counts = keyed.filter(isCell(col("k"))).groupBy("k").count()
@@ -109,17 +102,10 @@ object Skew {
       System.err.println(s"[skew] split skipped: no projected win — $reason")
       SplitResult(right, Seq.empty, levels, Some(reason), minLeftLevel, cells)
     }
-    val conf = left.sparkSession.conf
+    val budgets = Budgets(left.sparkSession)
     // (1) a cover-key side under the broadcast threshold never shuffles
-    // the point side by key: there is no reducer to melt. ~32 B per
-    // exploded (rid, key) pair mirrors Catalyst's sizing order.
-    val bcastThreshold = {
-      val raw = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-      try { if (raw.startsWith("-")) -1L
-            else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw) }
-      catch { case _: Exception => 10485760L }
-    }
-    if (bcastThreshold > 0 && rightPairCount * 32 <= bcastThreshold)
+    // the point side by key: there is no reducer to melt.
+    if (budgets.broadcastFits(rightPairCount * Budgets.PairBytes))
       return skip(s"cover side (~$rightPairCount exploded (row, cell) pairs) fits the " +
         "broadcast threshold; the join has no per-key shuffle")
     // (2) the hottest cell must exceed the per-cell cap AND dominate a
@@ -127,8 +113,7 @@ object Skew {
     // within ~2x the average reducer load doesn't bound the stage.
     val estHot = counts.valuesIterator.maxOption.getOrElse(0L) * scale
     val estTotal = counts.valuesIterator.sum * scale
-    val shufflePartitions =
-      try conf.get("spark.sql.shuffle.partitions", "200").toInt catch { case _: Exception => 200 }
+    val shufflePartitions = budgets.shufflePartitions
     val fairShare = estTotal / math.max(1, shufflePartitions)
     if (estHot <= maxRowsPerCell)
       return skip(f"hottest cell ~${estHot}%.0f rows <= maxRowsPerCell=$maxRowsPerCell")
@@ -144,28 +129,14 @@ object Skew {
     // = the melt the hot reducer carries beyond its fair share, at the
     // measured reducer sort rate (~2M rows/s, BENCH.md). Mechanism/unit
     // tests and callers that want max-task balance regardless of wall
-    // clock pass wallClockGate = false. The rate/overhead constants are
-    // host-dependent (ours come from the bench box, BENCH.md): a
-    // deployment with slower reducers sets the conf keys below so an
-    // explicit splitHot request doesn't silently no-op where a
-    // sub-4s-projected melt is in fact material (ADVICE r5).
+    // clock pass wallClockGate = false.
     if (wallClockGate) {
-      def confDouble(key: String, fallback: Double): Double =
-        try conf.get(key, fallback.toString).toDouble catch { case _: Exception => fallback }
-      val reduceRowsPerSec =
-        if (assumedReduceRowsPerSec.isNaN)
-          confDouble("spark.graft.skew.reduceRowsPerSec", 2e6)
-        else assumedReduceRowsPerSec
-      val fixedOverheadSec =
-        if (assumedFixedOverheadSec.isNaN)
-          confDouble("spark.graft.skew.splitOverheadSec", 4.0)
-        else assumedFixedOverheadSec
-      val projectedSaveSec = (estHot - fairShare) / reduceRowsPerSec
-      if (projectedSaveSec <= fixedOverheadSec)
+      val projectedSaveSec = (estHot - fairShare) / Budgets.ReduceRowsPerSec
+      if (projectedSaveSec <= Budgets.SplitOverheadSec)
         return skip(f"projected wall-clock saving ~$projectedSaveSec%.1f s " +
           f"((hot ~${estHot}%.0f - fair ~$fairShare%.0f rows) / " +
-          f"${reduceRowsPerSec}%.0f rows/s) does not cover the " +
-          f"~$fixedOverheadSec%.1f s fixed split overhead")
+          f"${Budgets.ReduceRowsPerSec}%.0f rows/s) does not cover the " +
+          f"~${Budgets.SplitOverheadSec}%.1f s fixed split overhead")
     }
 
     // Phase B: descendant counts of the HOT cells only, from the same
@@ -198,10 +169,7 @@ object Skew {
           found
         })
         sample.filter(inHotUdf(col("s")))
-          .withColumn("k", explode(filter(
-            array(candLevels.map(lv =>
-              when(stareLevel(col("s")) >= lv, stareClearTo(col("s"), lv))): _*),
-            c => c.isNotNull)))
+          .withColumn("k", explode(StareJoin.ancestorKeys(col("s"), candLevels)))
           .groupBy("k").count()
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }
@@ -242,31 +210,20 @@ object Skew {
       case (cell, children) if children == Seq(cell) => Sid.level(cell)
     }.toArray.distinct.sorted
 
-    val rewriteUdf = udf((sids: Seq[Long]) => {
-      val canon = Sid.compress(sids.toArray)
-      canon.flatMap(c => plan.getOrElse(Sid.clearToLevel(c), Seq(Sid.clearToLevel(c))))
-    })
-    SplitResult(right.withColumn(rightSids, rewriteUdf(col(rightSids))), parents, keptLevels,
+    val rewriteUdf = udf((cells: Seq[Long]) =>
+      cells.flatMap(c => plan.getOrElse(Sid.clearToLevel(c), Seq(Sid.clearToLevel(c)))))
+    SplitResult(right.withColumn(rightSids, rewriteUdf(coverCells(col(rightSids)))), parents, keptLevels,
       minLeftLevel = minLeftLevel, allCells = cells)
   }
-
-  /** Back-compat wrapper returning only the rewritten cover frame.
-    * Defaults forward to splitHotCellsWithSpec's (an explicit shallower
-    * maxExtraLevels here silently under-split for wrapper callers). */
-  def splitHotCells(left: DataFrame, leftSid: String,
-                    right: DataFrame, rightSids: String,
-                    maxRowsPerCell: Long, sampleFraction: Double = 0.01,
-                    maxExtraLevels: Int = 6,
-                    wallClockGate: Boolean = true): DataFrame =
-    splitHotCellsWithSpec(left, leftSid, right, rightSids,
-      maxRowsPerCell, sampleFraction, maxExtraLevels,
-      wallClockGate = wallClockGate).right
 
   /** Shuffle-path spatial join for cover sides too large to broadcast:
     * sort-merge/shuffled-hash equi-join on the prefix keys with AQE skew
     * splitting enabled, optionally after exact hot-cell splitting.
     * Same pair semantics and output contract (suffixes, `key_right`,
-    * column order) as StareJoin.pointJoin, for how = inner | left.
+    * column order) as StareJoin.pointJoin, for how = inner | left, in
+    * one of two shapes: a single-exchange keyed join (inner, and left
+    * with one candidate key per row) or a pair/join-back (left with
+    * several candidate keys).
     *
     * Row ids come from deterministic zipWithIndex (StareJoin.withStableId)
     * instead of persist + monotonically_increasing_id: nothing stays
@@ -288,10 +245,10 @@ object Skew {
     // canonically merges the four split siblings straight back into the
     // hot parent, silently undoing the split (round-1 latent bug: the
     // old code compressed unconditionally, so splitting never actually
-    // reached the join keys). The rewrite UDF already compresses its
-    // input and emits normalized disjoint cells. A gate-skipped cover is
+    // reached the join keys). The rewrite already compresses its input
+    // and emits normalized disjoint cells. A gate-skipped cover is
     // untouched and still needs the canonical compress.
-    val cellsCol = if (splitApplied) col(rightSids) else stareCompress(col(rightSids))
+    val cellsCol = if (splitApplied) col(rightSids) else coverCells(col(rightSids))
     val rightKeyed = rKeySource
       .select(col("key_right").as("__rid"), explode(cellsCol).as("__rs"))
       .withColumn("__rk", stareClearToOwn(col("__rs")))
@@ -324,7 +281,6 @@ object Skew {
     // drop the pair. Cells FINER than the capped target keep their own
     // base levels (they can only match left rows at least that fine,
     // which the per-level guard already expresses).
-    val rebaseBudget = 16L * 1024 * 1024
     // saturating cost of expanding every keyed cell below `target` up to
     // `target` — over ALL levels present in the keyed right frame
     // (levelHist includes SPLIT-CHILD cells, which the rebase UDF also
@@ -350,20 +306,17 @@ object Skew {
     val sortedKept = keptLevels.sorted
     val anyTargetCanFit = sortedKept.length > 1 && {
       val minimal = rebaseCostTo(sortedKept(1))
-      minimal <= rebaseBudget
+      minimal <= Budgets.RebaseKeys
     }
     val minLeftLevel: Int = knownMinLeftLevel
       .orElse(splitRes.map(_.minLeftLevel))
       .getOrElse {
         if (!anyTargetCanFit) Sid.MaxLevel // rebase hopeless: cap is moot
-        else left.agg(min(stareLevel(col(leftSid)))).collect()(0) match {
-          case r if r.isNullAt(0) => Sid.MaxLevel
-          case r                  => r.getLong(0).toInt
-        }
+        else minSidLevel(left, leftSid)
       }
     val target = math.min(if (keptLevels.isEmpty) 0 else keptLevels.max, minLeftLevel)
     val rebaseCost = rebaseCostTo(target)
-    val rebased = keptLevels.count(_ <= target) > 1 && rebaseCost <= rebaseBudget
+    val rebased = keptLevels.count(_ <= target) > 1 && rebaseCost <= Budgets.RebaseKeys
     val rightKeyedFinal =
       if (!rebased) rightKeyed
       else {
@@ -378,58 +331,27 @@ object Skew {
     // Catalyst then plans EVERY join here as a sort-merge join, even
     // for an 8-row cover table (measured: 7 SMJs in the q43 plan), and
     // at bench scale the 24M-row point side pays a full sort. Decide
-    // deliberately from the known count: broadcast when the keyed side
-    // fits the session's broadcast threshold (the left side is then
-    // never shuffled at all); otherwise force a shuffled-hash join
-    // (build = the small keyed side) so the big side streams instead
-    // of sorting; fall back to sort-merge only when the per-partition
+    // deliberately from the known count and the session budgets:
+    // broadcast when a side fits the broadcast threshold (the left side
+    // is then never shuffled at all); otherwise force a shuffled-hash
+    // join (build = the small side) so the big side streams instead of
+    // sorting; fall back to sort-merge only when the per-partition
     // build could be large (conf spark.graft.join.shjMaxBuildBytesPerPartition).
+    val budgets = Budgets(left.sparkSession)
     val keyedRightRows: Long =
       if (!rebased) levelHist.valuesIterator.sum
       else rebaseCost + levelHist.iterator.collect { case (l, n) if l >= target => n }.sum
-    val estKeyedBytes = keyedRightRows * 32L // (rid, key) pair, Catalyst-order sizing
-    val bcastThreshold = {
-      val raw = left.sparkSession.conf
-        .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-      try { if (raw.startsWith("-")) -1L
-            else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw) }
-      catch { case _: Exception => 10485760L }
-    }
-    val shufflePartitions =
-      try left.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      catch { case _: Exception => 200 }
-    val shjBuildCap = {
-      val raw = left.sparkSession.conf
-        .get("spark.graft.join.shjMaxBuildBytesPerPartition", (64L * 1024 * 1024).toString)
-      try raw.toLong catch { case _: Exception => 64L * 1024 * 1024 }
-    }
-    val rightForKeyJoin =
-      if (bcastThreshold > 0 && estKeyedBytes <= bcastThreshold)
-        org.apache.spark.sql.functions.broadcast(rightKeyedFinal)
-      else if (estKeyedBytes / math.max(1, shufflePartitions) <= shjBuildCap)
-        rightKeyedFinal.hint("shuffle_hash")
-      else rightKeyedFinal // sort-merge: spills gracefully for huge covers
-    // The assemble join-back (joined ⋈ rightRows on the row id) sees the
-    // same stats-free lineage, so without a decision here it sort-merges
-    // — at the 24M-row shuffle bench that sort of the JOINED output was
-    // the single largest remaining cost. Size the right ROWS (payload
-    // included) from one bounded probe: row count is bounded by the
-    // keyed pair count (every non-empty cover row emits ≥ 1 pair;
-    // empty-cover rows are assumed rare — they carry no join work).
-    // Strategy honors the session broadcast threshold (the skew bench
-    // disables broadcasting precisely to model a beyond-broadcast cover
-    // side), falling back to shuffled-hash under the build cap.
-    val assembleProbeN = 4096
-    val rightProbe = rightRows.limit(assembleProbeN + 1).collect()
+    val estKeyedBytes = keyedRightRows * Budgets.PairBytes
+    // The right ROWS (payload included) are sized from one bounded
+    // probe: row count is bounded by the keyed pair count (every
+    // non-empty cover row emits ≥ 1 pair; empty-cover rows are assumed
+    // rare — they carry no join work).
+    val rightProbe = rightRows.limit(Budgets.RowWidthProbeRows + 1).collect()
     val rowBytesEst = StareJoin.approxRowBytes(rightProbe)
     val estRightRowsBytes =
-      if (rightProbe.length <= assembleProbeN) rowBytesEst * rightProbe.length
+      if (rightProbe.length <= Budgets.RowWidthProbeRows) rowBytesEst * rightProbe.length
       else rowBytesEst * math.max(keyedRightRows, rightProbe.length)
-    val (assembleRight, assembleBroadcast) =
-      if (bcastThreshold > 0 && estRightRowsBytes <= bcastThreshold) (rightRows, true)
-      else if (estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap)
-        (rightRows.hint("shuffle_hash"), false)
-      else (rightRows, false)
+    val rowsBroadcast = budgets.broadcastFits(estRightRowsBytes)
     // base levels probed unconditionally; split-child levels already in
     // the base set are matched by the base key (no gated duplicate — a
     // duplicate key value would double pairs); levels introduced ONLY
@@ -507,119 +429,84 @@ object Skew {
       }
       base ++ gated
     }
-    def keyedLeft(l: DataFrame): DataFrame =
-      l.withColumn("__lk", explode(filter(array(keyExprsFor(col(leftSid)): _*), c => c.isNotNull)))
+    def candidateKeys(sidCol: Column): Column =
+      explode(filter(array(keyExprsFor(sidCol): _*), c => c.isNotNull))
     // AQE's skew-join splitter still handles residual imbalance on the
     // non-broadcast strategies
     how match {
-      case "inner" if !assembleBroadcast &&
-        estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap =>
-        // Full-row keyed right (r6, guide §2.3/§8): when the join-back
-        // cannot broadcast, assembling by row id re-SHUFFLES the entire
-        // joined output (24M rows at the bench — its single largest
-        // cost). Instead, attach the right ROW COLUMNS to the small
-        // keyed side BEFORE the big join (a small⋈small hash join), so
-        // the big side crosses exactly ONE exchange and the join output
-        // is final. The split rewrite stays confined to the key
+      case "left" if keyExprsFor(col(leftSid)).size != 1 =>
+        // Pair/join-back: pair ids first (cover cells are disjoint after
+        // compression, so pairs are already unique), then re-attach
+        // unmatched left rows — with multiple candidate key levels a
+        // direct left join would emit one spurious all-null row per
+        // non-matching key (and with none, e.g. all-empty covers, there
+        // is no key to join on).
+        val rightForKeyJoin =
+          if (budgets.broadcastFits(estKeyedBytes)) broadcast(rightKeyedFinal)
+          else if (budgets.shjFits(estKeyedBytes)) rightKeyedFinal.hint("shuffle_hash")
+          else rightKeyedFinal // sort-merge: spills gracefully for huge covers
+        val leftIds = StareJoin.withStableId(left, "__stare_lid")
+        val pairs = leftIds.select(col("__stare_lid"), candidateKeys(col(leftSid)).as("__lk"))
+          .join(rightForKeyJoin, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "inner")
+          .select(col("__stare_lid"), col("__rid"))
+        val joined = leftIds.join(pairs, Seq("__stare_lid"), "left").drop("__stare_lid")
+        // the join-back sees the same stats-free lineage: without a
+        // decision here it sort-merges the joined output
+        val assembleRight =
+          if (!rowsBroadcast && budgets.shjFits(estRightRowsBytes)) rightRows.hint("shuffle_hash")
+          else rightRows
+        StareJoin.assemble(joined, assembleRight, how = "left", broadcastRight = rowsBroadcast)
+      case "inner" | "left" =>
+        // Single-exchange keyed join: the big side crosses at most ONE
+        // exchange and the join output is final — assembling by row id
+        // after the key join re-SHUFFLED the entire joined output (24M
+        // rows at the bench, its single largest cost). An inner join may
+        // explode each row to all its candidate keys: a non-matching key
+        // simply drops out. A left join needs exactly one candidate key
+        // per row (the post-rebase common case: one uniform base level,
+        // no gated split levels, and — provably, see the suppression
+        // construction — no suppression predicates either): with N keys
+        // a row would left-join into one spurious all-null row per
+        // non-matching key, while with one key a non-match is THE
+        // unmatched row and a match has exact multiplicity (cells within
+        // a cover row are disjoint, so one key matches at most one cell
+        // per right row). The split rewrite stays confined to the key
         // derivation: rightKeyedFinal carries (rid, key) from the
-        // (possibly split/rebased) cells, while the row columns come
-        // from the ORIGINAL rightRows.
-        val leftCols = left.columns
-        val rightCols = rightRows.columns.filter(_ != "key_right")
-        val clash = leftCols.toSet.intersect(rightCols.toSet)
-        val l = clash.foldLeft(left)((df, c) => df.withColumnRenamed(c, c + "_left"))
-        val r = clash.foldLeft(rightRows)((df, c) => df.withColumnRenamed(c, c + "_right"))
-        val lSid = if (clash.contains(leftSid)) leftSid + "_left" else leftSid
-        val rightFull = rightKeyedFinal
-          .join(r.hint("shuffle_hash"), col("__rid") === col("key_right"), "inner")
-          .drop("__rid")
-        // key expressions rebuilt against the (possibly clash-renamed)
-        // left sid column
-        val keyedLeftFull =
-          l.withColumn("__lk", explode(filter(array(keyExprsFor(col(lSid)): _*), c => c.isNotNull)))
-        val out = keyedLeftFull
-          .join(rightFull.hint("shuffle_hash"), StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "inner")
-          .drop("__lk", "__rk")
-        // column order contract: left columns, key_right, right columns
-        val ordered = l.columns.filter(_ != "__lk").map(out(_)) ++
-          Array(out("key_right")) ++ r.columns.filter(_ != "key_right").map(out(_))
-        out.select(ordered.toIndexedSeq: _*)
-      case "inner" =>
-        val joined = keyedLeft(left).join(rightForKeyJoin, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "inner")
-          .drop("__lk", "__rk")
-        StareJoin.assemble(joined, assembleRight, how = "inner", broadcastRight = assembleBroadcast)
-      case "left" if keyExprsFor(col(leftSid)).size == 1 =>
-        // Single candidate key per left row (the post-rebase common
-        // case: one uniform base level, no gated split levels, and —
-        // provably, see the suppression construction — no suppression
-        // predicates either): a DIRECT left equi-join is exact. The
-        // pair/join-back shape below exists because a row exploded to
-        // N candidate keys left-joins into one spurious all-null row
-        // per non-matching key; with exactly one key a non-match is
-        // THE unmatched row and a match has exact multiplicity (cells
-        // within a cover row are disjoint, so one key matches at most
-        // one cell per right row). Collapses three passes over the big
-        // side (key join + id join-back + assemble) into ONE — q43's
-        // cold sweep cost roughly halves, and at scale the big side
-        // crosses exactly one exchange like the inner full-row path.
-        val leftCols = left.columns
-        val rightCols = rightRows.columns.filter(_ != "key_right")
-        val clash = leftCols.toSet.intersect(rightCols.toSet)
-        val l = clash.foldLeft(left)((df, c) => df.withColumnRenamed(c, c + "_left"))
-        val r = clash.foldLeft(rightRows)((df, c) => df.withColumnRenamed(c, c + "_right"))
-        val lSid = if (clash.contains(leftSid)) leftSid + "_left" else leftSid
-        val keyedL = l.withColumn("__lk", keyExprsFor(col(lSid)).head)
-        val out =
-          if (assembleBroadcast && bcastThreshold > 0 && estKeyedBytes <= bcastThreshold) {
+        // (possibly split/rebased) cells, the row columns come from the
+        // ORIGINAL rightRows.
+        StareJoin.withContract(left, leftSid, rightRows, "key_right") { (l, lSid, r, _) =>
+          val keyedL = l.withColumn("__lk",
+            if (how == "inner") candidateKeys(col(lSid)) else keyExprsFor(col(lSid)).head)
+          val onKey = StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk"))
+          if (rowsBroadcast && budgets.broadcastFits(estKeyedBytes))
             // both small sides fit: broadcast the (rid, key) pairs and the
             // rows separately and probe them in turn, so the big side is
             // never shuffled and the builds hold pairs + rows, not the
             // pairs x payload product (a few rows of giant covers would
             // repeat each whole cover once per cell)
-            keyedL
-              .join(org.apache.spark.sql.functions.broadcast(rightKeyedFinal),
-                StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "left")
-              .join(org.apache.spark.sql.functions.broadcast(r), col("__rid") === col("key_right"), "left")
+            keyedL.join(broadcast(rightKeyedFinal), onKey, how)
+              .join(broadcast(r), col("__rid") === col("key_right"), how)
               .drop("__lk", "__rk", "__rid")
-          } else {
-            // small x small build: broadcast the row side when it fits (two
-            // exchanges saved at fixed cost; same output either way)
-            val rBuild =
-              if (assembleBroadcast) org.apache.spark.sql.functions.broadcast(r)
-              else r.hint("shuffle_hash")
-            val rightFullPlain = rightKeyedFinal
-              .join(rBuild, col("__rid") === col("key_right"), "inner")
+          else {
+            // full-row keyed side from a small x small build (broadcast
+            // the rows when they fit: two exchanges saved at fixed cost)
+            val rightFull = rightKeyedFinal
+              .join(if (rowsBroadcast) broadcast(r) else r.hint("shuffle_hash"),
+                col("__rid") === col("key_right"), "inner")
               .drop("__rid")
-            // The full-row keyed side has keyedRightRows rows, each carrying
-            // the whole right payload: a few rows with giant covers are
-            // small as rows but huge once keyed. Saturating, like
-            // rebaseCostTo.
+            // It has keyedRightRows rows, each carrying the whole right
+            // payload: a few rows with giant covers are small as rows but
+            // huge once keyed. Saturating, like rebaseCostTo.
             val estRightFullBytes =
               if (keyedRightRows > Long.MaxValue / rowBytesEst) Long.MaxValue
               else keyedRightRows * rowBytesEst
-            val rightFull =
-              if (estRightFullBytes / math.max(1, shufflePartitions) <= shjBuildCap)
-                rightFullPlain.hint("shuffle_hash")
-              else rightFullPlain // sort-merge: spills gracefully over the cap
             keyedL
-              .join(rightFull, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "left")
+              .join(if (budgets.shjFits(estRightFullBytes)) rightFull.hint("shuffle_hash")
+                    else rightFull, // sort-merge: spills gracefully over the cap
+                onKey, how)
               .drop("__lk", "__rk")
           }
-        val ordered = l.columns.filter(_ != "__lk").map(out(_)) ++
-          Array(out("key_right")) ++ r.columns.filter(_ != "key_right").map(out(_))
-        out.select(ordered.toIndexedSeq: _*)
-      case "left" =>
-        // pair ids first (cover cells are disjoint after compression, so
-        // pairs are already unique), then re-attach unmatched left rows.
-        // The pairs join-back (not a direct left join) is load-bearing
-        // here: with multiple candidate key levels a direct left join
-        // would emit one spurious all-null row per non-matching key.
-        val leftIds = StareJoin.withStableId(left, "__stare_lid")
-        val pairs = keyedLeft(leftIds.select(col("__stare_lid"), col(leftSid)))
-          .join(rightForKeyJoin, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "inner")
-          .select(col("__stare_lid"), col("__rid"))
-        val joined = leftIds.join(pairs, Seq("__stare_lid"), "left").drop("__stare_lid")
-        StareJoin.assemble(joined, assembleRight, how = "left", broadcastRight = assembleBroadcast)
+        }
       case other => throw new IllegalArgumentException(s"how=$other (inner|left)")
     }
   }

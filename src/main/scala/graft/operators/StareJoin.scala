@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Sid
+import graft.functions.NativeExpressions.knownNotNull
 import graft.functions.StareFunctions._
 
 /** Distributed STARE spatial join (intersects predicate).
@@ -45,7 +46,7 @@ object StareJoin {
     * and each of the 16M bench probes walked a ~7k-entry chain:
     * measured 160 core-seconds (~10 core-µs/row) against 0.28 s for an
     * equal-cardinality dense-key join; fixed, the probe is ~40x cheaper
-    * (joinlab in BenchExtra).
+    * (OPTIMIZATION_r06.md).
     *
     * key ^ (key >>> 31) is invertible (xorshift), null-preserving, and
     * moves every cover level's meaningful bits (positions 5..61) into
@@ -56,14 +57,99 @@ object StareJoin {
   private[operators] def mixKey(c: Column): Column =
     c.bitwiseXOR(shiftrightunsigned(c, 31))
 
-  /** normalized key of a sid at its own (statically known) level. */
-  private def normKey(sid: Column, level: Int): Column = stareClearTo(sid, level)
+  /** The budgets every join decision reads: the session's values,
+    * parsed once per call with `Budgets(spark)`, and the constants in
+    * the companion. */
+  private[operators] final case class Budgets(broadcastBytes: Long, shufflePartitions: Int,
+                                              shjBuildBytesPerPartition: Long, localCoverCap: Int) {
+    /** Spark's own rule: a threshold <= 0 disables broadcasting */
+    def broadcastFits(bytes: Long): Boolean = broadcastBytes > 0 && bytes <= broadcastBytes
+    def shjFits(bytes: Long): Boolean =
+      bytes / math.max(1, shufflePartitions) <= shjBuildBytesPerPartition
+  }
+
+  private[operators] object Budgets {
+    /** expanded (row, cell) keys of a uniform-level dictionary: ~64 MB
+      * as bare (rid, key) pairs */
+    final val DictKeys = 4L << 20
+    /** a dictionary carrying full right rows: expanded keys x row width */
+    final val FullRowDictBytes = 256L << 20
+    /** cover rows pointJoin collects to the driver */
+    final val CollectBytes = 512L << 20
+    /** rows of pointJoin's first guard probe (also its row-width sample) */
+    final val ProbeRows = 1000
+    /** rows shuffleJoin samples for the right row width */
+    final val RowWidthProbeRows = 4096
+    /** keyed right cells the shuffle path's uniform-level rebase may add */
+    final val RebaseKeys = 16L << 20
+    /** both collected sides of a driver-local cover x cover join */
+    final val LocalJoinBytes = 128L << 20
+    /** one exploded (rid, key) pair, in Catalyst's sizing order */
+    final val PairBytes = 32L
+    /** skew split gate: reducer sort rate and the split's fixed cost,
+      * measured on the 32-core bench box (BENCH.md) */
+    final val ReduceRowsPerSec = 2e6
+    final val SplitOverheadSec = 4.0
+
+    def apply(spark: SparkSession): Budgets = {
+      val sql = org.apache.spark.sql.graft.shim.sqlConf(spark)
+      def graftConf(key: String) = spark.conf.getOption(key).map(_.trim)
+      Budgets(sql.autoBroadcastJoinThreshold, sql.defaultNumShufflePartitions,
+        graftConf("spark.graft.join.shjMaxBuildBytesPerPartition").flatMap(_.toLongOption)
+          .getOrElse(64L << 20),
+        graftConf("spark.graft.join.localCoverCap").flatMap(_.toIntOption).getOrElse(1024))
+    }
+  }
+
+  /** The cells of a right row's cover, compressed: canonical covers are
+    * non-nested, so a left sid matches at most one cell per right row.
+    * A null cover is the empty cover. */
+  private[operators] def coverCells(cover: Column): Column =
+    stareCompress(coalesce(cover, lit(Array.emptyLongArray)))
+
+  /** Exact minimum sid level of a frame (one narrow aggregation job);
+    * Sid.MaxLevel for an empty frame, which no level bound constrains. */
+  private[operators] def minSidLevel(df: DataFrame, sid: String): Int = {
+    val r = df.agg(min(stareLevel(col(sid)))).collect()(0)
+    if (r.isNullAt(0)) Sid.MaxLevel else r.getLong(0).toInt
+  }
+
+  /** The one key of a left sid against a uniform-level dictionary: its
+    * ancestor at `level`, null for a sid coarser than that. With a known
+    * minimum left level at or above `level` the guard drops at plan
+    * time, and the key is marked KnownNotNull (the caller's declared
+    * level also implies non-null sids): otherwise the planner infers an
+    * IsNotNull(key) filter that evaluates the key, i.e. a second encode
+    * per row when the sid is an unevaluated encode. */
+  private def uniformKey(sid: Column, level: Int, knownMinLevel: Option[Int]): Column =
+    if (knownMinLevel.exists(_ >= level)) knownNotNull(stareClearTo(sid, level))
+    else when(stareLevel(sid) >= level, stareClearTo(sid, level))
+
+  /** The output contract every join shares (tools/stare_join.py,
+    * tests/test_join.py:77-81): columns both sides carry get `_left` /
+    * `_right` suffixes, and the result holds the left columns, then
+    * `key_right`, then the right columns (a join-back's row id `__rid`
+    * is not one of them). `join` receives both renamed sides with the
+    * renamed names of the columns it joins on. */
+  private[operators] def withContract(left: DataFrame, leftOn: String,
+                                      rightRows: DataFrame, rightOn: String)(
+      join: (DataFrame, String, DataFrame, String) => DataFrame): DataFrame = {
+    val clash = left.columns.toSet.intersect(rightRows.columns.toSet - "key_right")
+    def suffixed(df: DataFrame, suffix: String) =
+      clash.foldLeft(df)((d, c) => d.withColumnRenamed(c, c + suffix))
+    def renamed(c: String, suffix: String) = if (clash(c)) c + suffix else c
+    val l = suffixed(left, "_left")
+    val r = suffixed(rightRows, "_right")
+    val out = join(l, renamed(leftOn, "_left"), r, renamed(rightOn, "_right"))
+    val ordered = l.columns.filter(_ != "__rid") ++ ("key_right" +: r.columns.filter(_ != "key_right"))
+    out.select(ordered.toIndexedSeq.map(out(_)): _*)
+  }
 
   /** ancestor keys of a sid for the given candidate levels, keeping only
     * levels at or above the sid's own level. With a known minimum sid
     * level, levels at or below it need no per-row guard. */
-  private def ancestorKeys(sid: Column, levels: Array[Int],
-                           knownMinLevel: Option[Int] = None): Column = {
+  private[operators] def ancestorKeys(sid: Column, levels: Array[Int],
+                                      knownMinLevel: Option[Int] = None): Column = {
     val ml = knownMinLevel.getOrElse(-1)
     val guarded = levels.map { l =>
       if (l <= ml) stareClearTo(sid, l)
@@ -116,8 +202,7 @@ object StareJoin {
     // persisted: the optimizer folds the probe's limit into the local
     // rows, so its collect() plans no Spark job.
     val spark = left.sparkSession
-    val probeCap = math.min(1000, maxBroadcastRows)
-    val maxBroadcastBytes = 512L * 1024 * 1024
+    val probeCap = math.min(Budgets.ProbeRows, maxBroadcastRows)
     // persist only when the caller hasn't: an unconditional persist +
     // unpersist would silently DROP a caller's own cache (KnnJoin
     // persists its reusable sides across rounds)
@@ -127,18 +212,11 @@ object StareJoin {
     val collected: Array[org.apache.spark.sql.Row] =
       try {
         val probe = right.limit(probeCap + 1).collect()
-        if (probe.length <= probeCap) {
-          if (approxRowBytes(probe) * probe.length > maxBroadcastBytes)
-            return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
-              how = how, knownMinLeftLevel = knownMinLeftLevel)
-          probe
-        } else {
-          val n = right.count()
-          if (n > maxBroadcastRows || approxRowBytes(probe) * n > maxBroadcastBytes)
-            return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
-              how = how, knownMinLeftLevel = knownMinLeftLevel)
-          right.collect()
-        }
+        val n = if (probe.length <= probeCap) probe.length.toLong else right.count()
+        if (n > maxBroadcastRows || approxRowBytes(probe) * n > Budgets.CollectBytes)
+          return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
+            how = how, knownMinLeftLevel = knownMinLeftLevel)
+        if (probe.length <= probeCap) probe else right.collect()
       } finally if (weCached) right.unpersist(false)
     // The cover side fits in a broadcast, so assign row ids
     // on the driver: deterministic across every reuse of the frame (no
@@ -170,6 +248,7 @@ object StareJoin {
       return assemble(base, rightRows, how, broadcastRight = true)
     }
     val levels = keySet.map(Sid.level).toArray.sorted
+    val joinType = if (how == "inner") "inner" else "left"
 
     // Uniform-level dictionary plan: if expanding every cover cell to the
     // finest cover level keeps the broadcast side small, each point needs
@@ -177,7 +256,9 @@ object StareJoin {
     // |levels| probes/row. The multi-level explode plan moved 5x the rows
     // through the join and was memory-bandwidth-bound at high core
     // counts. Expansion is per right row over disjoint cells, so pair
-    // multiplicity is unchanged.
+    // multiplicity is unchanged. For how='left' a point matching nothing
+    // keeps one row with all-null right columns — exactly stare_join's
+    // left semantics, since there is a single key per row.
     val maxLevel = levels.last
     // Expansion cost summed over ROWS, not distinct keys: both
     // dictionary plans explode the cover per right row, so duplicate
@@ -185,29 +266,19 @@ object StareJoin {
     // 500k rows sharing one cell into a plan that would expand each of
     // them. Early exit once over budget (also prevents Long overflow on
     // extreme level spreads).
-    val keyBudget = 4L * 1024 * 1024
     val expansionCost: Long = {
       var cost = 0L
       var i = 0
-      while (i < perRowCells.length && cost <= keyBudget) {
+      while (i < perRowCells.length && cost <= Budgets.DictKeys) {
         val cells = perRowCells(i)
         var j = 0
-        while (j < cells.length && cost <= keyBudget) {
+        while (j < cells.length && cost <= Budgets.DictKeys) {
           cost += 1L << (2 * (maxLevel - Sid.level(cells(j)))); j += 1
         }
         i += 1
       }
       cost
     }
-    // budgets: row-count cap (4M keys ~ 64 MB as bare (rid, key) pairs)
-    // decides whether a uniform-level dictionary is viable at all; a
-    // BYTE cap on expansionCost x measured-row-width decides whether the
-    // dictionary can carry the full right rows (probe = the only pass
-    // over the big side) or only (rid, key) pairs + a re-join — a fat
-    // cover side (wide payload columns, big sid arrays) duplicated per
-    // expanded cell would otherwise build a multi-GB broadcast.
-    val rowBytes = approxRowBytes(collected)
-    val fullRowDictBytes = expansionCost * rowBytes
     // A uniform-level dictionary probes every left row at exactly ONE
     // level, so it is only SOUND when every left sid is at least as
     // fine as the finest cover cell: a left row with level in
@@ -220,110 +291,60 @@ object StareJoin {
     // when the caller declared nothing — one narrow column-pruned agg
     // job over the left sid column does. Mixed-level lefts fall through
     // to the per-level-guarded explode plan, which is exact for any mix.
-    val dictSafe = expansionCost <= keyBudget &&
-      (levels.length <= 1 || knownMinLeftLevel.map(_ >= maxLevel).getOrElse {
-        left.agg(min(stareLevel(col(leftSid)))).collect()(0) match {
-          case r if r.isNullAt(0) => true
-          case r                  => r.getLong(0) >= maxLevel
-        }
-      })
-    if (dictSafe && fullRowDictBytes <= 256L * 1024 * 1024) {
-      // The dictionary carries the right ROW COLUMNS directly (suffixed
-      // up front), so the probe is the ONLY pass over the big side —
-      // routing just row ids and re-joining in assemble() cost a second
-      // full broadcast-probe over every left row.
-      val leftCols = left.columns
-      val rightCols = rightRows.columns.filter(_ != "key_right")
-      val clash = leftCols.toSet.intersect(rightCols.toSet)
-      val l = clash.foldLeft(left)((df, c) => df.withColumnRenamed(c, c + "_left"))
-      val r = clash.foldLeft(rightRows)((df, c) => df.withColumnRenamed(c, c + "_right"))
-      val leftSidCol = if (clash.contains(leftSid)) leftSid + "_left" else leftSid
-      val rightSidsCol = if (clash.contains(rightSids)) rightSids + "_right" else rightSids
-      val expandAll = udf((sids: Seq[Long]) => Sid.expandToLevel(sids.toArray, maxLevel))
-      val rightUniform = r.withColumn(RKey, explode(expandAll(stareCompress(col(rightSidsCol)))))
-      // precondition of this plan: left sids are at least as fine as the
-      // finest cover cell (true for point tables at level 26/27 vs
-      // polygon covers; coarser left sids should use join() instead).
-      // Coarser rows get a null key => no match, never a wrong match.
-      // With a known-fine left the guard drops at plan time (one encode
-      // evaluation per row instead of three — see method doc).
-      // knownMinLeftLevel also implies non-null sids (an indexed table),
-      // so the key is marked KnownNotNull: without it the planner infers
-      // an IsNotNull(key) filter that re-evaluates the key expression —
-      // i.e. a second encode per row when sid is an unevaluated encode.
-      val leftKeyed = knownMinLeftLevel match {
-        case Some(ml) if ml >= maxLevel =>
-          l.withColumn(LKey, graft.functions.NativeExpressions.knownNotNull(
-            stareClearTo(col(leftSidCol), maxLevel)))
-        case _ => l.withColumn(LKey,
-          when(stareLevel(col(leftSidCol)) >= maxLevel, stareClearTo(col(leftSidCol), maxLevel)))
+    val dictSafe = expansionCost <= Budgets.DictKeys &&
+      (levels.length <= 1 || knownMinLeftLevel.getOrElse(minSidLevel(left, leftSid)) >= maxLevel)
+    // A BYTE cap on expansionCost x measured-row-width decides whether
+    // the dictionary can carry the full right rows (probe = the only pass
+    // over the big side) or only (rid, key) pairs + a re-join — a fat
+    // cover side (wide payload columns, big sid arrays) duplicated per
+    // expanded cell would otherwise build a multi-GB broadcast.
+    if (dictSafe && expansionCost * approxRowBytes(collected) <= Budgets.FullRowDictBytes)
+      // The dictionary carries the right ROW COLUMNS directly, so the
+      // probe is the ONLY pass over the big side — routing just row ids
+      // and re-joining in assemble() cost a second full broadcast-probe
+      // over every left row.
+      return withContract(left, leftSid, rightRows, rightSids) { (l, lSid, r, rSids) =>
+        l.withColumn(LKey, uniformKey(col(lSid), maxLevel, knownMinLeftLevel))
+          .join(broadcast(r.withColumn(RKey, explode(stareExpand(coverCells(col(rSids)), maxLevel)))),
+            mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
+          .drop(LKey, RKey)
       }
-      val joinType = if (how == "inner") "inner" else "left"
-      // NOTE: for how='left' a point matching nothing keeps one row with
-      // all-null right columns — exactly stare_join's left semantics, no
-      // key filter needed because there is a single key per row.
-      val out = leftKeyed
-        .join(broadcast(rightUniform), mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
-        .drop(LKey, RKey)
-      // column order: left columns, key_right, right columns (test_join.py:77-81)
-      val ordered = l.columns.filter(c => c != LKey).map(out(_)) ++
-        Array(out("key_right")) ++ r.columns.filter(_ != "key_right").map(out(_))
-      return out.select(ordered.toIndexedSeq: _*)
-    }
-    if (dictSafe) {
+    val joined = if (dictSafe) {
       // Slim dictionary: same single-probe key plan, but the broadcast
       // carries only (rid, key) pairs; the right row columns re-attach in
       // assemble() via a second (cheap — the dictionary already filtered)
       // broadcast join. Chosen when the full-row dictionary would blow
       // the byte budget (fat right rows x expansion).
-      val expandAll = udf((sids: Seq[Long]) => Sid.expandToLevel(sids.toArray, maxLevel))
       val slim = rightRows.select(col("key_right").as("__rid"),
-        explode(expandAll(stareCompress(col(rightSids)))).as(RKey))
-      val leftKeyed = knownMinLeftLevel match {
-        case Some(ml) if ml >= maxLevel =>
-          left.withColumn(LKey, graft.functions.NativeExpressions.knownNotNull(
-            stareClearTo(col(leftSid), maxLevel)))
-        case _ => left.withColumn(LKey,
-          when(stareLevel(col(leftSid)) >= maxLevel, stareClearTo(col(leftSid), maxLevel)))
-      }
-      val joinType = if (how == "inner") "inner" else "left"
-      val joined = leftKeyed.join(broadcast(slim), mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
-        .drop(LKey, RKey)
-      return assemble(joined, rightRows, how, broadcastRight = true)
-    }
-
-    // compress each cover first: canonical covers are non-nested, so a
-    // point matches at most one cover sid per right row — no pair dedup
-    // (and hence no join-back on a big-side row id) is ever needed.
-    val rightKeyed = rightRows
-      .withColumn("__cs", stareCompress(col(rightSids)))
-      .select(col("key_right").as("__rid"), explode(col("__cs")).as("__rs"))
-      .withColumn(RKey, stareClearToOwn(col("__rs")))
-      .select(col("__rid"), col(RKey))
-    val joined = if (how == "inner") {
-      // hot path: pure-native explode of the ancestor keys (one CASE+bit
-      // op per cover level, whole-stage codegen, zero allocation) and an
-      // inner hash probe — unmatched keys simply drop out. |levels| is
-      // small (compressed covers), so the explode factor is bounded.
-      val leftKeyed = left.withColumn(LKey,
-        explode(ancestorKeys(col(leftSid), levels, knownMinLeftLevel)))
-      leftKeyed.join(broadcast(rightKeyed), mixKey(col(LKey)) === mixKey(col(RKey)), "inner")
-        .drop(LKey, RKey)
+        explode(stareExpand(coverCells(col(rightSids)), maxLevel)).as(RKey))
+      left.withColumn(LKey, uniformKey(col(leftSid), maxLevel, knownMinLeftLevel))
+        .join(broadcast(slim), mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
     } else {
-      // left join: pre-filter each point's ancestor keys to those that
-      // exist on the right (the cover side is broadcast anyway, so its
-      // key set fits on the driver). Every surviving key matches >= 1
-      // right row, and a row with no surviving key explodes to a single
-      // null key — exact stare_join multiplicity with no row id,
-      // join-back, or window pass over the big side.
-      val filterKeys = udf((ks: Seq[Long]) => { val f = ks.filter(keySet); if (f.isEmpty) null else f })
-      val leftKeyed = left.withColumn(LKey,
-        explode_outer(filterKeys(ancestorKeys(col(leftSid), levels, knownMinLeftLevel))))
-      leftKeyed.join(broadcast(rightKeyed), mixKey(col(LKey)) === mixKey(col(RKey)), "left")
-        .drop(LKey, RKey)
+      // one key per cover cell; a point matches at most one cell per
+      // right row, so no pair dedup (and hence no join-back on a
+      // big-side row id) is ever needed
+      val rightKeyed = rightRows
+        .select(col("key_right").as("__rid"), explode(coverCells(col(rightSids))).as("__rs"))
+        .select(col("__rid"), stareClearToOwn(col("__rs")).as(RKey))
+      val ancestors = ancestorKeys(col(leftSid), levels, knownMinLeftLevel)
+      val leftKeyed =
+        // inner: pure-native explode of the ancestor keys (one CASE+bit
+        // op per cover level, whole-stage codegen, zero allocation) —
+        // unmatched keys simply drop out of the inner probe
+        if (how == "inner") left.withColumn(LKey, explode(ancestors))
+        else {
+          // left: pre-filter each point's ancestor keys to those that
+          // exist on the right (the cover side is broadcast anyway, so
+          // its key set fits on the driver). Every surviving key matches
+          // >= 1 right row, and a row with no surviving key explodes to a
+          // single null key — exact stare_join multiplicity with no row
+          // id, join-back, or window pass over the big side.
+          val filterKeys = udf((ks: Seq[Long]) => { val f = ks.filter(keySet); if (f.isEmpty) null else f })
+          left.withColumn(LKey, explode_outer(filterKeys(ancestors)))
+        }
+      leftKeyed.join(broadcast(rightKeyed), mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
     }
-
-    assemble(joined, rightRows, how, broadcastRight = true)
+    assemble(joined.drop(LKey, RKey), rightRows, how, broadcastRight = true)
   }
 
   /** Rough in-memory width of a collected row (bytes) — drives the
@@ -413,16 +434,13 @@ object StareJoin {
     // kernel) and the result a LocalRelation with known stats.
     // Conf-gated (spark.graft.join.localCoverCap, rows per side; 0
     // disables) so tests exercise both paths.
-    val localCap = try left.sparkSession.conf
-        .get("spark.graft.join.localCoverCap", "1024").toInt
-      catch { case _: Exception => 1024 }
+    val localCap = Budgets(left.sparkSession).localCoverCap
     if (localCap > 0) {
       val lp = left.limit(localCap + 1).collect()
       if (lp.length <= localCap) {
         val rp = right.limit(localCap + 1).collect()
         if (rp.length <= localCap &&
-          approxRowBytes(lp) * lp.length + approxRowBytes(rp) * rp.length <=
-            128L * 1024 * 1024)
+          approxRowBytes(lp) * lp.length + approxRowBytes(rp) * rp.length <= Budgets.LocalJoinBytes)
           return localJoin(left.sparkSession, lp, left.schema, leftSids,
             rp, right.schema, rightSids, how)
       }
@@ -522,24 +540,14 @@ object StareJoin {
     spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), outSchema)
   }
 
-  /** suffix clashing columns and finish the left/inner assembly. */
+  /** Join the right rows back onto `leftWithRid` by row id (`__rid` =
+    * `key_right`) under the shared output contract. */
   private[operators] def assemble(leftWithRid: DataFrame, rightRows: DataFrame, how: String,
                                   broadcastRight: Boolean): DataFrame = {
-    val leftCols = leftWithRid.columns.filter(_ != "__rid")
-    val rightCols = rightRows.columns.filter(_ != "key_right")
-    val clash = leftCols.toSet.intersect(rightCols.toSet)
-    val l = clash.foldLeft(leftWithRid)((df, c) => df.withColumnRenamed(c, c + "_left"))
-    val r = clash.foldLeft(rightRows)((df, c) => df.withColumnRenamed(c, c + "_right"))
-    val joinType = how match {
-      case "left"  => "left"
-      case "inner" => "inner"
-      case other   => throw new IllegalArgumentException(s"how=$other (left|inner)")
+    if (how != "left" && how != "inner")
+      throw new IllegalArgumentException(s"how=$how (left|inner)")
+    withContract(leftWithRid, "__rid", rightRows, "key_right") { (l, rid, r, key) =>
+      l.join(if (broadcastRight) broadcast(r) else r, l(rid) === r(key), how)
     }
-    val rf = if (broadcastRight) broadcast(r) else r
-    val out = l.join(rf, l("__rid") === r("key_right"), joinType)
-    // column order: left columns, key_right, right columns (test_join.py:77-81)
-    val ordered = l.columns.filter(_ != "__rid").map(out(_)) ++
-      Array(out("key_right")) ++ r.columns.filter(_ != "key_right").map(out(_))
-    out.select(ordered.toIndexedSeq: _*)
   }
 }

@@ -30,6 +30,10 @@ object shim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** The session's typed SQL conf (sessionState is private[sql]). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
   /** Append a packed (partitionId << 40 | rowInPartition) LongType id
     * column in a SINGLE pass over the physical InternalRow iterator:
     * no extra Spark job (unlike rdd.zipWithIndex, which runs a

@@ -177,8 +177,8 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spec.parents.nonEmpty)
     assert(spec.parents.forall(p => p.childLevels.forall(_ > p.level)))
 
-    val split = graft.operators.Skew.splitHotCells(pts, "sid", covers, "sids",
-      maxRowsPerCell = 100, sampleFraction = 0.5, wallClockGate = false)
+    val split = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
+      maxRowsPerCell = 100, sampleFraction = 0.5, wallClockGate = false).right
     // the hot cover must now contain deeper cells than the original
     val maxLevOrig = covers.select(explode(col("sids")).as("s")).agg(max(stareLevel(col("s")))).collect()(0).getLong(0)
     val maxLevSplit = split.select(explode(col("sids")).as("s")).agg(max(stareLevel(col("s")))).collect()(0).getLong(0)
@@ -290,6 +290,38 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // right payload columns still attached after the re-join
       val withPayload = viaSlim.filter(col("region") === "hot").select("payload").collect()
       assert(withPayload.nonEmpty && withPayload.forall(_.getString(0) == fat))
+    }
+  }
+
+  test("a null cover is the empty cover in pointJoin, shuffleJoin and join, inner and left") {
+    import spark.implicits._
+    val pts = Seq((1L, 10.0, 10.0), (2L, 10.5, 9.5), (3L, 60.0, -170.0)).toDF("id", "lat", "lon")
+      .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
+    val sids = pts.select("id", "sid").collect().map(r => (r.getLong(0), r.getLong(1)))
+    val box = Cover.coverFromBox(8.0, 12.0, 8.0, 12.0, 6).toSeq
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "region").collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)).getOrElse("__null"))).toSet
+    val none: Seq[Long] = null
+    for (covers <- Seq(Seq(("r1", none), ("r2", box)), Seq(("r1", none), ("r2", none)))) {
+      val right = covers.toDF("region", "sids")
+      val runs = covers.collect { case (n, c) if c != null => n -> Sid.mergedIntervals(c.toArray) }
+      val inner = for ((id, sid) <- sids; (n, rr) <- runs if Sid.anyIntersects(Array(sid), rr)) yield (id, n)
+      for (how <- Seq("inner", "left")) {
+        val unmatched = sids.map(_._1).filterNot(inner.map(_._1).toSet).map(_ -> "__null")
+        val brute = inner.toSet ++ (if (how == "left") unmatched else Array.empty[(Long, String)])
+        val clue = s"how=$how covers=$covers"
+        assert(pairs(graft.operators.StareJoin.pointJoin(pts, "sid", right, "sids", how = how)) === brute, clue)
+        assert(pairs(graft.operators.StareJoin.pointJoin(pts, "sid", right, "sids", how = how,
+          knownMinLeftLevel = Some(26))) === brute, clue)
+        assert(pairs(graft.operators.Skew.shuffleJoin(pts, "sid", right, "sids", how = how)) === brute, clue)
+        val arrays = pts.withColumn("sids_l", array(col("sid")))
+        assert(pairs(graft.operators.StareJoin.join(arrays, "sids_l", right, "sids", how = how)) === brute, clue)
+        spark.conf.set("spark.graft.join.localCoverCap", "0")
+        try assert(pairs(graft.operators.StareJoin.join(arrays, "sids_l", right, "sids", how = how)) === brute,
+          s"distributed join(), $clue")
+        finally spark.conf.unset("spark.graft.join.localCoverCap")
+      }
     }
   }
 
@@ -630,7 +662,8 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // 3 cover rows of ~1k level-10 cells each: a few KB per row, over
     // the 10 MB broadcast threshold once every keyed cell carries its
-    // row; that keyed full-row side must never be broadcast
+    // row; that keyed full-row side must never be broadcast. The inner
+    // join takes the same keyed shape, sized the same way.
     val boxes = Seq(("a", 0.0, 1.5, 0.0, 1.5), ("b", 20.0, 21.5, 10.0, 11.5), ("c", -40.0, -38.5, -20.0, -18.5))
     val covers = boxes.map { case (n, x0, x1, y0, y1) =>
       (n, Sid.expandToLevel(Cover.coverFromBox(x0, x1, y0, y1, 10, marginDeg = 0.2), 10).toSeq) }
@@ -642,40 +675,48 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (i.toLong, y0 - 0.5 + r.nextDouble() * 2.5, x0 - 0.5 + r.nextDouble() * 2.5)
     }.toDF("id", "lat", "lon").withColumn("sid", stareSid(col("lat"), col("lon"), 26))
     val runs = covers.map { case (n, c) => n -> Sid.mergedIntervals(c.toArray) }
-    val brute = pts.collect().flatMap { p =>
+    val bruteLeft = pts.collect().flatMap { p =>
       val sid = p.getLong(3)
       val hits = runs.collect { case (n, rr) if Sid.anyIntersects(Array(sid), rr) => n }
       if (hits.isEmpty) Seq((p.getLong(0), null: String)) else hits.map(n => (p.getLong(0), n))
     }.toSet
-    assert(brute.exists(_._2 != null) && brute.exists(_._2 == null))
-    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    assert(bruteLeft.exists(_._2 != null) && bruteLeft.exists(_._2 == null))
+    import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
-    def check(conf: Map[String, String], expect: String): Unit = {
+    def check(how: String, conf: Map[String, String], expect: String): Unit = {
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
-        val out = graft.operators.Skew.shuffleJoin(pts, "sid", right, "sids", how = "left",
+        val out = graft.operators.Skew.shuffleJoin(pts, "sid", right, "sids", how = how,
           knownMinLeftLevel = Some(26))
         val plan = out.queryExecution.sparkPlan
-        val bhj = plan.collect { case j: BroadcastHashJoinExec if j.joinType == LeftOuter => j }
+        // the joins that probe the point side (every left outer join is one)
+        val probeType = if (how == "left") LeftOuter else Inner
+        def probes(j: SparkPlan) = j.output.exists(_.name == "id")
+        val bhj = plan.collect { case j: BroadcastHashJoinExec if j.joinType == probeType && probes(j) => j }
         assert(bhj.forall { j =>
           val built = j.right.output.map(_.name).toSet
           !(built.contains("__rk") && built.contains("sids"))
         }, s"the keyed full-row side must not be broadcast:\n$plan")
-        val shj = plan.collect { case j: ShuffledHashJoinExec if j.joinType == LeftOuter => j }
-        val smj = plan.collect { case j: SortMergeJoinExec if j.joinType == LeftOuter => j }
+        val shj = plan.collect { case j: ShuffledHashJoinExec if j.joinType == probeType && probes(j) => j }
+        val smj = plan.collect { case j: SortMergeJoinExec if j.joinType == probeType && probes(j) => j }
         expect match {
           // pairs and rows broadcast on their own, probed in turn
           case "broadcast" => assert(bhj.length === 2 && shj.isEmpty && smj.isEmpty, plan.toString)
           case "shj"       => assert(shj.length === 1 && bhj.isEmpty && smj.isEmpty, plan.toString)
           case "smj"       => assert(smj.length === 1 && bhj.isEmpty && shj.isEmpty, plan.toString)
         }
-        assert(out.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet === brute)
+        val brute = if (how == "left") bruteLeft else bruteLeft.filter(_._2 != null)
+        assert(out.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet === brute,
+          s"how=$how, $expect")
       } finally conf.keys.foreach(spark.conf.unset)
     }
-    check(Map.empty, "broadcast")
-    val noBroadcast = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    check(noBroadcast, "shj")
-    check(noBroadcast + ("spark.graft.join.shjMaxBuildBytesPerPartition" -> (1L << 20).toString), "smj")
+    for (how <- Seq("left", "inner")) {
+      check(how, Map.empty, "broadcast")
+      val noBroadcast = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      check(how, noBroadcast, "shj")
+      check(how, noBroadcast + ("spark.graft.join.shjMaxBuildBytesPerPartition" -> (1L << 20).toString), "smj")
+    }
   }
 
   test("packed stable ids: unique, deterministic across re-evaluation, complex-type safe") {

@@ -156,6 +156,16 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         val shuffle = observedPairs(
           Skew.shuffleJoin(leftDf, "sid", rightDf, "sids", splitHot = None, how = how))
         assert(shuffle === expContains, s"shuffleJoin vs brute — $clue")
+        // the shuffle shapes: broadcast off (shuffled-hash), then a
+        // 1-byte build cap (sort-merge)
+        val noBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+        for (conf <- Seq(noBroadcast, noBroadcast :+ ("spark.graft.join.shjMaxBuildBytesPerPartition" -> "1"))) {
+          conf.foreach { case (k, v) => spark.conf.set(k, v) }
+          val shuffled =
+            try observedPairs(Skew.shuffleJoin(leftDf, "sid", rightDf, "sids", splitHot = None, how = how))
+            finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+          assert(shuffled === expContains, s"shuffleJoin ${conf.toMap} vs brute — $clue")
+        }
 
         // join() reference over the FULL left arrays (expectedPairs takes
         // a scalar sid, so build this pair set directly)
