@@ -13,6 +13,9 @@ import org.apache.spark.sql.functions._
   *                                 session, count() action, memo cleared
   *                                 per rep) printed as one JSON line/rep
   *   noop [qnames...]            — noop-sink timing (full-column compute)
+  *   qstages <qname>             — one query cold then warm: wall, stages,
+  *                                 executor time, driver gap (wall outside
+  *                                 every stage), largest job's task count
   */
 object BenchExtra {
 
@@ -162,37 +165,57 @@ object BenchExtra {
           f""""full_join_sec":$joinSec%.3f}""")
       case "qstages" =>
         // per-stage wall/executor-time accounting for one query (cold
-        // then warm) — locates CPU-bound stages vs scheduling/compile
+        // then warm) — locates CPU-bound stages vs scheduling/compile.
+        // The driver gap (query wall minus the union of the stages' wall
+        // intervals) is time in which no stage ran: planning, codegen and
+        // compile, driver-side I/O. The largest task count of any job
+        // shows metadata jobs (a parallel listing runs one task per
+        // directory) that a per-stage top list can hide.
         val name = args(1)
-        val stageLog = new scala.collection.mutable.ArrayBuffer[(Int, Int, Long, Long)]
+        // (stage id, tasks, executor run ms, submitted ms, completed ms)
+        val stageLog = new scala.collection.mutable.ArrayBuffer[(Int, Int, Long, Long, Long)]
+        val stageJob = scala.collection.mutable.Map.empty[Int, Int]
         val sl = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            stageLog.synchronized(js.stageIds.foreach(stageJob(_) = js.jobId))
           override def onStageCompleted(
               sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
             val si = sc.stageInfo
+            val start = si.submissionTime.getOrElse(0L)
             stageLog.synchronized {
               stageLog += ((si.stageId, si.numTasks, si.taskMetrics.executorRunTime,
-                si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)))
+                start, si.completionTime.getOrElse(start)))
             }
           }
         }
         spark.sparkContext.addSparkListener(sl)
         for (rep <- 1 to 2) {
           org.apache.spark.sql.graft.shim.drainListenerBus(spark)
-          stageLog.synchronized(stageLog.clear())
+          stageLog.synchronized { stageLog.clear(); stageJob.clear() }
           SparkEntry.clearDupPairsMemo()
           spark.catalog.clearCache()
+          val t0Ms = System.currentTimeMillis()
           val t0 = System.nanoTime()
           SparkEntry.queries(name)(spark, sfDir).count()
           val wall = (System.nanoTime() - t0) / 1e9
+          val t1Ms = System.currentTimeMillis()
           org.apache.spark.sql.graft.shim.drainListenerBus(spark)
-          val (nstages, runMs, wallMs) = stageLog.synchronized {
-            (stageLog.length, stageLog.map(_._3).sum, stageLog.map(_._4).sum)
-          }
-          System.err.println(f"[qstages] $name rep$rep: wall $wall%.2f s, $nstages stages, " +
-            f"execRun ${runMs / 1e3}%.2f s, stage-wall ${wallMs / 1e3}%.2f s")
-          stageLog.synchronized(stageLog.toSeq).sortBy(-_._3).take(6).foreach {
-            case (id, nt, run, w) =>
-              System.err.println(f"[qstages]   stage $id%4d tasks=$nt%3d execRunMs=$run%6d wallMs=$w%5d")
+          val (stages, jobOf) = stageLog.synchronized((stageLog.toSeq, stageJob.toMap))
+          val runMs = stages.map(_._3).sum
+          val wallMs = stages.map(s => s._5 - s._4).sum
+          // union of the stage intervals, clipped to the query's wall
+          val busyMs = stages.map(s => (math.max(s._4, t0Ms), math.min(s._5, t1Ms)))
+            .filter(iv => iv._1 < iv._2).sortBy(_._1)
+            .foldLeft((0L, Long.MinValue)) { case ((sum, reach), (a, b)) =>
+              if (b <= reach) (sum, reach) else (sum + b - math.max(a, reach), b)
+            }._1
+          val maxJobTasks = (stages.groupBy(s => jobOf.getOrElse(s._1, -1)).values
+            .map(_.map(_._2).sum) ++ Seq(0)).max
+          System.err.println(f"[qstages] $name rep$rep: wall $wall%.2f s, ${stages.length} stages, " +
+            f"execRun ${runMs / 1e3}%.2f s, stage-wall ${wallMs / 1e3}%.2f s, " +
+            f"driver gap ${wall - busyMs / 1e3}%.2f s, max job tasks $maxJobTasks")
+          stages.sortBy(-_._3).take(6).foreach { case (id, nt, run, a, b) =>
+            System.err.println(f"[qstages]   stage $id%4d tasks=$nt%3d execRunMs=$run%6d wallMs=${b - a}%5d")
           }
         }
         spark.sparkContext.removeSparkListener(sl)

@@ -6,7 +6,7 @@ import graft.core.{Cover, Sid}
 import graft.functions.StareFunctions._
 import graft.operators.{Dissolve, KnnJoin, SpeedySubset, StareJoin}
 import graft.pipeline.{AnnOps, Multimodal, TextOps}
-import graft.sources.{Pods, Raster, Webtext}
+import graft.sources.{ForkFreeLocalFileSystem, Pods, Raster, Webtext}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -78,6 +78,24 @@ object SparkEntry {
   /** row matched to region R must satisfy R's exact box predicate. */
   private def refineMatched: Column =
     regions.map(r => col("region_name") === r.name && inRegion(r)).reduce(_ || _)
+
+  /** coversDf plus each region's box as a struct column `region`, so a
+    * matched row is refined against its own box (inBox) — one box test
+    * whose size does not grow with the region count, where
+    * refineMatched is one literal term per region (and pays codegen and
+    * compile time for each). */
+  private[graft] def boxedCoversDf(spark: SparkSession, level: Int = 6): DataFrame = {
+    import spark.implicits._
+    regions.map(r => (r.name, regionCover(r, level).toSeq, r)).toDF("region_name", "sids", "region")
+  }
+
+  /** inRegion over a box carried in a Region-typed struct column. */
+  private[graft] def inBox(box: Column): Column = {
+    val latOk = col("lat") >= box("latMin") && col("lat") <= box("latMax")
+    val lonOk = when(box("wraps"), col("lon") >= box("lonMin") || col("lon") <= box("lonMax"))
+      .otherwise(col("lon") >= box("lonMin") && col("lon") <= box("lonMax"))
+    latOk && lonOk
+  }
 
   /** geotagged + sid-indexed webtext table. Repartitioned first: the
     * test tables are single parquet files, which would otherwise pin
@@ -235,9 +253,9 @@ object SparkEntry {
       // cover join prunes (cover ⊇ box by construction), exact box test
       // decides — also the right plan at 100 TB
       val docs = indexed(s, dir)
-      StareJoin.pointJoin(docs, "sid", coversDf(s), "sids", how = "inner",
+      StareJoin.pointJoin(docs, "sid", boxedCoversDf(s), "sids", how = "inner",
         knownMinLeftLevel = Some(26))
-        .filter(refineMatched)
+        .filter(inBox(col("region")))
         .groupBy(col("region_name")).agg(count(lit(1)).as("pages"))
         .orderBy(col("region_name"))
     }),
@@ -250,11 +268,11 @@ object SparkEntry {
       // docs again) through a left-anti join; this groupBy(doc_id)
       // reuses indexed()'s hash partitioning, so no new exchange.
       val docs = indexed(s, dir)
-      val joined = StareJoin.pointJoin(docs, "sid", coversDf(s), "sids", how = "left",
+      val joined = StareJoin.pointJoin(docs, "sid", boxedCoversDf(s), "sids", how = "left",
         knownMinLeftLevel = Some(26))
       joined
         .groupBy(col("doc_id"))
-        .agg(collect_list(when(col("region_name").isNotNull && refineMatched,
+        .agg(collect_list(when(col("region_name").isNotNull && inBox(col("region")),
           col("region_name"))).as("__regions"))
         .select(explode(when(size(col("__regions")) === 0, array(lit("__none")))
           .otherwise(col("__regions"))).as("region_name"))
@@ -392,10 +410,10 @@ object SparkEntry {
       // repartition by pod mirrors the sink's real file shape (one file
       // per pod per micro-batch) — without it every task writes a sliver
       // into every pod directory (tasks x pods small files).
-      // r6 (guide §6): previous store trashed asynchronously instead of
-      // the overwrite's driver-blocking recursive delete; committer v2
-      // moves task output in the (parallel) task commit — Pods.write's
-      // commit-shape rationale applies verbatim.
+      // r6 (guide §6): previous store (and any stale trash of it)
+      // trashed asynchronously instead of the overwrite's driver-blocking
+      // recursive delete; committer v2 and the fork-free local FS —
+      // Pods.write's write options and rationale apply verbatim.
       // repartition by NUMBER + key so AQE cannot coalesce the tiny
       // shuffle into one task that writes every pod dir serially (the
       // Pods.write lesson; the explicit count pins write parallelism)
@@ -403,7 +421,7 @@ object SparkEntry {
       docs.repartition(s.sessionState.conf.numShufflePartitions, col("pod"))
         .sortWithinPartitions(col("sid"))
         .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+        .options(ForkFreeLocalFileSystem.writeOptions)
         .partitionBy("pod").parquet(out)
       Pods.reconcile(s, out, s"rec-$runNonce-$dir", tsCol = Some("warc_ts"))
       val r = region("asia_se")
@@ -481,16 +499,15 @@ object SparkEntry {
       import s.implicits._
       val docs = indexed(s, dir)
       val inter = regionPairs.map { case (a, b) =>
-        (s"${a.name}|${b.name}", Sid.intersection(regionCover(a), regionCover(b)))
+        (s"${a.name}|${b.name}", Sid.intersection(regionCover(a), regionCover(b)), a, b)
       }
-      val pairsDf = inter.collect { case (n, c) if c.nonEmpty => (n, c.toSeq) }
-        .toDF("pair_name", "sids")
-      val refinePair = regionPairs.map { case (a, b) =>
-        col("pair_name") === s"${a.name}|${b.name}" && inRegion(a) && inRegion(b)
-      }.reduce(_ || _)
+      // each pair carries its two boxes, so the refine is two box tests
+      // over the matched row, not one literal term per pair
+      val pairsDf = inter.collect { case (n, c, a, b) if c.nonEmpty => (n, c.toSeq, a, b) }
+        .toDF("pair_name", "sids", "a", "b")
       val counts = StareJoin.pointJoin(docs, "sid", pairsDf, "sids", how = "inner",
           knownMinLeftLevel = Some(26))
-        .filter(refinePair)
+        .filter(inBox(col("a")) && inBox(col("b")))
         .groupBy(col("pair_name")).agg(count(lit(1)).as("pages"))
       inter.map(_._1).toDF("pair_name")
         .join(counts, Seq("pair_name"), "left")

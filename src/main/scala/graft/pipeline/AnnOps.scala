@@ -341,7 +341,7 @@ object AnnOps {
     emb.withColumn(ClusterCol, ivfAssign(emb, vecCol, centroids))
       .repartition(emb.sparkSession.sessionState.conf.numShufflePartitions, col(ClusterCol))
       .write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .options(graft.sources.ForkFreeLocalFileSystem.writeOptions)
       .partitionBy(ClusterCol).parquet(path)
 
   /** Probed top-k against a writeClustered table: partition pruning on

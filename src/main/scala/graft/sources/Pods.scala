@@ -38,7 +38,17 @@ import graft.functions.StareFunctions._
   * Manifests are derived by reading back the committed parquet files —
   * one cheap columnar scan of (sid, ts) — so they are consistent with
   * what was actually written even for non-deterministic inputs, and the
-  * input pipeline is computed exactly once.
+  * input pipeline is computed exactly once. The commit lists the files
+  * it scans and accounts once: a batch store with a java.nio walk of its
+  * pod directories, over which the scan is built without a second
+  * listing; a store with a streaming sink's `_spark_metadata` through
+  * `spark.read.parquet`, whose commit-log index excludes orphan files.
+  *
+  * Two local-FS-only optimisations: partitioned writes go through
+  * [[ForkFreeLocalFileSystem]] (no `chmod` process per created file or
+  * directory), and a replaced store is renamed aside and deleted on a
+  * background thread ([[trashAsync]]). Object stores have neither a
+  * `chmod` fork to save nor a cheap rename.
   */
 object Pods {
 
@@ -63,6 +73,7 @@ object Pods {
             lineageId: String, tsCol: Option[String] = None,
             chunkMs: Long = 30L * 86400000L): Unit = {
     val spark = df.sparkSession
+    sweepTrash(Paths.get(path))
     snapshotInfo(path) match {
       case Some((FormatVersion, lin)) if lin == lineageId && manifestsFile(path).toFile.exists() =>
         return // committed by this lineage under the current layout: resume is a no-op
@@ -113,7 +124,7 @@ object Pods {
       .repartition(spark.sessionState.conf.numShufflePartitions, partCols.map(col): _*)
       .sortWithinPartitions(col(sidCol))
       .write.mode("overwrite")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .options(ForkFreeLocalFileSystem.writeOptions)
       .partitionBy(partCols: _*).parquet(path)
 
     commitStore(spark, path, sidCol, hasTchunk = tsCol.isDefined, tsCol = tsCol,
@@ -129,21 +140,31 @@ object Pods {
                           hasTchunk: Boolean, tsCol: Option[String], podLevel: Int,
                           chunkMs: Long, lineageId: String): Unit = {
     val partCols = "pod" +: (if (hasTchunk) Seq("tchunk") else Seq.empty)
+    // The scan and the accounted-file set come from ONE listing, so the
+    // manifests describe exactly the accounted files. On a streaming-sink
+    // store `spark.read.parquet(path)` honors the sink's _spark_metadata
+    // commit log (orphans from a failed micro-batch are neither aggregated
+    // nor accounted; they stay "new" until their batch commits) and plans
+    // no parallel listing. A batch store is listed once with java.nio and
+    // the scan is built over that listing: `spark.read.parquet(path)`
+    // would list it again, as a Spark job with one task per pod
+    // directory once there are more than parallelPartitionDiscovery
+    // .threshold of them (0.5-1.2 s of wall for 128 directories).
+    val (scan, files) =
+      if (Files.exists(Paths.get(path, "_spark_metadata"))) {
+        val df = spark.read.parquet(path)
+        (df, relativizeDataFiles(path, df.inputFiles))
+      } else {
+        val listed = listDataFiles(path)
+        (org.apache.spark.sql.graft.shim.parquetFromListing(spark, path,
+          listed.map(f => (f.rel, f.length, f.mtimeMs))), listed.map(_.rel))
+      }
     // partition-value types are INFERRED on read (small tchunk values
     // come back as int): normalize to long before aggregating
-    val back = partCols.foldLeft(spark.read.parquet(path))((d, c) =>
-      d.withColumn(c, col(c).cast("long")))
-    val groupCols = partCols.map(col)
-    val mans = scanManifests(back, groupCols, hasTchunk, sidCol, tsCol, lineageId)
+    val back = partCols.foldLeft(scan)((d, c) => d.withColumn(c, col(c).cast("long")))
+    val mans = scanManifests(back, partCols.map(col), hasTchunk, sidCol, tsCol, lineageId)
       .sortBy(m => (m.pod, m.tchunk))
-
-    // account exactly the files the scan above read, from the scan's own
-    // resolved relation (one listing, not a second): on a streaming-sink
-    // store `spark.read.parquet(path)` honors the sink's _spark_metadata
-    // commit log, so orphans from a failed micro-batch are neither
-    // aggregated nor accounted (they stay "new" until their batch commits)
-    writeCommit(path, mans, podLevel, hasTchunk, chunkMs, lineageId,
-      relativizeDataFiles(path, back.inputFiles).toSet)
+    writeCommit(path, mans, podLevel, hasTchunk, chunkMs, lineageId, files.toSet)
   }
 
   /** One groupBy-collect deriving per-(pod[, tchunk]) manifests from a
@@ -380,7 +401,7 @@ object Pods {
     * source of truth (orphans from failed micro-batches are excluded);
     * otherwise the directory walk. The log read is metadata-only. */
   private def committedDataFiles(spark: SparkSession, path: String): Seq[String] = {
-    if (!Files.exists(Paths.get(path, "_spark_metadata"))) walkDataFiles(path)
+    if (!Files.exists(Paths.get(path, "_spark_metadata"))) listDataFiles(path).map(_.rel)
     else relativizeDataFiles(path, spark.read.parquet(path).inputFiles)
   }
 
@@ -396,18 +417,32 @@ object Pods {
     }.filter(_.startsWith("pod=")).sorted
   }
 
-  /** All parquet data files under the store, as store-relative paths
-    * (stable across absolute-path renames of the store root). */
-  private def walkDataFiles(path: String): Seq[String] = {
+  private final case class DataFile(rel: String, length: Long, mtimeMs: Long)
+
+  /** All parquet data files under the store's pod directories, as
+    * store-relative paths (stable across absolute-path renames of the
+    * store root), sorted. Like Spark's own listing, it skips hidden
+    * paths: any component starting with `_` or `.` (a `_temporary`
+    * committer directory, `.crc` files). */
+  private def listDataFiles(path: String): Seq[DataFile] = {
+    import java.nio.file.{FileVisitResult, SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
     val root = Paths.get(path)
-    val s = Files.walk(root)
-    try s.iterator().asScala
-      .filter(p => { val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_") })
-      .map(p => root.relativize(p).toString)
-      .filter(_.startsWith("pod="))
-      .toSeq.sorted
-    finally s.close()
+    def hidden(p: Path) = { val n = p.getFileName.toString; n.startsWith("_") || n.startsWith(".") }
+    val out = scala.collection.mutable.ArrayBuffer.empty[DataFile]
+    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes): FileVisitResult =
+        if (d == root) FileVisitResult.CONTINUE
+        else if (hidden(d) || (d.getParent == root && !d.getFileName.toString.startsWith("pod=")))
+          FileVisitResult.SKIP_SUBTREE
+        else FileVisitResult.CONTINUE
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+        if (f.getParent != root && !hidden(f) && f.getFileName.toString.endsWith(".parquet"))
+          out += DataFile(root.relativize(f).toString, a.size(), a.lastModifiedTime().toMillis)
+        FileVisitResult.CONTINUE
+      }
+    })
+    out.sortBy(_.rel).toSeq
   }
 
   private def manifestsFile(path: String): Path = Paths.get(path, "_manifests", "manifests.json")
@@ -425,18 +460,47 @@ object Pods {
   /** Atomically rename `p` aside and delete it on a daemon thread: the
     * caller observes the path gone immediately, without paying a
     * driver-blocking recursive delete. Falls back to the synchronous
-    * delete when the rename is impossible (cross-device, permissions). */
+    * delete when the rename is impossible (cross-device, permissions).
+    * Stale trash of `p` left by an earlier JVM goes to the same thread.
+    * A local-FS-only optimisation: object stores have no cheap rename. */
   private[graft] def trashAsync(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    val trash = p.resolveSibling(
-      s".${p.getFileName}.trash-${java.lang.Long.toHexString(System.nanoTime())}")
-    try {
-      Files.move(p, trash)
-      val t = new Thread(() => try deleteRecursively(trash) catch { case _: Exception => () },
-        s"graft-pods-trash-${trash.getFileName}")
+    if (Files.exists(p)) {
+      val trash = p.resolveSibling(
+        s"${trashPrefix(p)}${java.lang.Long.toHexString(System.nanoTime())}")
+      try Files.move(p, trash)
+      catch { case _: Exception => deleteRecursively(p) }
+    }
+    sweepTrash(p)
+  }
+
+  private def trashPrefix(p: Path): String = s".${p.getFileName}.trash-"
+
+  /** Trash directories some thread of this JVM is deleting right now. */
+  private val trashInFlight = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  /** Hand every `.<name>.trash-*` sibling of `p` to a background delete.
+    * trashAsync's daemon thread dies with its JVM, so a store trashed
+    * just before exit stays on disk until a later write of the same
+    * store sweeps it here. Trash another thread is already deleting is
+    * skipped: two walks deleting one tree can each abort the other. */
+  private def sweepTrash(p: Path): Unit = {
+    val parent = p.toAbsolutePath.getParent
+    if (parent == null || !Files.isDirectory(parent)) return
+    val stale = {
+      val s = Files.list(parent)
+      try s.iterator().asScala
+        .filter(_.getFileName.toString.startsWith(trashPrefix(p)))
+        .filter(d => trashInFlight.add(d)).toVector
+      finally s.close()
+    }
+    if (stale.nonEmpty) {
+      val t = new Thread(() => stale.foreach { d =>
+        try deleteRecursively(d) catch { case _: Exception => () }
+        finally trashInFlight.remove(d)
+      }, s"graft-pods-trash-${p.getFileName}")
       t.setDaemon(true)
       t.start()
-    } catch { case _: Exception => deleteRecursively(p) }
+    }
   }
 
   /** (formatVersion, lineageId) of the snapshot, if one parses. */

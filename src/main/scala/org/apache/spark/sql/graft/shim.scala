@@ -115,6 +115,47 @@ object shim {
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession, timeoutMs: Long = 30000L): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
+  /** A parquet frame over the directory `root` whose data files are
+    * already known: `files` are (path relative to root, length, mtime).
+    * Equivalent to `spark.read.parquet(root)` (same partition inference,
+    * same schema inference from a footer), but the file index is seeded
+    * from the given listing, so it lists nothing itself. A root with more
+    * subdirectories than parallelPartitionDiscovery.threshold would
+    * otherwise plan a Spark listing job with one task per subdirectory.
+    * The listing is only correct if the caller took it after the last
+    * write to the directory. */
+  def parquetFromListing(spark: org.apache.spark.sql.SparkSession, root: String,
+                         files: Seq[(String, Long, Long)]): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val hadoopConf = s.sessionState.newHadoopConf()
+    val rootPath = {
+      val p = new Path(root)
+      p.getFileSystem(hadoopConf).makeQualified(p)
+    }
+    val blockSize = 32L << 20
+    val statuses: Array[FileStatus] = files.map { case (rel, len, mtime) =>
+      new FileStatus(len, false, 1, blockSize, mtime, new Path(rootPath, rel))
+    }.toArray
+    // a private cache holding exactly this listing: the session-wide
+    // FileStatusCache is shared state and is left untouched
+    val cache = new FileStatusCache {
+      private val leaves = new java.util.concurrent.ConcurrentHashMap[Path, Array[FileStatus]]
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = Option(leaves.get(path))
+      override def putLeafFiles(path: Path, fs: Array[FileStatus]): Unit = leaves.put(path, fs)
+      override def invalidateAll(): Unit = leaves.clear()
+    }
+    cache.putLeafFiles(rootPath, statuses)
+    val index = new InMemoryFileIndex(s, Seq(rootPath), Map.empty, None, cache)
+    val format = new ParquetFileFormat
+    val dataSchema = format.inferSchema(s, Map.empty, index.allFiles())
+      .getOrElse(throw new IllegalArgumentException(s"no parquet files under $root"))
+    s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      dataSchema.asNullable, None, format, Map.empty)(s))
+  }
+
   /** Orderable per Catalyst's ordering rules (MapType is not). */
   def isOrderable(dt: org.apache.spark.sql.types.DataType): Boolean =
     org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(dt)

@@ -297,4 +297,39 @@ class NewQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sanity: counts are bounded by each region's own q21-style count
     assert(byName.values.forall(_ >= 0L))
   }
+
+  test("q21/q33 refines over carried boxes equal a brute-force box count with no cover join") {
+    import graft.sources.Webtext
+    val pts = Webtext.geotagged(Webtext.table(spark, sf)).select("lat", "lon").collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)))
+    def inBox(r: SparkEntry.Region, lat: Double, lon: Double): Boolean =
+      lat >= r.latMin && lat <= r.latMax &&
+        (if (r.wraps) lon >= r.lonMin || lon <= r.lonMax else lon >= r.lonMin && lon <= r.lonMax)
+    def counts(q: String): Map[String, Long] =
+      SparkEntry.queries(q)(spark, sf).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+    val q21 = SparkEntry.regions.map(r => r.name -> pts.count { case (la, lo) => inBox(r, la, lo) }.toLong)
+      .filter(_._2 > 0).toMap
+    assert(q21.nonEmpty)
+    assert(counts("q21_cover_join") === q21)
+
+    val q33 = SparkEntry.regionPairs.map { case (a, b) =>
+      s"${a.name}|${b.name}" -> pts.count { case (la, lo) => inBox(a, la, lo) && inBox(b, la, lo) }.toLong
+    }.toMap
+    assert(q33.values.exists(_ > 0))
+    assert(counts("q33_cover_algebra") === q33)
+  }
+
+  test("q33's refine is constant-size: no string-literal pair_name equality anywhere in the plan") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Literal}
+    import org.apache.spark.sql.types.StringType
+    // the refine is a Filter over an inner join, which the optimizer
+    // moves into the join condition: look at every operator's expressions
+    val plan = SparkEntry.queries("q33_cover_algebra")(spark, sf).queryExecution.optimizedPlan
+    val pairLiteralTests = plan.flatMap(_.expressions).flatMap(_.collect {
+      case e @ EqualTo(a: Attribute, Literal(_, StringType)) if a.name == "pair_name" => e
+      case e @ EqualTo(Literal(_, StringType), a: Attribute) if a.name == "pair_name" => e
+    })
+    assert(pairLiteralTests.isEmpty, s"refine still tests pair names as literals: $pairLiteralTests")
+  }
 }
