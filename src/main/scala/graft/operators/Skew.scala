@@ -232,6 +232,7 @@ object Skew {
                   splitHot: Option[Long] = None, how: String = "inner",
                   knownMinLeftLevel: Option[Int] = None,
                   wallClockGate: Boolean = true): DataFrame = {
+    StareJoin.requireHow(how)
     // ids first, split-rewrite second: the assembled output carries the
     // ORIGINAL cover rows; only the join-key derivation sees split cells
     val rightRows = StareJoin.withStableId(right, "key_right")
@@ -401,14 +402,6 @@ object Skew {
         }.filter(_._2.nonEmpty).toMap
       case _ => Map.empty
     }
-    if (sys.env.contains("GRAFT_SKEW_DEBUG")) {
-      System.err.println(s"[skewdbg] keptLevels=${keptLevels.mkString(",")} rebased=$rebased " +
-        s"target=$target baseLevels=${baseLevels.mkString(",")} " +
-        s"parents=${parents.map(p => s"${java.lang.Long.toHexString(p.cell)}@L${p.level}->" +
-          p.childLevels.mkString("/")).mkString(";")} " +
-        s"suppress=${suppressByLevel.map { case (l, ps) => s"L$l:${ps.size}" }.mkString(",")} " +
-        s"levelHist=${levelHist.toSeq.sorted.mkString(",")}")
-    }
     def keyExprsFor(sidCol: Column): Seq[Column] = {
       val base = baseLevels.toSeq.map { lv =>
         val k = stareClearTo(sidCol, lv)
@@ -456,7 +449,7 @@ object Skew {
           if (!rowsBroadcast && budgets.shjFits(estRightRowsBytes)) rightRows.hint("shuffle_hash")
           else rightRows
         StareJoin.assemble(joined, assembleRight, how = "left", broadcastRight = rowsBroadcast)
-      case "inner" | "left" =>
+      case _ => // inner, or left with one candidate key
         // Single-exchange keyed join: the big side crosses at most ONE
         // exchange and the join output is final — assembling by row id
         // after the key join re-SHUFFLED the entire joined output (24M
@@ -507,7 +500,6 @@ object Skew {
               .drop("__lk", "__rk")
           }
         }
-      case other => throw new IllegalArgumentException(s"how=$other (inner|left)")
     }
   }
 }

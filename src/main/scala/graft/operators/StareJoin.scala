@@ -20,14 +20,16 @@ import graft.functions.StareFunctions._
   *
   *     sid_a ⊇ sid_b  ⟺  clearTo(b, level(a)) == normalize(a)
   *
-  * We explode the right covers (one row per cover sid, keyed by its
-  * normalized sid), collect the small set of distinct cover levels, and
-  * explode each left sid into one ancestor key per cover level. The
-  * result is a plain hash/broadcast equi-join: Catalyst broadcasts the
-  * (small) exploded cover side, AQE handles skew on the shuffle path,
-  * and no custom physical operator is needed. The reverse containment
-  * direction (left sid coarser than a right cover sid) is the mirrored
-  * prefix join; pairs are deduplicated before row assembly.
+  * Point-in-cover joins (`pointJoin`) collect the small cover side,
+  * expand every cover cell to the finest cover level and broadcast that
+  * full-row dictionary: each point derives ONE key and the join is a
+  * single broadcast hash probe. Any input the dictionary cannot serve
+  * (too many expanded cells or bytes, a left side coarser than the
+  * finest cover level, too many cover rows to collect) goes to
+  * `Skew.shuffleJoin`, the keyed equi-join that serves every input.
+  * Cover-vs-cover joins (`join`) explode both sides into ancestor keys
+  * per level, in both containment directions, and deduplicate pairs
+  * before row assembly.
   */
 object StareJoin {
 
@@ -60,7 +62,7 @@ object StareJoin {
   /** The budgets every join decision reads: the session's values,
     * parsed once per call with `Budgets(spark)`, and the constants in
     * the companion. */
-  private[operators] final case class Budgets(broadcastBytes: Long, shufflePartitions: Int,
+  private[graft] final case class Budgets(broadcastBytes: Long, shufflePartitions: Int,
                                               shjBuildBytesPerPartition: Long, localCoverCap: Int) {
     /** Spark's own rule: a threshold <= 0 disables broadcasting */
     def broadcastFits(bytes: Long): Boolean = broadcastBytes > 0 && bytes <= broadcastBytes
@@ -68,7 +70,7 @@ object StareJoin {
       bytes / math.max(1, shufflePartitions) <= shjBuildBytesPerPartition
   }
 
-  private[operators] object Budgets {
+  private[graft] object Budgets {
     /** expanded (row, cell) keys of a uniform-level dictionary: ~64 MB
       * as bare (rid, key) pairs */
     final val DictKeys = 4L << 20
@@ -146,32 +148,36 @@ object StareJoin {
   }
 
   /** ancestor keys of a sid for the given candidate levels, keeping only
-    * levels at or above the sid's own level. With a known minimum sid
-    * level, levels at or below it need no per-row guard. */
-  private[operators] def ancestorKeys(sid: Column, levels: Array[Int],
-                                      knownMinLevel: Option[Int] = None): Column = {
-    val ml = knownMinLevel.getOrElse(-1)
-    val guarded = levels.map { l =>
-      if (l <= ml) stareClearTo(sid, l)
-      else when(stareLevel(sid) >= l, stareClearTo(sid, l))
-    }
-    if (levels.forall(_ <= ml)) array(guarded: _*)
-    else filter(array(guarded: _*), c => c.isNotNull)
-  }
+    * levels at or above the sid's own level. */
+  private[operators] def ancestorKeys(sid: Column, levels: Array[Int]): Column =
+    filter(array(levels.map(l => when(stareLevel(sid) >= l, stareClearTo(sid, l))): _*),
+      c => c.isNotNull)
+
+  /** The join types every entry point serves; checked before any job. */
+  private[operators] def requireHow(how: String): Unit =
+    if (how != "inner" && how != "left")
+      throw new IllegalArgumentException(s"how=$how (inner|left)")
 
   /** Point-left fast path: left has a scalar sid column (points at a
     * fine level), right has an array cover column. Returns the joined
     * frame with all left columns, `key_right`, and right columns
-    * (clashes suffixed). This is the 100TB-shape join: the big point
-    * side is never exploded more than |cover levels| times and the
-    * cover side broadcasts.
+    * (clashes suffixed). This is the 100TB-shape join: the cover side
+    * is collected, every cover cell is expanded to the finest cover
+    * level, and that full-row dictionary is broadcast, so each point
+    * derives ONE key and the big side is probed once, never exploded
+    * or shuffled. Inputs the dictionary cannot serve go to
+    * `Skew.shuffleJoin`, which has the same output contract (its
+    * `key_right` is a packed row id instead of 0..n-1): a cover side
+    * over the collect caps, a dictionary over its key or byte budget,
+    * and a multi-level cover with a left side coarser than the finest
+    * cover level.
     *
-    * PRECONDITION (both plans): left sids must be at least as fine as
-    * the cover cells they should match — only the cover-contains-point
-    * direction is implemented. A left sid COARSER than a cover cell
-    * derives no key at that cell's level and never matches (use join()
-    * for cover-vs-cover semantics). Fine-level point tables (level
-    * 26/27) vs polygon covers (level <= ~12) always satisfy this.
+    * PRECONDITION: left sids must be at least as fine as the cover
+    * cells they should match — only the cover-contains-point direction
+    * is implemented. A left sid COARSER than a cover cell never matches
+    * it (use join() for cover-vs-cover semantics). Fine-level point
+    * tables (level 26/27) vs polygon covers (level <= ~12) always
+    * satisfy this.
     *
     * `knownMinLeftLevel`: callers that KNOW their minimum left sid
     * level (e.g. a table indexed at level 26) pass it so the per-row
@@ -179,10 +185,12 @@ object StareJoin {
     * is itself an unevaluated encode expression: projection collapse
     * otherwise re-inlines the encode into the guard and the pushed
     * null-check, evaluating the kernel up to 3x per row (measured ~2x
-    * headline join throughput). */
+    * headline join throughput). Without it, a multi-level cover costs
+    * one narrow aggregation job over the left sid column. */
   def pointJoin(left: DataFrame, leftSid: String, right: DataFrame, rightSids: String,
                 how: String = "left", knownMinLeftLevel: Option[Int] = None,
                 maxBroadcastRows: Int = 1 << 20): DataFrame = {
+    requireHow(how)
     // Guard the by-design assumption instead of trusting the caller: the
     // cover side is about to be collect()ed to the driver. One SMALL
     // probe collect answers the common case (covers of a few rows)
@@ -218,54 +226,30 @@ object StareJoin {
             how = how, knownMinLeftLevel = knownMinLeftLevel)
         if (probe.length <= probeCap) probe else right.collect()
       } finally if (weCached) right.unpersist(false)
-    // The cover side fits in a broadcast, so assign row ids
-    // on the driver: deterministic across every reuse of the frame (no
-    // monotonically_increasing_id re-evaluation hazard) and no lingering
-    // persist() that pressures the executor cache across queries.
-    val rightRows = {
-      val schema = org.apache.spark.sql.types.StructType(
-        right.schema.fields :+ org.apache.spark.sql.types.StructField("key_right", org.apache.spark.sql.types.LongType, nullable = false))
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(collected.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i.toLong)
-        }: _*)
-      spark.createDataFrame(rows, schema)
-    }
     // cover cells per collected row, computed ONCE on the driver: they
-    // feed the key set, the level set, and the per-ROW expansion budget
-    // (a Spark distinct() job here re-evaluated the cover side again)
+    // feed the level set and the per-ROW expansion budget (a Spark
+    // distinct() job here re-evaluated the cover side again)
     val sidsIdx = right.schema.fieldIndex(rightSids)
     val perRowCells: Array[Array[Long]] = collected.map { r =>
       val s = r.getSeq[Long](sidsIdx)
       if (s == null) Array.emptyLongArray else Sid.compress(s.toArray)
     }
-    val keySet = perRowCells.iterator.flatMap(_.iterator).map(Sid.clearToLevel).toSet
-    if (keySet.isEmpty) {
-      // every right cover is empty: inner -> no rows, left -> all-null
-      // right columns (one row per left row)
-      val joined = left.withColumn("__rid", lit(null).cast("long"))
-      val base = if (how == "inner") joined.filter(lit(false)) else joined
-      return assemble(base, rightRows, how, broadcastRight = true)
-    }
-    val levels = keySet.map(Sid.level).toArray.sorted
-    val joinType = if (how == "inner") "inner" else "left"
+    val levels = perRowCells.iterator.flatMap(_.iterator).map(Sid.level).toSet.toArray.sorted
 
-    // Uniform-level dictionary plan: if expanding every cover cell to the
-    // finest cover level keeps the broadcast side small, each point needs
-    // exactly ONE cleared key — no explode, 1 probe/row instead of
-    // |levels| probes/row. The multi-level explode plan moved 5x the rows
-    // through the join and was memory-bandwidth-bound at high core
-    // counts. Expansion is per right row over disjoint cells, so pair
-    // multiplicity is unchanged. For how='left' a point matching nothing
-    // keeps one row with all-null right columns — exactly stare_join's
-    // left semantics, since there is a single key per row.
-    val maxLevel = levels.last
-    // Expansion cost summed over ROWS, not distinct keys: both
-    // dictionary plans explode the cover per right row, so duplicate
-    // covers multiply the broadcast — a distinct-key budget admitted
-    // 500k rows sharing one cell into a plan that would expand each of
-    // them. Early exit once over budget (also prevents Long overflow on
-    // extreme level spreads).
+    // Uniform-level dictionary: expanding every cover cell to the finest
+    // cover level lets each point probe with exactly ONE cleared key —
+    // no explode, 1 probe/row instead of |levels| probes/row. Expansion
+    // is per right row over disjoint cells, so pair multiplicity is
+    // unchanged. For how='left' a point matching nothing keeps one row
+    // with all-null right columns — exactly stare_join's left semantics,
+    // since there is a single key per row. All-empty covers expand to
+    // an empty dictionary (inner: no rows; left: all null-padded).
+    val maxLevel = levels.lastOption.getOrElse(0)
+    // Expansion cost summed over ROWS, not distinct keys: the dictionary
+    // explodes the cover per right row, so duplicate covers multiply the
+    // broadcast — a distinct-key budget admitted 500k rows sharing one
+    // cell into a plan that would expand each of them. Early exit once
+    // over budget (also prevents Long overflow on extreme level spreads).
     val expansionCost: Long = {
       var cost = 0L
       var i = 0
@@ -279,79 +263,64 @@ object StareJoin {
       }
       cost
     }
-    // A uniform-level dictionary probes every left row at exactly ONE
-    // level, so it is only SOUND when every left sid is at least as
-    // fine as the finest cover cell: a left row with level in
-    // [cellLevel, maxLevel) is contained by a coarse cell but would
-    // derive no key at maxLevel and silently lose that match (the same
-    // hazard ADVICE r3 flagged on the shuffle path's rebase). A
-    // single-level cover needs no check — a row coarser than the only
-    // level is matchless under the containment contract and its null
-    // key is exact. Otherwise the declared min left level decides, or —
-    // when the caller declared nothing — one narrow column-pruned agg
-    // job over the left sid column does. Mixed-level lefts fall through
-    // to the per-level-guarded explode plan, which is exact for any mix.
+    // The dictionary probes every left row at exactly ONE level, so it
+    // is only SOUND when every left sid is at least as fine as the
+    // finest cover cell: a left row with level in [cellLevel, maxLevel)
+    // is contained by a coarse cell but would derive no key at maxLevel
+    // and silently lose that match. A single-level cover needs no check
+    // — a row coarser than the only level is matchless under the
+    // containment contract and its null key is exact. Otherwise the
+    // declared min left level decides, or — when the caller declared
+    // nothing and the key budget fits — one narrow column-pruned agg
+    // job over the left sid column does; that measurement is handed on
+    // to shuffleJoin, which would otherwise aggregate the left again.
+    val minLeftLevel =
+      if (expansionCost <= Budgets.DictKeys && levels.length > 1)
+        knownMinLeftLevel.orElse(Some(minSidLevel(left, leftSid)))
+      else knownMinLeftLevel
     val dictSafe = expansionCost <= Budgets.DictKeys &&
-      (levels.length <= 1 || knownMinLeftLevel.getOrElse(minSidLevel(left, leftSid)) >= maxLevel)
-    // A BYTE cap on expansionCost x measured-row-width decides whether
-    // the dictionary can carry the full right rows (probe = the only pass
-    // over the big side) or only (rid, key) pairs + a re-join — a fat
-    // cover side (wide payload columns, big sid arrays) duplicated per
-    // expanded cell would otherwise build a multi-GB broadcast.
-    if (dictSafe && expansionCost * approxRowBytes(collected) <= Budgets.FullRowDictBytes)
+      (levels.length <= 1 || minLeftLevel.exists(_ >= maxLevel))
+    // A BYTE cap on expansionCost x measured-row-width keeps a fat cover
+    // side (wide payload columns, big sid arrays) duplicated per
+    // expanded cell from building a multi-GB broadcast.
+    if (dictSafe && expansionCost * approxRowBytes(collected) <= Budgets.FullRowDictBytes) {
+      // The cover side fits in a broadcast, so assign row ids
+      // on the driver: deterministic across every reuse of the frame (no
+      // monotonically_increasing_id re-evaluation hazard) and no lingering
+      // persist() that pressures the executor cache across queries.
+      val rightRows = {
+        val schema = org.apache.spark.sql.types.StructType(
+          right.schema.fields :+ org.apache.spark.sql.types.StructField("key_right", org.apache.spark.sql.types.LongType, nullable = false))
+        val rows: java.util.List[org.apache.spark.sql.Row] =
+          java.util.Arrays.asList(collected.zipWithIndex.map { case (r, i) =>
+            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i.toLong)
+          }: _*)
+        spark.createDataFrame(rows, schema)
+      }
       // The dictionary carries the right ROW COLUMNS directly, so the
       // probe is the ONLY pass over the big side — routing just row ids
       // and re-joining in assemble() cost a second full broadcast-probe
       // over every left row.
-      return withContract(left, leftSid, rightRows, rightSids) { (l, lSid, r, rSids) =>
+      withContract(left, leftSid, rightRows, rightSids) { (l, lSid, r, rSids) =>
         l.withColumn(LKey, uniformKey(col(lSid), maxLevel, knownMinLeftLevel))
           .join(broadcast(r.withColumn(RKey, explode(stareExpand(coverCells(col(rSids)), maxLevel)))),
-            mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
+            mixKey(col(LKey)) === mixKey(col(RKey)), how)
           .drop(LKey, RKey)
       }
-    val joined = if (dictSafe) {
-      // Slim dictionary: same single-probe key plan, but the broadcast
-      // carries only (rid, key) pairs; the right row columns re-attach in
-      // assemble() via a second (cheap — the dictionary already filtered)
-      // broadcast join. Chosen when the full-row dictionary would blow
-      // the byte budget (fat right rows x expansion).
-      val slim = rightRows.select(col("key_right").as("__rid"),
-        explode(stareExpand(coverCells(col(rightSids)), maxLevel)).as(RKey))
-      left.withColumn(LKey, uniformKey(col(leftSid), maxLevel, knownMinLeftLevel))
-        .join(broadcast(slim), mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
     } else {
-      // one key per cover cell; a point matches at most one cell per
-      // right row, so no pair dedup (and hence no join-back on a
-      // big-side row id) is ever needed
-      val rightKeyed = rightRows
-        .select(col("key_right").as("__rid"), explode(coverCells(col(rightSids))).as("__rs"))
-        .select(col("__rid"), stareClearToOwn(col("__rs")).as(RKey))
-      val ancestors = ancestorKeys(col(leftSid), levels, knownMinLeftLevel)
-      val leftKeyed =
-        // inner: pure-native explode of the ancestor keys (one CASE+bit
-        // op per cover level, whole-stage codegen, zero allocation) —
-        // unmatched keys simply drop out of the inner probe
-        if (how == "inner") left.withColumn(LKey, explode(ancestors))
-        else {
-          // left: pre-filter each point's ancestor keys to those that
-          // exist on the right (the cover side is broadcast anyway, so
-          // its key set fits on the driver). Every surviving key matches
-          // >= 1 right row, and a row with no surviving key explodes to a
-          // single null key — exact stare_join multiplicity with no row
-          // id, join-back, or window pass over the big side.
-          val filterKeys = udf((ks: Seq[Long]) => { val f = ks.filter(keySet); if (f.isEmpty) null else f })
-          left.withColumn(LKey, explode_outer(filterKeys(ancestors)))
-        }
-      leftKeyed.join(broadcast(rightKeyed), mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
+      // the collected rows as a local frame: the shuffle path does not
+      // evaluate the right plan again
+      val local = spark.createDataFrame(java.util.Arrays.asList(collected: _*), right.schema)
+      Skew.shuffleJoin(left, leftSid, local, rightSids, splitHot = None,
+        how = how, knownMinLeftLevel = minLeftLevel)
     }
-    assemble(joined.drop(LKey, RKey), rightRows, how, broadcastRight = true)
   }
 
   /** Rough in-memory width of a collected row (bytes) — drives the
     * dictionary-plan byte budget. Samples <= ~100 rows evenly. Array
     * columns arrive as mutable ArraySeqs, hence the general collection
     * types. */
-  private[operators] def approxRowBytes(rows: Array[org.apache.spark.sql.Row]): Long = {
+  private[graft] def approxRowBytes(rows: Array[org.apache.spark.sql.Row]): Long = {
     if (rows.isEmpty) return 16L
     def sz(v: Any): Long = v match {
       case null          => 8L
@@ -425,6 +394,7 @@ object StareJoin {
     * level is actually coarser than the finest right level. */
   def join(left: DataFrame, leftSids: String, right: DataFrame, rightSids: String,
            how: String = "left"): DataFrame = {
+    requireHow(how)
     // Small-sides fast path (r6, guide §1.2): both sides of a general
     // cover×cover join pass through withStableId, whose RDD round-trip
     // erases size statistics — every downstream join then plans as a
@@ -496,8 +466,6 @@ object StareJoin {
                         rightRows: Array[org.apache.spark.sql.Row],
                         rightSchema: org.apache.spark.sql.types.StructType, rightSids: String,
                         how: String): DataFrame = {
-    if (how != "left" && how != "inner")
-      throw new IllegalArgumentException(s"how=$how (left|inner)")
     val lIdx = leftSchema.fieldIndex(leftSids)
     val rIdx = rightSchema.fieldIndex(rightSids)
     def cells(r: org.apache.spark.sql.Row, i: Int): Array[Long] = {
@@ -544,8 +512,6 @@ object StareJoin {
     * `key_right`) under the shared output contract. */
   private[operators] def assemble(leftWithRid: DataFrame, rightRows: DataFrame, how: String,
                                   broadcastRight: Boolean): DataFrame = {
-    if (how != "left" && how != "inner")
-      throw new IllegalArgumentException(s"how=$how (left|inner)")
     withContract(leftWithRid, "__rid", rightRows, "key_right") { (l, rid, r, key) =>
       l.join(if (broadcastRight) broadcast(r) else r, l(rid) === r(key), how)
     }

@@ -263,32 +263,42 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("fat cover rows pick the slim dictionary plan and keep results + contract") {
+  test("a full-row dictionary over its byte budget delegates to shuffleJoin and keeps results + contract") {
     import spark.implicits._
     val pts = ((1 to 300).map(i => (i.toLong, 10.0 + (i % 40) * 0.02, 10.0 + (i / 40) * 0.02)) :+
       ((9999L, 60.0, -170.0)))
       .toDF("id", "lat", "lon")
       .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
-    // ~16 MB per row: expansionCost x rowBytes blows the 256 MB full-row
-    // dictionary budget even for a handful of cover cells, forcing the
-    // slim (rid, key) + re-join plan
-    val fat = "x" * 8000000
-    val covers = Seq(
-      ("hot", graft.core.Cover.coverFromBox(8.0, 12.0, 8.0, 12.0, 6).toSeq, fat),
-      ("cold", graft.core.Cover.coverFromBox(99.0, 130.0, -31.0, -5.0, 6).toSeq, fat)
-    ).toDF("region", "sids", "payload")
+    val boxes = Seq(
+      "hot" -> graft.core.Cover.coverFromBox(8.0, 12.0, 8.0, 12.0, 6),
+      "cold" -> graft.core.Cover.coverFromBox(99.0, 130.0, -31.0, -5.0, 6))
+    // the dictionary's size in rows: every compressed cell expanded to
+    // the finest cover level
+    val cells = boxes.flatMap { case (_, c) => Sid.compress(c).toSeq }
+    val finest = cells.map(Sid.level).max
+    val expansion = cells.map(c => 1L << (2 * (finest - Sid.level(c)))).sum
+    // the smallest payload that puts expansion x row width 4x over the
+    // full-row dictionary's byte budget (a String counts 2 bytes a char)
+    val budget = graft.operators.StareJoin.Budgets.FullRowDictBytes
+    val fat = "x" * (4 * budget / expansion / 2 + 1).toInt
+    val covers = boxes.map { case (n, c) => (n, c.toSeq, fat) }.toDF("region", "sids", "payload")
+    assert(expansion * graft.operators.StareJoin.approxRowBytes(covers.collect()) >= 4 * budget)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "region").collect()
         .map(r => (r.getLong(0), Option(r.getString(1)).getOrElse("__null"))).toSet
     for (how <- Seq("inner", "left")) {
-      val viaSlim = graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = how,
+      val viaPoint = graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = how,
         knownMinLeftLevel = Some(26))
       val viaShuffle = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", how = how,
         knownMinLeftLevel = Some(26))
-      assert(viaSlim.columns.toSeq === viaShuffle.columns.toSeq)
-      assert(pairs(viaSlim) === pairs(viaShuffle), s"slim-plan drift for how=$how")
-      // right payload columns still attached after the re-join
-      val withPayload = viaSlim.filter(col("region") === "hot").select("payload").collect()
+      // delegated: the dictionary is the only plan with a single join
+      val joins = viaPoint.queryExecution.sparkPlan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+      assert(joins.length > 1, s"over-budget dictionary was not delegated for how=$how")
+      assert(viaPoint.columns.toSeq === viaShuffle.columns.toSeq)
+      assert(pairs(viaPoint) === pairs(viaShuffle), s"delegated-plan drift for how=$how")
+      // right payload columns still attached after the delegation
+      val withPayload = viaPoint.filter(col("region") === "hot").select("payload").collect()
       assert(withPayload.nonEmpty && withPayload.forall(_.getString(0) == fat))
     }
   }
@@ -323,6 +333,33 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         finally spark.conf.unset("spark.graft.join.localCoverCap")
       }
     }
+  }
+
+  test("an invalid how is rejected by pointJoin, shuffleJoin and join before any Spark job") {
+    val shim = org.apache.spark.sql.graft.shim
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // Spark-computed frames on both sides: a late check runs the collect
+    // guard, the local-join probes or the level-histogram job first
+    val box = typedLit(Cover.coverFromBox(8.0, 12.0, 8.0, 12.0, 6).toSeq)
+    val pts = spark.range(4).select(col("id"), stareSid(lit(10.0) + col("id"), lit(10.0), 26).as("sid"))
+    val covers = spark.range(2).select(concat(lit("r"), col("id")).as("region"), box.as("sids"))
+    val ptsArr = pts.withColumn("sids_l", array(col("sid")))
+    val entries: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
+      "pointJoin" -> (how => graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = how)),
+      "shuffleJoin" -> (how => graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", how = how)),
+      "join" -> (how => graft.operators.StareJoin.join(ptsArr, "sids_l", covers, "sids", how = how)))
+    spark.sparkContext.addSparkListener(listener)
+    try for ((name, entry) <- entries; how <- Seq("outer", "right", "innner")) {
+      shim.drainListenerBus(spark)
+      jobs.set(0)
+      intercept[IllegalArgumentException](entry(how))
+      shim.drainListenerBus(spark)
+      assert(jobs.get() === 0, s"$name how=$how started a Spark job before rejecting it")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("near-polar box covers keep the superset guarantee up to the poles") {
@@ -481,9 +518,9 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       def pairsOf(df: org.apache.spark.sql.DataFrame) =
         df.select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
       val viaShuffle = pairsOf(graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids"))
-      // the mixed-level-safe reference: pointJoin routes multi-level
-      // covers with an undeclared (and actually coarse) left min level
-      // to the per-level-guarded explode plan
+      // pointJoin measures the (actually coarse) undeclared left min
+      // level, finds it below the finest cover level and hands it to
+      // shuffleJoin
       val viaBroadcast = pairsOf(
         graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = "inner"))
       assert(viaShuffle.contains((5L, "r3")), "coarse left row lost by the rebase")
@@ -584,6 +621,32 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(joined2.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
         expected)
     } finally spark.sparkContext.removeSparkListener(listener)
+    // the headline plan (SparkEntry.coversDf, level-26 points): exactly
+    // one join, a broadcast hash join whose build side carries the cover
+    // columns and the stareExpand explode; the point side is not exploded
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val pts = Seq((1L, 10.0, 10.0), (2L, 48.0, 2.0)).toDF("id", "lat", "lon")
+      .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
+    for (how <- Seq("inner", "left")) {
+      val plan = graft.operators.StareJoin.pointJoin(pts, "sid", SparkEntry.coversDf(spark), "sids",
+        how = how, knownMinLeftLevel = Some(26)).queryExecution.sparkPlan
+      val joins = plan.collect { case j: BaseJoinExec => j }
+      assert(joins.length === 1, s"how=$how\n$plan")
+      val bhj = joins.head match {
+        case b: BroadcastHashJoinExec => b
+        case other => fail(s"how=$how: ${other.nodeName} is not a broadcast hash join\n$plan")
+      }
+      val (build, stream) = if (bhj.buildSide == BuildRight) (bhj.right, bhj.left) else (bhj.left, bhj.right)
+      assert(Set("region_name", "sids").subsetOf(build.output.map(_.name).toSet), s"how=$how\n$plan")
+      val expands = build.collect {
+        case g: GenerateExec if g.generatorOutput.map(_.name) == Seq("__stare_rkey") &&
+          g.generator.references.exists(_.name == "sids") => g
+      }
+      assert(expands.length === 1, s"how=$how: no stareExpand explode on the build side\n$plan")
+      assert(stream.collect { case g: GenerateExec => g }.isEmpty, s"how=$how\n$plan")
+    }
   }
 
   test("fused clear-of-encode keys equal interpreted eval and the unfused clear, nulls included") {

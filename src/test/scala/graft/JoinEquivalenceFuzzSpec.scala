@@ -125,6 +125,12 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.sorted
   }
 
+  /** pointJoin took its own plan, the broadcast dictionary: the only
+    * plan with a single join (every shuffleJoin shape has two or more). */
+  private def dictionaryRoute(df: DataFrame): Boolean =
+    df.queryExecution.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.length == 1
+
   private def observedPairs(df: DataFrame): Seq[(Long, String)] =
     df.select(col("lid"), col("rname")).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) "__none" else r.getString(1)))
@@ -135,6 +141,7 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("pointJoin ≡ shuffleJoin ≡ brute contains; join() ≡ brute intersects (15 random trials × inner/left)") {
     import spark.implicits._
     val r = new scala.util.Random(20260817)
+    var delegated = 0
     (1 to 15).foreach { trial =>
       val covers = randomCovers(r)
       val left = randomLeft(r, covers, 8 + r.nextInt(25))
@@ -150,9 +157,14 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq("inner", "left").foreach { how =>
         val clue = s"trial=$trial how=$how covers=$covers left=$left"
         val expContains = expectedPairs(left, covers, how, coverContains)
-        val point = observedPairs(
-          StareJoin.pointJoin(leftDf, "sid", rightDf, "sids", how = how))
-        assert(point === expContains, s"pointJoin vs brute — $clue")
+        val pointDf = StareJoin.pointJoin(leftDf, "sid", rightDf, "sids", how = how)
+        assert(observedPairs(pointDf) === expContains, s"pointJoin vs brute — $clue")
+        // a left side coarser than the finest level of a multi-level
+        // cover is delegated to shuffleJoin; any other takes the dictionary
+        val coverLevels = covers.flatMap(c => Sid.compress(c._2.toArray)).map(Sid.level).distinct
+        val dictionary = coverLevels.size <= 1 || left.map(p => Sid.level(p._2)).min >= coverLevels.max
+        assert(dictionaryRoute(pointDf) === dictionary, s"pointJoin route — $clue")
+        if (!dictionary) delegated += 1
         val shuffle = observedPairs(
           Skew.shuffleJoin(leftDf, "sid", rightDf, "sids", splitHot = None, how = how))
         assert(shuffle === expContains, s"shuffleJoin vs brute — $clue")
@@ -190,6 +202,38 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           try observedPairs(StareJoin.join(leftArrDf, "sids_l", rightDf, "sids", how = how))
           finally spark.conf.unset("spark.graft.join.localCoverCap")
         assert(generalDist === expJoin, s"join() [distributed path] vs brute intersects — $clue")
+      }
+    }
+    // the mixed-level left side (levels 0-14) mostly misses the dictionary
+    assert(delegated >= 20, s"only $delegated of 30 pointJoin runs were delegated")
+  }
+
+  test("pointJoin dictionary route ≡ brute contains for left sids at or finer than every cover cell (15 random trials × inner/left × declared level)") {
+    import spark.implicits._
+    val r = new scala.util.Random(20261018)
+    (1 to 15).foreach { trial =>
+      // random multi-level covers plus an empty and a null cover row
+      val covers = randomCovers(r) ++ Seq(("cempty", Seq.empty[Long]), ("cnull", null: Seq[Long]))
+      val refCovers = covers.map { case (n, c) => (n, Option(c).getOrElse(Seq.empty[Long])) }
+      val cells = refCovers.flatMap(_._2)
+      val finest = cells.map(Sid.level).max
+      // descendants of cover cells from the finest cover level down to
+      // level 26, and uniform level-26 points
+      val left = (0 until 8 + r.nextInt(25)).map { i =>
+        val sid =
+          if (r.nextBoolean()) descendantOf(r, cells(r.nextInt(cells.size)), finest + r.nextInt(27 - finest))
+          else randomSid(r, 26)
+        (i.toLong, sid)
+      }
+      val leftDf = left.toDF("lid", "sid")
+      val rightDf = covers.toDF("rname", "sids")
+      val minLeft = left.map(p => Sid.level(p._2)).min
+      for (how <- Seq("inner", "left"); known <- Seq(None, Some(minLeft))) {
+        val clue = s"trial=$trial how=$how knownMinLeftLevel=$known covers=$covers left=$left"
+        val out = StareJoin.pointJoin(leftDf, "sid", rightDf, "sids", how = how, knownMinLeftLevel = known)
+        assert(dictionaryRoute(out), s"pointJoin did not take the dictionary — $clue")
+        assert(observedPairs(out) === expectedPairs(left, refCovers, how, coverContains),
+          s"pointJoin dictionary vs brute — $clue")
       }
     }
   }
