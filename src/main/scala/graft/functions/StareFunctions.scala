@@ -227,13 +227,6 @@ object StareFunctions {
     (sid & Sid.clearMask(level)) | level.toLong)
   /** clearToLevel with a per-row (non-literal) target level. */
   def stareClearToDyn(sid: Column, level: Column): Column = clearToDynUdf(sid, level)
-  private val expandDynUdf = udf((sids: Seq[Long], level: Int) =>
-    Sid.expandToLevel(sids.toArray, level))
-  private val tivMillisUdf = udf((millis: Long, fwd: Int, rev: Int) =>
-    Tiv.fromUtcMillis(millis, fwd, rev))
-  private val tivIntervalUdf = udf((lo: Long, hi: Long) => Tiv.fromInterval(lo, hi))
-  private val containsDynUdf = udf((sid: Long, lat: Double, lon: Double) =>
-    Htm.sidContainsPoint(sid, lat, lon))
   private val setIntersectsUdf = udf((a: Seq[Long], b: Seq[Long]) =>
     Sid.intersection(a.toArray, b.toArray).nonEmpty)
 
@@ -275,7 +268,7 @@ object StareFunctions {
       ("stare_hex", 1, c(cs => stareHex(long(cs(0))))),
       ("stare_area", 1, c(cs => areaUdf(long(cs(0))))),
       ("stare_compress", 1, c(cs => compressUdf(cs(0)))),
-      ("stare_expand", 2, c(cs => expandDynUdf(cs(0), int(cs(1))))),
+      ("stare_expand", 2, c(cs => expandUdf(cs(0), int(cs(1))))),
       ("stare_intersection", 2, c(cs => intersectionUdf(cs(0), cs(1)))),
       ("stare_set_intersects", 2, c(cs => setIntersectsUdf(cs(0), cs(1)))),
       ("stare_cover", 2, c(cs => coverUdf(cs(0), int(cs(1)), lit(true)))),
@@ -284,15 +277,15 @@ object StareFunctions {
       ("stare_ellipse_cover", 6, c(cs =>
         ellipseUdf(dbl(cs(0)), dbl(cs(1)), dbl(cs(2)), dbl(cs(3)), dbl(cs(4)), int(cs(5))))),
       ("stare_sid_adaptive", 3, c(cs => adaptiveSidUdf(dbl(cs(0)), dbl(cs(1)), dbl(cs(2))))),
-      ("stare_contains_point", 3, c(cs => containsDynUdf(long(cs(0)), dbl(cs(1)), dbl(cs(2))))),
+      ("stare_contains_point", 3, c(cs => containsPointUdf(long(cs(0)), dbl(cs(1)), dbl(cs(2))))),
       ("stare_center", 1, c(cs => centerUdf(long(cs(0))))),
       ("stare_gring", 1, c(cs => gringUdf(long(cs(0))))),
       ("stare_corners_ecef", 1, c(cs => cornersEcefUdf(long(cs(0))))),
       ("stare_trixel_wkt", 1, c(cs => trixelWktUdf(cs(0)))),
       ("stare_dissolve_wkt", 1, c(cs => dissolveWktUdf(cs(0)))),
       ("stare_wkt_area", 1, c(cs => wktAreaUdf(cs(0)))),
-      ("stare_tiv", 3, c(cs => tivMillisUdf(long(cs(0)), int(cs(1)), int(cs(2))))),
-      ("stare_tiv_range", 2, c(cs => tivIntervalUdf(long(cs(0)), long(cs(1))))),
+      ("stare_tiv", 3, c(cs => tivUdf(long(cs(0)), int(cs(1)), int(cs(2))))),
+      ("stare_tiv_range", 2, c(cs => tivRangeUdf(long(cs(0)), long(cs(1))))),
       // driver-prepared cover predicate: the cover argument must be a
       // foldable array literal so the merged interval runs ship once as
       // a codegen reference object (the same native path the typed

@@ -38,11 +38,16 @@ import graft.functions.StareFunctions._
   * Manifests are derived by reading back the committed parquet files —
   * one cheap columnar scan of (sid, ts) — so they are consistent with
   * what was actually written even for non-deterministic inputs, and the
-  * input pipeline is computed exactly once. The commit lists the files
-  * it scans and accounts once: a batch store with a java.nio walk of its
-  * pod directories, over which the scan is built without a second
-  * listing; a store with a streaming sink's `_spark_metadata` through
-  * `spark.read.parquet`, whose commit-log index excludes orphan files.
+  * input pipeline is computed exactly once.
+  *
+  * Every operation that reads data files (commit, incremental reconcile,
+  * pruned read, full read, catalog fallback) names them once with
+  * [[dataFiles]] and scans exactly those with [[scan]]: a batch store's
+  * files come from a java.nio walk of only the chosen partition
+  * directories, a streaming-sink store's from its `_spark_metadata`
+  * commit log (orphans of a failed micro-batch are never read). No
+  * operation plans a Spark listing job, however many files or
+  * directories it touches.
   *
   * Two local-FS-only optimisations: partitioned writes go through
   * [[ForkFreeLocalFileSystem]] (no `chmod` process per created file or
@@ -74,21 +79,19 @@ object Pods {
             chunkMs: Long = 30L * 86400000L): Unit = {
     val spark = df.sparkSession
     sweepTrash(Paths.get(path))
-    snapshotInfo(path) match {
-      case Some((FormatVersion, lin)) if lin == lineageId && manifestsFile(path).toFile.exists() =>
-        return // committed by this lineage under the current layout: resume is a no-op
-      case Some(_) =>
-        // committed by another lineage or a stale layout: replace the
-        // store wholesale so stale pod directories can't outlive the
-        // manifest that no longer lists them (catalog/data divergence).
-        // The old store is renamed aside atomically and deleted on a
-        // background thread (r6, guide §6): a sequential Files.walk
-        // delete of a many-directory store blocked the driver for
-        // hundreds of ms before the write could start; the rename gives
-        // the same visible result (path gone) in one FS op.
-        trashAsync(Paths.get(path))
-      case None => // absent or partial (no/invalid snapshot): dynamic overwrite below
-    }
+    // committed by this lineage under the current layout: resume is a no-op
+    if (isCommitted(path, lineageId)) return
+    if (snapshot(path).isDefined) {
+      // committed by another lineage or a stale layout: replace the
+      // store wholesale so stale pod directories can't outlive the
+      // manifest that no longer lists them (catalog/data divergence).
+      // The old store is renamed aside atomically and deleted on a
+      // background thread (r6, guide §6): a sequential Files.walk
+      // delete of a many-directory store blocked the driver for
+      // hundreds of ms before the write could start; the rename gives
+      // the same visible result (path gone) in one FS op.
+      trashAsync(Paths.get(path))
+    } // absent or partial (no snapshot): the overwrite below replaces it
 
     val withPod0 = df.withColumn("pod", starePod(col(sidCol), podLevel))
     val withPod = tsCol match {
@@ -139,47 +142,32 @@ object Pods {
   private def commitStore(spark: SparkSession, path: String, sidCol: String,
                           hasTchunk: Boolean, tsCol: Option[String], podLevel: Int,
                           chunkMs: Long, lineageId: String): Unit = {
-    val partCols = "pod" +: (if (hasTchunk) Seq("tchunk") else Seq.empty)
-    // The scan and the accounted-file set come from ONE listing, so the
-    // manifests describe exactly the accounted files. On a streaming-sink
-    // store `spark.read.parquet(path)` honors the sink's _spark_metadata
-    // commit log (orphans from a failed micro-batch are neither aggregated
-    // nor accounted; they stay "new" until their batch commits) and plans
-    // no parallel listing. A batch store is listed once with java.nio and
-    // the scan is built over that listing: `spark.read.parquet(path)`
-    // would list it again, as a Spark job with one task per pod
-    // directory once there are more than parallelPartitionDiscovery
-    // .threshold of them (0.5-1.2 s of wall for 128 directories).
-    val (scan, files) =
-      if (Files.exists(Paths.get(path, "_spark_metadata"))) {
-        val df = spark.read.parquet(path)
-        (df, relativizeDataFiles(path, df.inputFiles))
-      } else {
-        val listed = listDataFiles(path)
-        (org.apache.spark.sql.graft.shim.parquetFromListing(spark, path,
-          listed.map(f => (f.rel, f.length, f.mtimeMs))), listed.map(_.rel))
-      }
-    // partition-value types are INFERRED on read (small tchunk values
-    // come back as int): normalize to long before aggregating
-    val back = partCols.foldLeft(scan)((d, c) => d.withColumn(c, col(c).cast("long")))
-    val mans = scanManifests(back, partCols.map(col), hasTchunk, sidCol, tsCol, lineageId)
+    // the scan and the accounted-file set are ONE naming of the files
+    // (on a sink store: only what its commit log committed; orphans stay
+    // "new" until their batch commits), so the manifests describe
+    // exactly the accounted files
+    val files = dataFiles(spark, path)
+    val mans = scanManifests(scan(spark, path, files), hasTchunk, sidCol, tsCol, lineageId)
       .sortBy(m => (m.pod, m.tchunk))
-    writeCommit(path, mans, podLevel, hasTchunk, chunkMs, lineageId, files.toSet)
+    writeCommit(path, mans, podLevel, hasTchunk, chunkMs, lineageId, files.map(_.rel).toSet)
   }
 
   /** One groupBy-collect deriving per-(pod[, tchunk]) manifests from a
     * (possibly file-restricted) scan — the single definition of how
     * manifest rows are built, shared by full commits and incremental
     * merges so the two paths cannot drift. */
-  private def scanManifests(back: DataFrame, groupCols: Seq[org.apache.spark.sql.Column],
-                            hasTchunk: Boolean, sidCol: String, tsCol: Option[String],
-                            lineageId: String): Array[ChunkManifest] = {
+  private def scanManifests(scan: DataFrame, hasTchunk: Boolean, sidCol: String,
+                            tsCol: Option[String], lineageId: String): Seq[ChunkManifest] = {
+    // partition-value types are INFERRED on read (small tchunk values
+    // come back as int): normalize to long before aggregating
+    val groupCols = ("pod" +: (if (hasTchunk) Seq("tchunk") else Seq.empty))
+      .map(c => col(c).cast("long").as(c))
     val aggs = Seq(
       min(col(sidCol)).as("sidMin"), max(col(sidCol)).as("sidMax"),
       count(lit(1)).as("rowCount")) ++ tsCol.toSeq.flatMap(ts => Seq(
       min((col(ts).cast("double") * 1000).cast("long")).as("tsMin"),
       max((col(ts).cast("double") * 1000).cast("long")).as("tsMax")))
-    back.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*).collect().map { r =>
+    scan.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*).collect().toSeq.map { r =>
       val pod = r.getLong(r.fieldIndex("pod"))
       val tchunk = if (hasTchunk) r.getLong(r.fieldIndex("tchunk")) else NoChunk
       val (tsMin, tsMax) =
@@ -217,21 +205,21 @@ object Pods {
     atomicWrite(manifestsFile(path).toString, manifestBody)
     atomicWrite(filesFile(path).toString,
       (s"$GenerationHeader$manifestsHash" +: files.toSeq.sorted).mkString("\n"))
-    val snapshot =
+    val snapshotBody =
       s"""{"formatVersion":$FormatVersion,"lineageId":"$lineageId","podLevel":$podLevel,""" +
         s""""hasTchunk":$hasTchunk,"chunkMs":$chunkMs,""" +
         s""""pods":${mans.map(_.pod).distinct.length},"chunks":${mans.length},""" +
         s""""rows":${mans.map(_.rowCount).sum},"manifestsSha256":"$manifestsHash",""" +
         s""""committedAtMs":${System.currentTimeMillis()}}"""
-    atomicWrite(Paths.get(path, "_SNAPSHOT.json").toString, snapshot)
+    atomicWrite(Paths.get(path, "_SNAPSHOT.json").toString, snapshotBody)
   }
 
   /** Fold a manifest-less (or manifest-stale) pod-partitioned store
     * into the batch catalog machinery (r4 verdict item 8): the
     * streaming sink (StreamingIndex.start) appends pod-partitioned
     * parquet with exactly-once file-sink semantics but writes no
-    * manifests, so Pods.read over it pays a full listing and
-    * catalog() a data scan. reconcile() rebuilds the consolidated
+    * manifests, so Pods.read over it can prune by pod directory only
+    * and catalog() pays a data scan. reconcile() rebuilds the consolidated
     * manifest + snapshot from what is actually on disk — the same one
     * columnar scan and commit code path write() uses — after which
     * listing-time spatial (and, with `tsCol`, temporal) pruning and
@@ -253,31 +241,35 @@ object Pods {
                 sidCol: String = "sid", tsCol: Option[String] = None,
                 chunkMs: Long = 30L * 86400000L,
                 podLevel: Option[Int] = None): Unit = {
-    val dir = Paths.get(path)
-    require(Files.exists(dir), s"no store at $path")
-    val podDirs = {
-      val s = Files.list(dir)
-      try s.iterator().asScala.filter(_.getFileName.toString.startsWith("pod=")).toArray
-      finally s.close()
-    }
-    require(podDirs.nonEmpty, s"no pod= directories under $path")
+    require(Files.exists(Paths.get(path)), s"no store at $path")
+    val pods = podDirs(path)
+    require(pods.nonEmpty, s"no pod= directories under $path")
     val hasTchunk = {
-      val s = Files.list(podDirs.head)
+      val s = Files.list(pods.head)
       try s.iterator().asScala.exists(_.getFileName.toString.startsWith("tchunk="))
       finally s.close()
     }
-    val level = podLevel.getOrElse(inferPodLevel(
-      podDirs.map(_.getFileName.toString.stripPrefix("pod=").toLong)))
+    val level = podLevel.getOrElse(inferPodLevel(pods.map(podValue)))
     commitStore(spark, path, sidCol, hasTchunk, tsCol, level, chunkMs, lineageId)
   }
 
-  /** Deepest bit alignment any pod value needs — see reconcile() doc on
-    * why shallower-than-writer inference is pruning-safe. */
+  /** The store's `pod=` directories. */
+  private def podDirs(path: String): Seq[Path] = {
+    val s = Files.list(Paths.get(path))
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith("pod=")).toVector
+    finally s.close()
+  }
+
+  private def podValue(podDir: Path): Long = podDir.getFileName.toString.stripPrefix("pod=").toLong
+
+  /** Deepest bit alignment any pod value needs (0 for none) — see
+    * reconcile() doc on why shallower-than-writer inference is
+    * pruning-safe. */
   private def inferPodLevel(podVals: Iterable[Long]): Int =
     podVals.map { p =>
       (0 to Sid.MaxLevel).find(a => (p & (Sid.increment(a) - 1L)) == 0L)
         .getOrElse(Sid.MaxLevel)
-    }.max
+    }.foldLeft(0)(math.max)
 
   /** Incremental reconcile: fold ONLY files appended since the last
     * commit into the manifests, instead of reconcile()'s full-store
@@ -286,12 +278,12 @@ object Pods {
     * store that has grown to 100 TB (Iceberg's append snapshots make
     * the same trade; ICEBERG.md).
     *
-    * New files are the on-disk data files minus the accounted set the
+    * New files are the store's data files (a java.nio walk, or a sink
+    * store's `_spark_metadata` commit log) minus the accounted set the
     * last commit recorded in `_manifests/files.json` (the analog of an
-    * Iceberg manifest list; at deployment scale it would be columnar,
-    * and the streaming sink's own `_spark_metadata` commit log could
-    * serve the candidate list without any directory walk — the walk
-    * here is metadata-only either way). Their per-(pod[, tchunk])
+    * Iceberg manifest list; at deployment scale it would be columnar).
+    * Only they are scanned, over that naming: no listing job however
+    * many there are. Their per-(pod[, tchunk])
     * aggregates MERGE associatively into the existing manifests:
     * min/max for sid bounds, sum for row counts, and ts bounds only
     * when BOTH sides carry them (a chunk with any ts-unknown rows must
@@ -315,21 +307,15 @@ object Pods {
       reconcile(spark, path, lineageId, sidCol, tsCol, chunkMs, podLevel)
       return accountedFiles(path).size
     }
-    // candidates come from the COMMITTED listing: on a streaming-sink
-    // store this consults _spark_metadata, so an in-flight or failed
-    // micro-batch's files are not merged (no duplicates after a sink
-    // retry rewrites them under new names)
-    val onDisk = committedDataFiles(spark, path)
-    val newFiles = onDisk.filterNot(accounted)
+    // candidates are the store's data files: on a streaming-sink store
+    // only those its _spark_metadata log committed, so an in-flight or
+    // failed micro-batch's files are not merged (no duplicates after a
+    // sink retry rewrites them under new names)
+    val newFiles = dataFiles(spark, path).filterNot(f => accounted(f.rel))
     if (newFiles.isEmpty) return 0
 
-    val hasTchunk = existing.exists(_.hasChunk) || newFiles.exists(_.contains("tchunk="))
-    val partCols = "pod" +: (if (hasTchunk) Seq("tchunk") else Seq.empty)
-    val absNew = newFiles.map(f => s"$path/$f")
-    val back = partCols.foldLeft(
-      spark.read.option("basePath", path).parquet(absNew: _*))((d, c) =>
-      d.withColumn(c, col(c).cast("long")))
-    val fresh = scanManifests(back, partCols.map(col), hasTchunk, sidCol, tsCol, lineageId)
+    val hasTchunk = existing.exists(_.hasChunk) || newFiles.exists(_.rel.contains("tchunk="))
+    val fresh = scanManifests(scan(spark, path, newFiles), hasTchunk, sidCol, tsCol, lineageId)
 
     val merged = (existing ++ fresh).groupBy(m => (m.pod, m.tchunk)).map { case (_, ms) =>
       val bothTs = ms.forall(_.hasTs)
@@ -340,13 +326,10 @@ object Pods {
         lineageId)
     }.toSeq.sortBy(m => (m.pod, m.tchunk))
 
-    val level = podLevel.getOrElse {
-      val inferredNew = inferPodLevel(fresh.map(_.pod))
-      val existingLevel =
-        try snapshotPodLevel(path) catch { case _: Throwable => 0 }
-      math.max(existingLevel, inferredNew)
-    }
-    writeCommit(path, merged, level, hasTchunk, chunkMs, lineageId, accounted ++ newFiles)
+    // accountedFiles() matched the snapshot's stamp, so the snapshot exists
+    val level = podLevel.getOrElse(math.max(snapshotPodLevel(path), inferPodLevel(fresh.map(_.pod))))
+    writeCommit(path, merged, level, hasTchunk, chunkMs, lineageId,
+      accounted ++ newFiles.map(_.rel))
     newFiles.size
   }
 
@@ -387,63 +370,68 @@ object Pods {
       // the snapshot must carry the same stamp: a crash after files.json
       // but before the snapshot leaves stale lineage/podLevel/row totals
       // that would otherwise never be repaired (newFiles comes out empty)
-      val sf = Paths.get(path, "_SNAPSHOT.json")
-      val snapshotOk = Files.exists(sf) &&
-        new String(Files.readAllBytes(sf), StandardCharsets.UTF_8)
-          .contains(s""""manifestsSha256":"$stamp"""")
-      if (!snapshotOk) return Set.empty
+      if (!snapshot(path).exists(_.manifestsSha256 == stamp)) return Set.empty
       lines.filterNot(_.startsWith("#")).toSet
     }
   }
 
-  /** Store-relative data files a batch reader actually sees: on a
-    * streaming-sink store the root `_spark_metadata` commit log is the
-    * source of truth (orphans from failed micro-batches are excluded);
-    * otherwise the directory walk. The log read is metadata-only. */
-  private def committedDataFiles(spark: SparkSession, path: String): Seq[String] = {
-    if (!Files.exists(Paths.get(path, "_spark_metadata"))) listDataFiles(path).map(_.rel)
-    else relativizeDataFiles(path, spark.read.parquet(path).inputFiles)
-  }
-
-  /** inputFiles entries (URI strings or raw paths) -> sorted
-    * store-relative data-file paths. Hadoop Path does the URI parsing:
-    * inputFiles returns UNENCODED strings ("file:/a b/pod=1/x.parquet"),
-    * which java.net.URI rejects on the first space. */
-  private def relativizeDataFiles(path: String, files: Array[String]): Seq[String] = {
-    val root = Paths.get(path).toAbsolutePath
-    files.toSeq.map { f =>
-      val p = Paths.get(new org.apache.hadoop.fs.Path(f).toUri.getPath)
-      root.relativize(p.toAbsolutePath).toString
-    }.filter(_.startsWith("pod=")).sorted
-  }
-
   private final case class DataFile(rel: String, length: Long, mtimeMs: Long)
 
-  /** All parquet data files under the store's pod directories, as
-    * store-relative paths (stable across absolute-path renames of the
-    * store root), sorted. Like Spark's own listing, it skips hidden
-    * paths: any component starting with `_` or `.` (a `_temporary`
-    * committer directory, `.crc` files). */
-  private def listDataFiles(path: String): Seq[DataFile] = {
+  /** The store's parquet data files under the partition directories
+    * `under` (store-relative, `pod=…[/tchunk=…]`; `""` is the whole
+    * store), as sorted store-relative paths (stable across renames of the
+    * store root) with length and mtime — the one answer to "which files
+    * does this operation read". On a streaming-sink store they are the
+    * files its `_spark_metadata` commit log committed (orphans of a
+    * failed micro-batch are excluded), each stat-ed; otherwise a java.nio
+    * walk of only the named directories that, like Spark's own listing,
+    * skips hidden paths (a `_temporary` committer directory, `.crc`
+    * files). A named directory or committed file that does not exist
+    * fails the call. */
+  private def dataFiles(spark: SparkSession, path: String,
+                        under: Seq[String] = Seq("")): Seq[DataFile] = {
     import java.nio.file.{FileVisitResult, SimpleFileVisitor}
     import java.nio.file.attribute.BasicFileAttributes
-    val root = Paths.get(path)
-    def hidden(p: Path) = { val n = p.getFileName.toString; n.startsWith("_") || n.startsWith(".") }
+    val root = Paths.get(path).toAbsolutePath
+    def file(f: Path, a: BasicFileAttributes) =
+      DataFile(root.relativize(f).toString, a.size(), a.lastModifiedTime().toMillis)
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFile]
-    Files.walkFileTree(root, new SimpleFileVisitor[Path] {
-      override def preVisitDirectory(d: Path, a: BasicFileAttributes): FileVisitResult =
-        if (d == root) FileVisitResult.CONTINUE
-        else if (hidden(d) || (d.getParent == root && !d.getFileName.toString.startsWith("pod=")))
-          FileVisitResult.SKIP_SUBTREE
-        else FileVisitResult.CONTINUE
-      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
-        if (f.getParent != root && !hidden(f) && f.getFileName.toString.endsWith(".parquet"))
-          out += DataFile(root.relativize(f).toString, a.size(), a.lastModifiedTime().toMillis)
-        FileVisitResult.CONTINUE
+    if (Files.exists(root.resolve("_spark_metadata"))) {
+      // inputFiles are UNENCODED URI strings ("file:/a b/pod=1/x.parquet"),
+      // which Hadoop's Path parses and java.net.URI rejects
+      spark.read.parquet(path).inputFiles.foreach { u =>
+        val f = Paths.get(new org.apache.hadoop.fs.Path(u).toUri.getPath).toAbsolutePath
+        val rel = root.relativize(f).toString
+        if (rel.startsWith("pod=") && under.exists(d => d.isEmpty || rel.startsWith(s"$d/")))
+          out += file(f, Files.readAttributes(f, classOf[BasicFileAttributes]))
       }
-    })
+    } else {
+      def hidden(p: Path) = { val n = p.getFileName.toString; n.startsWith("_") || n.startsWith(".") }
+      for (d <- under) {
+        val start = root.resolve(d)
+        Files.walkFileTree(start, new SimpleFileVisitor[Path] {
+          override def preVisitDirectory(p: Path, a: BasicFileAttributes): FileVisitResult = {
+            val skip = hidden(p) || (p.getParent == root && !p.getFileName.toString.startsWith("pod="))
+            if (p != start && skip) FileVisitResult.SKIP_SUBTREE else FileVisitResult.CONTINUE
+          }
+          override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+            if (f.getParent != root && !hidden(f) && f.getFileName.toString.endsWith(".parquet"))
+              out += file(f, a)
+            FileVisitResult.CONTINUE
+          }
+        })
+      }
+    }
     out.sortBy(_.rel).toSeq
   }
+
+  /** The one place a DataFrame over a store's data files is built: a
+    * parquet scan over exactly `files` (from [[dataFiles]]), with the partition
+    * and schema inference of `spark.read.parquet` and nothing listed
+    * again. */
+  private def scan(spark: SparkSession, path: String, files: Seq[DataFile]): DataFrame =
+    org.apache.spark.sql.graft.shim.parquetFromListing(spark, path,
+      files.map(f => (f.rel, f.length, f.mtimeMs)))
 
   private def manifestsFile(path: String): Path = Paths.get(path, "_manifests", "manifests.json")
 
@@ -454,8 +442,11 @@ object Pods {
   }
 
   private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
+      finally s.close()
+    }
 
   /** Atomically rename `p` aside and delete it on a daemon thread: the
     * caller observes the path gone immediately, without paying a
@@ -503,22 +494,29 @@ object Pods {
     }
   }
 
-  /** (formatVersion, lineageId) of the snapshot, if one parses. */
-  private def snapshotInfo(path: String): Option[(Int, String)] = {
+  private final case class Snapshot(formatVersion: Int, lineageId: String,
+                                     podLevel: Option[Int], manifestsSha256: String)
+
+  /** The store's `_SNAPSHOT.json`, if there is one — the one parser of
+    * it. A missing field reads as version 0, lineage "", no pod level,
+    * hash "" (so it never matches a committed one). */
+  private def snapshot(path: String): Option[Snapshot] = {
     val f = Paths.get(path, "_SNAPSHOT.json")
     if (!Files.exists(f)) None
     else {
       val s = new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
-      val ver = """"formatVersion"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(0)
-      val lin = """"lineageId"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-      Some((ver, lin))
+      def num(k: String) = s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
+      def str(k: String) = s""""$k"\\s*:\\s*"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
+      Some(Snapshot(num("formatVersion").getOrElse(0), str("lineageId"), num("podLevel"),
+        str("manifestsSha256")))
     }
   }
 
   /** committed = snapshot parses, carries the CURRENT format version and
     * this lineage, and the consolidated manifest actually exists. */
   def isCommitted(path: String, lineageId: String): Boolean =
-    snapshotInfo(path).contains((FormatVersion, lineageId)) && Files.exists(manifestsFile(path))
+    snapshot(path).exists(s => s.formatVersion == FormatVersion && s.lineageId == lineageId) &&
+      Files.exists(manifestsFile(path))
 
   /** Parse the consolidated manifest (empty when absent). */
   def manifests(path: String): Seq[ChunkManifest] = {
@@ -539,57 +537,48 @@ object Pods {
 
   /** Read with spatial (and optional temporal) partition pruning.
     *
-    * Pruning is manifest-driven and happens at FILE LISTING time: only
-    * the partition directories whose pod id overlaps the query cover —
-    * and, given `timeRangeMs`, whose chunk TIV overlaps the query TIV
-    * (reference io/pod.py:189-230) — are handed to the parquet reader.
-    * Directories outside the selection are never listed or opened.
-    * Temporal overlap uses Tiv.intersectionIfOverlap on covering TIVs,
-    * which is conservative (never prunes a chunk that holds in-range
-    * rows); callers refine with an exact timestamp filter. */
+    * Pruning happens when the files are named: only the partition
+    * directories whose pod id overlaps the query cover — and, given
+    * `timeRangeMs`, whose chunk TIV overlaps the query TIV (reference
+    * io/pod.py:189-230) — are walked and handed to the parquet reader;
+    * directories outside the selection are never listed or opened. The
+    * selection is the manifests' `pod=…[/tchunk=…]` directories, or on a
+    * manifest-less store (a stream sink never reconciled, a commit that
+    * crashed before its manifests) the existing `pod=` directories the
+    * cover names. The pod level is the snapshot's, or without one the
+    * level reconcile() would infer from the `pod=` names (pruning-safe,
+    * see there). A sink store reads only files its commit log committed;
+    * a selected directory that is missing fails the read. Temporal
+    * overlap uses Tiv.intersectionIfOverlap on covering TIVs, which is
+    * conservative (never prunes a chunk that holds in-range rows);
+    * callers refine with an exact timestamp filter. An empty selection
+    * returns no rows with readAll()'s schema. */
   def read(spark: SparkSession, path: String, cover: Array[Long],
            timeRangeMs: Option[(Long, Long)] = None): DataFrame = {
     val mans = manifests(path)
-    if (mans.isEmpty) {
-      // foreign / manifest-less store: full listing, pod filter only
-      val podLevel = snapshotPodLevel(path)
-      val pods = podsForCover(cover, podLevel)
-      return spark.read.parquet(path).filter(col("pod").isin(pods: _*))
-    }
-    val podSet = podsForCover(cover, snapshotPodLevel(path)).toSet
-    val queryTiv = timeRangeMs.map { case (a, b) => Tiv.fromIntervalCovering(a, b) }
-    val selected = mans.filter { m =>
-      podSet.contains(m.pod) && (queryTiv match {
-        case Some(q) if m.hasTs =>
-          Tiv.intersectionIfOverlap(Tiv.fromIntervalCovering(m.tsMinMs, m.tsMaxMs), q) != -1L
-        case _ => true
-      })
-    }
-    if (selected.isEmpty) return readAll(spark, path).filter(lit(false))
-    val rels = selected.map { m =>
-      if (m.hasChunk) s"pod=${m.pod}/tchunk=${m.tchunk}/" else s"pod=${m.pod}/"
-    }.distinct
-    if (Files.exists(Paths.get(path, "_spark_metadata"))) {
-      // streaming-sink store: selecting pod directories directly would
-      // bypass the sink's commit log and surface orphan files the
-      // manifests (correctly) never accounted — restrict the listing to
-      // committed files under the selected partitions instead
-      val sel = committedDataFiles(spark, path)
-        .filter(f => rels.exists(f.startsWith)).map(f => s"$path/$f")
-      if (sel.isEmpty) readAll(spark, path).filter(lit(false))
-      else spark.read.option("basePath", path).parquet(sel: _*)
-    } else {
-      spark.read.option("basePath", path).parquet(rels.map(r => s"$path/${r.dropRight(1)}"): _*)
-    }
+    lazy val pods = podDirs(path)
+    val podSet = podsForCover(cover,
+      snapshot(path).flatMap(_.podLevel).getOrElse(inferPodLevel(pods.map(podValue)))).toSet
+    val selection =
+      if (mans.isEmpty) pods.filter(d => podSet.contains(podValue(d))).map(_.getFileName.toString)
+      else {
+        val queryTiv = timeRangeMs.map { case (a, b) => Tiv.fromIntervalCovering(a, b) }
+        mans.filter { m =>
+          podSet.contains(m.pod) && (queryTiv match {
+            case Some(q) if m.hasTs =>
+              Tiv.intersectionIfOverlap(Tiv.fromIntervalCovering(m.tsMinMs, m.tsMaxMs), q) != -1L
+            case _ => true
+          })
+        }.map(m => if (m.hasChunk) s"pod=${m.pod}/tchunk=${m.tchunk}" else s"pod=${m.pod}").distinct
+      }
+    val files = dataFiles(spark, path, selection)
+    if (files.isEmpty) readAll(spark, path).filter(lit(false)) else scan(spark, path, files)
   }
 
-  def readAll(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  def readAll(spark: SparkSession, path: String): DataFrame = scan(spark, path, dataFiles(spark, path))
 
-  def snapshotPodLevel(path: String): Int = {
-    val s = new String(Files.readAllBytes(Paths.get(path, "_SNAPSHOT.json")), StandardCharsets.UTF_8)
-    """"podLevel":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-      .getOrElse(sys.error("no podLevel in snapshot"))
-  }
+  def snapshotPodLevel(path: String): Int =
+    snapshot(path).flatMap(_.podLevel).getOrElse(sys.error(s"no podLevel in the snapshot of $path"))
 
   /** Catalog of a pod store (folder2catalog analog, reference
     * io/folder.py:83-131): one row per pod with its SID range, row count
@@ -599,16 +588,16 @@ object Pods {
   def catalog(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val mans = manifests(path)
+    lazy val files = if (Files.exists(Paths.get(path))) dataFiles(spark, path) else Seq.empty
     if (mans.nonEmpty) {
       mans.groupBy(_.pod).toSeq.map { case (pod, ms) =>
         (pod, Sid.hex(pod), ms.map(_.sidMin).min, ms.map(_.sidMax).max,
           ms.map(_.rowCount).sum, ms.head.lineageId)
       }.sortBy(_._1).toDF("pod", "podHex", "sidMin", "sidMax", "rowCount", "lineageId")
-    } else if (Files.exists(Paths.get(path)) &&
-      Files.list(Paths.get(path)).anyMatch(p => p.getFileName.toString.startsWith("pod="))) {
+    } else if (files.nonEmpty) {
       // fallback: rebuild the catalog from the data files themselves
       val hexUdf = udf((p: Long) => Sid.hex(p))
-      spark.read.parquet(path).groupBy(col("pod"))
+      scan(spark, path, files).groupBy(col("pod"))
         .agg(min(col("sid")).as("sidMin"), max(col("sid")).as("sidMax"), count(lit(1)).as("rowCount"))
         .select(col("pod"), hexUdf(col("pod")).as("podHex"), col("sidMin"), col("sidMax"),
           col("rowCount"), lit("").as("lineageId"))

@@ -131,13 +131,15 @@ object shim {
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val hadoopConf = s.sessionState.newHadoopConf()
-    val rootPath = {
-      val p = new Path(root)
-      p.getFileSystem(hadoopConf).makeQualified(p)
-    }
+    val fs = new Path(root).getFileSystem(hadoopConf)
+    val rootPath = fs.makeQualified(new Path(root))
     val blockSize = 32L << 20
+    // qualified the way Spark's own listing qualifies a file (resolving
+    // against rootPath would turn "file:///a" into "file:/a"), so
+    // inputFiles reads exactly as after spark.read.parquet(root)
+    val bare = Path.getPathWithoutSchemeAndAuthority(rootPath)
     val statuses: Array[FileStatus] = files.map { case (rel, len, mtime) =>
-      new FileStatus(len, false, 1, blockSize, mtime, new Path(rootPath, rel))
+      new FileStatus(len, false, 1, blockSize, mtime, fs.makeQualified(new Path(bare, rel)))
     }.toArray
     // a private cache holding exactly this listing: the session-wide
     // FileStatusCache is shared state and is left untouched

@@ -97,6 +97,7 @@ class ExtensionsSpec extends AnyFunSuite {
            |  stare_contains_point(${sid20}L, 20.0d, 10.5d),
            |  stare_sid_adaptive(20.0d, 10.5d, 0.25d),
            |  stare_tiv(1700000000000L, 48, 48),
+           |  stare_tiv_range(1700000000000L, 1700086400000L),
            |  size(stare_ellipse_cover(47.0d, 9.0d, 2.2e6d, 1.4e6d, 30.0d, 6)) > 0,
            |  stare_trixel_wkt(array(stare_clear_to(${sid20}L, 8)))""".stripMargin)
         .collect()(0)
@@ -107,8 +108,9 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(r.getBoolean(4))
       assert(graft.core.Sid.level(r.getLong(5)) === graft.core.Htm.adaptiveLevel(0.25))
       assert(r.getLong(6) === graft.core.Tiv.fromUtcMillis(1700000000000L, 48, 48))
-      assert(r.getBoolean(7))
-      assert(r.getString(8).startsWith("MULTIPOLYGON ("))
+      assert(r.getLong(7) === graft.core.Tiv.fromInterval(1700000000000L, 1700086400000L))
+      assert(r.getBoolean(8))
+      assert(r.getString(9).startsWith("MULTIPOLYGON ("))
       // compress/expand roundtrip + intersection, all in SQL
       val cell = graft.core.Sid.clearToLevel(graft.core.Sid.coerceLevel(sid20, 6))
       val ce = spark.sql(

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.core.Sid
+import graft.functions.StareFunctions.starePod
 import graft.sources.{ForkFreeLocalFileSystem, Pods}
 
 /** The pods commit path: what a crash at each step leaves and how it is
@@ -96,6 +97,20 @@ class PodsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     Pods.manifests(path).map(m => (m.pod, m.tchunk, m.sidMin, m.sidMax, m.rowCount, m.tsMinMs, m.tsMaxMs))
       .sorted
 
+  /** Spark's default; every listing test below names more paths than it. */
+  private def threshold: Int = {
+    val t = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    assert(t === 32, "the listing tests assume the default discovery threshold")
+    t
+  }
+
+  /** a committed 128-pod store with 1-day chunks, written once */
+  private lazy val wideStore: String = {
+    val out = Files.createTempDirectory("pods_wide").resolve("store").toString
+    write(out, "wide-1")
+    out
+  }
+
   private def waitUntil(what: String, timeoutMs: Long = 30000L)(cond: => Boolean): Unit = {
     val end = System.currentTimeMillis() + timeoutMs
     while (!cond && System.currentTimeMillis() < end) Thread.sleep(50)
@@ -121,6 +136,8 @@ class PodsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (k <- 0 to 3) {
       val state = crashState(k)
       assert(Pods.isCommitted(state, "crash-L") === (k == 3), s"isCommitted after $k commit writes")
+      // an uncommitted store still reads, pruned by its pod directories
+      assertPrunedRead(state)
 
       // a same-lineage write resumes only the complete triple; every
       // partial state is rewritten (new data files) and committed
@@ -227,28 +244,16 @@ class PodsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a commit over more pod directories than the discovery threshold plans no listing job and leaves no FS override in shared conf") {
-    val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
     val out = Files.createTempDirectory("pods_listing").resolve("store").toString
-    // (execution id, tasks) of every stage submitted during the write
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        stages.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .getOrElse("none"), e.stageInfo.numTasks))
-    }
-    org.apache.spark.sql.graft.shim.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      write(out, "listing-1")
-      org.apache.spark.sql.graft.shim.drainListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // every stage submitted during the write
+    val (_, rec) = SparkJobProbe.record(spark)(write(out, "listing-1"))
 
     val podDirs = Files.list(Paths.get(out)).iterator().asScala
       .count(_.getFileName.toString.startsWith("pod="))
     assert(podDirs > threshold, s"$podDirs pod directories, threshold $threshold")
     // the data write is the first SQL execution; the commit is the rest
-    val all = stages.asScala.toSeq
-    val commitTasks = all.filter(_._1 != all.head._1).map(_._2).sum
+    val all = rec.stages
+    val commitTasks = all.filter(_.executionId != all.head.executionId).map(_.tasks).sum
     assert(commitTasks > 0)
     assert(commitTasks < podDirs, s"commit ran $commitTasks tasks over $podDirs pod directories")
 
@@ -266,5 +271,46 @@ class PodsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!spark.sparkContext.hadoopConfiguration.iterator().asScala.exists(_.getKey.startsWith("fs.file.impl")))
     assert(!spark.conf.getAll.keys.exists(_.startsWith("fs.file.impl")))
     assert(!spark.conf.getAll.keys.exists(_.startsWith("spark.hadoop.fs.file.impl")))
+  }
+
+  test("an incremental reconcile of more new files than the discovery threshold plans no listing job and equals a full reconcile") {
+    val out = Files.createTempDirectory("pods_incremental").resolve("store").toString
+    val df = frame.withColumn("pod", starePod(col("sid"), PodLevel))
+    df.filter(col("doc_id") < 500).write.partitionBy("pod").parquet(out)
+    Pods.reconcile(spark, out, "inc-1", tsCol = Some("warc_ts"))
+    df.filter(col("doc_id") >= 500).write.mode("append").partitionBy("pod").parquet(out)
+
+    val (n, rec) = SparkJobProbe.record(spark)(
+      Pods.reconcileIncremental(spark, out, "inc-2", tsCol = Some("warc_ts")))
+    assert(n > threshold, s"$n new files, threshold $threshold")
+    assert(rec.listingStages.isEmpty, s"listing stages: ${rec.listingStages}")
+    assert(Pods.isCommitted(out, "inc-2"))
+    val incremental = manifestRows(out)
+    Pods.reconcile(spark, out, "inc-full", tsCol = Some("warc_ts"))
+    assert(manifestRows(out) === incremental)
+    assert(incremental.map(_._5).sum === rows.size.toLong)
+  }
+
+  test("a read selecting more pod directories than the discovery threshold plans no listing job and equals the direct filter") {
+    val allFaces = (0L until 8L).map(_ << 59).toArray // the 8 level-0 trixels
+    val selected = Pods.manifests(wideStore).size
+    assert(selected > threshold, s"$selected selected directories, threshold $threshold")
+    val (got, rec) = SparkJobProbe.record(spark)(
+      Pods.read(spark, wideStore, allFaces).select("doc_id").collect().map(_.getLong(0)).toSet)
+    assert(rec.listingStages.isEmpty, s"listing stages: ${rec.listingStages}")
+    val iv = Sid.mergedIntervals(allFaces)
+    assert(got === rows.collect { case (id, sid, _) if Sid.anyIntersects(Array(sid), iv) => id }.toSet)
+    assert(got.size === rows.size)
+  }
+
+  test("a read that selects no directory returns no rows with readAll's schema and plans no listing job") {
+    val before = Some((T0 - 10 * Day, T0 - 9 * Day)) // every chunk is later
+    val (df, rec) = SparkJobProbe.record(spark) {
+      val df = Pods.read(spark, wideStore, cover, timeRangeMs = before)
+      assert(df.count() === 0)
+      df
+    }
+    assert(rec.listingStages.isEmpty, s"listing stages: ${rec.listingStages}")
+    assert(df.schema === Pods.readAll(spark, wideStore).schema)
   }
 }

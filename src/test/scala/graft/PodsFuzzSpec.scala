@@ -178,4 +178,44 @@ class PodsFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
   }
+
+  test("stream layout, no reconcile: pruned read + refine ≡ direct filter (8 random trials)") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val r = new scala.util.Random(7373)
+    for (trial <- 0 until 8) {
+      val podLevel = 1 + r.nextInt(6) // 1..6
+      val spanMs = Seq(86400000L, 400L * 86400000L)(r.nextInt(2))
+      val rows = randomRows(r, 300 + r.nextInt(500), podLevel, spanMs)
+      def layout(d: org.apache.spark.sql.DataFrame) = d.toDF("doc_id", "sid", "ts_ms")
+        .withColumn("warc_ts", (col("ts_ms") / lit(1000.0)).cast("timestamp"))
+        .drop("ts_ms")
+        .withColumn("pod", starePod(col("sid"), podLevel))
+      val out = Files.createTempDirectory(s"podsfuzz_n$trial").toString
+      // no manifests and no snapshot: the read prunes by pod directory at
+      // the pod level inferred from the directory names. Odd trials go
+      // through a real file sink, whose _spark_metadata log names the files
+      if (trial % 2 == 0) layout(rows.toDF()).write.mode("overwrite").partitionBy("pod").parquet(out)
+      else {
+        val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
+        mem.addData(rows)
+        layout(mem.toDF()).writeStream.format("parquet").partitionBy("pod")
+          .option("checkpointLocation", Files.createTempDirectory(s"podsfuzz_n${trial}_ckpt").toString)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start(out).awaitTermination(60000)
+        assert(Files.exists(java.nio.file.Paths.get(out, "_spark_metadata")))
+      }
+      assert(Pods.manifests(out).isEmpty)
+      for (probe <- 0 until 3) {
+        val cover = randomCover(r, podLevel)
+        val window = randomWindow(r, spanMs)
+        val expected = hits(rows, cover, window)
+        val got = readRefined(out, cover, window)
+        assert(got === expected,
+          s"trial=$trial probe=$probe podLevel=$podLevel " +
+            s"cover=${cover.map(Sid.hex).mkString(",")} window=$window")
+      }
+    }
+  }
 }
