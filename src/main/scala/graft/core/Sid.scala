@@ -150,6 +150,34 @@ object Sid {
     out.toArray
   }
 
+  /** The level ladder of non-nested cells: each cell coarser than `to`
+    * as its trixels at every level from max(its level, from) to `to`; a
+    * cell finer than `to` stays itself. For a sid at a level >= `from`,
+    * its [[ladderKey]] is one of a cell's rungs iff the cell is at or
+    * coarser than `to` and contains the sid; rungs of disjoint cells are
+    * distinct, so the key matches at most one of them. */
+  def ladder(cells: Array[Long], from: Int, to: Int): Array[Long] = {
+    val out = new ArrayBuffer[Long]()
+    cells.foreach { c =>
+      val l = level(c)
+      if (l >= to) out += clearToLevel(c)
+      else (math.max(l, math.min(from, to)) to to).foreach(k => out ++= expandToLevel(Array(c), k))
+    }
+    out.toArray
+  }
+
+  /** Rungs [[ladder]] makes of one cell at `cellLevel`. */
+  def ladderRungs(cellLevel: Int, from: Int, to: Int): Long =
+    if (cellLevel >= to) 1L
+    else (math.max(cellLevel, math.min(from, to)) to to).map(k => 1L << (2 * (k - cellLevel))).sum
+
+  /** The one key of a sid against a [[ladder]] up to `to`: its ancestor
+    * at min(level(sid), to). */
+  def ladderKey(sid: Long, to: Int): Long = {
+    val l = math.min(level(sid), to)
+    (sid & clearMask(l)) | l
+  }
+
   /** Intersection of two sid sets (cover ∩ cover -> canonical cover).
     * Mirrors pystare.intersection as used by stare_intersection
     * (staredataframe.py:809-839) and polygon-hole handling. */

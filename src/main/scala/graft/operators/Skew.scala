@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Sid
 import graft.functions.StareFunctions._
-import StareJoin.{Budgets, coverCells, minSidLevel}
+import StareJoin.{Budgets, Ladder, coverCells}
 
 /** Explicit skew handling for the shuffle-path spatial join (SURVEY.md
   * §4.4 / north rule: hot cells — cities, coastlines — must not melt a
@@ -37,12 +37,18 @@ object Skew {
     * parent's gate. `skipReason` is set when the cost gate decided
     * splitting cannot win (right is returned unchanged, parents empty).
     * `minLeftLevel` = the exact minimum left-side sid level the spec was
-    * computed against — callers (shuffleJoin's uniform rebase) reuse it
-    * instead of re-aggregating the left side. */
+    * computed against; shuffleJoin's ladder starts its rungs there. */
   final case class SplitResult(right: DataFrame, parents: Seq[SplitParent],
                                keptLevels: Array[Int], skipReason: Option[String] = None,
                                minLeftLevel: Int = Sid.MaxLevel,
                                allCells: Array[Long] = Array.emptyLongArray)
+
+  /** Exact minimum sid level of a frame (one narrow aggregation job);
+    * Sid.MaxLevel for an empty frame, which no level bound constrains. */
+  private def minSidLevel(df: DataFrame, sid: String): Int = {
+    val r = df.agg(min(stareLevel(col(sid)))).collect()(0)
+    if (r.isNullAt(0)) Sid.MaxLevel else r.getLong(0).toInt
+  }
 
   /** Estimate per-cell point counts from a sample of the left side and
     * split cells whose projected population exceeds `maxRowsPerCell`.
@@ -220,10 +226,20 @@ object Skew {
     * sort-merge/shuffled-hash equi-join on the prefix keys with AQE skew
     * splitting enabled, optionally after exact hot-cell splitting.
     * Same pair semantics and output contract (suffixes, `key_right`,
-    * column order) as StareJoin.pointJoin, for how = inner | left, in
-    * one of two shapes: a single-exchange keyed join (inner, and left
-    * with one candidate key per row) or a pair/join-back (left with
-    * several candidate keys).
+    * column order) as StareJoin.pointJoin, for how = inner | left. Each
+    * left row keys ONCE, by pointJoin's ladder rule (StareJoin.Ladder),
+    * so every inner join and every left join without an applied split
+    * takes one shape, a single-exchange keyed join. A left join takes the
+    * pair/join-back only in two cases, where a row has several candidate
+    * keys: an applied hot-cell split whose children are finer than the
+    * finest kept level (gated keys), and a ladder over `RebaseKeys` (one
+    * key per cover level).
+    *
+    * `knownMinLeftLevel`, as for pointJoin: the ladder's rungs start at
+    * the declared level (one rung per cell at or above the finest kept
+    * level, and the per-row guard folds away). Without it they start at
+    * the coarsest keyed level; only a hot-cell split measures the left
+    * side, in one aggregation job that caps its depth.
     *
     * Row ids come from deterministic zipWithIndex (StareJoin.withStableId)
     * instead of persist + monotonically_increasing_id: nothing stays
@@ -255,79 +271,35 @@ object Skew {
       .withColumn("__rk", stareClearToOwn(col("__rs")))
       .select(col("__rid"), col("__rk"))
     val parents = splitRes.map(_.parents).getOrElse(Seq.empty)
-    // level histogram of the keyed right cells: feeds the base level
-    // set AND the uniform-rebase budget in one small job (previously a
-    // distinct-only collect).
+    // level histogram of the keyed right cells: feeds the kept level set
+    // AND the ladder's size in one small job.
     val levelHist: Map[Int, Long] = rightKeyed
       .groupBy(stareLevel(col("__rk")).as("__l")).count()
       .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
     val keptLevels: Array[Int] = splitRes.map(_.keptLevels)
       .getOrElse(levelHist.keys.toArray.sorted)
-    // ---- uniform-level rebase: the pointJoin dictionary lesson applied
-    // to the shuffle path. A multi-level cover makes every left row
-    // derive one key PER COVER LEVEL — the big side's shuffle volume
-    // multiplies by |levels| (measured 4-5x at the skew bench, where it
-    // dwarfed the reducer melt the bench exists to show). Expanding
-    // every kept cell to the finest ELIGIBLE level multiplies only the
-    // small keyed right side (budget-gated) and each left row derives
-    // ONE base key per remaining base level. Pair multiplicity is
-    // unchanged: cells are disjoint, so a row's covering cell expands
-    // to exactly the one uniform cell that still covers it.
-    //
-    // The target is capped at the exact minimum LEFT sid level (ADVICE
-    // r4 HIGH): a left row with sid level >= a cover cell's level but
-    // < target matched that cell via its base-level key before the
-    // rebase; expanding the cell past the row's own level would leave
-    // the row keyless (when(stareLevel >= target) -> null) and silently
-    // drop the pair. Cells FINER than the capped target keep their own
-    // base levels (they can only match left rows at least that fine,
-    // which the per-level guard already expresses).
-    // saturating cost of expanding every keyed cell below `target` up to
-    // `target` — over ALL levels present in the keyed right frame
-    // (levelHist includes SPLIT-CHILD cells, which the rebase UDF also
-    // expands; budgeting only the kept levels would admit an expansion
-    // orders of magnitude over budget through the children). levelHist
-    // counts exploded (row, cell) pairs (unbounded), and a wide level
-    // spread shifts far past 62 bits — an overflowed (negative) sum must
-    // read as "infinite cost", not as a budget pass.
-    def rebaseCostTo(target: Int): Long =
-      levelHist.keysIterator.filter(_ < target).foldLeft(0L) { (acc, l) =>
-        val shift = 2 * (target - l)
-        val cnt = levelHist.getOrElse(l, 0L)
-        val cellCost =
-          if (shift >= 62 || (shift > 0 && cnt > (Long.MaxValue >> shift))) Long.MaxValue
-          else cnt << shift
-        val sum = acc + cellCost
-        if (sum < acc) Long.MaxValue else sum // addition overflow -> saturate
-      }
-    // cheapest conceivable rebase: collapse only the two coarsest keyed
-    // levels (the smallest shift any useful target could need). If even
-    // that exceeds the budget, NO target can pass — skip the min-level
-    // fallback scan entirely (it is a full pass over the left sid column)
-    val sortedKept = keptLevels.sorted
-    val anyTargetCanFit = sortedKept.length > 1 && {
-      val minimal = rebaseCostTo(sortedKept(1))
-      minimal <= Budgets.RebaseKeys
-    }
-    val minLeftLevel: Int = knownMinLeftLevel
-      .orElse(splitRes.map(_.minLeftLevel))
-      .getOrElse {
-        if (!anyTargetCanFit) Sid.MaxLevel // rebase hopeless: cap is moot
-        else minSidLevel(left, leftSid)
-      }
-    val target = math.min(if (keptLevels.isEmpty) 0 else keptLevels.max, minLeftLevel)
-    val rebaseCost = rebaseCostTo(target)
-    val rebased = keptLevels.count(_ <= target) > 1 && rebaseCost <= Budgets.RebaseKeys
+    // ---- the ladder (StareJoin.Ladder), pointJoin's key rule: every
+    // keyed cell coarser than the finest KEPT level `to` becomes its
+    // rungs up to `to`, and each left row derives ONE base key. Keying
+    // each cover level instead multiplies the big side's shuffle by
+    // |levels| (measured 4-5x at the skew bench), and a left join with
+    // several keys needs the pair/join-back. Split children finer than
+    // `to` keep their own level and are matched by gated keys. Under a
+    // split the rungs start at its exact minimum left level, which also
+    // caps the split depth, so a child at or coarser than `to` has a
+    // rung at every key level of the rows inside it. Only the budget
+    // gates the ladder: levelHist counts every keyed cell, split children
+    // included, so its size is exact.
+    val ladder = Ladder(levelHist.keys, keptLevels.maxOption.getOrElse(0),
+      knownMinLeftLevel.orElse(splitRes.map(_.minLeftLevel)), declared = knownMinLeftLevel.isDefined)
+    val ladderKeys = ladder.size(levelHist)
+    val laddered = ladderKeys <= Budgets.RebaseKeys
     val rightKeyedFinal =
-      if (!rebased) rightKeyed
-      else {
-        val rebase = udf((c: Long) =>
-          if (Sid.level(c) < target) Sid.expandToLevel(Array(c), target) else Array(c))
-        rightKeyed.withColumn("__rk", explode(rebase(col("__rk"))))
-      }
+      if (!laddered || levelHist.keys.forall(_ >= ladder.to)) rightKeyed // one rung per cell
+      else rightKeyed.withColumn("__rk", explode(ladder.rungs(array(col("__rk")))))
     // ---- join-strategy choice (r6, guide §3.1): the keyed right side
     // is (rid, key) pairs whose EXACT row count we already hold
-    // (levelHist + the rebase expansion), but its lineage passes
+    // (the ladder's size), but its lineage passes
     // through withStableId's RDD round trip, which erases size stats —
     // Catalyst then plans EVERY join here as a sort-merge join, even
     // for an 8-row cover table (measured: 7 SMJs in the q43 plan), and
@@ -339,9 +311,7 @@ object Skew {
     // sorting; fall back to sort-merge only when the per-partition
     // build could be large (conf spark.graft.join.shjMaxBuildBytesPerPartition).
     val budgets = Budgets(left.sparkSession)
-    val keyedRightRows: Long =
-      if (!rebased) levelHist.valuesIterator.sum
-      else rebaseCost + levelHist.iterator.collect { case (l, n) if l >= target => n }.sum
+    val keyedRightRows: Long = if (laddered) ladderKeys else levelHist.valuesIterator.sum
     val estKeyedBytes = keyedRightRows * Budgets.PairBytes
     // The right ROWS (payload included) are sized from one bounded
     // probe: row count is bounded by the keyed pair count (every
@@ -353,24 +323,24 @@ object Skew {
       if (rightProbe.length <= Budgets.RowWidthProbeRows) rowBytesEst * rightProbe.length
       else rowBytesEst * math.max(keyedRightRows, rightProbe.length)
     val rowsBroadcast = budgets.broadcastFits(estRightRowsBytes)
-    // base levels probed unconditionally; split-child levels already in
-    // the base set are matched by the base key (no gated duplicate — a
-    // duplicate key value would double pairs); levels introduced ONLY
-    // by splitting are probed under their parent's membership gate, so
-    // non-hot rows never pay for them. A row lies in at most one parent
-    // (cells are disjoint), so gates cannot duplicate a level either.
-    // Under a rebase, child cells at/below the target were expanded to
-    // the target like any kept cell, so only deeper-than-target child
-    // levels (not already covered by a finer-than-target base level)
-    // keep their gates.
-    val baseLevels: Array[Int] =
-      if (rebased) (target +: keptLevels.filter(_ > target)).distinct.sorted else keptLevels
-    val baseSet = baseLevels.toSet
+    // The base keys: the ladder key, or over its budget one key per
+    // kept level. Split-child levels a base key serves get no gated
+    // duplicate (a duplicate key value would double pairs); levels
+    // introduced ONLY by splitting are probed under their parent's
+    // membership gate, so non-hot rows never pay for them. A row lies in
+    // at most one parent (cells are disjoint), so gates cannot duplicate
+    // a level either.
+    val baseLevels: Seq[Int] = if (laddered) ladder.from to ladder.to else keptLevels.toSeq
+    def gatedLevels(p: SplitParent): Seq[Int] =
+      p.childLevels.toSeq.filter(cl => if (laddered) cl > ladder.to else !keptLevels.contains(cl))
+    /** base-key levels at which p's replacement children are matched */
+    def served(p: SplitParent): Seq[Int] =
+      if (!laddered) p.childLevels.toSeq
+      else p.childLevels.toSeq.filter(_ <= ladder.to).flatMap(cl => math.max(cl, ladder.from) to ladder.to)
     // Dead base-key suppression (r6): a row inside a split parent p
-    // derives, at every base level inside p's region that p's
-    // (uniform-depth) replacement children do not serve, a key value
-    // that matches NOTHING on the right — the parent was removed, its
-    // children key at their own (or rebase-expanded) level, and the
+    // derives, at a base-key level inside p's region that p's
+    // (uniform-depth) replacement children are not keyed at, a key value
+    // that matches NOTHING on the right — the parent was removed and the
     // rows match through the GATED child key. Those dead keys are
     // guaranteed-dead shuffle traffic that re-melts the very reducer
     // the split exists to relieve (measured at the melt bench: the
@@ -378,49 +348,42 @@ object Skew {
     // partition — via its dead rebase-level key — to match nothing;
     // that partition's probe/sort was the split leg's max task, in
     // every round since the mechanism shipped). Suppression predicate
-    // per (base level lv, parent p): drop the key when the row lies in
-    // p (the gate test) and lv >= p.level and lv != p's effective
-    // child level. Applied ONLY for parents no other original cover
-    // cell overlaps: an overlapping cell (e.g. a coarser cell of
-    // another cover row, rebase-expanded onto lv) could legitimately
-    // match rows inside p, and suppression would lose the pair. The
-    // overlap check runs on the driver over the small distinct-cell list.
-    val suppressByLevel: Map[Int, Seq[SplitParent]] = splitRes match {
+    // per parent p, on the key's OWN level: drop the key when the row
+    // lies in p (the gate test), the key level is >= p.level and none
+    // of p's children is keyed at it. Applied ONLY for parents no other
+    // original cover cell overlaps: an overlapping cell (e.g. a coarser
+    // cell of another cover row, laddered onto the key's level) could
+    // legitimately match rows inside p, and suppression would lose the
+    // pair. The overlap check runs on the driver over the small
+    // distinct-cell list.
+    val suppressed: Seq[SplitParent] = splitRes match {
       case Some(sr) if sr.skipReason.isEmpty =>
         val all = sr.allCells
-        val safe = sr.parents.filter { p =>
+        sr.parents.filter { p =>
           val lo = Sid.intervalLo(p.cell); val hi = Sid.intervalHi(p.cell)
-          !all.exists(c => c != p.cell &&
-            Sid.intervalLo(c) < hi && lo < Sid.intervalHi(c))
+          !all.exists(c => c != p.cell && Sid.intervalLo(c) < hi && lo < Sid.intervalHi(c)) &&
+            baseLevels.exists(lv => lv >= p.level && !served(p).contains(lv))
         }
-        baseLevels.toSeq.map { lv =>
-          lv -> safe.filter { p =>
-            // uniform split depth => one child level per parent
-            val ecl = p.childLevels.map(cl => if (rebased && cl <= target) target else cl)
-            lv >= p.level && !ecl.contains(lv)
-          }
-        }.filter(_._2.nonEmpty).toMap
-      case _ => Map.empty
+      case _ => Seq.empty
     }
+    def live(sidCol: Column, key: Column): Column =
+      if (suppressed.isEmpty) key
+      else when(suppressed.map { p =>
+        !(stareClearTo(sidCol, p.level) === p.cell && stareLevel(key) >= p.level &&
+          !stareLevel(key).isin(served(p): _*))
+      }.reduce(_ && _), key)
     def keyExprsFor(sidCol: Column): Seq[Column] = {
-      val base = baseLevels.toSeq.map { lv =>
-        val k = stareClearTo(sidCol, lv)
-        var cond = stareLevel(sidCol) >= lv
-        suppressByLevel.getOrElse(lv, Seq.empty).foreach { p =>
-          cond = cond && !(stareClearTo(sidCol, p.level) === p.cell)
-        }
-        when(cond, k)
-      }
+      val base =
+        if (laddered) Seq(ladder.key(sidCol))
+        else keptLevels.toSeq.map(lv => when(stareLevel(sidCol) >= lv, stareClearTo(sidCol, lv)))
       val gated = parents.flatMap { p =>
-        p.childLevels
-          .filter(lv => (!rebased || lv > target) && !baseSet.contains(lv))
-          .map { lv =>
-            when(stareLevel(sidCol) >= lv &&
-              stareClearTo(sidCol, p.level) === p.cell,
-              stareClearTo(sidCol, lv))
-          }
+        gatedLevels(p).map { lv =>
+          when(stareLevel(sidCol) >= lv &&
+            stareClearTo(sidCol, p.level) === p.cell,
+            stareClearTo(sidCol, lv))
+        }
       }
-      base ++ gated
+      base.map(live(sidCol, _)) ++ gated
     }
     def candidateKeys(sidCol: Column): Column =
       explode(filter(array(keyExprsFor(sidCol): _*), c => c.isNotNull))
@@ -456,16 +419,15 @@ object Skew {
         // rows at the bench, its single largest cost). An inner join may
         // explode each row to all its candidate keys: a non-matching key
         // simply drops out. A left join needs exactly one candidate key
-        // per row (the post-rebase common case: one uniform base level,
-        // no gated split levels, and — provably, see the suppression
-        // construction — no suppression predicates either): with N keys
+        // per row (the ladder key, with no gated split levels; the
+        // suppression construction adds no predicate then): with N keys
         // a row would left-join into one spurious all-null row per
         // non-matching key, while with one key a non-match is THE
         // unmatched row and a match has exact multiplicity (cells within
         // a cover row are disjoint, so one key matches at most one cell
         // per right row). The split rewrite stays confined to the key
         // derivation: rightKeyedFinal carries (rid, key) from the
-        // (possibly split/rebased) cells, the row columns come from the
+        // (possibly split/laddered) cells, the row columns come from the
         // ORIGINAL rightRows.
         StareJoin.withContract(left, leftSid, rightRows, "key_right") { (l, lSid, r, _) =>
           val keyedL = l.withColumn("__lk",
@@ -489,7 +451,7 @@ object Skew {
               .drop("__rid")
             // It has keyedRightRows rows, each carrying the whole right
             // payload: a few rows with giant covers are small as rows but
-            // huge once keyed. Saturating, like rebaseCostTo.
+            // huge once keyed. Saturating, like Ladder.size.
             val estRightFullBytes =
               if (keyedRightRows > Long.MaxValue / rowBytesEst) Long.MaxValue
               else keyedRightRows * rowBytesEst

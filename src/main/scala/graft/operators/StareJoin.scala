@@ -20,13 +20,15 @@ import graft.functions.StareFunctions._
   *
   *     sid_a ⊇ sid_b  ⟺  clearTo(b, level(a)) == normalize(a)
   *
-  * Point-in-cover joins (`pointJoin`) collect the small cover side,
-  * expand every cover cell to the finest cover level and broadcast that
-  * full-row dictionary: each point derives ONE key and the join is a
-  * single broadcast hash probe. Any input the dictionary cannot serve
-  * (too many expanded cells or bytes, a left side coarser than the
-  * finest cover level, too many cover rows to collect) goes to
-  * `Skew.shuffleJoin`, the keyed equi-join that serves every input.
+  * Point-in-cover joins key every left row ONCE, by one rule both
+  * operators share ([[Ladder]]): the row's ancestor at the finest cover
+  * level or its own level, whichever is coarser, against every cover
+  * cell replicated to each level from its own to the finest. `pointJoin`
+  * collects the small cover side and broadcasts that full-row
+  * dictionary, so the join is a single broadcast hash probe. Any input
+  * the dictionary cannot serve (too many rungs or bytes, too many cover
+  * rows to collect) goes to `Skew.shuffleJoin`, the keyed equi-join
+  * that serves every input.
   * Cover-vs-cover joins (`join`) explode both sides into ancestor keys
   * per level, in both containment directions, and deduplicate pairs
   * before row assembly.
@@ -71,10 +73,10 @@ object StareJoin {
   }
 
   private[graft] object Budgets {
-    /** expanded (row, cell) keys of a uniform-level dictionary: ~64 MB
+    /** rungs of pointJoin's ladder dictionary, summed over rows: ~64 MB
       * as bare (rid, key) pairs */
     final val DictKeys = 4L << 20
-    /** a dictionary carrying full right rows: expanded keys x row width */
+    /** a dictionary carrying full right rows: rungs x row width */
     final val FullRowDictBytes = 256L << 20
     /** cover rows pointJoin collects to the driver */
     final val CollectBytes = 512L << 20
@@ -82,7 +84,7 @@ object StareJoin {
     final val ProbeRows = 1000
     /** rows shuffleJoin samples for the right row width */
     final val RowWidthProbeRows = 4096
-    /** keyed right cells the shuffle path's uniform-level rebase may add */
+    /** rungs of the shuffle path's ladder, summed over rows */
     final val RebaseKeys = 16L << 20
     /** both collected sides of a driver-local cover x cover join */
     final val LocalJoinBytes = 128L << 20
@@ -93,13 +95,17 @@ object StareJoin {
     final val ReduceRowsPerSec = 2e6
     final val SplitOverheadSec = 4.0
 
+    /** A malformed graft conf value is an error, not the default: a typo
+      * would otherwise silently turn a forced path back into the default. */
     def apply(spark: SparkSession): Budgets = {
       val sql = org.apache.spark.sql.graft.shim.sqlConf(spark)
-      def graftConf(key: String) = spark.conf.getOption(key).map(_.trim)
+      def graftConf[T](key: String, default: T)(parse: String => Option[T]): T =
+        spark.conf.getOption(key).fold(default) { v =>
+          parse(v.trim).getOrElse(throw new IllegalArgumentException(s"$key=$v is not a number"))
+        }
       Budgets(sql.autoBroadcastJoinThreshold, sql.defaultNumShufflePartitions,
-        graftConf("spark.graft.join.shjMaxBuildBytesPerPartition").flatMap(_.toLongOption)
-          .getOrElse(64L << 20),
-        graftConf("spark.graft.join.localCoverCap").flatMap(_.toIntOption).getOrElse(1024))
+        graftConf("spark.graft.join.shjMaxBuildBytesPerPartition", 64L << 20)(_.toLongOption),
+        graftConf("spark.graft.join.localCoverCap", 1024)(_.toIntOption))
     }
   }
 
@@ -109,23 +115,55 @@ object StareJoin {
   private[operators] def coverCells(cover: Column): Column =
     stareCompress(coalesce(cover, lit(Array.emptyLongArray)))
 
-  /** Exact minimum sid level of a frame (one narrow aggregation job);
-    * Sid.MaxLevel for an empty frame, which no level bound constrains. */
-  private[operators] def minSidLevel(df: DataFrame, sid: String): Int = {
-    val r = df.agg(min(stareLevel(col(sid)))).collect()(0)
-    if (r.isNullAt(0)) Sid.MaxLevel else r.getLong(0).toInt
+  /** The one key rule of every point-in-cover join (`Sid.ladder`): a
+    * left row keys at its ancestor at min(level(sid), `to`), `to` being
+    * the finest cover level, and each cover cell coarser than `to` is
+    * keyed as its rungs, its trixels at every level from
+    * max(level(cell), `from`) to `to`. A row at a level >= `from` lies in
+    * a cell iff its key is one of the cell's rungs; the cells of one
+    * compressed cover are disjoint, so the row matches at most one rung
+    * per right row. So each left row has exactly ONE key, pair
+    * multiplicity is exact, and a left join's unmatched row is simply
+    * the row whose key found nothing. `from` is the minimum left level
+    * when one is known, else the coarsest cover level: a row coarser
+    * than `from` gets no key, and under the containment contract it
+    * matches nothing anyway. The rungs add at most 1/3 to a uniform
+    * expansion to `to`; with a known minimum at or above `to` there is
+    * one rung per cell, the uniform expansion itself. */
+  private[operators] final case class Ladder(from: Int, to: Int, declared: Boolean) {
+    /** The left key. With a DECLARED minimum level at or above `to` the
+      * per-row guard drops at plan time and the key is marked
+      * KnownNotNull (the caller's declared level also implies non-null
+      * sids): otherwise the planner infers an IsNotNull(key) filter that
+      * evaluates the key, i.e. a second encode per row when the sid is
+      * an unevaluated encode. */
+    def key(sid: Column): Column =
+      if (declared && from >= to) knownNotNull(stareClearTo(sid, to))
+      else {
+        val atTo = when(stareLevel(sid) >= to, stareClearTo(sid, to))
+        if (from >= to) atTo else atTo.when(stareLevel(sid) >= from, stareClearToOwn(sid))
+      }
+
+    /** The rungs of an array of non-nested cells. */
+    def rungs(cells: Column): Column = ladderUdf(cells, lit(from), lit(to))
+
+    /** Rungs of a (level -> cell count) histogram; saturates at
+      * Long.MaxValue instead of overflowing. */
+    def size(cellsByLevel: Iterable[(Int, Long)]): Long =
+      cellsByLevel.foldLeft(0L) { case (acc, (l, n)) =>
+        val r = Sid.ladderRungs(l, from, to)
+        if (n > (Long.MaxValue - acc) / r) Long.MaxValue else acc + n * r
+      }
   }
 
-  /** The one key of a left sid against a uniform-level dictionary: its
-    * ancestor at `level`, null for a sid coarser than that. With a known
-    * minimum left level at or above `level` the guard drops at plan
-    * time, and the key is marked KnownNotNull (the caller's declared
-    * level also implies non-null sids): otherwise the planner infers an
-    * IsNotNull(key) filter that evaluates the key, i.e. a second encode
-    * per row when the sid is an unevaluated encode. */
-  private def uniformKey(sid: Column, level: Int, knownMinLevel: Option[Int]): Column =
-    if (knownMinLevel.exists(_ >= level)) knownNotNull(stareClearTo(sid, level))
-    else when(stareLevel(sid) >= level, stareClearTo(sid, level))
+  private[operators] object Ladder {
+    /** The ladder up to `to` over cells at `levels`, from `minLeftLevel`
+      * when one is known, else from the coarsest of `levels`. */
+    def apply(levels: Iterable[Int], to: Int, minLeftLevel: Option[Int], declared: Boolean): Ladder =
+      Ladder(math.min(minLeftLevel.getOrElse(levels.minOption.getOrElse(to)), to), to, declared)
+  }
+
+  private val ladderUdf = udf((cells: Seq[Long], from: Int, to: Int) => Sid.ladder(cells.toArray, from, to))
 
   /** The output contract every join shares (tools/stare_join.py,
     * tests/test_join.py:77-81): columns both sides carry get `_left` /
@@ -162,31 +200,30 @@ object StareJoin {
     * fine level), right has an array cover column. Returns the joined
     * frame with all left columns, `key_right`, and right columns
     * (clashes suffixed). This is the 100TB-shape join: the cover side
-    * is collected, every cover cell is expanded to the finest cover
-    * level, and that full-row dictionary is broadcast, so each point
-    * derives ONE key and the big side is probed once, never exploded
-    * or shuffled. Inputs the dictionary cannot serve go to
+    * is collected, every cover cell is expanded to its [[Ladder]] rungs,
+    * and that full-row dictionary is broadcast, so each point derives
+    * ONE key and the big side is probed once, never exploded or
+    * shuffled. Inputs the dictionary cannot serve go to
     * `Skew.shuffleJoin`, which has the same output contract (its
     * `key_right` is a packed row id instead of 0..n-1): a cover side
-    * over the collect caps, a dictionary over its key or byte budget,
-    * and a multi-level cover with a left side coarser than the finest
-    * cover level.
+    * over the collect caps, and a dictionary over its key or byte
+    * budget. Left sids of any level mix take the dictionary.
     *
-    * PRECONDITION: left sids must be at least as fine as the cover
-    * cells they should match — only the cover-contains-point direction
-    * is implemented. A left sid COARSER than a cover cell never matches
-    * it (use join() for cover-vs-cover semantics). Fine-level point
-    * tables (level 26/27) vs polygon covers (level <= ~12) always
-    * satisfy this.
+    * Semantics: only the cover-contains-point direction is implemented.
+    * A left sid COARSER than a cover cell never matches it (use join()
+    * for cover-vs-cover semantics); a left sid at or finer than a cell
+    * matches it when the cell contains it, whatever the other cells'
+    * levels.
     *
     * `knownMinLeftLevel`: callers that KNOW their minimum left sid
-    * level (e.g. a table indexed at level 26) pass it so the per-row
+    * level (e.g. a table indexed at level 26) pass it. At or above the
+    * finest cover level the ladder has one rung per cell and the per-row
     * level guard constant-folds away. This matters when the sid column
     * is itself an unevaluated encode expression: projection collapse
     * otherwise re-inlines the encode into the guard and the pushed
     * null-check, evaluating the kernel up to 3x per row (measured ~2x
-    * headline join throughput). Without it, a multi-level cover costs
-    * one narrow aggregation job over the left sid column. */
+    * headline join throughput). Without it the rungs start at the
+    * coarsest cover level; no job measures the left side. */
   def pointJoin(left: DataFrame, leftSid: String, right: DataFrame, rightSids: String,
                 how: String = "left", knownMinLeftLevel: Option[Int] = None,
                 maxBroadcastRows: Int = 1 << 20): DataFrame = {
@@ -234,56 +271,24 @@ object StareJoin {
       val s = r.getSeq[Long](sidsIdx)
       if (s == null) Array.emptyLongArray else Sid.compress(s.toArray)
     }
-    val levels = perRowCells.iterator.flatMap(_.iterator).map(Sid.level).toSet.toArray.sorted
-
-    // Uniform-level dictionary: expanding every cover cell to the finest
-    // cover level lets each point probe with exactly ONE cleared key —
-    // no explode, 1 probe/row instead of |levels| probes/row. Expansion
-    // is per right row over disjoint cells, so pair multiplicity is
-    // unchanged. For how='left' a point matching nothing keeps one row
-    // with all-null right columns — exactly stare_join's left semantics,
-    // since there is a single key per row. All-empty covers expand to
-    // an empty dictionary (inner: no rows; left: all null-padded).
-    val maxLevel = levels.lastOption.getOrElse(0)
-    // Expansion cost summed over ROWS, not distinct keys: the dictionary
-    // explodes the cover per right row, so duplicate covers multiply the
-    // broadcast — a distinct-key budget admitted 500k rows sharing one
-    // cell into a plan that would expand each of them. Early exit once
-    // over budget (also prevents Long overflow on extreme level spreads).
-    val expansionCost: Long = {
-      var cost = 0L
-      var i = 0
-      while (i < perRowCells.length && cost <= Budgets.DictKeys) {
-        val cells = perRowCells(i)
-        var j = 0
-        while (j < cells.length && cost <= Budgets.DictKeys) {
-          cost += 1L << (2 * (maxLevel - Sid.level(cells(j)))); j += 1
-        }
-        i += 1
-      }
-      cost
-    }
-    // The dictionary probes every left row at exactly ONE level, so it
-    // is only SOUND when every left sid is at least as fine as the
-    // finest cover cell: a left row with level in [cellLevel, maxLevel)
-    // is contained by a coarse cell but would derive no key at maxLevel
-    // and silently lose that match. A single-level cover needs no check
-    // — a row coarser than the only level is matchless under the
-    // containment contract and its null key is exact. Otherwise the
-    // declared min left level decides, or — when the caller declared
-    // nothing and the key budget fits — one narrow column-pruned agg
-    // job over the left sid column does; that measurement is handed on
-    // to shuffleJoin, which would otherwise aggregate the left again.
-    val minLeftLevel =
-      if (expansionCost <= Budgets.DictKeys && levels.length > 1)
-        knownMinLeftLevel.orElse(Some(minSidLevel(left, leftSid)))
-      else knownMinLeftLevel
-    val dictSafe = expansionCost <= Budgets.DictKeys &&
-      (levels.length <= 1 || minLeftLevel.exists(_ >= maxLevel))
-    // A BYTE cap on expansionCost x measured-row-width keeps a fat cover
-    // side (wide payload columns, big sid arrays) duplicated per
-    // expanded cell from building a multi-GB broadcast.
-    if (dictSafe && expansionCost * approxRowBytes(collected) <= Budgets.FullRowDictBytes) {
+    // Ladder dictionary: every cover cell as its rungs lets each point
+    // probe with exactly ONE key, whatever the level mix on either side.
+    // For how='left' a point matching nothing keeps one row with
+    // all-null right columns — exactly stare_join's left semantics. All-
+    // empty covers expand to an empty dictionary (inner: no rows; left:
+    // all null-padded). Its size is summed over ROWS, not distinct keys:
+    // the dictionary explodes the cover per right row, so duplicate
+    // covers multiply the broadcast (a distinct-key budget admitted 500k
+    // rows sharing one cell into a plan that would expand each of them).
+    val cellsByLevel = perRowCells.iterator.flatMap(_.iterator).map(Sid.level).toSeq
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+    val ladder = Ladder(cellsByLevel.keys, cellsByLevel.keys.maxOption.getOrElse(0),
+      knownMinLeftLevel, declared = knownMinLeftLevel.isDefined)
+    val dictKeys = ladder.size(cellsByLevel)
+    // A BYTE cap on dictKeys x measured-row-width keeps a fat cover side
+    // (wide payload columns, big sid arrays) duplicated per rung from
+    // building a multi-GB broadcast.
+    if (dictKeys <= Budgets.DictKeys && dictKeys * approxRowBytes(collected) <= Budgets.FullRowDictBytes) {
       // The cover side fits in a broadcast, so assign row ids
       // on the driver: deterministic across every reuse of the frame (no
       // monotonically_increasing_id re-evaluation hazard) and no lingering
@@ -302,8 +307,8 @@ object StareJoin {
       // and re-joining in assemble() cost a second full broadcast-probe
       // over every left row.
       withContract(left, leftSid, rightRows, rightSids) { (l, lSid, r, rSids) =>
-        l.withColumn(LKey, uniformKey(col(lSid), maxLevel, knownMinLeftLevel))
-          .join(broadcast(r.withColumn(RKey, explode(stareExpand(coverCells(col(rSids)), maxLevel)))),
+        l.withColumn(LKey, ladder.key(col(lSid)))
+          .join(broadcast(r.withColumn(RKey, explode(ladder.rungs(coverCells(col(rSids)))))),
             mixKey(col(LKey)) === mixKey(col(RKey)), how)
           .drop(LKey, RKey)
       }
@@ -312,7 +317,7 @@ object StareJoin {
       // evaluate the right plan again
       val local = spark.createDataFrame(java.util.Arrays.asList(collected: _*), right.schema)
       Skew.shuffleJoin(left, leftSid, local, rightSids, splitHot = None,
-        how = how, knownMinLeftLevel = minLeftLevel)
+        how = how, knownMinLeftLevel = knownMinLeftLevel)
     }
   }
 

@@ -157,7 +157,9 @@ object TextOps {
   def minhashSignature(text: Column, k: Column, perms: Column): Column =
     minhashUdf(text, k, perms)
 
-  private val minhashUdf = udf((text: String, k: Int, perms: Int) => {
+  /** The one MinHash kernel: FNV-1a over each k-word shingle, then one
+    * xorshift-style seed mix per permutation, keeping the minimum. */
+  private def minhash(text: String, k: Int, perms: Int): Array[Long] = {
     val words = if (text == null) Array.empty[String] else text.toLowerCase.split("\\s+").filter(_.nonEmpty)
     val sig = Array.fill(perms)(Long.MaxValue)
     if (words.length >= k) {
@@ -174,7 +176,6 @@ object TextOps {
         }
         var p = 0
         while (p < perms) {
-          // xorshift-style seed mix per permutation
           var m = h ^ (0x9E3779B97F4A7C15L * (p + 1))
           m ^= (m >>> 33); m *= 0xFF51AFD7ED558CCDL; m ^= (m >>> 33)
           if (m < sig(p)) sig(p) = m
@@ -184,7 +185,9 @@ object TextOps {
       }
     }
     sig
-  })
+  }
+
+  private val minhashUdf = udf((text: String, k: Int, perms: Int) => minhash(text, k, perms))
 
   /** Banded minhash signature: one UDF pass emits the per-band hash
     * directly (FNV-1a fold over each band's minima) instead of a
@@ -196,30 +199,7 @@ object TextOps {
     minhashBandsUdf(text, lit(k), lit(perms), lit(bands))
 
   private val minhashBandsUdf = udf((text: String, k: Int, perms: Int, bands: Int) => {
-    val words = if (text == null) Array.empty[String] else text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-    val sig = Array.fill(perms)(Long.MaxValue)
-    if (words.length >= k) {
-      var i = 0
-      while (i + k <= words.length) {
-        var h = 1469598103934665603L // FNV-1a over the k-shingle
-        var j = i
-        while (j < i + k) {
-          val w = words(j)
-          var c = 0
-          while (c < w.length) { h = (h ^ w.charAt(c).toLong) * 1099511628211L; c += 1 }
-          h = (h ^ ' '.toLong) * 1099511628211L
-          j += 1
-        }
-        var p = 0
-        while (p < perms) {
-          var m = h ^ (0x9E3779B97F4A7C15L * (p + 1))
-          m ^= (m >>> 33); m *= 0xFF51AFD7ED558CCDL; m ^= (m >>> 33)
-          if (m < sig(p)) sig(p) = m
-          p += 1
-        }
-        i += 1
-      }
-    }
+    val sig = minhash(text, k, perms)
     val rows = perms / bands
     Array.tabulate(bands) { b =>
       var h = 1469598103934665603L ^ (b * 0x9E3779B97F4A7C15L)

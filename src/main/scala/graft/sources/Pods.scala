@@ -47,7 +47,8 @@ import graft.functions.StareFunctions._
   * directories, a streaming-sink store's from its `_spark_metadata`
   * commit log (orphans of a failed micro-batch are never read). No
   * operation plans a Spark listing job, however many files or
-  * directories it touches.
+  * directories it touches, and building a read starts no job at all:
+  * the log and the schema's footer are read on the driver.
   *
   * Two local-FS-only optimisations: partitioned writes go through
   * [[ForkFreeLocalFileSystem]] (no `chmod` process per created file or
@@ -383,7 +384,8 @@ object Pods {
     * store root) with length and mtime — the one answer to "which files
     * does this operation read". On a streaming-sink store they are the
     * files its `_spark_metadata` commit log committed (orphans of a
-    * failed micro-batch are excluded), each stat-ed; otherwise a java.nio
+    * failed micro-batch are excluded), read on the driver and each
+    * stat-ed; otherwise a java.nio
     * walk of only the named directories that, like Spark's own listing,
     * skips hidden paths (a `_temporary` committer directory, `.crc`
     * files). A named directory or committed file that does not exist
@@ -397,10 +399,8 @@ object Pods {
       DataFile(root.relativize(f).toString, a.size(), a.lastModifiedTime().toMillis)
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFile]
     if (Files.exists(root.resolve("_spark_metadata"))) {
-      // inputFiles are UNENCODED URI strings ("file:/a b/pod=1/x.parquet"),
-      // which Hadoop's Path parses and java.net.URI rejects
-      spark.read.parquet(path).inputFiles.foreach { u =>
-        val f = Paths.get(new org.apache.hadoop.fs.Path(u).toUri.getPath).toAbsolutePath
+      org.apache.spark.sql.graft.shim.sinkLogFiles(spark, path).foreach { p =>
+        val f = Paths.get(p.toUri.getPath).toAbsolutePath
         val rel = root.relativize(f).toString
         if (rel.startsWith("pod=") && under.exists(d => d.isEmpty || rel.startsWith(s"$d/")))
           out += file(f, Files.readAttributes(f, classOf[BasicFileAttributes]))

@@ -117,18 +117,26 @@ object shim {
 
   /** A parquet frame over the directory `root` whose data files are
     * already known: `files` are (path relative to root, length, mtime).
-    * Equivalent to `spark.read.parquet(root)` (same partition inference,
-    * same schema inference from a footer), but the file index is seeded
-    * from the given listing, so it lists nothing itself. A root with more
-    * subdirectories than parallelPartitionDiscovery.threshold would
-    * otherwise plan a Spark listing job with one task per subdirectory.
-    * The listing is only correct if the caller took it after the last
-    * write to the directory. */
+    * Equivalent to `spark.read.parquet(root)` over data files (same
+    * partition inference, same schema inference from a footer), but the
+    * file index is seeded from the given listing, so it lists nothing
+    * itself: a root with more subdirectories than
+    * parallelPartitionDiscovery.threshold would otherwise plan a Spark
+    * listing job with one task per subdirectory. The schema comes from
+    * the footer of the file Spark's non-merging inference picks (the
+    * first by path), read on the driver with the session's parquet
+    * conf: Spark's inference reads that one footer in a one-task job.
+    * So building the frame starts no job. The listing is only correct
+    * if the caller took it after the last write to the directory. */
   def parquetFromListing(spark: org.apache.spark.sql.SparkSession, root: String,
                          files: Seq[(String, Long, Long)]): DataFrame = {
     import org.apache.hadoop.fs.{FileStatus, Path}
     import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+      ParquetToSparkSchemaConverter}
     val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val hadoopConf = s.sessionState.newHadoopConf()
     val fs = new Path(root).getFileSystem(hadoopConf)
@@ -151,11 +159,24 @@ object shim {
     }
     cache.putLeafFiles(rootPath, statuses)
     val index = new InMemoryFileIndex(s, Seq(rootPath), Map.empty, None, cache)
-    val format = new ParquetFileFormat
-    val dataSchema = format.inferSchema(s, Map.empty, index.allFiles())
+    val first = statuses.minByOption(_.getPath.toString)
       .getOrElse(throw new IllegalArgumentException(s"no parquet files under $root"))
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(first, hadoopConf),
+      ParquetMetadataConverter.NO_FILTER)
+    val dataSchema = ParquetFileFormat.readSchemaFromFooter(new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
     s.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      dataSchema.asNullable, None, format, Map.empty)(s))
+      dataSchema.asNullable, None, new ParquetFileFormat, Map.empty)(s))
+  }
+
+  /** The files a streaming file sink's `_spark_metadata` log under
+    * `root` committed (what `spark.read.parquet(root)` reads there),
+    * read on the driver: a read would also infer the schema in a job. */
+  def sinkLogFiles(spark: org.apache.spark.sql.SparkSession, root: String): Seq[org.apache.hadoop.fs.Path] = {
+    import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
+    val log = new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark,
+      new org.apache.hadoop.fs.Path(root, "_spark_metadata").toString, None)
+    log.allFiles().toSeq.map(_.toFileStatus).filterNot(_.isDirectory).map(_.getPath)
   }
 
   /** Orderable per Catalyst's ordering rules (MapType is not). */

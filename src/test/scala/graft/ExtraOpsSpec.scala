@@ -335,6 +335,23 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a malformed join budget conf is rejected with its key and value, not read as the default") {
+    import spark.implicits._
+    val covers = Seq(("a", Seq(Htm.latLonToSid(10.0, 10.0, 6)))).toDF("name", "sids")
+    for (key <- Seq("spark.graft.join.shjMaxBuildBytesPerPartition", "spark.graft.join.localCoverCap")) {
+      spark.conf.set(key, "64mb")
+      try {
+        val e = intercept[IllegalArgumentException](graft.operators.StareJoin.Budgets(spark))
+        assert(e.getMessage.contains(key) && e.getMessage.contains("64mb"), e.getMessage)
+        // the joins that read the budgets fail the same way
+        intercept[IllegalArgumentException](graft.operators.StareJoin.join(covers, "sids", covers, "sids"))
+      } finally spark.conf.unset(key)
+    }
+    spark.conf.set("spark.graft.join.localCoverCap", " 7 ")
+    try assert(graft.operators.StareJoin.Budgets(spark).localCoverCap === 7)
+    finally spark.conf.unset("spark.graft.join.localCoverCap")
+  }
+
   test("an invalid how is rejected by pointJoin, shuffleJoin and join before any Spark job") {
     val shim = org.apache.spark.sql.graft.shim
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -518,9 +535,8 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       def pairsOf(df: org.apache.spark.sql.DataFrame) =
         df.select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
       val viaShuffle = pairsOf(graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids"))
-      // pointJoin measures the (actually coarse) undeclared left min
-      // level, finds it below the finest cover level and hands it to
-      // shuffleJoin
+      // pointJoin's ladder dictionary starts its rungs at the coarsest
+      // cover level, so the level-5 row keys at its own level
       val viaBroadcast = pairsOf(
         graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = "inner"))
       assert(viaShuffle.contains((5L, "r3")), "coarse left row lost by the rebase")
@@ -609,6 +625,27 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(local.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
       assert(joined.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
         expected)
+      // an undeclared mixed-level left side takes the ladder dictionary
+      // too: no job measures its levels, and the plan is one join
+      val mixed = Seq((1L, Htm.latLonToSid(10.0, 10.0, 26)), (2L, Htm.latLonToSid(48.0, 2.0, 7)),
+        (3L, Htm.latLonToSid(10.0, 10.0, 5)), (4L, Htm.latLonToSid(-60.0, 100.0, 2))).toDF("id", "sid")
+      shim.drainListenerBus(spark)
+      jobs.set(0)
+      val mixedJoined = graft.operators.StareJoin.pointJoin(mixed, "sid", local, "sids", how = "left")
+      shim.drainListenerBus(spark)
+      assert(jobs.get() === 0, "an undeclared left side needs no level job")
+      assert(mixedJoined.queryExecution.sparkPlan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.length === 1)
+      val covers = Map("a" -> coverA, "b" -> coverB)
+      val mixedExpected = mixed.collect().toSeq.flatMap { r =>
+        val sid = r.getLong(1)
+        val hits = covers.toSeq.collect { case (n, c) if Sid.compress(c.toArray).exists(cell =>
+          Sid.level(cell) <= Sid.level(sid) && Sid.intersects(cell, sid)) => n }
+        if (hits.isEmpty) Seq((r.getLong(0), null: String)) else hits.map((r.getLong(0), _))
+      }
+      assert(mixedJoined.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+        .sortBy(_.toString) === mixedExpected.sortBy(_.toString))
+      assert(mixedExpected.contains((2L, "b")), "the level-7 point lies in a coarser cell of cover b")
       // a cover frame computed by Spark still takes the persisted guard
       val computed = spark.range(2).select(
         when(col("id") === 0, lit("a")).otherwise(lit("b")).as("name"),
@@ -623,7 +660,7 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.sparkContext.removeSparkListener(listener)
     // the headline plan (SparkEntry.coversDf, level-26 points): exactly
     // one join, a broadcast hash join whose build side carries the cover
-    // columns and the stareExpand explode; the point side is not exploded
+    // columns and the ladder explode; the point side is not exploded
     import org.apache.spark.sql.catalyst.optimizer.BuildRight
     import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
@@ -644,7 +681,7 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         case g: GenerateExec if g.generatorOutput.map(_.name) == Seq("__stare_rkey") &&
           g.generator.references.exists(_.name == "sids") => g
       }
-      assert(expands.length === 1, s"how=$how: no stareExpand explode on the build side\n$plan")
+      assert(expands.length === 1, s"how=$how: no ladder explode on the build side\n$plan")
       assert(stream.collect { case g: GenerateExec => g }.isEmpty, s"how=$how\n$plan")
     }
   }

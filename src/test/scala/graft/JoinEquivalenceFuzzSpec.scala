@@ -8,8 +8,8 @@ import graft.core.Sid
 import graft.operators.{Skew, StareJoin}
 
 /** Three-way join-equivalence fuzz (r4 verdict item 1): the join family's
-  * safety conditions — dictionary soundness, rebase caps, split gates,
-  * gated key derivation — are individually regression-tested; this suite
+  * safety conditions — the ladder key rule, split gates, gated key
+  * derivation — are individually regression-tested; this suite
   * fuzzes them JOINTLY over random mixed-level covers × random point/cover
   * level mixes × how ∈ {inner, left}, asserting
   *
@@ -131,6 +131,20 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.queryExecution.sparkPlan.collect {
       case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.length == 1
 
+  /** shuffleJoin took the pair/join-back: the only shape that tags the
+    * left rows with a stable id. */
+  private def joinBackRoute(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(_.output.exists(_.name == "__stare_lid"))
+
+  /** Rungs of the ladder both operators key an undeclared left side
+    * against: every compressed cover cell, from the coarsest to the
+    * finest cover level. */
+  private def ladderRungs(covers: Seq[(String, Seq[Long])]): Long = {
+    val cells = covers.flatMap(c => Sid.compress(c._2.toArray))
+    val levels = cells.map(Sid.level)
+    cells.map(c => Sid.ladderRungs(Sid.level(c), levels.min, levels.max)).sum
+  }
+
   private def observedPairs(df: DataFrame): Seq[(Long, String)] =
     df.select(col("lid"), col("rname")).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) "__none" else r.getString(1)))
@@ -141,7 +155,7 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("pointJoin ≡ shuffleJoin ≡ brute contains; join() ≡ brute intersects (15 random trials × inner/left)") {
     import spark.implicits._
     val r = new scala.util.Random(20260817)
-    var delegated = 0
+    var dictionaries = 0
     (1 to 15).foreach { trial =>
       val covers = randomCovers(r)
       val left = randomLeft(r, covers, 8 + r.nextInt(25))
@@ -159,23 +173,30 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         val expContains = expectedPairs(left, covers, how, coverContains)
         val pointDf = StareJoin.pointJoin(leftDf, "sid", rightDf, "sids", how = how)
         assert(observedPairs(pointDf) === expContains, s"pointJoin vs brute — $clue")
-        // a left side coarser than the finest level of a multi-level
-        // cover is delegated to shuffleJoin; any other takes the dictionary
-        val coverLevels = covers.flatMap(c => Sid.compress(c._2.toArray)).map(Sid.level).distinct
-        val dictionary = coverLevels.size <= 1 || left.map(p => Sid.level(p._2)).min >= coverLevels.max
+        // the dictionary serves every left level mix: it is taken iff
+        // the ladder fits the budgets
+        val rungs = ladderRungs(covers)
+        val dictionary = rungs <= StareJoin.Budgets.DictKeys &&
+          rungs * StareJoin.approxRowBytes(rightDf.collect()) <= StareJoin.Budgets.FullRowDictBytes
         assert(dictionaryRoute(pointDf) === dictionary, s"pointJoin route — $clue")
-        if (!dictionary) delegated += 1
-        val shuffle = observedPairs(
-          Skew.shuffleJoin(leftDf, "sid", rightDf, "sids", splitHot = None, how = how))
-        assert(shuffle === expContains, s"shuffleJoin vs brute — $clue")
+        if (dictionary) dictionaries += 1
+        // without a split, a left shuffleJoin keys once and never plans
+        // the pair/join-back while the ladder fits RebaseKeys
+        val joinBack = how == "left" && rungs > StareJoin.Budgets.RebaseKeys
+        val shuffleDf = Skew.shuffleJoin(leftDf, "sid", rightDf, "sids", splitHot = None, how = how)
+        assert(joinBackRoute(shuffleDf) === joinBack, s"shuffleJoin route — $clue")
+        assert(observedPairs(shuffleDf) === expContains, s"shuffleJoin vs brute — $clue")
         // the shuffle shapes: broadcast off (shuffled-hash), then a
         // 1-byte build cap (sort-merge)
         val noBroadcast = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
         for (conf <- Seq(noBroadcast, noBroadcast :+ ("spark.graft.join.shjMaxBuildBytesPerPartition" -> "1"))) {
           conf.foreach { case (k, v) => spark.conf.set(k, v) }
-          val shuffled =
-            try observedPairs(Skew.shuffleJoin(leftDf, "sid", rightDf, "sids", splitHot = None, how = how))
-            finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+          val (shuffled, shuffledJoinBack) =
+            try {
+              val df = Skew.shuffleJoin(leftDf, "sid", rightDf, "sids", splitHot = None, how = how)
+              (observedPairs(df), joinBackRoute(df))
+            } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+          assert(shuffledJoinBack === joinBack, s"shuffleJoin ${conf.toMap} route — $clue")
           assert(shuffled === expContains, s"shuffleJoin ${conf.toMap} vs brute — $clue")
         }
 
@@ -204,8 +225,9 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(generalDist === expJoin, s"join() [distributed path] vs brute intersects — $clue")
       }
     }
-    // the mixed-level left side (levels 0-14) mostly misses the dictionary
-    assert(delegated >= 20, s"only $delegated of 30 pointJoin runs were delegated")
+    // the mixed-level left sides (levels 0-14) against these small covers
+    // all take the dictionary
+    assert(dictionaries === 30, s"only $dictionaries of 30 pointJoin runs took the dictionary")
   }
 
   test("pointJoin dictionary route ≡ brute contains for left sids at or finer than every cover cell (15 random trials × inner/left × declared level)") {
@@ -245,7 +267,7 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     // no broadcast: the splitter only engages when a per-key shuffle exists
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      (1 to 3).foreach { trial =>
+      (1 to 4).foreach { trial =>
         val hot = randomSid(r, 2 + r.nextInt(3)) // one hot cover cell
         val hotLevel = Sid.level(hot)
         // trial 3: an ANCESTOR cover cell overlapping the hot cell —
@@ -256,16 +278,23 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           if (trial == 3 && hotLevel > 0)
             Seq(("blanket", Seq((hot & Sid.clearMask(hotLevel - 1)) | (hotLevel - 1).toLong)))
           else Seq.empty
+        // trial 4: a level-9 kept cell, finer than every left sid
+        // (levels hotLevel+2..8), so the ladder's rungs start at the
+        // split's minimum left level and the split children are laddered
         val covers = Seq(
-          ("hot", Seq(hot, randomSid(r, 6))),
+          ("hot", Seq(hot, randomSid(r, if (trial == 4) 9 else 6))),
           ("cold", Seq(randomSid(r, 3), randomSid(r, 5)))) ++ blanket
         // 4000 points inside the hot cell at mixed fine levels + 1000
         // uniform: the 1% sample sees ~40 hot rows, estHot ~4000 ≫ the
         // 2× fair-share gate at 4 shuffle partitions
-        val left = ((0 until 4000).map { i =>
+        val left = if (trial < 4) ((0 until 4000).map { i =>
           (i.toLong, descendantOf(r, hot, math.min(27, hotLevel + 2 + r.nextInt(10))))
         } ++ (4000 until 5000).map { i =>
           (i.toLong, randomSid(r, 4 + r.nextInt(10)))
+        }) else ((0 until 4000).map { i =>
+          (i.toLong, descendantOf(r, hot, hotLevel + 2 + r.nextInt(3)))
+        } ++ (4000 until 5000).map { i =>
+          (i.toLong, randomSid(r, hotLevel + 2 + r.nextInt(7 - hotLevel)))
         })
         val leftDf = left.toDF("lid", "sid")
         val rightDf = covers.toDF("rname", "sids")
@@ -274,11 +303,17 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           maxRowsPerCell = 100, sampleFraction = 1.0, wallClockGate = false)
         assert(spec.skipReason.isEmpty && spec.parents.nonEmpty,
           s"engineered skew did not engage the splitter: ${spec.skipReason}")
+        if (trial == 4)
+          assert(spec.keptLevels.max > left.map(p => Sid.level(p._2)).max,
+            s"trial 4 left sids are not coarser than the finest kept level ${spec.keptLevels.toSeq}")
         Seq("inner", "left").foreach { how =>
           val exp = expectedPairs(left, covers, how, coverContains)
-          val split = observedPairs(Skew.shuffleJoin(leftDf, "sid", rightDf, "sids",
-            splitHot = Some(100L), how = how, wallClockGate = false))
-          assert(split === exp, s"split shuffleJoin vs brute — trial=$trial how=$how hot=$hot")
+          val splitDf = Skew.shuffleJoin(leftDf, "sid", rightDf, "sids",
+            splitHot = Some(100L), how = how, wallClockGate = false)
+          assert(observedPairs(splitDf) === exp, s"split shuffleJoin vs brute — trial=$trial how=$how hot=$hot")
+          // children no finer than the kept cells are laddered: no gated
+          // key, so a left join keys once
+          if (trial == 4) assert(!joinBackRoute(splitDf), s"trial 4 how=$how took the pair/join-back")
           val unsplit = observedPairs(Skew.shuffleJoin(leftDf, "sid", rightDf, "sids",
             splitHot = None, how = how))
           assert(unsplit === exp, s"unsplit shuffleJoin vs brute — trial=$trial how=$how hot=$hot")

@@ -313,4 +313,27 @@ class PodsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rec.listingStages.isEmpty, s"listing stages: ${rec.listingStages}")
     assert(df.schema === Pods.readAll(spark, wideStore).schema)
   }
+
+  test("building a pods read starts no Spark stage, on a batch store and on a streaming-sink store") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val sink = Files.createTempDirectory("pods_sink").toString
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
+    mem.addData(rows)
+    mem.toDF().toDF("doc_id", "sid", "ts_ms")
+      .withColumn("warc_ts", (col("ts_ms") / lit(1000.0)).cast("timestamp"))
+      .drop("ts_ms")
+      .withColumn("pod", starePod(col("sid"), PodLevel))
+      .writeStream.format("parquet").partitionBy("pod")
+      .option("checkpointLocation", Files.createTempDirectory("pods_sink_ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(sink).awaitTermination(60000)
+    assert(Files.exists(Paths.get(sink, "_spark_metadata")))
+    for (store <- Seq(wideStore, sink)) {
+      val (_, rec) = SparkJobProbe.record(spark)(Pods.read(spark, store, cover))
+      assert(rec.stages.isEmpty, s"$store: ${rec.stages}")
+      assertPrunedRead(store)
+    }
+  }
 }

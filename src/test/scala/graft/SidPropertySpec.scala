@@ -168,4 +168,39 @@ class SidPropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a sid's ladder key is one of the cover's rungs iff the compressed cover contains it") {
+    val r = rng
+    (1 to 200).foreach { _ =>
+      val cover = Sid.compress(Array.fill(1 + r.nextInt(6))(Htm.latLonToSid(
+        r.nextDouble() * 179.8 - 89.9, r.nextDouble() * 360.0 - 180.0, r.nextInt(10))))
+      val levels = cover.map(Sid.level)
+      val to = levels.max
+      def contains(sid: Long) = cover.exists(c => Sid.level(c) <= Sid.level(sid) && Sid.intersects(c, sid))
+      (1 to 20).foreach { _ =>
+        // a descendant or ancestor of a cover cell, or a random sid
+        val cell = cover(r.nextInt(cover.length))
+        val sid = r.nextInt(3) match {
+          case 0 =>
+            val k = Sid.level(cell) + r.nextInt(28 - Sid.level(cell))
+            ((Sid.intervalLo(cell) + (r.nextLong() & Long.MaxValue) % Sid.increment(Sid.level(cell))) &
+              Sid.clearMask(k)) | k
+          case 1 =>
+            val k = r.nextInt(Sid.level(cell) + 1)
+            (cell & Sid.clearMask(k)) | k
+          case _ => randSid(r)
+        }
+        // rungs from the coarsest cover level (nothing declared), or from
+        // any declared minimum at or below the sid's level
+        for (from <- Seq(levels.min, r.nextInt(Sid.level(sid) + 1))) {
+          val ladder = Sid.ladder(cover, from, to)
+          assert(ladder.toSet.contains(Sid.ladderKey(sid, to)) === contains(sid),
+            s"sid=${Sid.hex(sid)} from=$from cover=${cover.map(Sid.hex).toSeq}")
+          assert(ladder.distinct.length === ladder.length)
+          assert(ladder.length.toLong === levels.map(Sid.ladderRungs(_, from, to)).sum)
+          assert(ladder.length * 3L <= Sid.expandToLevel(cover, to).length * 4L)
+        }
+      }
+    }
+  }
 }
