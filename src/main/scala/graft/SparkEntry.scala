@@ -75,15 +75,19 @@ object SparkEntry {
     latOk && lonOk
   }
 
-  /** row matched to region R must satisfy R's exact box predicate. */
-  private def refineMatched: Column =
-    regions.map(r => col("region_name") === r.name && inRegion(r)).reduce(_ || _)
+  /** a row inside SOME region box: a lat/lon-only prune, so the
+    * optimizer pushes it below `indexed`'s exchange and rows outside
+    * every region are never shuffled. One box test over the boxes as an
+    * array literal, so its size does not grow with the region count.
+    * Only for joins whose answer counts matched rows alone (an inner
+    * join), never for a left join's unmatched count. */
+  private def inAnyRegion: Column = exists(typedLit(regions), inBox)
 
   /** coversDf plus each region's box as a struct column `region`, so a
     * matched row is refined against its own box (inBox) — one box test
-    * whose size does not grow with the region count, where
-    * refineMatched is one literal term per region (and pays codegen and
-    * compile time for each). */
+    * whose size does not grow with the region count, where a refine
+    * with one literal term per region pays codegen and compile time for
+    * each. */
   private[graft] def boxedCoversDf(spark: SparkSession, level: Int = 6): DataFrame = {
     import spark.implicits._
     regions.map(r => (r.name, regionCover(r, level).toSeq, r)).toDF("region_name", "sids", "region")
@@ -252,7 +256,7 @@ object SparkEntry {
     "q21_cover_join" -> ((s, dir) => {
       // cover join prunes (cover ⊇ box by construction), exact box test
       // decides — also the right plan at 100 TB
-      val docs = indexed(s, dir)
+      val docs = indexed(s, dir).filter(inAnyRegion)
       StareJoin.pointJoin(docs, "sid", boxedCoversDf(s), "sids", how = "inner",
         knownMinLeftLevel = Some(26))
         .filter(inBox(col("region")))
@@ -497,7 +501,7 @@ object SparkEntry {
       // the stare_disjoint fast path; a false empty would surface as a
       // zero row the oracle counts as non-zero.
       import s.implicits._
-      val docs = indexed(s, dir)
+      val docs = indexed(s, dir).filter(inAnyRegion)
       val inter = regionPairs.map { case (a, b) =>
         (s"${a.name}|${b.name}", Sid.intersection(regionCover(a), regionCover(b)), a, b)
       }
@@ -640,9 +644,9 @@ object SparkEntry {
       // anti-join shape's three references to the same join subtree
       // collapse into one execution via ReuseExchange. Kept as-is.
       val docs = indexed(s, dir)
-      val joined = graft.operators.Skew.shuffleJoin(docs, "sid", coversDf(s), "sids",
+      val joined = graft.operators.Skew.shuffleJoin(docs, "sid", boxedCoversDf(s), "sids",
         splitHot = None, how = "left", knownMinLeftLevel = Some(26))
-      val refined = joined.filter(col("region_name").isNull || refineMatched)
+      val refined = joined.filter(col("region_name").isNull || inBox(col("region")))
       val lost = docs.select(col("doc_id"))
         .join(refined.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .withColumn("region_name", lit(null).cast("string"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Sid
 import graft.functions.StareFunctions._
-import StareJoin.{Budgets, Ladder, coverCells}
+import StareJoin.{Budgets, CoverSide, Ladder, coverCells}
 
 /** Explicit skew handling for the shuffle-path spatial join (SURVEY.md
   * §4.4 / north rule: hot cells — cities, coastlines — must not melt a
@@ -37,11 +37,15 @@ object Skew {
     * parent's gate. `skipReason` is set when the cost gate decided
     * splitting cannot win (right is returned unchanged, parents empty).
     * `minLeftLevel` = the exact minimum left-side sid level the spec was
-    * computed against; shuffleJoin's ladder starts its rungs there. */
+    * computed against; shuffleJoin's ladder starts its rungs there.
+    * `levelHist` = (level -> count) of the cells the join keys, summed
+    * over rows: the rewritten cells when the split applies, else the
+    * compressed cover cells. */
   final case class SplitResult(right: DataFrame, parents: Seq[SplitParent],
                                keptLevels: Array[Int], skipReason: Option[String] = None,
                                minLeftLevel: Int = Sid.MaxLevel,
-                               allCells: Array[Long] = Array.emptyLongArray)
+                               allCells: Array[Long] = Array.emptyLongArray,
+                               levelHist: Map[Int, Long])
 
   /** Exact minimum sid level of a frame (one narrow aggregation job);
     * Sid.MaxLevel for an empty frame, which no level bound constrains. */
@@ -84,6 +88,10 @@ object Skew {
     val cells = cellRows.map(_.getLong(0))
     val rightPairCount = cellRows.map(_.getLong(1)).sum
     val levels = cells.map(Sid.level).distinct.sorted
+    // the keyed cells' level histogram, from the same per-cell counts
+    def levelHist(plan: Long => Seq[Long]): Map[Int, Long] =
+      cellRows.toSeq.flatMap(r => plan(r.getLong(0)).map(c => Sid.level(c) -> r.getLong(1)))
+        .groupMapReduce(_._1)(_._2)(_ + _)
     // callers that KNOW their point level (e.g. a level-26 indexed
     // table) pass it and skip the exact full-scan guard
     val minLeftLevel = knownMinLeftLevel.getOrElse(minSidLevel(left, leftSid))
@@ -106,7 +114,7 @@ object Skew {
     def skip(reason: String): SplitResult = {
       sample.unpersist(false)
       System.err.println(s"[skew] split skipped: no projected win — $reason")
-      SplitResult(right, Seq.empty, levels, Some(reason), minLeftLevel, cells)
+      SplitResult(right, Seq.empty, levels, Some(reason), minLeftLevel, cells, levelHist = levelHist(Seq(_)))
     }
     val budgets = Budgets(left.sparkSession)
     // (1) a cover-key side under the broadcast threshold never shuffles
@@ -219,7 +227,7 @@ object Skew {
     val rewriteUdf = udf((cells: Seq[Long]) =>
       cells.flatMap(c => plan.getOrElse(Sid.clearToLevel(c), Seq(Sid.clearToLevel(c)))))
     SplitResult(right.withColumn(rightSids, rewriteUdf(coverCells(col(rightSids)))), parents, keptLevels,
-      minLeftLevel = minLeftLevel, allCells = cells)
+      minLeftLevel = minLeftLevel, allCells = cells, levelHist = levelHist(plan))
   }
 
   /** Shuffle-path spatial join for cover sides too large to broadcast:
@@ -241,14 +249,26 @@ object Skew {
     * the coarsest keyed level; only a hot-cell split measures the left
     * side, in one aggregation job that caps its depth.
     *
-    * Row ids come from deterministic zipWithIndex (StareJoin.withStableId)
-    * instead of persist + monotonically_increasing_id: nothing stays
-    * cached after the query completes. */
+    * The cover side is sized once (StareJoin.CoverSide): a LocalRelation,
+    * or a side whose bounded probe holds every row, gives its level
+    * histogram and row width with no further job; a larger side pays one
+    * histogram job, unless a hot-cell split already counted its cells.
+    * Row ids are packed stable ids (StareJoin.withStableId): nothing
+    * stays cached after the query completes. */
   def shuffleJoin(left: DataFrame, leftSid: String, right: DataFrame, rightSids: String,
                   splitHot: Option[Long] = None, how: String = "inner",
                   knownMinLeftLevel: Option[Int] = None,
                   wallClockGate: Boolean = true): DataFrame = {
     StareJoin.requireHow(how)
+    keyedJoin(left, leftSid, right, rightSids, CoverSide.measure(right, rightSids), splitHot, how,
+      knownMinLeftLevel, wallClockGate)
+  }
+
+  /** shuffleJoin over a cover side already measured by the caller */
+  private[operators] def keyedJoin(left: DataFrame, leftSid: String, right: DataFrame, rightSids: String,
+                                   side: CoverSide, splitHot: Option[Long], how: String,
+                                   knownMinLeftLevel: Option[Int],
+                                   wallClockGate: Boolean = true): DataFrame = {
     // ids first, split-rewrite second: the assembled output carries the
     // ORIGINAL cover rows; only the join-key derivation sees split cells
     val rightRows = StareJoin.withStableId(right, "key_right")
@@ -260,11 +280,9 @@ object Skew {
     val splitApplied = splitRes.exists(_.skipReason.isEmpty)
     // CRITICAL: a split cover must NOT be re-compressed — compress
     // canonically merges the four split siblings straight back into the
-    // hot parent, silently undoing the split (round-1 latent bug: the
-    // old code compressed unconditionally, so splitting never actually
-    // reached the join keys). The rewrite already compresses its input
-    // and emits normalized disjoint cells. A gate-skipped cover is
-    // untouched and still needs the canonical compress.
+    // hot parent, silently undoing the split. The rewrite already
+    // compresses its input and emits normalized disjoint cells; a
+    // gate-skipped cover is untouched and still needs the compress.
     val cellsCol = if (splitApplied) col(rightSids) else coverCells(col(rightSids))
     val rightKeyed = rKeySource
       .select(col("key_right").as("__rid"), explode(cellsCol).as("__rs"))
@@ -272,10 +290,8 @@ object Skew {
       .select(col("__rid"), col("__rk"))
     val parents = splitRes.map(_.parents).getOrElse(Seq.empty)
     // level histogram of the keyed right cells: feeds the kept level set
-    // AND the ladder's size in one small job.
-    val levelHist: Map[Int, Long] = rightKeyed
-      .groupBy(stareLevel(col("__rk")).as("__l")).count()
-      .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    // AND the ladder's size; the split counted it, else the measured side
+    val levelHist: Map[Int, Long] = splitRes.map(_.levelHist).getOrElse(side.levelHist)
     val keptLevels: Array[Int] = splitRes.map(_.keptLevels)
       .getOrElse(levelHist.keys.toArray.sorted)
     // ---- the ladder (StareJoin.Ladder), pointJoin's key rule: every
@@ -297,31 +313,26 @@ object Skew {
     val rightKeyedFinal =
       if (!laddered || levelHist.keys.forall(_ >= ladder.to)) rightKeyed // one rung per cell
       else rightKeyed.withColumn("__rk", explode(ladder.rungs(array(col("__rk")))))
-    // ---- join-strategy choice (r6, guide §3.1): the keyed right side
-    // is (rid, key) pairs whose EXACT row count we already hold
-    // (the ladder's size), but its lineage passes
-    // through withStableId's RDD round trip, which erases size stats —
-    // Catalyst then plans EVERY join here as a sort-merge join, even
-    // for an 8-row cover table (measured: 7 SMJs in the q43 plan), and
-    // at bench scale the 24M-row point side pays a full sort. Decide
-    // deliberately from the known count and the session budgets:
+    // ---- join-strategy choice (r6, guide §3.1): the keyed right side's
+    // EXACT row count is the ladder's size, but its lineage passes
+    // through withStableId's RDD round trip, which erases size stats, so
+    // Catalyst would plan EVERY join here as a sort-merge join (7 SMJs
+    // in q43's plan). Decide from the known count and the budgets:
     // broadcast when a side fits the broadcast threshold (the left side
-    // is then never shuffled at all); otherwise force a shuffled-hash
-    // join (build = the small side) so the big side streams instead of
-    // sorting; fall back to sort-merge only when the per-partition
-    // build could be large (conf spark.graft.join.shjMaxBuildBytesPerPartition).
+    // is then never shuffled); otherwise a shuffled-hash join (build =
+    // the small side) so the big side streams instead of sorting;
+    // sort-merge only when the per-partition build could be large.
     val budgets = Budgets(left.sparkSession)
     val keyedRightRows: Long = if (laddered) ladderKeys else levelHist.valuesIterator.sum
     val estKeyedBytes = keyedRightRows * Budgets.PairBytes
-    // The right ROWS (payload included) are sized from one bounded
-    // probe: row count is bounded by the keyed pair count (every
-    // non-empty cover row emits ≥ 1 pair; empty-cover rows are assumed
-    // rare — they carry no join work).
-    val rightProbe = rightRows.limit(Budgets.RowWidthProbeRows + 1).collect()
-    val rowBytesEst = StareJoin.approxRowBytes(rightProbe)
+    // The right ROWS (payload plus the 8-byte key_right): exact when the
+    // side is whole, else the probe's width times a row count bounded by
+    // the keyed pair count (every non-empty cover row emits ≥ 1 pair;
+    // empty-cover rows are assumed rare — they carry no join work).
+    val rowBytesEst = side.rowBytes + 8
     val estRightRowsBytes =
-      if (rightProbe.length <= Budgets.RowWidthProbeRows) rowBytesEst * rightProbe.length
-      else rowBytesEst * math.max(keyedRightRows, rightProbe.length)
+      if (side.complete) rowBytesEst * side.rows.length
+      else rowBytesEst * math.max(keyedRightRows, side.rows.length)
     val rowsBroadcast = budgets.broadcastFits(estRightRowsBytes)
     // The base keys: the ladder key, or over its budget one key per
     // kept level. Split-child levels a base key serves get no gated

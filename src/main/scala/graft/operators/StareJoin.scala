@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.core.Sid
 import graft.functions.NativeExpressions.knownNotNull
 import graft.functions.StareFunctions._
@@ -32,6 +33,9 @@ import graft.functions.StareFunctions._
   * Cover-vs-cover joins (`join`) explode both sides into ancestor keys
   * per level, in both containment directions, and deduplicate pairs
   * before row assembly.
+  * Every entry point sizes its cover side once, with [[CoverSide]]:
+  * row count, row width and cell-level histogram, read on the driver
+  * for a driver-resident or small side.
   */
 object StareJoin {
 
@@ -65,7 +69,7 @@ object StareJoin {
     * parsed once per call with `Budgets(spark)`, and the constants in
     * the companion. */
   private[graft] final case class Budgets(broadcastBytes: Long, shufflePartitions: Int,
-                                              shjBuildBytesPerPartition: Long, localCoverCap: Int) {
+                                              shjBuildBytesPerPartition: Long) {
     /** Spark's own rule: a threshold <= 0 disables broadcasting */
     def broadcastFits(bytes: Long): Boolean = broadcastBytes > 0 && bytes <= broadcastBytes
     def shjFits(bytes: Long): Boolean =
@@ -80,10 +84,10 @@ object StareJoin {
     final val FullRowDictBytes = 256L << 20
     /** cover rows pointJoin collects to the driver */
     final val CollectBytes = 512L << 20
-    /** rows of pointJoin's first guard probe (also its row-width sample) */
+    /** rows of the one bounded probe that measures a cover side
+      * ([[CoverSide]]); also the most rows per side of a driver-local
+      * cover x cover join */
     final val ProbeRows = 1000
-    /** rows shuffleJoin samples for the right row width */
-    final val RowWidthProbeRows = 4096
     /** rungs of the shuffle path's ladder, summed over rows */
     final val RebaseKeys = 16L << 20
     /** both collected sides of a driver-local cover x cover join */
@@ -99,14 +103,48 @@ object StareJoin {
       * would otherwise silently turn a forced path back into the default. */
     def apply(spark: SparkSession): Budgets = {
       val sql = org.apache.spark.sql.graft.shim.sqlConf(spark)
-      def graftConf[T](key: String, default: T)(parse: String => Option[T]): T =
-        spark.conf.getOption(key).fold(default) { v =>
-          parse(v.trim).getOrElse(throw new IllegalArgumentException(s"$key=$v is not a number"))
-        }
-      Budgets(sql.autoBroadcastJoinThreshold, sql.defaultNumShufflePartitions,
-        graftConf("spark.graft.join.shjMaxBuildBytesPerPartition", 64L << 20)(_.toLongOption),
-        graftConf("spark.graft.join.localCoverCap", 1024)(_.toIntOption))
+      val key = "spark.graft.join.shjMaxBuildBytesPerPartition"
+      val shjBuild = spark.conf.getOption(key).fold(64L << 20) { v =>
+        v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(s"$key=$v is not a number"))
+      }
+      Budgets(sql.autoBroadcastJoinThreshold, sql.defaultNumShufflePartitions, shjBuild)
     }
+  }
+
+  /** One cover side, measured once: how big it is and whether all of it
+    * is on the driver. Every join entry point sizes its cover side here.
+    * `rows` holds every row of the side when `complete`, else the
+    * bounded probe's rows; `rowBytes` is their rough width. */
+  private[operators] final class CoverSide(df: DataFrame, sidsCol: String,
+                                           val rows: Array[Row], val complete: Boolean) {
+    val rowBytes: Long = approxRowBytes(rows)
+
+    /** (cell level -> cell count) of the compressed covers, summed over
+      * rows: counted on the driver when the side is complete, else one
+      * aggregate job. */
+    lazy val levelHist: Map[Int, Long] =
+      if (complete) {
+        val i = df.schema.fieldIndex(sidsCol)
+        rows.iterator.flatMap(r =>
+          if (r.isNullAt(i)) Iterator.empty else Sid.compress(r.getSeq[Long](i).toArray).iterator)
+          .map(Sid.level).toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
+      } else
+        df.select(explode(coverCells(col(sidsCol))).as("c")).groupBy(stareLevel(col("c"))).count()
+          .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+  }
+
+  private[operators] object CoverSide {
+    /** A `LocalRelation` (covers built with toDF) is collected whole,
+      * which plans no Spark job: its rows are already in driver memory.
+      * Any other frame gets one bounded probe, `limit(ProbeRows + 1)`,
+      * which holds the whole side when it has at most `ProbeRows` rows. */
+    def measure(df: DataFrame, sidsCol: String): CoverSide =
+      if (org.apache.spark.sql.graft.shim.isLocalRelation(df))
+        new CoverSide(df, sidsCol, df.collect(), complete = true)
+      else {
+        val probe = df.limit(Budgets.ProbeRows + 1).collect()
+        new CoverSide(df, sidsCol, probe, probe.length <= Budgets.ProbeRows)
+      }
   }
 
   /** The cells of a right row's cover, compressed: canonical covers are
@@ -229,79 +267,53 @@ object StareJoin {
                 maxBroadcastRows: Int = 1 << 20): DataFrame = {
     requireHow(how)
     // Guard the by-design assumption instead of trusting the caller: the
-    // cover side is about to be collect()ed to the driver. One SMALL
-    // probe collect answers the common case (covers of a few rows)
-    // outright AND doubles as the byte-width sample; bigger sides pay
-    // one count plus a byte estimate before the full collect. A
-    // row-count-only guard would still OOM on count-compliant frames
-    // with fat payload rows. The right frame is persisted ACROSS the
-    // guard so probe + count + collect evaluate each partition of the
-    // right plan at most ~once (r3 verdict item 8: the un-cached guard
-    // scheduled up to 3 full evaluations for 1000..1M-row covers); the
-    // cache is dropped before returning on every path. The byte cap
-    // applies on the small-probe branch too — a handful of very fat
-    // rows (huge text/sid payloads) must not reach the driver either.
-    // Over either cap we delegate to the shuffle-path join, which
-    // shares the output contract. A right frame that is already a
-    // driver-resident LocalRelation (covers built with toDF) is not
-    // persisted: the optimizer folds the probe's limit into the local
-    // rows, so its collect() plans no Spark job.
+    // cover side is about to be collect()ed to the driver. Its measurement
+    // (CoverSide) answers the common case (a few rows, or a LocalRelation)
+    // outright AND gives the byte width; bigger sides pay one count
+    // before the full collect. Both a row and a byte cap apply: fat
+    // payload rows must not reach the driver either; over a cap we
+    // delegate to the shuffle-path join. The right frame is persisted
+    // ACROSS the guard so probe + count + collect evaluate each partition
+    // of the right plan at most ~once, and only when the caller hasn't:
+    // unpersisting a caller's own cache would silently DROP it (KnnJoin
+    // persists its reusable sides across rounds).
     val spark = left.sparkSession
-    val probeCap = math.min(Budgets.ProbeRows, maxBroadcastRows)
-    // persist only when the caller hasn't: an unconditional persist +
-    // unpersist would silently DROP a caller's own cache (KnnJoin
-    // persists its reusable sides across rounds)
     val weCached = right.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
       !org.apache.spark.sql.graft.shim.isLocalRelation(right)
     if (weCached) right.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val collected: Array[org.apache.spark.sql.Row] =
+    val side: CoverSide =
       try {
-        val probe = right.limit(probeCap + 1).collect()
-        val n = if (probe.length <= probeCap) probe.length.toLong else right.count()
-        if (n > maxBroadcastRows || approxRowBytes(probe) * n > Budgets.CollectBytes)
-          return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
+        val measured = CoverSide.measure(right, rightSids)
+        val n = if (measured.complete) measured.rows.length.toLong else right.count()
+        if (n > maxBroadcastRows || measured.rowBytes * n > Budgets.CollectBytes)
+          return Skew.keyedJoin(left, leftSid, right, rightSids, measured, splitHot = None,
             how = how, knownMinLeftLevel = knownMinLeftLevel)
-        if (probe.length <= probeCap) probe else right.collect()
+        if (measured.complete) measured else new CoverSide(right, rightSids, right.collect(), complete = true)
       } finally if (weCached) right.unpersist(false)
-    // cover cells per collected row, computed ONCE on the driver: they
-    // feed the level set and the per-ROW expansion budget (a Spark
-    // distinct() job here re-evaluated the cover side again)
-    val sidsIdx = right.schema.fieldIndex(rightSids)
-    val perRowCells: Array[Array[Long]] = collected.map { r =>
-      val s = r.getSeq[Long](sidsIdx)
-      if (s == null) Array.emptyLongArray else Sid.compress(s.toArray)
-    }
     // Ladder dictionary: every cover cell as its rungs lets each point
     // probe with exactly ONE key, whatever the level mix on either side.
     // For how='left' a point matching nothing keeps one row with
     // all-null right columns — exactly stare_join's left semantics. All-
     // empty covers expand to an empty dictionary (inner: no rows; left:
-    // all null-padded). Its size is summed over ROWS, not distinct keys:
-    // the dictionary explodes the cover per right row, so duplicate
-    // covers multiply the broadcast (a distinct-key budget admitted 500k
-    // rows sharing one cell into a plan that would expand each of them).
-    val cellsByLevel = perRowCells.iterator.flatMap(_.iterator).map(Sid.level).toSeq
-      .groupMapReduce(identity)(_ => 1L)(_ + _)
-    val ladder = Ladder(cellsByLevel.keys, cellsByLevel.keys.maxOption.getOrElse(0),
+    // all null-padded). Its size is summed over ROWS, not distinct keys
+    // (the side's level histogram, counted on the driver): the
+    // dictionary explodes the cover per right row, so duplicate covers
+    // multiply the broadcast (a distinct-key budget admitted 500k rows
+    // sharing one cell into a plan that would expand each of them).
+    val ladder = Ladder(side.levelHist.keys, side.levelHist.keys.maxOption.getOrElse(0),
       knownMinLeftLevel, declared = knownMinLeftLevel.isDefined)
-    val dictKeys = ladder.size(cellsByLevel)
+    val dictKeys = ladder.size(side.levelHist)
     // A BYTE cap on dictKeys x measured-row-width keeps a fat cover side
     // (wide payload columns, big sid arrays) duplicated per rung from
     // building a multi-GB broadcast.
-    if (dictKeys <= Budgets.DictKeys && dictKeys * approxRowBytes(collected) <= Budgets.FullRowDictBytes) {
+    if (dictKeys <= Budgets.DictKeys && dictKeys * side.rowBytes <= Budgets.FullRowDictBytes) {
       // The cover side fits in a broadcast, so assign row ids
       // on the driver: deterministic across every reuse of the frame (no
       // monotonically_increasing_id re-evaluation hazard) and no lingering
       // persist() that pressures the executor cache across queries.
-      val rightRows = {
-        val schema = org.apache.spark.sql.types.StructType(
-          right.schema.fields :+ org.apache.spark.sql.types.StructField("key_right", org.apache.spark.sql.types.LongType, nullable = false))
-        val rows: java.util.List[org.apache.spark.sql.Row] =
-          java.util.Arrays.asList(collected.zipWithIndex.map { case (r, i) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i.toLong)
-          }: _*)
-        spark.createDataFrame(rows, schema)
-      }
+      val rightRows = spark.createDataFrame(java.util.Arrays.asList(
+        side.rows.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }: _*),
+        right.schema.add("key_right", LongType, nullable = false))
       // The dictionary carries the right ROW COLUMNS directly, so the
       // probe is the ONLY pass over the big side — routing just row ids
       // and re-joining in assemble() cost a second full broadcast-probe
@@ -314,9 +326,9 @@ object StareJoin {
       }
     } else {
       // the collected rows as a local frame: the shuffle path does not
-      // evaluate the right plan again
-      val local = spark.createDataFrame(java.util.Arrays.asList(collected: _*), right.schema)
-      Skew.shuffleJoin(left, leftSid, local, rightSids, splitHot = None,
+      // evaluate the right plan again, nor measure the same rows again
+      val local = spark.createDataFrame(java.util.Arrays.asList(side.rows: _*), right.schema)
+      Skew.keyedJoin(left, leftSid, local, rightSids, side, splitHot = None,
         how = how, knownMinLeftLevel = knownMinLeftLevel)
     }
   }
@@ -325,7 +337,7 @@ object StareJoin {
     * dictionary-plan byte budget. Samples <= ~100 rows evenly. Array
     * columns arrive as mutable ArraySeqs, hence the general collection
     * types. */
-  private[graft] def approxRowBytes(rows: Array[org.apache.spark.sql.Row]): Long = {
+  private[graft] def approxRowBytes(rows: Array[Row]): Long = {
     if (rows.isEmpty) return 16L
     def sz(v: Any): Long = v match {
       case null          => 8L
@@ -333,7 +345,7 @@ object StareJoin {
       case a: scala.collection.Seq[_] => 40L + a.iterator.map(sz).sum
       case a: Array[_]   => 40L + a.iterator.map(sz).sum
       case m: scala.collection.Map[_, _] => 48L + m.iterator.map { case (k, w) => sz(k) + sz(w) }.sum
-      case r: org.apache.spark.sql.Row => 16L + r.toSeq.iterator.map(sz).sum
+      case r: Row        => 16L + r.toSeq.iterator.map(sz).sum
       case _             => 8L
     }
     val step = math.max(1, rows.length / 100)
@@ -348,14 +360,10 @@ object StareJoin {
     * the frame can be reused across joins with NO persist — cache
     * hygiene with correctness intact. Unlike content-hash ids there are
     * no birthday collisions (~rows²/2^65 silently merged row identities
-    * at 10^12 rows, i.e. wrong join multiplicity).
-    *
-    * Round-4 rework (r3 verdict item 1): the previous rdd.zipWithIndex
-    * ran one extra Spark job (partition counts) that re-evaluated the
-    * whole upstream plan, plus an InternalRow->Row->InternalRow round
-    * trip; the packed id needs ZERO extra jobs and stays on
-    * InternalRows (shim.withPackedIdColumn). Ids are unique and stable
-    * but not contiguous — no caller depends on contiguity.
+    * at 10^12 rows, i.e. wrong join multiplicity). Unlike
+    * rdd.zipWithIndex it needs ZERO extra jobs and stays on InternalRows
+    * (shim.withPackedIdColumn). Ids are unique and stable but not
+    * contiguous — no caller depends on contiguity.
     *
     * Order stabilization (ADVICE r5): packed ids are a function of
     * intra-partition row ORDER, which an exchange-bearing lineage does
@@ -396,30 +404,27 @@ object StareJoin {
     * from ONE combined job (not two collects), stable ids cost zero
     * extra jobs (withStableId), and the strictly-coarser direction B —
     * with its join + filter subplan — is built only when some left
-    * level is actually coarser than the finest right level. */
+    * level is actually coarser than the finest right level.
+    *
+    * Small sides (r6, guide §1.2): both sides of the distributed plan
+    * pass through withStableId, whose RDD round trip erases size
+    * statistics, so every downstream join plans as a sort-merge join
+    * (measured: 20 Exchanges for an 8x8-row join). When BOTH measured
+    * sides ([[CoverSide]]) are whole on the driver, each of at most
+    * `ProbeRows` rows (the exact pair loop is quadratic) and together
+    * within `LocalJoinBytes`, the exact pair set is one
+    * interval-intersection loop (the fuzz suite's own reference kernel)
+    * and the result a LocalRelation with known stats. */
   def join(left: DataFrame, leftSids: String, right: DataFrame, rightSids: String,
            how: String = "left"): DataFrame = {
     requireHow(how)
-    // Small-sides fast path (r6, guide §1.2): both sides of a general
-    // cover×cover join pass through withStableId, whose RDD round-trip
-    // erases size statistics — every downstream join then plans as a
-    // SortMergeJoin cascade (measured: 20 Exchanges for an 8×8-row
-    // join). When BOTH sides fit a driver probe, the exact pair set is
-    // one interval-intersection loop (the fuzz suite's own reference
-    // kernel) and the result a LocalRelation with known stats.
-    // Conf-gated (spark.graft.join.localCoverCap, rows per side; 0
-    // disables) so tests exercise both paths.
-    val localCap = Budgets(left.sparkSession).localCoverCap
-    if (localCap > 0) {
-      val lp = left.limit(localCap + 1).collect()
-      if (lp.length <= localCap) {
-        val rp = right.limit(localCap + 1).collect()
-        if (rp.length <= localCap &&
-          approxRowBytes(lp) * lp.length + approxRowBytes(rp) * rp.length <= Budgets.LocalJoinBytes)
-          return localJoin(left.sparkSession, lp, left.schema, leftSids,
-            rp, right.schema, rightSids, how)
-      }
-    }
+    def small(s: CoverSide) = s.complete && s.rows.length <= Budgets.ProbeRows
+    val lSide = CoverSide.measure(left, leftSids)
+    lazy val rSide = CoverSide.measure(right, rightSids)
+    if (small(lSide) && small(rSide) &&
+      lSide.rowBytes * lSide.rows.length + rSide.rowBytes * rSide.rows.length <= Budgets.LocalJoinBytes)
+      return localJoin(left.sparkSession, lSide.rows, left.schema, leftSids,
+        rSide.rows, right.schema, rightSids, how)
     // both level sets in one tiny aggregation job
     val lv = left.select(lit(1).as("side"), explode(col(leftSids)).as("s"))
       .unionByName(right.select(lit(2).as("side"), explode(col(rightSids)).as("s")))
@@ -450,8 +455,7 @@ object StareJoin {
       a.union(b)
     }
 
-    val pairs = ab.distinct()
-      .withColumnRenamed("__lid", "__plid").withColumnRenamed("__rid", "__rid")
+    val pairs = ab.distinct().withColumnRenamed("__lid", "__plid")
 
     val joined = leftIds.join(pairs, leftIds("__lid") === pairs("__plid"), "left")
       .drop("__lid", "__plid")
@@ -465,52 +469,31 @@ object StareJoin {
     * key_right (dense 0..n-1 right row ids, like pointJoin's), right
     * columns, clashes suffixed, how=left emitting one all-null right
     * row per unmatched left row. */
-  private def localJoin(spark: org.apache.spark.sql.SparkSession,
-                        leftRows: Array[org.apache.spark.sql.Row],
-                        leftSchema: org.apache.spark.sql.types.StructType, leftSids: String,
-                        rightRows: Array[org.apache.spark.sql.Row],
-                        rightSchema: org.apache.spark.sql.types.StructType, rightSids: String,
+  private def localJoin(spark: SparkSession, leftRows: Array[Row], leftSchema: StructType, leftSids: String,
+                        rightRows: Array[Row], rightSchema: StructType, rightSids: String,
                         how: String): DataFrame = {
+    def cells(r: Row, i: Int): Array[Long] =
+      if (r.isNullAt(i)) Array.emptyLongArray else r.getSeq[Long](i).toArray
     val lIdx = leftSchema.fieldIndex(leftSids)
-    val rIdx = rightSchema.fieldIndex(rightSids)
-    def cells(r: org.apache.spark.sql.Row, i: Int): Array[Long] = {
-      val s = if (r.isNullAt(i)) null else r.getSeq[Long](i)
-      if (s == null) Array.emptyLongArray else s.toArray
-    }
-    val rightCells = rightRows.map(cells(_, rIdx))
+    val rightCells = rightRows.map(cells(_, rightSchema.fieldIndex(rightSids)))
     val rightIntervals = rightCells.map(c =>
       if (c.isEmpty) Array.empty[(Long, Long)] else Sid.mergedIntervals(c))
     val clash = leftSchema.fieldNames.toSet.intersect(rightSchema.fieldNames.toSet)
-    def suffixed(s: org.apache.spark.sql.types.StructType, suf: String, forceNull: Boolean) =
-      s.fields.map { f =>
-        val n = if (clash.contains(f.name)) f.name + suf else f.name
-        f.copy(name = n, nullable = f.nullable || forceNull)
-      }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      suffixed(leftSchema, "_left", forceNull = false) ++
-        (org.apache.spark.sql.types.StructField("key_right",
-          org.apache.spark.sql.types.LongType, nullable = how == "left") +:
-          suffixed(rightSchema, "_right", forceNull = how == "left")))
-    val nullRight: Seq[Any] = Seq.fill(rightSchema.fields.length + 1)(null)
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    leftRows.foreach { lr =>
-      val lc = cells(lr, lIdx)
-      var matched = false
-      if (lc.nonEmpty) {
-        var j = 0
-        while (j < rightRows.length) {
-          if (rightCells(j).nonEmpty && Sid.anyIntersects(lc, rightIntervals(j))) {
-            matched = true
-            out += org.apache.spark.sql.Row.fromSeq(
-              lr.toSeq ++ (j.toLong +: rightRows(j).toSeq))
-          }
-          j += 1
-        }
-      }
-      if (!matched && how == "left")
-        out += org.apache.spark.sql.Row.fromSeq(lr.toSeq ++ nullRight)
+    def suffixed(s: StructType, suf: String, forceNull: Boolean) = s.fields.map { f =>
+      f.copy(name = if (clash(f.name)) f.name + suf else f.name, nullable = f.nullable || forceNull)
     }
-    spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), outSchema)
+    val outSchema = StructType(suffixed(leftSchema, "_left", forceNull = false) ++
+      (StructField("key_right", LongType, nullable = how == "left") +:
+        suffixed(rightSchema, "_right", forceNull = how == "left")))
+    val nullRight = Seq.fill(rightSchema.length + 1)(null)
+    val out = leftRows.toSeq.flatMap { lr =>
+      val lc = cells(lr, lIdx)
+      val hits = if (lc.isEmpty) Seq.empty else rightRows.indices.filter(j =>
+        rightCells(j).nonEmpty && Sid.anyIntersects(lc, rightIntervals(j)))
+      if (hits.isEmpty && how == "left") Seq(Row.fromSeq(lr.toSeq ++ nullRight))
+      else hits.map(j => Row.fromSeq(lr.toSeq ++ (j.toLong +: rightRows(j).toSeq)))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), outSchema)
   }
 
   /** Join the right rows back onto `leftWithRid` by row id (`__rid` =

@@ -312,6 +312,8 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "region").collect()
         .map(r => (r.getLong(0), Option(r.getString(1)).getOrElse("__null"))).toSet
+    def joins(df: org.apache.spark.sql.DataFrame) = df.queryExecution.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.length
     val none: Seq[Long] = null
     for (covers <- Seq(Seq(("r1", none), ("r2", box)), Seq(("r1", none), ("r2", none)))) {
       val right = covers.toDF("region", "sids")
@@ -326,11 +328,15 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           knownMinLeftLevel = Some(26))) === brute, clue)
         assert(pairs(graft.operators.Skew.shuffleJoin(pts, "sid", right, "sids", how = how)) === brute, clue)
         val arrays = pts.withColumn("sids_l", array(col("sid")))
-        assert(pairs(graft.operators.StareJoin.join(arrays, "sids_l", right, "sids", how = how)) === brute, clue)
-        spark.conf.set("spark.graft.join.localCoverCap", "0")
-        try assert(pairs(graft.operators.StareJoin.join(arrays, "sids_l", right, "sids", how = how)) === brute,
-          s"distributed join(), $clue")
-        finally spark.conf.unset("spark.graft.join.localCoverCap")
+        val local = graft.operators.StareJoin.join(arrays, "sids_l", right, "sids", how = how)
+        assert(joins(local) === 0, s"join() took the distributed path, $clue")
+        assert(pairs(local) === brute, clue)
+        // ProbeRows + 1 more empty-cover rows: the distributed join(), same pairs
+        val padding = (0 to graft.operators.StareJoin.Budgets.ProbeRows).map(i => (s"pad$i", Seq.empty[Long]))
+        val dist = graft.operators.StareJoin.join(arrays, "sids_l", (covers ++ padding).toDF("region", "sids"),
+          "sids", how = how)
+        assert(joins(dist) > 0, s"padded join() took the local path, $clue")
+        assert(pairs(dist) === brute, s"distributed join(), $clue")
       }
     }
   }
@@ -338,27 +344,21 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a malformed join budget conf is rejected with its key and value, not read as the default") {
     import spark.implicits._
     val covers = Seq(("a", Seq(Htm.latLonToSid(10.0, 10.0, 6)))).toDF("name", "sids")
-    for (key <- Seq("spark.graft.join.shjMaxBuildBytesPerPartition", "spark.graft.join.localCoverCap")) {
-      spark.conf.set(key, "64mb")
-      try {
-        val e = intercept[IllegalArgumentException](graft.operators.StareJoin.Budgets(spark))
-        assert(e.getMessage.contains(key) && e.getMessage.contains("64mb"), e.getMessage)
-        // the joins that read the budgets fail the same way
-        intercept[IllegalArgumentException](graft.operators.StareJoin.join(covers, "sids", covers, "sids"))
-      } finally spark.conf.unset(key)
-    }
-    spark.conf.set("spark.graft.join.localCoverCap", " 7 ")
-    try assert(graft.operators.StareJoin.Budgets(spark).localCoverCap === 7)
-    finally spark.conf.unset("spark.graft.join.localCoverCap")
+    val pts = Seq((1L, Htm.latLonToSid(10.0, 10.0, 26))).toDF("id", "sid")
+    val key = "spark.graft.join.shjMaxBuildBytesPerPartition"
+    spark.conf.set(key, "64mb")
+    try {
+      val e = intercept[IllegalArgumentException](graft.operators.StareJoin.Budgets(spark))
+      assert(e.getMessage.contains(key) && e.getMessage.contains("64mb"), e.getMessage)
+      // the joins that read the budgets fail the same way
+      intercept[IllegalArgumentException](graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids"))
+    } finally spark.conf.unset(key)
+    spark.conf.set(key, " 7 ")
+    try assert(graft.operators.StareJoin.Budgets(spark).shjBuildBytesPerPartition === 7)
+    finally spark.conf.unset(key)
   }
 
   test("an invalid how is rejected by pointJoin, shuffleJoin and join before any Spark job") {
-    val shim = org.apache.spark.sql.graft.shim
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     // Spark-computed frames on both sides: a late check runs the collect
     // guard, the local-join probes or the level-histogram job first
     val box = typedLit(Cover.coverFromBox(8.0, 12.0, 8.0, 12.0, 6).toSeq)
@@ -369,14 +369,10 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "pointJoin" -> (how => graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = how)),
       "shuffleJoin" -> (how => graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", how = how)),
       "join" -> (how => graft.operators.StareJoin.join(ptsArr, "sids_l", covers, "sids", how = how)))
-    spark.sparkContext.addSparkListener(listener)
-    try for ((name, entry) <- entries; how <- Seq("outer", "right", "innner")) {
-      shim.drainListenerBus(spark)
-      jobs.set(0)
-      intercept[IllegalArgumentException](entry(how))
-      shim.drainListenerBus(spark)
-      assert(jobs.get() === 0, s"$name how=$how started a Spark job before rejecting it")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    for ((name, entry) <- entries; how <- Seq("outer", "right", "innner")) {
+      val (_, rec) = SparkJobProbe.record(spark)(intercept[IllegalArgumentException](entry(how)))
+      assert(rec.jobs === 0, s"$name how=$how started a Spark job before rejecting it")
+    }
   }
 
   test("near-polar box covers keep the superset guarantee up to the poles") {
@@ -591,73 +587,92 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty, "guard cache must be released")
   }
 
+  /** Builds shuffleJoin (inner and left, declared level or not, no
+    * split) over the two rows of `covers` and checks the jobs that
+    * building started and the pairs; `covers` is driver-resident or
+    * computed by Spark. */
+  private def shuffleJoinBuildJobs(local: Boolean, maxJobs: Int): Unit = {
+    import spark.implicits._
+    val pts = Seq((1L, 10.0, 10.0), (2L, 48.0, 2.0), (3L, -60.0, 100.0)).toDF("id", "lat", "lon")
+      .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
+    val coverA = Cover.coverFromBox(5.0, 15.0, 5.0, 15.0, 6).toSeq
+    val coverB = Cover.coverFromBox(-5.0, 5.0, 40.0, 50.0, 8).toSeq
+    val covers =
+      if (local) Seq(("a", coverA), ("b", coverB)).toDF("name", "sids")
+      else spark.range(2).select(
+        when(col("id") === 0, lit("a")).otherwise(lit("b")).as("name"),
+        when(col("id") === 0, typedLit(coverA)).otherwise(typedLit(coverB)).as("sids"))
+    assert(org.apache.spark.sql.graft.shim.isLocalRelation(covers) === local)
+    val expected = Map("inner" -> Set((1L, "a"), (2L, "b")), "left" -> Set((1L, "a"), (2L, "b"), (3L, null)))
+    for (how <- Seq("inner", "left"); declared <- Seq(None, Some(26))) {
+      val clue = s"how=$how knownMinLeftLevel=$declared"
+      val (joined, rec) = SparkJobProbe.record(spark)(graft.operators.Skew.shuffleJoin(pts, "sid", covers,
+        "sids", splitHot = None, how = how, knownMinLeftLevel = declared))
+      assert(rec.jobs <= maxJobs, s"${rec.jobs} jobs building shuffleJoin, $clue")
+      assert(joined.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+        expected(how), clue)
+    }
+  }
+
+  test("building shuffleJoin over a local cover frame starts no Spark job") {
+    shuffleJoinBuildJobs(local = true, maxJobs = 0)
+  }
+
+  test("building shuffleJoin over a computed cover side of at most ProbeRows rows starts at most one job") {
+    shuffleJoinBuildJobs(local = false, maxJobs = 1)
+  }
+
   test("pointJoin over a local cover frame starts no Spark job at build time") {
     import spark.implicits._
     val shim = org.apache.spark.sql.graft.shim
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val unpersisted = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onUnpersistRDD(e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
-        unpersisted.incrementAndGet()
-    }
     def buildJobs(right: org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, Int, Int) = {
       val pts = Seq((1L, 10.0, 10.0), (2L, 48.0, 2.0), (3L, -60.0, 100.0)).toDF("id", "lat", "lon")
         .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
-      shim.drainListenerBus(spark)
-      jobs.set(0); unpersisted.set(0)
-      val joined = graft.operators.StareJoin.pointJoin(pts, "sid", right, "sids",
-        how = "left", knownMinLeftLevel = Some(26))
-      shim.drainListenerBus(spark)
-      (joined, jobs.get(), unpersisted.get())
+      val (joined, rec) = SparkJobProbe.record(spark)(graft.operators.StareJoin.pointJoin(pts, "sid",
+        right, "sids", how = "left", knownMinLeftLevel = Some(26)))
+      (joined, rec.jobs, rec.unpersistedRdds)
     }
     val coverA = Cover.coverFromBox(5.0, 15.0, 5.0, 15.0, 6).toSeq
     val coverB = Cover.coverFromBox(-5.0, 5.0, 40.0, 50.0, 8).toSeq
     val expected = Set((1L, "a"), (2L, "b"), (3L, null))
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val local = Seq(("a", coverA), ("b", coverB)).toDF("name", "sids")
-      assert(shim.isLocalRelation(local))
-      val (joined, localJobs, localUnpersists) = buildJobs(local)
-      assert(localJobs === 0, "a driver-resident cover frame needs no guard job")
-      assert(localUnpersists === 0, "a driver-resident cover frame is not persisted")
-      assert(local.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
-      assert(joined.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
-        expected)
-      // an undeclared mixed-level left side takes the ladder dictionary
-      // too: no job measures its levels, and the plan is one join
-      val mixed = Seq((1L, Htm.latLonToSid(10.0, 10.0, 26)), (2L, Htm.latLonToSid(48.0, 2.0, 7)),
-        (3L, Htm.latLonToSid(10.0, 10.0, 5)), (4L, Htm.latLonToSid(-60.0, 100.0, 2))).toDF("id", "sid")
-      shim.drainListenerBus(spark)
-      jobs.set(0)
-      val mixedJoined = graft.operators.StareJoin.pointJoin(mixed, "sid", local, "sids", how = "left")
-      shim.drainListenerBus(spark)
-      assert(jobs.get() === 0, "an undeclared left side needs no level job")
-      assert(mixedJoined.queryExecution.sparkPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.length === 1)
-      val covers = Map("a" -> coverA, "b" -> coverB)
-      val mixedExpected = mixed.collect().toSeq.flatMap { r =>
-        val sid = r.getLong(1)
-        val hits = covers.toSeq.collect { case (n, c) if Sid.compress(c.toArray).exists(cell =>
-          Sid.level(cell) <= Sid.level(sid) && Sid.intersects(cell, sid)) => n }
-        if (hits.isEmpty) Seq((r.getLong(0), null: String)) else hits.map((r.getLong(0), _))
-      }
-      assert(mixedJoined.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-        .sortBy(_.toString) === mixedExpected.sortBy(_.toString))
-      assert(mixedExpected.contains((2L, "b")), "the level-7 point lies in a coarser cell of cover b")
-      // a cover frame computed by Spark still takes the persisted guard
-      val computed = spark.range(2).select(
-        when(col("id") === 0, lit("a")).otherwise(lit("b")).as("name"),
-        when(col("id") === 0, typedLit(coverA)).otherwise(typedLit(coverB)).as("sids"))
-      assert(!shim.isLocalRelation(computed))
-      val (joined2, computedJobs, computedUnpersists) = buildJobs(computed)
-      assert(computedJobs > 0)
-      assert(computedUnpersists > 0, "the guard persist must be taken and released")
-      assert(computed.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
-      assert(joined2.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
-        expected)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val local = Seq(("a", coverA), ("b", coverB)).toDF("name", "sids")
+    assert(shim.isLocalRelation(local))
+    val (joined, localJobs, localUnpersists) = buildJobs(local)
+    assert(localJobs === 0, "a driver-resident cover frame needs no guard job")
+    assert(localUnpersists === 0, "a driver-resident cover frame is not persisted")
+    assert(local.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    assert(joined.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+      expected)
+    // an undeclared mixed-level left side takes the ladder dictionary
+    // too: no job measures its levels, and the plan is one join
+    val mixed = Seq((1L, Htm.latLonToSid(10.0, 10.0, 26)), (2L, Htm.latLonToSid(48.0, 2.0, 7)),
+      (3L, Htm.latLonToSid(10.0, 10.0, 5)), (4L, Htm.latLonToSid(-60.0, 100.0, 2))).toDF("id", "sid")
+    val (mixedJoined, mixedRec) = SparkJobProbe.record(spark)(
+      graft.operators.StareJoin.pointJoin(mixed, "sid", local, "sids", how = "left"))
+    assert(mixedRec.jobs === 0, "an undeclared left side needs no level job")
+    assert(mixedJoined.queryExecution.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.length === 1)
+    val covers = Map("a" -> coverA, "b" -> coverB)
+    val mixedExpected = mixed.collect().toSeq.flatMap { r =>
+      val sid = r.getLong(1)
+      val hits = covers.toSeq.collect { case (n, c) if Sid.compress(c.toArray).exists(cell =>
+        Sid.level(cell) <= Sid.level(sid) && Sid.intersects(cell, sid)) => n }
+      if (hits.isEmpty) Seq((r.getLong(0), null: String)) else hits.map((r.getLong(0), _))
+    }
+    assert(mixedJoined.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      .sortBy(_.toString) === mixedExpected.sortBy(_.toString))
+    assert(mixedExpected.contains((2L, "b")), "the level-7 point lies in a coarser cell of cover b")
+    // a cover frame computed by Spark still takes the persisted guard
+    val computed = spark.range(2).select(
+      when(col("id") === 0, lit("a")).otherwise(lit("b")).as("name"),
+      when(col("id") === 0, typedLit(coverA)).otherwise(typedLit(coverB)).as("sids"))
+    assert(!shim.isLocalRelation(computed))
+    val (joined2, computedJobs, computedUnpersists) = buildJobs(computed)
+    assert(computedJobs > 0)
+    assert(computedUnpersists > 0, "the guard persist must be taken and released")
+    assert(computed.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+    assert(joined2.select("id", "name").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+      expected)
     // the headline plan (SparkEntry.coversDf, level-26 points): exactly
     // one join, a broadcast hash join whose build side carries the cover
     // columns and the ladder explode; the point side is not exploded

@@ -145,6 +145,21 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     cells.map(c => Sid.ladderRungs(Sid.level(c), levels.min, levels.max)).sum
   }
 
+  /** join() took its driver-local path: the answer is a LocalRelation
+    * and the plan holds no join. */
+  private def localJoinRoute(df: DataFrame): Boolean =
+    org.apache.spark.sql.graft.shim.isLocalRelation(df) &&
+      df.queryExecution.sparkPlan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.isEmpty
+
+  /** (rname, sids) covers plus ProbeRows + 1 empty-cover rows: too many
+    * rows for join()'s driver-local path, and no pair changes. */
+  private def padded(covers: DataFrame): DataFrame = {
+    import spark.implicits._
+    covers.unionByName((0 to StareJoin.Budgets.ProbeRows)
+      .map(i => (s"pad$i", Seq.empty[Long])).toDF("rname", "sids"))
+  }
+
   private def observedPairs(df: DataFrame): Seq[(Long, String)] =
     df.select(col("lid"), col("rname")).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) "__none" else r.getString(1)))
@@ -213,16 +228,15 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
              val m = innerPairs.map(_._1).toSet
              innerPairs ++ leftArr.collect { case (lid, _) if !m(lid) => (lid, "__none") }
            }).sorted
-        // both join() paths: the driver-local small-sides fast path
-        // (default cap) and the distributed plan (cap=0) — r6
-        val general = observedPairs(
-          StareJoin.join(leftArrDf, "sids_l", rightDf, "sids", how = how))
-        assert(general === expJoin, s"join() [local path] vs brute intersects — $clue")
-        spark.conf.set("spark.graft.join.localCoverCap", "0")
-        val generalDist =
-          try observedPairs(StareJoin.join(leftArrDf, "sids_l", rightDf, "sids", how = how))
-          finally spark.conf.unset("spark.graft.join.localCoverCap")
-        assert(generalDist === expJoin, s"join() [distributed path] vs brute intersects — $clue")
+        // both join() paths: the driver-local small-sides fast path, and
+        // the distributed plan once the right side is padded past
+        // ProbeRows rows with empty covers (which match nothing) — r6
+        val generalDf = StareJoin.join(leftArrDf, "sids_l", rightDf, "sids", how = how)
+        assert(localJoinRoute(generalDf), s"join() took the distributed path — $clue")
+        assert(observedPairs(generalDf) === expJoin, s"join() [local path] vs brute intersects — $clue")
+        val generalDistDf = StareJoin.join(leftArrDf, "sids_l", padded(rightDf), "sids", how = how)
+        assert(!localJoinRoute(generalDistDf), s"padded join() took the local path — $clue")
+        assert(observedPairs(generalDistDf) === expJoin, s"join() [distributed path] vs brute intersects — $clue")
       }
     }
     // the mixed-level left sides (levels 0-14) against these small covers

@@ -320,6 +320,27 @@ class NewQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(counts("q33_cover_algebra") === q33)
   }
 
+  test("q21/q33 prune documents outside every region below indexed's exchange; q22/q43 do not") {
+    import org.apache.spark.sql.catalyst.expressions.Or
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, RepartitionByExpression}
+    // the region union is a disjunction of lat/lon box tests, filtered
+    // under the repartition(doc_id) that indexed() plans, where lat and
+    // lon are still expressions of the document columns
+    def prunedBelowExchange(q: String): Boolean =
+      SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan.collect {
+        case r: RepartitionByExpression => r.child.exists {
+          case f: Filter => f.condition.exists(_.isInstanceOf[Or]) &&
+            f.references.forall(a => a.name == "doc_id" || a.name == "text")
+          case _ => false
+        }
+      }.contains(true)
+    assert(prunedBelowExchange("q21_cover_join"))
+    assert(prunedBelowExchange("q33_cover_algebra"))
+    // a left join counts the documents outside every region
+    assert(!prunedBelowExchange("q22_cover_join_left"))
+    assert(!prunedBelowExchange("q43_shuffle_join_left"))
+  }
+
   test("q33's refine is constant-size: no string-literal pair_name equality anywhere in the plan") {
     import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Literal}
     import org.apache.spark.sql.types.StringType
