@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Sid
 import graft.functions.StareFunctions._
-import StareJoin.{Budgets, CoverSide, Ladder, coverCells}
+import StareJoin.{Budgets, CoverSide, LKey, Ladder, RKey, coverCells, mixKey}
 
 /** Explicit skew handling for the shuffle-path spatial join (SURVEY.md
   * §4.4 / north rule: hot cells — cities, coastlines — must not melt a
@@ -32,16 +32,21 @@ object Skew {
     * replacement descendants live at. */
   final case class SplitParent(cell: Long, level: Int, childLevels: Array[Int])
 
-  /** `keptLevels` = levels of cells kept whole (probed unconditionally);
-    * split-child levels NOT in keptLevels are probed only under their
-    * parent's gate. `skipReason` is set when the cost gate decided
-    * splitting cannot win (right is returned unchanged, parents empty).
-    * `minLeftLevel` = the exact minimum left-side sid level the spec was
-    * computed against; shuffleJoin's ladder starts its rungs there.
-    * `levelHist` = (level -> count) of the cells the join keys, summed
-    * over rows: the rewritten cells when the split applies, else the
-    * compressed cover cells. */
-  final case class SplitResult(right: DataFrame, parents: Seq[SplitParent],
+  /** `cells` = the cells the join keys, per right row, as a Column over
+    * the right side: the rewritten cells when the split applies (already
+    * compressed, normalized and disjoint; compressing them again would
+    * merge four split siblings straight back into their hot parent), else
+    * the compressed cover cells. The join keeps the right rows' original
+    * covers and keys only these. `right` = the right side with `cells` as
+    * its cover column. `keptLevels` = levels of cells kept whole (probed
+    * unconditionally); split-child levels NOT in keptLevels are probed
+    * only under their parent's gate. `skipReason` is set when the cost
+    * gate decided splitting cannot win (right is returned unchanged,
+    * parents empty). `minLeftLevel` = the exact minimum left-side sid
+    * level the spec was computed against; shuffleJoin's ladder starts its
+    * rungs there. `levelHist` = (level -> count) of `cells`, summed over
+    * rows. */
+  final case class SplitResult(right: DataFrame, cells: Column, parents: Seq[SplitParent],
                                keptLevels: Array[Int], skipReason: Option[String] = None,
                                minLeftLevel: Int = Sid.MaxLevel,
                                allCells: Array[Long] = Array.emptyLongArray,
@@ -114,7 +119,8 @@ object Skew {
     def skip(reason: String): SplitResult = {
       sample.unpersist(false)
       System.err.println(s"[skew] split skipped: no projected win — $reason")
-      SplitResult(right, Seq.empty, levels, Some(reason), minLeftLevel, cells, levelHist = levelHist(Seq(_)))
+      SplitResult(right, coverCells(col(rightSids)), Seq.empty, levels, Some(reason), minLeftLevel, cells,
+        levelHist = levelHist(Seq(_)))
     }
     val budgets = Budgets(left.sparkSession)
     // (1) a cover-key side under the broadcast threshold never shuffles
@@ -226,7 +232,8 @@ object Skew {
 
     val rewriteUdf = udf((cells: Seq[Long]) =>
       cells.flatMap(c => plan.getOrElse(Sid.clearToLevel(c), Seq(Sid.clearToLevel(c)))))
-    SplitResult(right.withColumn(rightSids, rewriteUdf(coverCells(col(rightSids)))), parents, keptLevels,
+    val splitCells = rewriteUdf(coverCells(col(rightSids)))
+    SplitResult(right.withColumn(rightSids, splitCells), splitCells, parents, keptLevels,
       minLeftLevel = minLeftLevel, allCells = cells, levelHist = levelHist(plan))
   }
 
@@ -236,6 +243,8 @@ object Skew {
     * Same pair semantics and output contract (suffixes, `key_right`,
     * column order) as StareJoin.pointJoin, for how = inner | left. Each
     * left row keys ONCE, by pointJoin's ladder rule (StareJoin.Ladder),
+    * against the keyed cover side pointJoin builds too
+    * (StareJoin.keyedCover: whole right rows exploded over their rungs),
     * so every inner join and every left join without an applied split
     * takes one shape, a single-exchange keyed join. A left join takes the
     * pair/join-back only in two cases, where a row has several candidate
@@ -253,8 +262,9 @@ object Skew {
     * or a side whose bounded probe holds every row, gives its level
     * histogram and row width with no further job; a larger side pays one
     * histogram job, unless a hot-cell split already counted its cells.
-    * Row ids are packed stable ids (StareJoin.withStableId): nothing
-    * stays cached after the query completes. */
+    * Its keyed rows are sized by keys x mean row width. Row ids are packed
+    * stable ids (StareJoin.withStableId): nothing stays cached after the
+    * query completes. */
   def shuffleJoin(left: DataFrame, leftSid: String, right: DataFrame, rightSids: String,
                   splitHot: Option[Long] = None, how: String = "inner",
                   knownMinLeftLevel: Option[Int] = None,
@@ -269,25 +279,9 @@ object Skew {
                                    side: CoverSide, splitHot: Option[Long], how: String,
                                    knownMinLeftLevel: Option[Int],
                                    wallClockGate: Boolean = true): DataFrame = {
-    // ids first, split-rewrite second: the assembled output carries the
-    // ORIGINAL cover rows; only the join-key derivation sees split cells
-    val rightRows = StareJoin.withStableId(right, "key_right")
     val splitRes = splitHot
-      .map(t => splitHotCellsWithSpec(left, leftSid, rightRows, rightSids, t,
+      .map(t => splitHotCellsWithSpec(left, leftSid, right, rightSids, t,
         knownMinLeftLevel = knownMinLeftLevel, wallClockGate = wallClockGate))
-    val rKeySource = splitRes.map(_.right).getOrElse(rightRows)
-    // did the rewrite actually run, or did the cost gate skip it?
-    val splitApplied = splitRes.exists(_.skipReason.isEmpty)
-    // CRITICAL: a split cover must NOT be re-compressed — compress
-    // canonically merges the four split siblings straight back into the
-    // hot parent, silently undoing the split. The rewrite already
-    // compresses its input and emits normalized disjoint cells; a
-    // gate-skipped cover is untouched and still needs the compress.
-    val cellsCol = if (splitApplied) col(rightSids) else coverCells(col(rightSids))
-    val rightKeyed = rKeySource
-      .select(col("key_right").as("__rid"), explode(cellsCol).as("__rs"))
-      .withColumn("__rk", stareClearToOwn(col("__rs")))
-      .select(col("__rid"), col("__rk"))
     val parents = splitRes.map(_.parents).getOrElse(Seq.empty)
     // level histogram of the keyed right cells: feeds the kept level set
     // AND the ladder's size; the split counted it, else the measured side
@@ -310,9 +304,15 @@ object Skew {
       knownMinLeftLevel.orElse(splitRes.map(_.minLeftLevel)), declared = knownMinLeftLevel.isDefined)
     val ladderKeys = ladder.size(levelHist)
     val laddered = ladderKeys <= Budgets.RebaseKeys
-    val rightKeyedFinal =
-      if (!laddered || levelHist.keys.forall(_ >= ladder.to)) rightKeyed // one rung per cell
-      else rightKeyed.withColumn("__rk", explode(ladder.rungs(array(col("__rk")))))
+    // over its budget, or with one rung per cell, a cell is its own key
+    val keying = Option.when(laddered && !levelHist.keys.forall(_ >= ladder.to))(ladder)
+    // The keyed cover side: whole right rows with ids, exploded over
+    // their keys. Only the keys see split cells; the rows keep their
+    // ORIGINAL covers. Its (rid, key) pairs are a projection of it.
+    val rightRows = StareJoin.withStableId(right, "key_right")
+    val keyed = StareJoin.keyedCover(rightRows,
+      splitRes.fold(coverCells(col(rightSids)))(_.cells), keying)
+    val pairs = keyed.select(col("key_right").as("__rid"), col(RKey))
     // ---- join-strategy choice (r6, guide §3.1): the keyed right side's
     // EXACT row count is the ladder's size, but its lineage passes
     // through withStableId's RDD round trip, which erases size stats, so
@@ -328,12 +328,21 @@ object Skew {
     // The right ROWS (payload plus the 8-byte key_right): exact when the
     // side is whole, else the probe's width times a row count bounded by
     // the keyed pair count (every non-empty cover row emits ≥ 1 pair;
-    // empty-cover rows are assumed rare — they carry no join work).
+    // empty-cover rows are assumed rare — they carry no join work). Only
+    // a whole side's rows are broadcast: a broadcast guard must not rest
+    // on that assumption.
     val rowBytesEst = side.rowBytes + 8
     val estRightRowsBytes =
       if (side.complete) rowBytesEst * side.rows.length
       else rowBytesEst * math.max(keyedRightRows, side.rows.length)
-    val rowsBroadcast = budgets.broadcastFits(estRightRowsBytes)
+    val rowsBroadcast = side.complete && budgets.broadcastFits(estRightRowsBytes)
+    // The keyed full-row side: each key carries its whole row (and its
+    // key), so a few rows with giant covers are small as rows but huge
+    // once keyed. Saturating, like Ladder.size.
+    val keyedRowBytesEst = side.rowBytes + 16
+    val estKeyedFullBytes =
+      if (keyedRightRows > Long.MaxValue / keyedRowBytesEst) Long.MaxValue
+      else keyedRightRows * keyedRowBytesEst
     // The base keys: the ladder key, or over its budget one key per
     // kept level. Split-child levels a base key serves get no gated
     // duplicate (a duplicate key value would double pairs); levels
@@ -408,15 +417,15 @@ object Skew {
         // direct left join would emit one spurious all-null row per
         // non-matching key (and with none, e.g. all-empty covers, there
         // is no key to join on).
-        val rightForKeyJoin =
-          if (budgets.broadcastFits(estKeyedBytes)) broadcast(rightKeyedFinal)
-          else if (budgets.shjFits(estKeyedBytes)) rightKeyedFinal.hint("shuffle_hash")
-          else rightKeyedFinal // sort-merge: spills gracefully for huge covers
+        val pairsForKeyJoin =
+          if (budgets.broadcastFits(estKeyedBytes)) broadcast(pairs)
+          else if (budgets.shjFits(estKeyedBytes)) pairs.hint("shuffle_hash")
+          else pairs // sort-merge: spills gracefully for huge covers
         val leftIds = StareJoin.withStableId(left, "__stare_lid")
-        val pairs = leftIds.select(col("__stare_lid"), candidateKeys(col(leftSid)).as("__lk"))
-          .join(rightForKeyJoin, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "inner")
+        val matched = leftIds.select(col("__stare_lid"), candidateKeys(col(leftSid)).as(LKey))
+          .join(pairsForKeyJoin, mixKey(col(LKey)) === mixKey(col(RKey)), "inner")
           .select(col("__stare_lid"), col("__rid"))
-        val joined = leftIds.join(pairs, Seq("__stare_lid"), "left").drop("__stare_lid")
+        val joined = leftIds.join(matched, Seq("__stare_lid"), "left").drop("__stare_lid")
         // the join-back sees the same stats-free lineage: without a
         // decision here it sort-merges the joined output
         val assembleRight =
@@ -436,42 +445,27 @@ object Skew {
         // non-matching key, while with one key a non-match is THE
         // unmatched row and a match has exact multiplicity (cells within
         // a cover row are disjoint, so one key matches at most one cell
-        // per right row). The split rewrite stays confined to the key
-        // derivation: rightKeyedFinal carries (rid, key) from the
-        // (possibly split/laddered) cells, the row columns come from the
-        // ORIGINAL rightRows.
-        StareJoin.withContract(left, leftSid, rightRows, "key_right") { (l, lSid, r, _) =>
-          val keyedL = l.withColumn("__lk",
+        // per right row).
+        // When both small sides fit, broadcast the (rid, key) pairs and
+        // the rows separately and probe them in turn, so the big side is
+        // never shuffled and the builds hold pairs + rows, not the pairs
+        // x payload product (a few rows of giant covers would repeat each
+        // whole cover once per cell). Otherwise the left side joins the
+        // keyed full-row side directly.
+        val separate = rowsBroadcast && budgets.broadcastFits(estKeyedBytes)
+        StareJoin.withContract(left, leftSid, if (separate) rightRows else keyed, "key_right") { (l, lSid, r, _) =>
+          val keyedL = l.withColumn(LKey,
             if (how == "inner") candidateKeys(col(lSid)) else keyExprsFor(col(lSid)).head)
-          val onKey = StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk"))
-          if (rowsBroadcast && budgets.broadcastFits(estKeyedBytes))
-            // both small sides fit: broadcast the (rid, key) pairs and the
-            // rows separately and probe them in turn, so the big side is
-            // never shuffled and the builds hold pairs + rows, not the
-            // pairs x payload product (a few rows of giant covers would
-            // repeat each whole cover once per cell)
-            keyedL.join(broadcast(rightKeyedFinal), onKey, how)
+          val onKey = mixKey(col(LKey)) === mixKey(col(RKey))
+          if (separate)
+            keyedL.join(broadcast(pairs), onKey, how)
               .join(broadcast(r), col("__rid") === col("key_right"), how)
-              .drop("__lk", "__rk", "__rid")
-          else {
-            // full-row keyed side from a small x small build (broadcast
-            // the rows when they fit: two exchanges saved at fixed cost)
-            val rightFull = rightKeyedFinal
-              .join(if (rowsBroadcast) broadcast(r) else r.hint("shuffle_hash"),
-                col("__rid") === col("key_right"), "inner")
-              .drop("__rid")
-            // It has keyedRightRows rows, each carrying the whole right
-            // payload: a few rows with giant covers are small as rows but
-            // huge once keyed. Saturating, like Ladder.size.
-            val estRightFullBytes =
-              if (keyedRightRows > Long.MaxValue / rowBytesEst) Long.MaxValue
-              else keyedRightRows * rowBytesEst
-            keyedL
-              .join(if (budgets.shjFits(estRightFullBytes)) rightFull.hint("shuffle_hash")
-                    else rightFull, // sort-merge: spills gracefully over the cap
-                onKey, how)
-              .drop("__lk", "__rk")
-          }
+              .drop(LKey, RKey, "__rid")
+          else
+            keyedL.join(if (budgets.shjFits(estKeyedFullBytes)) r.hint("shuffle_hash")
+                        else r, // sort-merge: spills gracefully over the cap
+              onKey, how)
+              .drop(LKey, RKey)
         }
     }
   }

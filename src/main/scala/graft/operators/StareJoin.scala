@@ -24,44 +24,35 @@ import graft.functions.StareFunctions._
   * Point-in-cover joins key every left row ONCE, by one rule both
   * operators share ([[Ladder]]): the row's ancestor at the finest cover
   * level or its own level, whichever is coarser, against every cover
-  * cell replicated to each level from its own to the finest. `pointJoin`
-  * collects the small cover side and broadcasts that full-row
-  * dictionary, so the join is a single broadcast hash probe. Any input
-  * the dictionary cannot serve (too many rungs or bytes, too many cover
-  * rows to collect) goes to `Skew.shuffleJoin`, the keyed equi-join
-  * that serves every input.
+  * cell replicated to each level from its own to the finest. Both
+  * derive their keyed cover side, whole right rows exploded over their
+  * rungs, from one helper ([[keyedCover]]). `pointJoin` collects the
+  * small cover side and broadcasts that full-row dictionary, so the
+  * join is a single broadcast hash probe; a side or dictionary over its
+  * one budget goes to `Skew.shuffleJoin`, which serves every input.
   * Cover-vs-cover joins (`join`) explode both sides into ancestor keys
   * per level, in both containment directions, and deduplicate pairs
-  * before row assembly.
-  * Every entry point sizes its cover side once, with [[CoverSide]]:
-  * row count, row width and cell-level histogram, read on the driver
-  * for a driver-resident or small side.
+  * before row assembly. Every entry point sizes its cover side once,
+  * with [[CoverSide]]: row count, row width and cell-level histogram,
+  * read on the driver for a driver-resident or small side, and for a
+  * whole side the exact bytes of its keyed rows.
   */
 object StareJoin {
 
-  private final val LKey = "__stare_lkey"
-  private final val RKey = "__stare_rkey"
+  private[operators] final val LKey = "__stare_lkey"
+  private[operators] final val RKey = "__stare_rkey"
 
   /** Bijective low-bit mix applied to BOTH sides of every sid-derived
-    * long equi-join key (r6, the single largest headline-join cost):
-    * Spark's LongToUnsafeRowMap slots a key by
-    * ((key * 0x9E3779B9) ^ (product >> 32)) & mask — a 32-bit golden
-    * multiply. A cover-level key is (locationPrefix << (5 + 2*(27-L)))
-    * | L: at L=6 the low 47 bits are IDENTICAL across every key, so the
-    * product's low 32 bits are constant and the varying bits land at
-    * positions 15-31 — masked out for any map under ~4B slots. Every
-    * level-6 cover cell therefore hashed into ONE linear-probe cluster,
-    * and each of the 16M bench probes walked a ~7k-entry chain:
-    * measured 160 core-seconds (~10 core-µs/row) against 0.28 s for an
-    * equal-cardinality dense-key join; fixed, the probe is ~40x cheaper
-    * (OPTIMIZATION_r06.md).
-    *
-    * key ^ (key >>> 31) is invertible (xorshift), null-preserving, and
-    * moves every cover level's meaningful bits (positions 5..61) into
-    * the golden multiply's low 32 bits, so equality — and hence the
-    * join's match set — is EXACTLY preserved while slots spread. Row-id
-    * join-backs (packed partition<<40|pos ids) already vary in their
-    * low bits and stay unmixed. */
+    * long equi-join key. Spark's LongToUnsafeRowMap slots a key by a
+    * 32-bit golden multiply, and a level-L key is
+    * (locationPrefix << (5 + 2*(27-L))) | L: at L=6 the low 47 bits are
+    * identical across keys, so every level-6 cell hashed into ONE
+    * linear-probe cluster (160 core-s against 0.28 s for a dense-key
+    * join of equal cardinality, OPTIMIZATION_r06.md). key ^ (key >>> 31)
+    * is invertible and null-preserving and moves the meaningful bits
+    * (5..61) into the multiply's low 32 bits, so the match set is
+    * EXACTLY preserved while slots spread. Packed row ids already vary
+    * in their low bits and stay unmixed. */
   private[operators] def mixKey(c: Column): Column =
     c.bitwiseXOR(shiftrightunsigned(c, 31))
 
@@ -77,13 +68,12 @@ object StareJoin {
   }
 
   private[graft] object Budgets {
-    /** rungs of pointJoin's ladder dictionary, summed over rows: ~64 MB
-      * as bare (rid, key) pairs */
-    final val DictKeys = 4L << 20
-    /** a dictionary carrying full right rows: rungs x row width */
+    /** pointJoin's one budget: the bytes of its full-row dictionary,
+      * rungs x shipped width summed over rows ([[CoverSide.keyedBytes]]),
+      * and of the cover rows it collects to build it. Every dictionary
+      * row carries a non-empty cover, so it is at least 64 bytes: the
+      * budget also bounds the rungs, to 4M. */
     final val FullRowDictBytes = 256L << 20
-    /** cover rows pointJoin collects to the driver */
-    final val CollectBytes = 512L << 20
     /** rows of the one bounded probe that measures a cover side
       * ([[CoverSide]]); also the most rows per side of a driver-local
       * cover x cover join */
@@ -114,23 +104,39 @@ object StareJoin {
   /** One cover side, measured once: how big it is and whether all of it
     * is on the driver. Every join entry point sizes its cover side here.
     * `rows` holds every row of the side when `complete`, else the
-    * bounded probe's rows; `rowBytes` is their rough width. */
+    * bounded probe's rows; `rowBytes` is their mean width, the proxy
+    * for a side that is not whole. A whole side is measured row by row
+    * (compressed cells, shipped width), so any ladder's bytes over it
+    * are exact ([[keyedBytes]]). */
   private[operators] final class CoverSide(df: DataFrame, sidsCol: String,
                                            val rows: Array[Row], val complete: Boolean) {
-    val rowBytes: Long = approxRowBytes(rows)
+    lazy val rowBytes: Long = approxRowBytes(rows)
+
+    /** each held row's compressed cover cells; a null cover is empty */
+    private lazy val cells: Array[Array[Long]] = {
+      val i = df.schema.fieldIndex(sidsCol)
+      rows.map(r => if (r.isNullAt(i)) Array.emptyLongArray else Sid.compress(r.getSeq[Long](i).toArray))
+    }
 
     /** (cell level -> cell count) of the compressed covers, summed over
       * rows: counted on the driver when the side is complete, else one
       * aggregate job. */
     lazy val levelHist: Map[Int, Long] =
-      if (complete) {
-        val i = df.schema.fieldIndex(sidsCol)
-        rows.iterator.flatMap(r =>
-          if (r.isNullAt(i)) Iterator.empty else Sid.compress(r.getSeq[Long](i).toArray).iterator)
-          .map(Sid.level).toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
-      } else
+      if (complete) cells.iterator.flatten.map(Sid.level).toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
+      else
         df.select(explode(coverCells(col(sidsCol))).as("c")).groupBy(stareLevel(col("c"))).count()
           .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+
+    /** Bytes of the whole side keyed by `ladder` ([[keyedCover]]) as
+      * shipped: each rung repeats its whole row, so it is the sum over
+      * rows of rungs(row) x keyedRowBytes(row). Saturates. */
+    def keyedBytes(ladder: Ladder): Long = {
+      require(complete, "keyedBytes measures a whole side")
+      ladder.size(rows.iterator.zip(cells).flatMap { case (r, cs) =>
+        val width = keyedRowBytes(r)
+        cs.iterator.map(c => Sid.level(c) -> width)
+      })
+    }
   }
 
   private[operators] object CoverSide {
@@ -185,10 +191,11 @@ object StareJoin {
     /** The rungs of an array of non-nested cells. */
     def rungs(cells: Column): Column = ladderUdf(cells, lit(from), lit(to))
 
-    /** Rungs of a (level -> cell count) histogram; saturates at
-      * Long.MaxValue instead of overflowing. */
-    def size(cellsByLevel: Iterable[(Int, Long)]): Long =
-      cellsByLevel.foldLeft(0L) { case (acc, (l, n)) =>
+    /** Rungs of a (level -> cell count) histogram, each count possibly
+      * weighted (bytes per cell); saturates at Long.MaxValue instead of
+      * overflowing. */
+    def size(cellsByLevel: IterableOnce[(Int, Long)]): Long =
+      cellsByLevel.iterator.foldLeft(0L) { case (acc, (l, n)) =>
         val r = Sid.ladderRungs(l, from, to)
         if (n > (Long.MaxValue - acc) / r) Long.MaxValue else acc + n * r
       }
@@ -203,12 +210,22 @@ object StareJoin {
 
   private val ladderUdf = udf((cells: Seq[Long], from: Int, to: Int) => Sid.ladder(cells.toArray, from, to))
 
+  /** The keyed cover side of both point-in-cover operators: `rows`,
+    * which carry `key_right`, exploded over the rungs of their `cells`
+    * (non-nested, normalized cells), or over the cells themselves when
+    * `ladder` is None (each cell is one rung, or the ladder is over
+    * `RebaseKeys`). Each output row is a whole right row and its key,
+    * `RKey`; a row with no cells emits nothing. */
+  private[operators] def keyedCover(rows: DataFrame, cells: Column, ladder: Option[Ladder]): DataFrame =
+    rows.withColumn(RKey, explode(ladder.fold(cells)(_.rungs(cells))))
+
   /** The output contract every join shares (tools/stare_join.py,
     * tests/test_join.py:77-81): columns both sides carry get `_left` /
     * `_right` suffixes, and the result holds the left columns, then
     * `key_right`, then the right columns (a join-back's row id `__rid`
-    * is not one of them). `join` receives both renamed sides with the
-    * renamed names of the columns it joins on. */
+    * is not one of them, nor a keyed side's `RKey`). `join` receives
+    * both renamed sides with the renamed names of the columns it joins
+    * on. */
   private[operators] def withContract(left: DataFrame, leftOn: String,
                                       rightRows: DataFrame, rightOn: String)(
       join: (DataFrame, String, DataFrame, String) => DataFrame): DataFrame = {
@@ -219,7 +236,7 @@ object StareJoin {
     val l = suffixed(left, "_left")
     val r = suffixed(rightRows, "_right")
     val out = join(l, renamed(leftOn, "_left"), r, renamed(rightOn, "_right"))
-    val ordered = l.columns.filter(_ != "__rid") ++ ("key_right" +: r.columns.filter(_ != "key_right"))
+    val ordered = l.columns.filter(_ != "__rid") ++ ("key_right" +: r.columns.filterNot(Set("key_right", RKey)))
     out.select(ordered.toIndexedSeq.map(out(_)): _*)
   }
 
@@ -241,11 +258,16 @@ object StareJoin {
     * is collected, every cover cell is expanded to its [[Ladder]] rungs,
     * and that full-row dictionary is broadcast, so each point derives
     * ONE key and the big side is probed once, never exploded or
-    * shuffled. Inputs the dictionary cannot serve go to
-    * `Skew.shuffleJoin`, which has the same output contract (its
-    * `key_right` is a packed row id instead of 0..n-1): a cover side
-    * over the collect caps, and a dictionary over its key or byte
-    * budget. Left sids of any level mix take the dictionary.
+    * shuffled. Left sids of any level mix take the dictionary.
+    *
+    * One budget, `Budgets.FullRowDictBytes`, makes the one choice. The
+    * side is collected when it is whole on the driver ([[CoverSide]]) or
+    * when its row count times the probe's mean width fits; the
+    * dictionary is taken when its exact bytes fit, summed per row as
+    * rungs(row) x width(row) ([[CoverSide.keyedBytes]]), so one fat row
+    * with many rungs cannot hide behind a narrow mean. Otherwise the
+    * join is `Skew.shuffleJoin`'s (same output contract; `key_right` is
+    * a packed row id), over the collected rows when there are any.
     *
     * Semantics: only the cover-contains-point direction is implemented.
     * A left sid COARSER than a cover cell never matches it (use join()
@@ -263,82 +285,59 @@ object StareJoin {
     * headline join throughput). Without it the rungs start at the
     * coarsest cover level; no job measures the left side. */
   def pointJoin(left: DataFrame, leftSid: String, right: DataFrame, rightSids: String,
-                how: String = "left", knownMinLeftLevel: Option[Int] = None,
-                maxBroadcastRows: Int = 1 << 20): DataFrame = {
+                how: String = "left", knownMinLeftLevel: Option[Int] = None): DataFrame = {
     requireHow(how)
-    // Guard the by-design assumption instead of trusting the caller: the
-    // cover side is about to be collect()ed to the driver. Its measurement
-    // (CoverSide) answers the common case (a few rows, or a LocalRelation)
-    // outright AND gives the byte width; bigger sides pay one count
-    // before the full collect. Both a row and a byte cap apply: fat
-    // payload rows must not reach the driver either; over a cap we
-    // delegate to the shuffle-path join. The right frame is persisted
-    // ACROSS the guard so probe + count + collect evaluate each partition
-    // of the right plan at most ~once, and only when the caller hasn't:
-    // unpersisting a caller's own cache would silently DROP it (KnnJoin
-    // persists its reusable sides across rounds).
+    // The cover side is about to be collect()ed: its measurement answers
+    // the common case (a few rows, or a LocalRelation) outright, and a
+    // bigger side pays one count first. The right frame is persisted
+    // ACROSS the guard and any delegation's measurement, so each partition
+    // of the right plan is evaluated ~once, and only when the caller
+    // hasn't: unpersisting a caller's own cache would silently DROP it
+    // (KnnJoin persists its reusable sides across rounds).
     val spark = left.sparkSession
     val weCached = right.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
       !org.apache.spark.sql.graft.shim.isLocalRelation(right)
     if (weCached) right.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val side: CoverSide =
-      try {
-        val measured = CoverSide.measure(right, rightSids)
-        val n = if (measured.complete) measured.rows.length.toLong else right.count()
-        if (n > maxBroadcastRows || measured.rowBytes * n > Budgets.CollectBytes)
-          return Skew.keyedJoin(left, leftSid, right, rightSids, measured, splitHot = None,
-            how = how, knownMinLeftLevel = knownMinLeftLevel)
-        if (measured.complete) measured else new CoverSide(right, rightSids, right.collect(), complete = true)
-      } finally if (weCached) right.unpersist(false)
-    // Ladder dictionary: every cover cell as its rungs lets each point
-    // probe with exactly ONE key, whatever the level mix on either side.
-    // For how='left' a point matching nothing keeps one row with
-    // all-null right columns — exactly stare_join's left semantics. All-
-    // empty covers expand to an empty dictionary (inner: no rows; left:
-    // all null-padded). Its size is summed over ROWS, not distinct keys
-    // (the side's level histogram, counted on the driver): the
-    // dictionary explodes the cover per right row, so duplicate covers
-    // multiply the broadcast (a distinct-key budget admitted 500k rows
-    // sharing one cell into a plan that would expand each of them).
-    val ladder = Ladder(side.levelHist.keys, side.levelHist.keys.maxOption.getOrElse(0),
-      knownMinLeftLevel, declared = knownMinLeftLevel.isDefined)
-    val dictKeys = ladder.size(side.levelHist)
-    // A BYTE cap on dictKeys x measured-row-width keeps a fat cover side
-    // (wide payload columns, big sid arrays) duplicated per rung from
-    // building a multi-GB broadcast.
-    if (dictKeys <= Budgets.DictKeys && dictKeys * side.rowBytes <= Budgets.FullRowDictBytes) {
-      // The cover side fits in a broadcast, so assign row ids
-      // on the driver: deterministic across every reuse of the frame (no
-      // monotonically_increasing_id re-evaluation hazard) and no lingering
-      // persist() that pressures the executor cache across queries.
-      val rightRows = spark.createDataFrame(java.util.Arrays.asList(
-        side.rows.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }: _*),
-        right.schema.add("key_right", LongType, nullable = false))
-      // The dictionary carries the right ROW COLUMNS directly, so the
-      // probe is the ONLY pass over the big side — routing just row ids
-      // and re-joining in assemble() cost a second full broadcast-probe
-      // over every left row.
-      withContract(left, leftSid, rightRows, rightSids) { (l, lSid, r, rSids) =>
-        l.withColumn(LKey, ladder.key(col(lSid)))
-          .join(broadcast(r.withColumn(RKey, explode(ladder.rungs(coverCells(col(rSids)))))),
-            mixKey(col(LKey)) === mixKey(col(RKey)), how)
-          .drop(LKey, RKey)
+    try {
+      val probed = CoverSide.measure(right, rightSids)
+      val side =
+        if (probed.complete || right.count() * probed.rowBytes > Budgets.FullRowDictBytes) probed
+        else new CoverSide(right, rightSids, right.collect(), complete = true)
+      // Ladder dictionary: each point probes with exactly ONE key; for
+      // how='left' a point matching nothing keeps one all-null right row,
+      // and all-empty covers give an empty dictionary. Its bytes are
+      // summed over ROWS, not distinct keys: duplicate covers multiply
+      // the broadcast.
+      lazy val ladder = Ladder(side.levelHist.keys, side.levelHist.keys.maxOption.getOrElse(0),
+        knownMinLeftLevel, declared = knownMinLeftLevel.isDefined)
+      if (side.complete && side.keyedBytes(ladder) <= Budgets.FullRowDictBytes) {
+        // row ids assigned on the driver: deterministic across every reuse
+        // of the frame, and no lingering persist()
+        val rightRows = spark.createDataFrame(java.util.Arrays.asList(
+          side.rows.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }: _*),
+          right.schema.add("key_right", LongType, nullable = false))
+        // the dictionary carries the right ROW COLUMNS, so the probe is the
+        // ONLY pass over the big side (no row-id join-back)
+        withContract(left, leftSid, rightRows, rightSids) { (l, lSid, r, rSids) =>
+          l.withColumn(LKey, ladder.key(col(lSid)))
+            .join(broadcast(keyedCover(r, coverCells(col(rSids)), Some(ladder))),
+              mixKey(col(LKey)) === mixKey(col(RKey)), how)
+            .drop(LKey, RKey)
+        }
+      } else {
+        // the collected rows as a local frame: the shuffle path does not
+        // evaluate the right plan again, nor measure the same rows again
+        val rows = if (side.complete) spark.createDataFrame(java.util.Arrays.asList(side.rows: _*), right.schema)
+                   else right
+        Skew.keyedJoin(left, leftSid, rows, rightSids, side, splitHot = None,
+          how = how, knownMinLeftLevel = knownMinLeftLevel)
       }
-    } else {
-      // the collected rows as a local frame: the shuffle path does not
-      // evaluate the right plan again, nor measure the same rows again
-      val local = spark.createDataFrame(java.util.Arrays.asList(side.rows: _*), right.schema)
-      Skew.keyedJoin(left, leftSid, local, rightSids, side, splitHot = None,
-        how = how, knownMinLeftLevel = knownMinLeftLevel)
-    }
+    } finally if (weCached) right.unpersist(false)
   }
 
-  /** Rough in-memory width of a collected row (bytes) — drives the
-    * dictionary-plan byte budget. Samples <= ~100 rows evenly. Array
-    * columns arrive as mutable ArraySeqs, hence the general collection
-    * types. */
-  private[graft] def approxRowBytes(rows: Array[Row]): Long = {
-    if (rows.isEmpty) return 16L
+  /** Rough in-memory width of a collected row (bytes). Array columns
+    * arrive as mutable ArraySeqs, hence the general collection types. */
+  private[graft] def rowBytes(row: Row): Long = {
     def sz(v: Any): Long = v match {
       case null          => 8L
       case s: String     => 40L + 2L * s.length
@@ -348,32 +347,30 @@ object StareJoin {
       case r: Row        => 16L + r.toSeq.iterator.map(sz).sum
       case _             => 8L
     }
-    val step = math.max(1, rows.length / 100)
-    val sampled = rows.indices.by(step).map(rows(_))
-    math.max(16L, sampled.iterator.map(r => 16L + r.toSeq.iterator.map(sz).sum).sum / sampled.length)
+    sz(row)
   }
 
-  /** Stable, deterministic row ids, packed (partition << 40 | pos):
-    * unlike monotonically_increasing_id (whose values can change if a
-    * cached frame is recomputed under a different physical layout) the
-    * assignment is a pure function of the partitioned input lineage, so
-    * the frame can be reused across joins with NO persist — cache
-    * hygiene with correctness intact. Unlike content-hash ids there are
-    * no birthday collisions (~rows²/2^65 silently merged row identities
-    * at 10^12 rows, i.e. wrong join multiplicity). Unlike
-    * rdd.zipWithIndex it needs ZERO extra jobs and stays on InternalRows
-    * (shim.withPackedIdColumn). Ids are unique and stable but not
-    * contiguous — no caller depends on contiguity.
+  /** Width of a cover row as a keyed side ships it: the row, its
+    * `key_right` and its key. */
+  private[graft] def keyedRowBytes(row: Row): Long = rowBytes(row) + 16
+
+  /** Mean [[rowBytes]] of the rows, every row counted. */
+  private[graft] def approxRowBytes(rows: Array[Row]): Long =
+    if (rows.isEmpty) 16L else rows.iterator.map(rowBytes).sum / rows.length
+
+  /** Stable, deterministic row ids, packed (partition << 40 | pos): a
+    * pure function of the partitioned input lineage, so the frame can be
+    * reused across joins with NO persist (monotonically_increasing_id
+    * can change when a frame is recomputed), with no birthday collisions
+    * (content-hash ids) and ZERO extra jobs (rdd.zipWithIndex). Ids are
+    * unique and stable but not contiguous.
     *
-    * Order stabilization (ADVICE r5): packed ids are a function of
-    * intra-partition row ORDER, which an exchange-bearing lineage does
-    * not guarantee across the two subtrees that evaluate the id frame
-    * (pair derivation + join-back). When the optimized plan carries an
-    * exchange, rows are first sorted WITHIN partitions by every
-    * orderable column — no extra shuffle, no cache, and the id becomes
-    * a pure function of partition CONTENT (hash partitioning fixes
-    * content; only arrival order was unstable). Scan/narrow/cached
-    * lineages — every hot bench path — skip the sort entirely. */
+    * Packed ids depend on intra-partition row ORDER, which an
+    * exchange-bearing lineage does not guarantee across the subtrees that
+    * evaluate the id frame. When the optimized plan carries an exchange,
+    * rows are first sorted WITHIN partitions by every orderable column
+    * (no shuffle, no cache), so the id is a function of partition
+    * CONTENT. Scan/narrow/cached lineages skip the sort. */
   private[operators] def withStableId(df: DataFrame, name: String): DataFrame = {
     val shim = org.apache.spark.sql.graft.shim
     val stabilized =

@@ -253,13 +253,68 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "region").collect()
         .map(r => (r.getLong(0), Option(r.getString(1)).getOrElse("__null"))).toSet
+    // 3M more empty-cover rows, computed by Spark: count x probe width
+    // is over the dictionary budget, so the side must take the shuffle
+    // path, never collect()
+    val padding = spark.range(3000000L).select(concat(lit("pad"), col("id")).as("region"),
+      typedLit(Seq.empty[Long]).as("sids"))
+    val padded = covers.unionByName(padding)
+    val width = graft.operators.StareJoin.approxRowBytes(padded.limit(
+      graft.operators.StareJoin.Budgets.ProbeRows + 1).collect())
+    assert(3000000L * width > graft.operators.StareJoin.Budgets.FullRowDictBytes)
     for (how <- Seq("inner", "left")) {
       val direct = graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = how)
-      // cap of 2 rows < 3 cover rows: must take the shuffle path, never collect()
-      val guarded = graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = how,
-        maxBroadcastRows = 2)
+      val guarded = graft.operators.StareJoin.pointJoin(pts, "sid", padded, "sids", how = how)
+      // the padded rows reach the join with packed stable ids (an RDD
+      // scan), not as a collected local dictionary
+      assert(guarded.queryExecution.sparkPlan.collect {
+        case r: org.apache.spark.sql.execution.RDDScanExec => r }.nonEmpty,
+        s"the padded side was collected for how=$how")
       assert(guarded.columns.toSeq === direct.columns.toSeq, s"contract drift for how=$how")
       assert(pairs(guarded) === pairs(direct), s"result drift for how=$how")
+    }
+  }
+
+  test("a dictionary whose rungs sit in its widest row is sized per row and delegates") {
+    import spark.implicits._
+    import graft.operators.StareJoin
+    val r = new scala.util.Random(29)
+    val pts = Seq.tabulate(300)(i => (i.toLong, r.nextDouble() * 180.0 - 90.0, r.nextDouble() * 360.0 - 180.0))
+      .toDF("id", "lat", "lon").withColumn("sid", stareSid(col("lat"), col("lon"), 26))
+    val sids = pts.select("id", "sid").collect().map(p => (p.getLong(0), p.getLong(1)))
+    // 999 narrow rows, each the level-6 cell of one of the first 250
+    // points; then, last, one row of 2,048 level-6 cells (one child of
+    // every level-5 trixel of two roots, so nothing compresses) with a
+    // ~140 KB payload
+    def cell6(sid: Long) = (sid & Sid.clearMask(6)) | 6L
+    val narrow = (0 until 999).map(i => (s"n$i", Seq(cell6(sids(i % 250)._2)), ""))
+    val wideCells = Seq((10.0, 10.0), (-40.0, -60.0)).flatMap { case (lat, lon) =>
+      Sid.expandToLevel(Array(Sid.clearToLevel(Htm.latLonToSid(lat, lon, 0))), 6).grouped(4).map(_.head) }
+    assert(wideCells.length === 2048 && Sid.compress(wideCells.toArray).length === 2048)
+    val covers = (narrow :+ (("wide", wideCells, "x" * 70000))).toDF("region", "sids", "payload")
+    // every rung of the wide row repeats the whole row: summed per row the
+    // dictionary is over its budget, while the rungs times a mean width
+    // look far under it
+    val rows = covers.collect()
+    val budget = StareJoin.Budgets.FullRowDictBytes
+    assert(2048L * StareJoin.keyedRowBytes(rows.last) > budget)
+    assert((999L + 2048L) * StareJoin.approxRowBytes(rows) < budget / 100)
+    val runs = rows.map(row => row.getString(0) -> Sid.mergedIntervals(row.getSeq[Long](1).toArray))
+    val inner = for ((id, sid) <- sids; (n, rr) <- runs if Sid.anyIntersects(Array(sid), rr)) yield (id, n)
+    val unmatched = sids.map(_._1).filterNot(inner.map(_._1).toSet).map(_ -> "__null")
+    assert(inner.exists(_._2 == "wide") && unmatched.nonEmpty)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "region").collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)).getOrElse("__null"))).toSet
+    for (how <- Seq("inner", "left")) {
+      val out = StareJoin.pointJoin(pts, "sid", covers, "sids", how = how)
+      // delegated, checked on the plan before any action: the dictionary
+      // is the only plan with a single join
+      val joins = out.queryExecution.sparkPlan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+      assert(joins.length > 1, s"the per-row over-budget dictionary was not delegated for how=$how")
+      val brute = inner.toSet ++ (if (how == "left") unmatched else Array.empty[(Long, String)])
+      assert(pairs(out) === brute, s"how=$how")
     }
   }
 
@@ -811,8 +866,16 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         val bhj = plan.collect { case j: BroadcastHashJoinExec if j.joinType == probeType && probes(j) => j }
         assert(bhj.forall { j =>
           val built = j.right.output.map(_.name).toSet
-          !(built.contains("__rk") && built.contains("sids"))
+          !(built.contains("__stare_rkey") && built.contains("sids"))
         }, s"the keyed full-row side must not be broadcast:\n$plan")
+        // the shuffled strategies join the point side to the keyed
+        // full-row side directly: no (rid, key) pairs joined back onto
+        // the rows by row id
+        if (expect != "broadcast") {
+          val joinBack = plan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+            if (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name)).toSet == Set("__rid", "key_right") => j }
+          assert(joinBack.isEmpty, s"the keyed side is joined back onto the rows:\n$plan")
+        }
         val shj = plan.collect { case j: ShuffledHashJoinExec if j.joinType == probeType && probes(j) => j }
         val smj = plan.collect { case j: SortMergeJoinExec if j.joinType == probeType && probes(j) => j }
         expect match {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -145,6 +145,17 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     cells.map(c => Sid.ladderRungs(Sid.level(c), levels.min, levels.max)).sum
   }
 
+  /** Bytes of pointJoin's dictionary over `covers` (collected as
+    * `rows`), exploded on the driver: each row's rungs, from the coarsest
+    * to the finest cover level, times the row's width as shipped. */
+  private def dictionaryBytes(covers: Seq[(String, Seq[Long])], rows: Array[Row]): Long = {
+    val cells = covers.map(c => Sid.compress(c._2.toArray))
+    val levels = cells.flatten.map(Sid.level)
+    cells.zip(rows).map { case (cs, row) =>
+      cs.map(c => Sid.ladderRungs(Sid.level(c), levels.min, levels.max)).sum * StareJoin.keyedRowBytes(row)
+    }.sum
+  }
+
   /** join() took its driver-local path: the answer is a LocalRelation
     * and the plan holds no join. */
   private def localJoinRoute(df: DataFrame): Boolean =
@@ -189,10 +200,9 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         val pointDf = StareJoin.pointJoin(leftDf, "sid", rightDf, "sids", how = how)
         assert(observedPairs(pointDf) === expContains, s"pointJoin vs brute — $clue")
         // the dictionary serves every left level mix: it is taken iff
-        // the ladder fits the budgets
+        // its rungs x row width, summed over rows, fits the budget
         val rungs = ladderRungs(covers)
-        val dictionary = rungs <= StareJoin.Budgets.DictKeys &&
-          rungs * StareJoin.approxRowBytes(rightDf.collect()) <= StareJoin.Budgets.FullRowDictBytes
+        val dictionary = dictionaryBytes(covers, rightDf.collect()) <= StareJoin.Budgets.FullRowDictBytes
         assert(dictionaryRoute(pointDf) === dictionary, s"pointJoin route — $clue")
         if (dictionary) dictionaries += 1
         // without a split, a left shuffleJoin keys once and never plans
