@@ -434,7 +434,7 @@ object Bench {
       val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
         maxRowsPerCell = threshold, knownMinLeftLevel = Some(26))
       val gate = spec.skipReason.map(r => s"skipped: $r").getOrElse(
-        s"engaged: ${spec.parents.length} parents -> levels ${spec.parents.flatMap(_.childLevels).distinct.sorted.mkString("/")}")
+        s"engaged: ${spec.hot.length} hot keys -> level ${spec.deep}")
       run(None) // warm-up
       // Alternating rep pairs with CONTENTION-ADAPTIVE repetition: the
       // host carries external load storms (observed: loadavg 7-17 with

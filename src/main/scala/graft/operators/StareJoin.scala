@@ -127,6 +127,20 @@ object StareJoin {
         df.select(explode(coverCells(col(sidsCol))).as("c")).groupBy(stareLevel(col("c"))).count()
           .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
 
+    /** The hot rungs of a split `ladder` summed over rows, i.e. its hot
+      * keys' occurrences in the compressed covers: counted on the driver
+      * when the side is complete, else one aggregate job. */
+    def hotRungs(ladder: Ladder): Long = {
+      val hot = ladder.hot
+      if (hot.isEmpty) 0L
+      else if (complete) cells.iterator.flatten.map(Sid.keysWithin(hot, _)).sum
+      else {
+        val within = udf((c: Long) => Sid.keysWithin(hot, c))
+        df.select(explode(coverCells(col(sidsCol))).as("c"))
+          .agg(coalesce(sum(within(col("c"))), lit(0L))).head().getLong(0)
+      }
+    }
+
     /** Bytes of the whole side keyed by `ladder` ([[keyedCover]]) as
       * shipped: each rung repeats its whole row, so it is the sum over
       * rows of rungs(row) x keyedRowBytes(row). Saturates. */
@@ -173,39 +187,61 @@ object StareJoin {
     * than `from` gets no key, and under the containment contract it
     * matches nothing anyway. The rungs add at most 1/3 to a uniform
     * expansion to `to`; with a known minimum at or above `to` there is
-    * one rung per cell, the uniform expansion itself. */
-  private[operators] final case class Ladder(from: Int, to: Int, declared: Boolean) {
+    * one rung per cell, the uniform expansion itself.
+    *
+    * A hot-cell split ([[Skew]]) is a deeper ladder inside `hot`, sorted
+    * level-`to` keys: a row whose level-`to` key is hot keys at
+    * min(level(sid), `deep`) instead, and each hot rung is replaced by
+    * its own rungs down to `deep`, so the rule above holds unchanged and
+    * every row still has one key. */
+  private[operators] final case class Ladder(from: Int, to: Int, declared: Boolean,
+                                             hot: Array[Long] = Array.emptyLongArray, deep: Int = 0) {
     /** The left key. With a DECLARED minimum level at or above `to` the
       * per-row guard drops at plan time and the key is marked
       * KnownNotNull (the caller's declared level also implies non-null
       * sids): otherwise the planner infers an IsNotNull(key) filter that
       * evaluates the key, i.e. a second encode per row when the sid is
       * an unevaluated encode. */
-    def key(sid: Column): Column =
-      if (declared && from >= to) knownNotNull(stareClearTo(sid, to))
-      else {
-        val atTo = when(stareLevel(sid) >= to, stareClearTo(sid, to))
-        if (from >= to) atTo else atTo.when(stareLevel(sid) >= from, stareClearToOwn(sid))
-      }
+    def key(sid: Column): Column = {
+      val unsplit =
+        if (declared && from >= to) knownNotNull(stareClearTo(sid, to))
+        else {
+          val atTo = when(stareLevel(sid) >= to, stareClearTo(sid, to))
+          if (from >= to) atTo else atTo.when(stareLevel(sid) >= from, stareClearToOwn(sid))
+        }
+      if (hot.isEmpty) unsplit
+      else when(unsplit.isin(hot.toIndexedSeq: _*),
+        when(stareLevel(sid) >= deep, stareClearTo(sid, deep)).otherwise(stareClearToOwn(sid)))
+        .otherwise(unsplit)
+    }
 
     /** The rungs of an array of non-nested cells. */
-    def rungs(cells: Column): Column = ladderUdf(cells, lit(from), lit(to))
+    def rungs(cells: Column): Column =
+      if (hot.isEmpty) ladderUdf(cells, lit(from), lit(to))
+      else {
+        val (f, t, h, d) = (from, to, hot, deep)
+        udf((cs: Seq[Long]) => Sid.ladder(cs.toArray, f, t, h, d)).apply(cells)
+      }
 
     /** Rungs of a (level -> cell count) histogram, each count possibly
-      * weighted (bytes per cell); saturates at Long.MaxValue instead of
-      * overflowing. */
-    def size(cellsByLevel: IterableOnce[(Int, Long)]): Long =
-      cellsByLevel.iterator.foldLeft(0L) { case (acc, (l, n)) =>
-        val r = Sid.ladderRungs(l, from, to)
-        if (n > (Long.MaxValue - acc) / r) Long.MaxValue else acc + n * r
-      }
+      * weighted (bytes per cell), plus `hotRungs` hot keys' own deeper
+      * rungs; saturates at Long.MaxValue instead of overflowing. */
+    def size(cellsByLevel: IterableOnce[(Int, Long)], hotRungs: Long = 0L): Long = {
+      val deeper = if (hot.isEmpty) 0L else Sid.ladderRungs(to, to, deep) - 1
+      (cellsByLevel.iterator.map { case (l, n) => (n, Sid.ladderRungs(l, from, to)) } ++ Iterator((hotRungs, deeper)))
+        .foldLeft(0L) { case (acc, (n, r)) =>
+          if (r > 0 && n > (Long.MaxValue - acc) / r) Long.MaxValue else acc + n * r
+        }
+    }
   }
 
   private[operators] object Ladder {
-    /** The ladder up to `to` over cells at `levels`, from `minLeftLevel`
-      * when one is known, else from the coarsest of `levels`. */
-    def apply(levels: Iterable[Int], to: Int, minLeftLevel: Option[Int], declared: Boolean): Ladder =
-      Ladder(math.min(minLeftLevel.getOrElse(levels.minOption.getOrElse(to)), to), to, declared)
+    /** The ladder over cells at `levels` up to the finest of them, from
+      * `minLeftLevel` when one is declared, else from the coarsest. */
+    def apply(levels: Iterable[Int], minLeftLevel: Option[Int]): Ladder = {
+      val to = levels.maxOption.getOrElse(0)
+      Ladder(math.min(minLeftLevel.getOrElse(levels.minOption.getOrElse(to)), to), to, minLeftLevel.isDefined)
+    }
   }
 
   private val ladderUdf = udf((cells: Seq[Long], from: Int, to: Int) => Sid.ladder(cells.toArray, from, to))
@@ -308,8 +344,7 @@ object StareJoin {
       // and all-empty covers give an empty dictionary. Its bytes are
       // summed over ROWS, not distinct keys: duplicate covers multiply
       // the broadcast.
-      lazy val ladder = Ladder(side.levelHist.keys, side.levelHist.keys.maxOption.getOrElse(0),
-        knownMinLeftLevel, declared = knownMinLeftLevel.isDefined)
+      lazy val ladder = Ladder(side.levelHist.keys, knownMinLeftLevel)
       if (side.complete && side.keyedBytes(ladder) <= Budgets.FullRowDictBytes) {
         // row ids assigned on the driver: deterministic across every reuse
         // of the frame, and no lingering persist()

@@ -161,34 +161,29 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // split (a broadcastable cover side never melts a reducer)...
     val gated = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
       maxRowsPerCell = 100, sampleFraction = 0.5)
-    assert(gated.skipReason.isDefined && gated.parents.isEmpty)
+    assert(gated.skipReason.isDefined && gated.hot.isEmpty)
     // ...so force the shuffle regime (a cover side beyond broadcast
     // comfort) for the mechanism tests below
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-    // the split spec must be non-trivial: real parents, strictly deeper
-    // children (guards the round-1 regression where re-compression
-    // silently undid every split before the join keys)
+    // the split must be non-trivial: hot keys at the finest cover level,
+    // keyed strictly deeper
     // wallClockGate off: at unit-test scale the projected melt is
     // micro-seconds, and these tests exercise the split MECHANISM
     val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
       maxRowsPerCell = 100, sampleFraction = 0.5, wallClockGate = false)
     assert(spec.skipReason.isEmpty)
-    assert(spec.parents.nonEmpty)
-    assert(spec.parents.forall(p => p.childLevels.forall(_ > p.level)))
-
-    val split = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
-      maxRowsPerCell = 100, sampleFraction = 0.5, wallClockGate = false).right
-    // the hot cover must now contain deeper cells than the original
     val maxLevOrig = covers.select(explode(col("sids")).as("s")).agg(max(stareLevel(col("s")))).collect()(0).getLong(0)
-    val maxLevSplit = split.select(explode(col("sids")).as("s")).agg(max(stareLevel(col("s")))).collect()(0).getLong(0)
-    assert(maxLevSplit > maxLevOrig)
+    assert(spec.hot.nonEmpty && spec.hot.forall(h => Sid.level(h) == maxLevOrig))
+    assert(spec.deep > maxLevOrig)
     // identical pair results through the shuffle join with and without split
     val base = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids")
       .select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val after = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L),
+    val afterDf = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L),
         wallClockGate = false)
-      .select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    // the split reaches the join's key
+    assert(splitKeyed(afterDf) && !splitKeyed(graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids")))
+    val after = afterDf.select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(after === base)
     val viaBroadcast = graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = "inner")
       .select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -236,6 +231,93 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
       assert(viaGate === base)
       assert(base.nonEmpty)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+  }
+
+  /** `n` level-26 points spread evenly over the level-8 trixels of
+    * `cell`, ids from `id0` */
+  private def spreadOver(cell: Long, n: Int, id0: Long): Seq[(Long, Long)] = {
+    val l8 = Sid.expandToLevel(Array(cell), math.max(8, Sid.level(cell)))
+    (0 until n).map { i =>
+      val c = l8(i % l8.length)
+      val off = (i / l8.length * 7919L + 13L) % 4096L
+      (id0 + i, (Sid.intervalLo(c) + off * Sid.increment(14) + Sid.increment(26)) & Sid.clearMask(26) | 26L)
+    }
+  }
+
+  /** shuffleJoin keyed by a split ladder: its hot rows are picked by a
+    * set test on the key. */
+  private def splitKeyed(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(_.expressions.exists(_.exists {
+      case _: org.apache.spark.sql.catalyst.expressions.In => true
+      case _ => false
+    }))
+
+  private def idPairs(df: org.apache.spark.sql.DataFrame, name: String) =
+    df.select(col("id"), col(name)).collect().map(r => (r.getLong(0), Option(r.get(1)).map(_.toString))).toSet
+
+  test("the split's broadcast gate is keyedJoin's: a computed cover side over ProbeRows splits under the default threshold") {
+    import spark.implicits._
+    // 1,500 level-8 cells from Spark (not a LocalRelation, more rows than
+    // the probe holds): keyedJoin shuffles the points by key whatever the
+    // threshold, so a hot cell melts a reducer and the gate must engage
+    val cells = Sid.expandToLevel(Array(Htm.latLonToSid(10.0, 10.0, 2)), 8).take(1500)
+    val covers = cells.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, Seq(c)) }.toDF("cid", "sids").repartition(2)
+    assert(!org.apache.spark.sql.graft.shim.isLocalRelation(covers))
+    val pts = (spreadOver(cells(7), 3000, 0L) ++ cells.indices.take(500).flatMap(i => spreadOver(cells(i), 1, 10000L + i)))
+      .toDF("id", "sid")
+    assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") === "10485760")
+    val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
+      maxRowsPerCell = 100, sampleFraction = 1.0, wallClockGate = false)
+    assert(spec.skipReason.isEmpty, s"split skipped: ${spec.skipReason}")
+    for (how <- Seq("inner", "left")) {
+      val split = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L), how = how,
+        wallClockGate = false)
+      val unsplit = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", how = how)
+      assert(splitKeyed(split), s"how=$how")
+      assert(idPairs(split, "cid") === idPairs(unsplit, "cid"), s"how=$how")
+      assert(split.count() === unsplit.count(), s"how=$how")
+    }
+  }
+
+  test("the split gate measures what the unsplit join shuffles: a coarse cell spread over level-8 keys is balanced") {
+    import spark.implicits._
+    // the ladder keys every row at level 8, so 4,000 rows spread over a
+    // level-4 cell's 256 level-8 trixels load no reducer beyond the cap
+    val c4 = Htm.latLonToSid(10.0, 10.0, 4)
+    val c8 = Htm.latLonToSid(-40.0, 120.0, 8)
+    val covers = Seq(("coarse", Seq(c4)), ("fine", Seq(c8))).toDF("region", "sids")
+    val pts = spreadOver(c4, 4000, 0L).toDF("id", "sid")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
+        maxRowsPerCell = 100, sampleFraction = 1.0, wallClockGate = false)
+      assert(spec.skipReason.isDefined, "rows spread over level-8 keys must not engage splitting")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+  }
+
+  test("the split gate over a local cover side samples in one job and leaves nothing persisted") {
+    import spark.implicits._
+    val pts = ((1 to 2000).map(i => (i.toLong, 10.0 + (i % 40) * 0.001, 10.0 + (i / 40) * 0.001)) ++
+      (1 to 50).map(i => (10000L + i, -30.0 + i * 0.5, 100.0 + i * 0.5)))
+      .toDF("id", "lat", "lon")
+      .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
+    val covers = Seq(
+      ("hot", Cover.coverFromBox(8.0, 12.0, 8.0, 12.0, 6).toSeq),
+      ("cold", Cover.coverFromBox(99.0, 130.0, -31.0, -5.0, 6).toSeq)).toDF("region", "sids")
+    assert(org.apache.spark.sql.graft.shim.isLocalRelation(covers))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val unsplit = idPairs(graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids"), "region")
+      for (declared <- Seq(Some(26), None)) {
+        val (joined, rec) = SparkJobProbe.record(spark)(graft.operators.Skew.shuffleJoin(pts, "sid", covers,
+          "sids", splitHot = Some(100L), knownMinLeftLevel = declared, wallClockGate = false))
+        // one job of one stage: the sample, with no aggregate exchange
+        // and no minimum-level job
+        assert(rec.jobs === 1 && rec.stages.length === 1, s"declared=$declared: $rec")
+        assert(spark.sparkContext.getPersistentRDDs.isEmpty, s"declared=$declared")
+        assert(idPairs(joined, "region") === unsplit, s"declared=$declared")
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 

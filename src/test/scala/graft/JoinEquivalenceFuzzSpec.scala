@@ -8,8 +8,8 @@ import graft.core.Sid
 import graft.operators.{Skew, StareJoin}
 
 /** Three-way join-equivalence fuzz (r4 verdict item 1): the join family's
-  * safety conditions — the ladder key rule, split gates, gated key
-  * derivation — are individually regression-tested; this suite
+  * safety conditions — the ladder key rule, split gates, the split's
+  * deeper ladder — are individually regression-tested; this suite
   * fuzzes them JOINTLY over random mixed-level covers × random point/cover
   * level mixes × how ∈ {inner, left}, asserting
   *
@@ -135,6 +135,14 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     * left rows with a stable id. */
   private def joinBackRoute(df: DataFrame): Boolean =
     df.queryExecution.analyzed.exists(_.output.exists(_.name == "__stare_lid"))
+
+  /** shuffleJoin keyed by a split ladder: its hot rows are picked by a
+    * set test on the key. */
+  private def splitKeyed(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(_.expressions.exists(_.exists {
+      case _: org.apache.spark.sql.catalyst.expressions.In => true
+      case _ => false
+    }))
 
   /** Rungs of the ladder both operators key an undeclared left side
     * against: every compressed cover cell, from the coarsest to the
@@ -294,50 +302,51 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1 to 4).foreach { trial =>
         val hot = randomSid(r, 2 + r.nextInt(3)) // one hot cover cell
         val hotLevel = Sid.level(hot)
-        // trial 3: an ANCESTOR cover cell overlapping the hot cell —
-        // pins the r6 dead-base-key suppression's overlap safety (rows
-        // in the split parent must still match the blanket cover; an
-        // unconditional suppression would lose those pairs)
+        // trial 3: an ANCESTOR cover cell overlapping the hot cell — its
+        // rungs hold the hot key too, so the split deepens both rows'
+        // rungs (rows in the hot key must still match the blanket cover)
         val blanket =
           if (trial == 3 && hotLevel > 0)
             Seq(("blanket", Seq((hot & Sid.clearMask(hotLevel - 1)) | (hotLevel - 1).toLong)))
           else Seq.empty
-        // trial 4: a level-9 kept cell, finer than every left sid
-        // (levels hotLevel+2..8), so the ladder's rungs start at the
-        // split's minimum left level and the split children are laddered
+        // trial 4: a level-9 cell, finer than a quarter of the left sids
+        // (levels hotLevel+2..8), which key at their own level beside the
+        // split's deeper keys
+        val to = if (trial == 4) 9 else 6
         val covers = Seq(
-          ("hot", Seq(hot, randomSid(r, if (trial == 4) 9 else 6))),
+          ("hot", Seq(hot, randomSid(r, to))),
           ("cold", Seq(randomSid(r, 3), randomSid(r, 5)))) ++ blanket
-        // 4000 points inside the hot cell at mixed fine levels + 1000
-        // uniform: the 1% sample sees ~40 hot rows, estHot ~4000 ≫ the
-        // 2× fair-share gate at 4 shuffle partitions
-        val left = if (trial < 4) ((0 until 4000).map { i =>
-          (i.toLong, descendantOf(r, hot, math.min(27, hotLevel + 2 + r.nextInt(10))))
-        } ++ (4000 until 5000).map { i =>
+        // 4000 points in ONE level-`to` trixel of the hot cell (the
+        // unsplit join's hot key) at mixed finer levels, 500 elsewhere in
+        // the hot cell and 500 uniform: the 1% sample sees ~40 hot rows,
+        // estHot ~4000 ≫ the cap and the 2× fair-share gate at 4 partitions
+        val spot = descendantOf(r, hot, to)
+        val left = (0 until 4000).map { i =>
+          (i.toLong, descendantOf(r, spot, to + 1 + r.nextInt(27 - to)))
+        } ++ (4000 until 4500).map { i =>
+          (i.toLong, descendantOf(r, hot, if (trial == 4) hotLevel + 2 + r.nextInt(7 - hotLevel)
+                                          else math.min(27, hotLevel + 2 + r.nextInt(10))))
+        } ++ (4500 until 5000).map { i =>
           (i.toLong, randomSid(r, 4 + r.nextInt(10)))
-        }) else ((0 until 4000).map { i =>
-          (i.toLong, descendantOf(r, hot, hotLevel + 2 + r.nextInt(3)))
-        } ++ (4000 until 5000).map { i =>
-          (i.toLong, randomSid(r, hotLevel + 2 + r.nextInt(7 - hotLevel)))
-        })
+        }
         val leftDf = left.toDF("lid", "sid")
         val rightDf = covers.toDF("rname", "sids")
         // prove the fuzz exercises the split machinery, not the skip path
         val spec = Skew.splitHotCellsWithSpec(leftDf, "sid", rightDf, "sids",
           maxRowsPerCell = 100, sampleFraction = 1.0, wallClockGate = false)
-        assert(spec.skipReason.isEmpty && spec.parents.nonEmpty,
+        assert(spec.skipReason.isEmpty && spec.hot.nonEmpty && spec.deep > to,
           s"engineered skew did not engage the splitter: ${spec.skipReason}")
         if (trial == 4)
-          assert(spec.keptLevels.max > left.map(p => Sid.level(p._2)).max,
-            s"trial 4 left sids are not coarser than the finest kept level ${spec.keptLevels.toSeq}")
+          assert(left.exists(p => Sid.level(p._2) < to), "trial 4 has no left sid coarser than the split's level")
         Seq("inner", "left").foreach { how =>
           val exp = expectedPairs(left, covers, how, coverContains)
           val splitDf = Skew.shuffleJoin(leftDf, "sid", rightDf, "sids",
             splitHot = Some(100L), how = how, wallClockGate = false)
+          assert(splitKeyed(splitDf), s"trial $trial how=$how: the join did not key by the split")
           assert(observedPairs(splitDf) === exp, s"split shuffleJoin vs brute — trial=$trial how=$how hot=$hot")
-          // children no finer than the kept cells are laddered: no gated
-          // key, so a left join keys once
-          if (trial == 4) assert(!joinBackRoute(splitDf), s"trial 4 how=$how took the pair/join-back")
+          // a split deepens the ladder: every row keeps one key, so a left
+          // join keys once
+          assert(!joinBackRoute(splitDf), s"trial $trial how=$how took the pair/join-back")
           val unsplit = observedPairs(Skew.shuffleJoin(leftDf, "sid", rightDf, "sids",
             splitHot = None, how = how))
           assert(unsplit === exp, s"unsplit shuffleJoin vs brute — trial=$trial how=$how hot=$hot")

@@ -177,6 +177,7 @@ class SidPropertySpec extends AnyFunSuite {
       val levels = cover.map(Sid.level)
       val to = levels.max
       def contains(sid: Long) = cover.exists(c => Sid.level(c) <= Sid.level(sid) && Sid.intersects(c, sid))
+      val rungsAtTo = Sid.ladder(cover, to, to)
       (1 to 20).foreach { _ =>
         // a descendant or ancestor of a cover cell, or a random sid
         val cell = cover(r.nextInt(cover.length))
@@ -190,15 +191,28 @@ class SidPropertySpec extends AnyFunSuite {
             (cell & Sid.clearMask(k)) | k
           case _ => randSid(r)
         }
+        // a split: hot level-`to` keys (some of the cover's rungs, some
+        // the sid's own ancestor, some random) deepened to `deep`, or none
+        val hot =
+          if (to == Sid.MaxLevel || r.nextInt(4) == 0) Array.emptyLongArray
+          else {
+            (Seq.fill(r.nextInt(3))(rungsAtTo(r.nextInt(rungsAtTo.length))) ++
+              Option.when(Sid.level(sid) >= to && r.nextBoolean())(Sid.ladderKey(sid, to)) ++
+              Seq.fill(r.nextInt(2))(Sid.ladderKey(randSid(r), to)).filter(Sid.level(_) == to))
+              .distinct.sorted.toArray
+          }
+        val deep = math.min(Sid.MaxLevel, to + 1 + r.nextInt(3))
         // rungs from the coarsest cover level (nothing declared), or from
         // any declared minimum at or below the sid's level
-        for (from <- Seq(levels.min, r.nextInt(Sid.level(sid) + 1))) {
-          val ladder = Sid.ladder(cover, from, to)
-          assert(ladder.toSet.contains(Sid.ladderKey(sid, to)) === contains(sid),
-            s"sid=${Sid.hex(sid)} from=$from cover=${cover.map(Sid.hex).toSeq}")
-          assert(ladder.distinct.length === ladder.length)
-          assert(ladder.length.toLong === levels.map(Sid.ladderRungs(_, from, to)).sum)
-          assert(ladder.length * 3L <= Sid.expandToLevel(cover, to).length * 4L)
+        for (from <- Seq(levels.min, r.nextInt(Sid.level(sid) + 1)); split <- Seq(false, true)) {
+          val (h, clue) = if (split) (hot, s" hot=${hot.map(Sid.hex).toSeq} deep=$deep") else (Array.emptyLongArray, "")
+          val ladder = Sid.ladder(cover, from, to, h, deep)
+          assert(ladder.toSet.contains(Sid.ladderKey(sid, to, h, deep)) === contains(sid),
+            s"sid=${Sid.hex(sid)} from=$from cover=${cover.map(Sid.hex).toSeq}$clue")
+          assert(ladder.distinct.length === ladder.length, clue)
+          assert(ladder.length.toLong === levels.map(Sid.ladderRungs(_, from, to)).sum +
+            cover.map(Sid.keysWithin(h, _)).sum * (if (h.isEmpty) 0L else Sid.ladderRungs(to, to, deep) - 1), clue)
+          if (!split) assert(ladder.length * 3L <= Sid.expandToLevel(cover, to).length * 4L)
         }
       }
     }
