@@ -81,7 +81,24 @@ object SparkEntry {
     * array literal, so its size does not grow with the region count.
     * Only for joins whose answer counts matched rows alone (an inner
     * join), never for a left join's unmatched count. */
-  private def inAnyRegion: Column = exists(typedLit(regions), inBox)
+  private def inAnyRegion: Column = inAnyBox(regions)
+
+  /** a row inside SOME of `boxes`, as [[inAnyRegion]] */
+  private def inAnyBox(boxes: Seq[Region]): Column = exists(typedLit(boxes), inBox)
+
+  /** The boxes two regions share (the bounds are inclusive). A
+    * wrapping box counts as its two halves, so a point lies in both
+    * regions iff it lies in one of these boxes. */
+  private[graft] def sharedBoxes(a: Region, b: Region): Seq[Region] = {
+    def halves(r: Region) =
+      if (r.wraps) Seq(r.copy(lonMax = 180, wraps = false), r.copy(lonMin = -180, wraps = false)) else Seq(r)
+    for {
+      x <- halves(a); y <- halves(b)
+      box = Region(s"${a.name}|${b.name}", math.max(x.lonMin, y.lonMin), math.min(x.lonMax, y.lonMax),
+        math.max(x.latMin, y.latMin), math.min(x.latMax, y.latMax))
+      if box.lonMin <= box.lonMax && box.latMin <= box.latMax
+    } yield box
+  }
 
   /** coversDf plus each region's box as a struct column `region`, so a
     * matched row is refined against its own box (inBox) — one box test
@@ -500,8 +517,10 @@ object SparkEntry {
       // Pairs with DISJOINT covers are proven empty without scanning —
       // the stare_disjoint fast path; a false empty would surface as a
       // zero row the oracle counts as non-zero.
+      // Only docs in a box two regions share can count, so the prune
+      // keeps those alone.
       import s.implicits._
-      val docs = indexed(s, dir).filter(inAnyRegion)
+      val docs = indexed(s, dir).filter(inAnyBox(regionPairs.flatMap { case (a, b) => sharedBoxes(a, b) }))
       val inter = regionPairs.map { case (a, b) =>
         (s"${a.name}|${b.name}", Sid.intersection(regionCover(a), regionCover(b)), a, b)
       }

@@ -321,6 +321,50 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
+  test("AQE's skew join splits a hot ladder key of keyedJoin's shuffled plan, inner and left, SHJ and SMJ") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    // one level-8 key holds 3,000 of the 3,450 points; 400 spread over a
+    // level-5 cover cell's level-8 keys and 50 outside every cover
+    val hot8 = Htm.latLonToSid(10.0, 10.0, 8)
+    val wide5 = Htm.latLonToSid(-40.0, 120.0, 5)
+    val out5 = Htm.latLonToSid(50.0, -60.0, 5)
+    val covers = Seq(("hot", Seq(hot8)), ("wide", Seq(wide5))).toDF("region", "sids")
+    val left = spreadOver(hot8, 3000, 0L) ++ spreadOver(wide5, 400, 10000L) ++ spreadOver(out5, 50, 20000L)
+    val pts = left.toDF("id", "sid")
+    val cells = Map("hot" -> hot8, "wide" -> wide5)
+    val brute = left.map { case (id, sid) =>
+      id -> cells.collectFirst { case (n, c) if Sid.intersects(c, sid) => n } }.toSet
+    assert(brute.count(_._2.contains("hot")) === 3000 && brute.count(_._2.isEmpty) === 50)
+    val conf = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")
+    for (smj <- Seq(false, true); how <- Seq("inner", "left")) {
+      // the 1-byte build cap turns keyedJoin's shuffled-hash join into a sort-merge join
+      val all = if (smj) conf + ("spark.graft.join.shjMaxBuildBytesPerPartition" -> "1") else conf
+      val prior = all.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      all.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val clue = s"smj=$smj how=$how"
+        val df = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", how = how,
+          knownMinLeftLevel = Some(26)).select(col("id"), col("region"))
+        val got = df.collect().map(r => r.getLong(0) -> Option(r.getString(1))).toSet
+        assert(got === (if (how == "left") brute else brute.filter(_._2.isDefined)), clue)
+        val plan = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+        assert(plan.isFinalPlan, clue)
+        // AdaptiveSparkPlanHelper's collect descends into the query stages
+        val skewJoins = new AdaptiveSparkPlanHelper {}.collect(plan) {
+          case j: ShuffledHashJoinExec if !smj && j.isSkewJoin => j
+          case j: SortMergeJoinExec if smj && j.isSkewJoin => j
+        }
+        assert(skewJoins.length === 1, s"$clue: no skew join in the final plan\n${plan.executedPlan}")
+      } finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+  }
+
   test("pointJoin guards the driver collect: over-cap right side delegates to shuffleJoin") {
     import spark.implicits._
     val pts = ((1 to 200).map(i => (i.toLong, 10.0 + (i % 40) * 0.02, 10.0 + (i / 40) * 0.02)) :+

@@ -50,6 +50,25 @@ class NewQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("q33 prunes by the boxes region pairs share: a point is in two boxes iff it is in a shared box") {
+    def inBox(r: SparkEntry.Region, lat: Double, lon: Double): Boolean =
+      lat >= r.latMin && lat <= r.latMax &&
+        (if (r.wraps) lon >= r.lonMin || lon <= r.lonMax else lon >= r.lonMin && lon <= r.lonMax)
+    assert(SparkEntry.regionPairs.filter { case (a, b) => SparkEntry.sharedBoxes(a, b).nonEmpty }
+      .map { case (a, b) => s"${a.name}|${b.name}" }.toSet ===
+      Set("argentina|brazil", "brazil|colombia", "brazil|peru", "colombia|peru"))
+    // every region pair, and wrapping boxes that overlap each other and a
+    // plain box across the seam, against a grid that holds every box
+    // edge (the bounds are inclusive)
+    val w1 = SparkEntry.Region("w1", 170, -170, -10, 10, wraps = true)
+    val w2 = SparkEntry.Region("w2", 160, -175, 0, 20, wraps = true)
+    val n1 = SparkEntry.Region("n1", -178, 175, 5, 15)
+    for ((a, b) <- SparkEntry.regionPairs ++ Seq((w1, w2), (w1, n1), (n1, w2));
+         lat <- (-90 to 90).map(_.toDouble); lon <- (-180 to 180).map(_.toDouble))
+      assert(SparkEntry.sharedBoxes(a, b).exists(inBox(_, lat, lon)) === (inBox(a, lat, lon) && inBox(b, lat, lon)),
+        s"${a.name}|${b.name} ($lat, $lon)")
+  }
+
   test("q34 soundness: every point satisfying the ellipse predicate intersects the prune cover") {
     val eq = SparkEntry.ellipseQuery
     val runs = Sid.mergedIntervals(eq.pruneCover)
