@@ -152,45 +152,30 @@ object Sid {
 
   /** The level ladder of non-nested cells: each cell coarser than `to`
     * as its trixels at every level from max(its level, from) to `to`; a
-    * cell finer than `to` stays itself. A split deepens it inside `hot`
-    * (sorted level-`to` keys): each hot rung is replaced by its own
-    * ladder down to `deep`. For a sid at a level >= `from`, its
-    * [[ladderKey]] is one of a cell's rungs iff the cell is at or
+    * cell finer than `to` stays itself. For a sid at a level >= `from`,
+    * its [[ladderKey]] is one of a cell's rungs iff the cell is at or
     * coarser than `to` and contains the sid; rungs of disjoint cells are
     * distinct, so the key matches at most one of them. */
-  def ladder(cells: Array[Long], from: Int, to: Int,
-             hot: Array[Long] = Array.emptyLongArray, deep: Int = 0): Array[Long] = {
+  def ladder(cells: Array[Long], from: Int, to: Int): Array[Long] = {
     val out = new ArrayBuffer[Long]()
-    def rung(r: Long): Unit =
-      if (level(r) == to && java.util.Arrays.binarySearch(hot, r) >= 0) out ++= ladder(Array(r), to, deep)
-      else out += r
     cells.foreach { c =>
       val l = level(c)
-      if (l >= to) rung(clearToLevel(c))
-      else (math.max(l, math.min(from, to)) to to).foreach(k => expandToLevel(Array(c), k).foreach(rung))
+      if (l >= to) out += clearToLevel(c)
+      else (math.max(l, math.min(from, to)) to to).foreach(k => out ++= expandToLevel(Array(c), k))
     }
     out.toArray
   }
 
-  /** Rungs [[ladder]] makes of one cell at `cellLevel`, unsplit. */
+  /** Rungs [[ladder]] makes of one cell at `cellLevel`. */
   def ladderRungs(cellLevel: Int, from: Int, to: Int): Long =
     if (cellLevel >= to) 1L
     else (math.max(cellLevel, math.min(from, to)) to to).map(k => 1L << (2 * (k - cellLevel))).sum
 
-  /** How many of the sorted one-level `keys`, none coarser than `cell`,
-    * lie in `cell`: the hot rungs a split ladder deepens in it. */
-  def keysWithin(keys: Array[Long], cell: Long): Long = {
-    def lowerBound(x: Long) = { val i = java.util.Arrays.binarySearch(keys, x); if (i >= 0) i else -i - 1 }
-    lowerBound(intervalHi(cell)) - lowerBound(intervalLo(cell))
-  }
-
   /** The one key of a sid against a [[ladder]] up to `to`: its ancestor
-    * at min(level(sid), to), or, when that is a `hot` key, at
-    * min(level(sid), deep). */
-  def ladderKey(sid: Long, to: Int, hot: Array[Long] = Array.emptyLongArray, deep: Int = 0): Long = {
+    * at min(level(sid), to). */
+  def ladderKey(sid: Long, to: Int): Long = {
     val l = math.min(level(sid), to)
-    val k = (sid & clearMask(l)) | l
-    if (l == to && java.util.Arrays.binarySearch(hot, k) >= 0) ladderKey(sid, deep) else k
+    (sid & clearMask(l)) | l
   }
 
   /** Intersection of two sid sets (cover ∩ cover -> canonical cover).

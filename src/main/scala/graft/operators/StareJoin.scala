@@ -84,10 +84,6 @@ object StareJoin {
     final val LocalJoinBytes = 128L << 20
     /** one exploded (rid, key) pair, in Catalyst's sizing order */
     final val PairBytes = 32L
-    /** skew split gate: reducer sort rate and the split's fixed cost,
-      * measured on the 32-core bench box (BENCH.md) */
-    final val ReduceRowsPerSec = 2e6
-    final val SplitOverheadSec = 4.0
 
     /** A malformed graft conf value is an error, not the default: a typo
       * would otherwise silently turn a forced path back into the default. */
@@ -126,20 +122,6 @@ object StareJoin {
       else
         df.select(explode(coverCells(col(sidsCol))).as("c")).groupBy(stareLevel(col("c"))).count()
           .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-
-    /** The hot rungs of a split `ladder` summed over rows, i.e. its hot
-      * keys' occurrences in the compressed covers: counted on the driver
-      * when the side is complete, else one aggregate job. */
-    def hotRungs(ladder: Ladder): Long = {
-      val hot = ladder.hot
-      if (hot.isEmpty) 0L
-      else if (complete) cells.iterator.flatten.map(Sid.keysWithin(hot, _)).sum
-      else {
-        val within = udf((c: Long) => Sid.keysWithin(hot, c))
-        df.select(explode(coverCells(col(sidsCol))).as("c"))
-          .agg(coalesce(sum(within(col("c"))), lit(0L))).head().getLong(0)
-      }
-    }
 
     /** Bytes of the whole side keyed by `ladder` ([[keyedCover]]) as
       * shipped: each rung repeats its whole row, so it is the sum over
@@ -187,52 +169,32 @@ object StareJoin {
     * than `from` gets no key, and under the containment contract it
     * matches nothing anyway. The rungs add at most 1/3 to a uniform
     * expansion to `to`; with a known minimum at or above `to` there is
-    * one rung per cell, the uniform expansion itself.
-    *
-    * A hot-cell split ([[Skew]]) is a deeper ladder inside `hot`, sorted
-    * level-`to` keys: a row whose level-`to` key is hot keys at
-    * min(level(sid), `deep`) instead, and each hot rung is replaced by
-    * its own rungs down to `deep`, so the rule above holds unchanged and
-    * every row still has one key. */
-  private[operators] final case class Ladder(from: Int, to: Int, declared: Boolean,
-                                             hot: Array[Long] = Array.emptyLongArray, deep: Int = 0) {
+    * one rung per cell, the uniform expansion itself. */
+  private[operators] final case class Ladder(from: Int, to: Int, declared: Boolean) {
     /** The left key. With a DECLARED minimum level at or above `to` the
       * per-row guard drops at plan time and the key is marked
       * KnownNotNull (the caller's declared level also implies non-null
       * sids): otherwise the planner infers an IsNotNull(key) filter that
       * evaluates the key, i.e. a second encode per row when the sid is
       * an unevaluated encode. */
-    def key(sid: Column): Column = {
-      val unsplit =
-        if (declared && from >= to) knownNotNull(stareClearTo(sid, to))
-        else {
-          val atTo = when(stareLevel(sid) >= to, stareClearTo(sid, to))
-          if (from >= to) atTo else atTo.when(stareLevel(sid) >= from, stareClearToOwn(sid))
-        }
-      if (hot.isEmpty) unsplit
-      else when(unsplit.isin(hot.toIndexedSeq: _*),
-        when(stareLevel(sid) >= deep, stareClearTo(sid, deep)).otherwise(stareClearToOwn(sid)))
-        .otherwise(unsplit)
-    }
-
-    /** The rungs of an array of non-nested cells. */
-    def rungs(cells: Column): Column =
-      if (hot.isEmpty) ladderUdf(cells, lit(from), lit(to))
+    def key(sid: Column): Column =
+      if (declared && from >= to) knownNotNull(stareClearTo(sid, to))
       else {
-        val (f, t, h, d) = (from, to, hot, deep)
-        udf((cs: Seq[Long]) => Sid.ladder(cs.toArray, f, t, h, d)).apply(cells)
+        val atTo = when(stareLevel(sid) >= to, stareClearTo(sid, to))
+        if (from >= to) atTo else atTo.when(stareLevel(sid) >= from, stareClearToOwn(sid))
       }
 
+    /** The rungs of an array of non-nested cells. */
+    def rungs(cells: Column): Column = ladderUdf(cells, lit(from), lit(to))
+
     /** Rungs of a (level -> cell count) histogram, each count possibly
-      * weighted (bytes per cell), plus `hotRungs` hot keys' own deeper
-      * rungs; saturates at Long.MaxValue instead of overflowing. */
-    def size(cellsByLevel: IterableOnce[(Int, Long)], hotRungs: Long = 0L): Long = {
-      val deeper = if (hot.isEmpty) 0L else Sid.ladderRungs(to, to, deep) - 1
-      (cellsByLevel.iterator.map { case (l, n) => (n, Sid.ladderRungs(l, from, to)) } ++ Iterator((hotRungs, deeper)))
-        .foldLeft(0L) { case (acc, (n, r)) =>
-          if (r > 0 && n > (Long.MaxValue - acc) / r) Long.MaxValue else acc + n * r
-        }
-    }
+      * weighted (bytes per cell); saturates at Long.MaxValue instead of
+      * overflowing. */
+    def size(cellsByLevel: IterableOnce[(Int, Long)]): Long =
+      cellsByLevel.iterator.foldLeft(0L) { case (acc, (l, n)) =>
+        val r = Sid.ladderRungs(l, from, to)
+        if (n > (Long.MaxValue - acc) / r) Long.MaxValue else acc + n * r
+      }
   }
 
   private[operators] object Ladder {
@@ -364,8 +326,7 @@ object StareJoin {
         // evaluate the right plan again, nor measure the same rows again
         val rows = if (side.complete) spark.createDataFrame(java.util.Arrays.asList(side.rows: _*), right.schema)
                    else right
-        Skew.keyedJoin(left, leftSid, rows, rightSids, side, splitHot = None,
-          how = how, knownMinLeftLevel = knownMinLeftLevel)
+        Skew.keyedJoin(left, leftSid, rows, rightSids, side, how, knownMinLeftLevel)
       }
     } finally if (weCached) right.unpersist(false)
   }

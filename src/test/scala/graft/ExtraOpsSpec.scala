@@ -157,32 +157,22 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         Array((Array(99.0, 130.0, 130.0, 99.0, 99.0), Array(-31.0, -31.0, -5.0, -5.0, -31.0))), 6, forceCcw = true).toSeq)
     ).toDF("region", "sids")
 
-    // under the DEFAULT broadcast threshold the cost gate must refuse to
-    // split (a broadcastable cover side never melts a reducer)...
-    val gated = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
-      maxRowsPerCell = 100, sampleFraction = 0.5)
+    // no hot key is split (AQE's skew join handles them), under the
+    // default broadcast threshold...
+    val gated = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids", maxRowsPerCell = 100)
     assert(gated.skipReason.isDefined && gated.hot.isEmpty)
-    // ...so force the shuffle regime (a cover side beyond broadcast
-    // comfort) for the mechanism tests below
+    // ...and in the shuffle regime (a cover side beyond broadcast comfort)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-    // the split must be non-trivial: hot keys at the finest cover level,
-    // keyed strictly deeper
-    // wallClockGate off: at unit-test scale the projected melt is
-    // micro-seconds, and these tests exercise the split MECHANISM
-    val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
-      maxRowsPerCell = 100, sampleFraction = 0.5, wallClockGate = false)
-    assert(spec.skipReason.isEmpty)
-    val maxLevOrig = covers.select(explode(col("sids")).as("s")).agg(max(stareLevel(col("s")))).collect()(0).getLong(0)
-    assert(spec.hot.nonEmpty && spec.hot.forall(h => Sid.level(h) == maxLevOrig))
-    assert(spec.deep > maxLevOrig)
-    // identical pair results through the shuffle join with and without split
+    val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids", maxRowsPerCell = 100)
+    assert(spec.skipReason === Some("hot keys are left to AQE's skew join") && spec.hot.isEmpty)
+    // identical pair results through the shuffle join with and without a split request
     val base = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids")
       .select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val afterDf = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L),
-        wallClockGate = false)
-    // the split reaches the join's key
-    assert(splitKeyed(afterDf) && !splitKeyed(graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids")))
+    val afterDf = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L))
+    // the request does not reach the plan
+    assert(SparkJobProbe.planText(afterDf) ===
+      SparkJobProbe.planText(graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids")))
     val after = afterDf.select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(after === base)
     val viaBroadcast = graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = "inner")
@@ -195,7 +185,7 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
     val ptsPlus = pts.unionByName(outOfCover)
     val shuffleLeft = graft.operators.Skew.shuffleJoin(ptsPlus, "sid", covers, "sids",
-      splitHot = Some(100L), how = "left", wallClockGate = false)
+      splitHot = Some(100L), how = "left")
     val broadcastLeft = graft.operators.StareJoin.pointJoin(ptsPlus, "sid", covers, "sids", how = "left")
     assert(shuffleLeft.columns.toSeq === broadcastLeft.columns.toSeq)
     def leftSetOf(df: org.apache.spark.sql.DataFrame) =
@@ -210,9 +200,9 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("skew cost gate: a gate-skipped split run equals no-split exactly") {
     import spark.implicits._
-    // balanced points (no hot cell): even in the forced-shuffle regime the
-    // gate must refuse (hottest cell within the fair reducer share) and
-    // the splitHot run must still produce the exact no-split results
+    // balanced points (no hot cell) in the forced-shuffle regime: a split
+    // request splits nothing, and the splitHot run produces the exact
+    // no-split results
     val pts = (1 to 800).map(i => (i.toLong, -30.0 + (i % 115) * 0.5, 60.0 + (i / 19) * 0.9))
       .toDF("id", "lat", "lon")
       .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
@@ -221,9 +211,8 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ).toDF("region", "sids")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
-        maxRowsPerCell = 10000, sampleFraction = 1.0)
-      assert(spec.skipReason.isDefined, "balanced input must not engage splitting")
+      val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids", maxRowsPerCell = 10000)
+      assert(spec.skipReason.isDefined && spec.hot.isEmpty, "balanced input must not engage splitting")
       val base = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids")
         .select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
       val viaGate = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids",
@@ -245,14 +234,6 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  /** shuffleJoin keyed by a split ladder: its hot rows are picked by a
-    * set test on the key. */
-  private def splitKeyed(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.analyzed.exists(_.expressions.exists(_.exists {
-      case _: org.apache.spark.sql.catalyst.expressions.In => true
-      case _ => false
-    }))
-
   private def idPairs(df: org.apache.spark.sql.DataFrame, name: String) =
     df.select(col("id"), col(name)).collect().map(r => (r.getLong(0), Option(r.get(1)).map(_.toString))).toSet
 
@@ -260,21 +241,20 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // 1,500 level-8 cells from Spark (not a LocalRelation, more rows than
     // the probe holds): keyedJoin shuffles the points by key whatever the
-    // threshold, so a hot cell melts a reducer and the gate must engage
+    // threshold. The hot cell is left to AQE's skew join: a split
+    // request plans and answers exactly as no request.
     val cells = Sid.expandToLevel(Array(Htm.latLonToSid(10.0, 10.0, 2)), 8).take(1500)
     val covers = cells.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, Seq(c)) }.toDF("cid", "sids").repartition(2)
     assert(!org.apache.spark.sql.graft.shim.isLocalRelation(covers))
     val pts = (spreadOver(cells(7), 3000, 0L) ++ cells.indices.take(500).flatMap(i => spreadOver(cells(i), 1, 10000L + i)))
       .toDF("id", "sid")
     assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") === "10485760")
-    val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
-      maxRowsPerCell = 100, sampleFraction = 1.0, wallClockGate = false)
-    assert(spec.skipReason.isEmpty, s"split skipped: ${spec.skipReason}")
+    val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids", maxRowsPerCell = 100)
+    assert(spec.skipReason.isDefined && spec.hot.isEmpty)
     for (how <- Seq("inner", "left")) {
-      val split = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L), how = how,
-        wallClockGate = false)
+      val split = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L), how = how)
       val unsplit = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", how = how)
-      assert(splitKeyed(split), s"how=$how")
+      assert(SparkJobProbe.planText(split) === SparkJobProbe.planText(unsplit), s"how=$how")
       assert(idPairs(split, "cid") === idPairs(unsplit, "cid"), s"how=$how")
       assert(split.count() === unsplit.count(), s"how=$how")
     }
@@ -283,16 +263,20 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("the split gate measures what the unsplit join shuffles: a coarse cell spread over level-8 keys is balanced") {
     import spark.implicits._
     // the ladder keys every row at level 8, so 4,000 rows spread over a
-    // level-4 cell's 256 level-8 trixels load no reducer beyond the cap
+    // level-4 cell's 256 level-8 trixels load no reducer beyond the cap;
+    // a split request changes neither the plan nor the pairs
     val c4 = Htm.latLonToSid(10.0, 10.0, 4)
     val c8 = Htm.latLonToSid(-40.0, 120.0, 8)
     val covers = Seq(("coarse", Seq(c4)), ("fine", Seq(c8))).toDF("region", "sids")
     val pts = spreadOver(c4, 4000, 0L).toDF("id", "sid")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
-        maxRowsPerCell = 100, sampleFraction = 1.0, wallClockGate = false)
-      assert(spec.skipReason.isDefined, "rows spread over level-8 keys must not engage splitting")
+      val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids", maxRowsPerCell = 100)
+      assert(spec.skipReason.isDefined && spec.hot.isEmpty, "rows spread over level-8 keys must not engage splitting")
+      val split = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L))
+      val unsplit = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids")
+      assert(SparkJobProbe.planText(split) === SparkJobProbe.planText(unsplit))
+      assert(idPairs(split, "region") === (0L until 4000L).map(_ -> Some("coarse")).toSet)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
@@ -308,13 +292,19 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(org.apache.spark.sql.graft.shim.isLocalRelation(covers))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
+      // a split request samples nothing: answering it and
+      // building the join over a local cover side start no job, and the
+      // join plans exactly as without the request
+      val (spec, specRec) = SparkJobProbe.record(spark)(
+        graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids", maxRowsPerCell = 100))
+      assert(specRec.jobs === 0 && spec.hot.isEmpty, specRec.toString)
       val unsplit = idPairs(graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids"), "region")
       for (declared <- Seq(Some(26), None)) {
         val (joined, rec) = SparkJobProbe.record(spark)(graft.operators.Skew.shuffleJoin(pts, "sid", covers,
-          "sids", splitHot = Some(100L), knownMinLeftLevel = declared, wallClockGate = false))
-        // one job of one stage: the sample, with no aggregate exchange
-        // and no minimum-level job
-        assert(rec.jobs === 1 && rec.stages.length === 1, s"declared=$declared: $rec")
+          "sids", splitHot = Some(100L), knownMinLeftLevel = declared))
+        assert(rec.jobs === 0 && rec.stages.isEmpty, s"declared=$declared: $rec")
+        assert(SparkJobProbe.planText(joined) === SparkJobProbe.planText(graft.operators.Skew.shuffleJoin(pts,
+          "sid", covers, "sids", splitHot = None, knownMinLeftLevel = declared)), s"declared=$declared")
         assert(spark.sparkContext.getPersistentRDDs.isEmpty, s"declared=$declared")
         assert(idPairs(joined, "region") === unsplit, s"declared=$declared")
       }

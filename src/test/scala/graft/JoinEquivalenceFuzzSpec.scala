@@ -8,8 +8,8 @@ import graft.core.Sid
 import graft.operators.{Skew, StareJoin}
 
 /** Three-way join-equivalence fuzz (r4 verdict item 1): the join family's
-  * safety conditions — the ladder key rule, split gates, the split's
-  * deeper ladder — are individually regression-tested; this suite
+  * safety conditions — the ladder key rule, the key budget, a split
+  * request under engineered skew — are individually regression-tested; this suite
   * fuzzes them JOINTLY over random mixed-level covers × random point/cover
   * level mixes × how ∈ {inner, left}, asserting
   *
@@ -135,14 +135,6 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     * left rows with a stable id. */
   private def joinBackRoute(df: DataFrame): Boolean =
     df.queryExecution.analyzed.exists(_.output.exists(_.name == "__stare_lid"))
-
-  /** shuffleJoin keyed by a split ladder: its hot rows are picked by a
-    * set test on the key. */
-  private def splitKeyed(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.exists(_.expressions.exists(_.exists {
-      case _: org.apache.spark.sql.catalyst.expressions.In => true
-      case _ => false
-    }))
 
   /** Rungs of the ladder both operators key an undeclared left side
     * against: every compressed cover cell, from the coarsest to the
@@ -296,30 +288,29 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val r = new scala.util.Random(7)
     val priorBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    // no broadcast: the splitter only engages when a per-key shuffle exists
+    // no broadcast: the points shuffle by key, so a hot key loads one
+    // reducer (AQE's skew join, not a split, handles it)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       (1 to 4).foreach { trial =>
         val hot = randomSid(r, 2 + r.nextInt(3)) // one hot cover cell
         val hotLevel = Sid.level(hot)
         // trial 3: an ANCESTOR cover cell overlapping the hot cell — its
-        // rungs hold the hot key too, so the split deepens both rows'
-        // rungs (rows in the hot key must still match the blanket cover)
+        // rungs hold the hot key too (rows in the hot key must still
+        // match the blanket cover)
         val blanket =
           if (trial == 3 && hotLevel > 0)
             Seq(("blanket", Seq((hot & Sid.clearMask(hotLevel - 1)) | (hotLevel - 1).toLong)))
           else Seq.empty
         // trial 4: a level-9 cell, finer than a quarter of the left sids
-        // (levels hotLevel+2..8), which key at their own level beside the
-        // split's deeper keys
+        // (levels hotLevel+2..8), which key at their own level
         val to = if (trial == 4) 9 else 6
         val covers = Seq(
           ("hot", Seq(hot, randomSid(r, to))),
           ("cold", Seq(randomSid(r, 3), randomSid(r, 5)))) ++ blanket
         // 4000 points in ONE level-`to` trixel of the hot cell (the
-        // unsplit join's hot key) at mixed finer levels, 500 elsewhere in
-        // the hot cell and 500 uniform: the 1% sample sees ~40 hot rows,
-        // estHot ~4000 ≫ the cap and the 2× fair-share gate at 4 partitions
+        // join's hot key) at mixed finer levels, 500 elsewhere in the hot
+        // cell and 500 uniform
         val spot = descendantOf(r, hot, to)
         val left = (0 until 4000).map { i =>
           (i.toLong, descendantOf(r, spot, to + 1 + r.nextInt(27 - to)))
@@ -331,24 +322,21 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
         val leftDf = left.toDF("lid", "sid")
         val rightDf = covers.toDF("rname", "sids")
-        // prove the fuzz exercises the split machinery, not the skip path
-        val spec = Skew.splitHotCellsWithSpec(leftDf, "sid", rightDf, "sids",
-          maxRowsPerCell = 100, sampleFraction = 1.0, wallClockGate = false)
-        assert(spec.skipReason.isEmpty && spec.hot.nonEmpty && spec.deep > to,
-          s"engineered skew did not engage the splitter: ${spec.skipReason}")
+        // a split request splits no key
+        val spec = Skew.splitHotCellsWithSpec(leftDf, "sid", rightDf, "sids", maxRowsPerCell = 100)
+        assert(spec.skipReason.isDefined && spec.hot.isEmpty, s"trial $trial: $spec")
         if (trial == 4)
-          assert(left.exists(p => Sid.level(p._2) < to), "trial 4 has no left sid coarser than the split's level")
+          assert(left.exists(p => Sid.level(p._2) < to), "trial 4 has no left sid coarser than the finest cover level")
         Seq("inner", "left").foreach { how =>
           val exp = expectedPairs(left, covers, how, coverContains)
-          val splitDf = Skew.shuffleJoin(leftDf, "sid", rightDf, "sids",
-            splitHot = Some(100L), how = how, wallClockGate = false)
-          assert(splitKeyed(splitDf), s"trial $trial how=$how: the join did not key by the split")
+          val splitDf = Skew.shuffleJoin(leftDf, "sid", rightDf, "sids", splitHot = Some(100L), how = how)
+          val unsplitDf = Skew.shuffleJoin(leftDf, "sid", rightDf, "sids", splitHot = None, how = how)
+          assert(SparkJobProbe.planText(splitDf) === SparkJobProbe.planText(unsplitDf),
+            s"trial $trial how=$how: a split request changed the plan")
           assert(observedPairs(splitDf) === exp, s"split shuffleJoin vs brute — trial=$trial how=$how hot=$hot")
-          // a split deepens the ladder: every row keeps one key, so a left
-          // join keys once
+          // the ladder gives every row one key, so a left join keys once
           assert(!joinBackRoute(splitDf), s"trial $trial how=$how took the pair/join-back")
-          val unsplit = observedPairs(Skew.shuffleJoin(leftDf, "sid", rightDf, "sids",
-            splitHot = None, how = how))
+          val unsplit = observedPairs(unsplitDf)
           assert(unsplit === exp, s"unsplit shuffleJoin vs brute — trial=$trial how=$how hot=$hot")
         }
       }

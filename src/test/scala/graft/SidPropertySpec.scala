@@ -177,7 +177,6 @@ class SidPropertySpec extends AnyFunSuite {
       val levels = cover.map(Sid.level)
       val to = levels.max
       def contains(sid: Long) = cover.exists(c => Sid.level(c) <= Sid.level(sid) && Sid.intersects(c, sid))
-      val rungsAtTo = Sid.ladder(cover, to, to)
       val uniform = Sid.expandToLevel(cover, to).length.toLong
       (1 to 20).foreach { _ =>
         // a descendant or ancestor of a cover cell, or a random sid
@@ -192,30 +191,17 @@ class SidPropertySpec extends AnyFunSuite {
             (cell & Sid.clearMask(k)) | k
           case _ => randSid(r)
         }
-        // a split: hot level-`to` keys (some of the cover's rungs, some
-        // the sid's own ancestor, some random) deepened to `deep`, or none
-        val hot =
-          if (to == Sid.MaxLevel || r.nextInt(4) == 0) Array.emptyLongArray
-          else {
-            (Seq.fill(r.nextInt(3))(rungsAtTo(r.nextInt(rungsAtTo.length))) ++
-              Option.when(Sid.level(sid) >= to && r.nextBoolean())(Sid.ladderKey(sid, to)) ++
-              Seq.fill(r.nextInt(2))(Sid.ladderKey(randSid(r), to)).filter(Sid.level(_) == to))
-              .distinct.sorted.toArray
-          }
-        val deep = math.min(Sid.MaxLevel, to + 1 + r.nextInt(3))
         // rungs from the coarsest cover level (nothing declared), or from
         // any declared minimum at or below the sid's level
-        for (from <- Seq(levels.min, r.nextInt(Sid.level(sid) + 1)); split <- Seq(false, true)) {
-          val (h, clue) = if (split) (hot, s" hot=${hot.map(Sid.hex).toSeq} deep=$deep") else (Array.emptyLongArray, "")
-          val ladder = Sid.ladder(cover, from, to, h, deep)
-          assert(ladder.contains(Sid.ladderKey(sid, to, h, deep)) === contains(sid),
-            s"sid=${Sid.hex(sid)} from=$from cover=${cover.map(Sid.hex).toSeq}$clue")
+        for (from <- Seq(levels.min, r.nextInt(Sid.level(sid) + 1))) {
+          val ladder = Sid.ladder(cover, from, to)
+          assert(ladder.contains(Sid.ladderKey(sid, to)) === contains(sid),
+            s"sid=${Sid.hex(sid)} from=$from cover=${cover.map(Sid.hex).toSeq}")
           val sorted = ladder.clone()
           java.util.Arrays.sort(sorted)
-          assert((1 until sorted.length).forall(i => sorted(i) != sorted(i - 1)), s"duplicate rungs$clue")
-          assert(ladder.length.toLong === levels.map(Sid.ladderRungs(_, from, to)).sum +
-            cover.map(Sid.keysWithin(h, _)).sum * (if (h.isEmpty) 0L else Sid.ladderRungs(to, to, deep) - 1), clue)
-          if (!split) assert(ladder.length * 3L <= uniform * 4L)
+          assert((1 until sorted.length).forall(i => sorted(i) != sorted(i - 1)), "duplicate rungs")
+          assert(ladder.length.toLong === levels.map(Sid.ladderRungs(_, from, to)).sum)
+          assert(ladder.length * 3L <= uniform * 4L)
         }
       }
     }

@@ -3,10 +3,11 @@ package graft
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted,
   SparkListenerUnpersistRDD}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Records the Spark jobs and stages started while a block runs, each
-  * stage with its job's description, and the RDDs unpersisted meanwhile. */
+  * stage with its job's description, and how many RDDs made meanwhile were
+  * also unpersisted meanwhile. */
 object SparkJobProbe {
 
   /** One submitted stage: the SQL execution it belongs to ("none" outside
@@ -26,6 +27,10 @@ object SparkJobProbe {
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[Stage]
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val unpersisted = new java.util.concurrent.atomic.AtomicInteger()
+    // RDD ids grow by one per RDD, so an empty RDD made now bounds every
+    // RDD the body makes from below; an unpersist of an older RDD (the
+    // ContextCleaner collecting one an earlier caller persisted) is not the body's.
+    val firstRddId = spark.sparkContext.emptyRDD[Unit].id
     def prop(p: java.util.Properties, k: String, default: String) =
       Option(p).flatMap(q => Option(q.getProperty(k))).getOrElse(default)
     val listener = new SparkListener {
@@ -33,7 +38,8 @@ object SparkJobProbe {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         stages.add(Stage(prop(e.properties, "spark.sql.execution.id", "none"),
           prop(e.properties, "spark.job.description", ""), e.stageInfo.numTasks))
-      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = unpersisted.incrementAndGet()
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        if (e.rddId >= firstRddId) unpersisted.incrementAndGet()
     }
     org.apache.spark.sql.graft.shim.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
@@ -44,4 +50,10 @@ object SparkJobProbe {
     } finally spark.sparkContext.removeSparkListener(listener)
     (out, Record(stages.asScala.toVector, jobs.get(), unpersisted.get()))
   }
+
+  /** A frame's physical plan before AQE as text, without what differs
+    * between two builds of one plan: expression ids and the counters of
+    * lambda variables. */
+  def planText(df: DataFrame): String =
+    df.queryExecution.sparkPlan.toString.replaceAll("#\\d+L?", "").replaceAll("\\b(x|elementAt)_\\d+", "$1")
 }
