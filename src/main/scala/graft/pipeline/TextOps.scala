@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Training-data text operators over the `documents`/webtext tables:
@@ -315,55 +315,42 @@ object TextOps {
   /** Connected components over a duplicate-pair graph -> canonical id
     * per document (the step AFTER pair generation in a dedup pipeline:
     * near-dup pairs chain A~B~C, and the kept document must be chosen
-    * per COMPONENT, not per pair). Distributed min-label propagation:
-    * every node starts as its own label; each round pulls the minimum
-    * neighbor label; fixpoint when no label changes. Rounds are bounded
-    * by the component diameter — near-dup components are dense
-    * (near-cliques through shared buckets), so convergence is fast; the
-    * iteration cap guards pathological chains and is logged if hit.
-    * No driver-side union-find: state is a (id, label) frame, each
-    * round one join + one aggregation, checkpoint-free because the
-    * label frame is re-persisted and the old cache released per round.
+    * per COMPONENT, not per pair). A pair graph of at most
+    * `localEdgeCap` directed edges is union-found on the driver: a
+    * LocalRelation's pairs are already there, so that costs no Spark
+    * job; any other frame is counted, then collected if it fits (the
+    * cap bounds driver memory at ~16 B/edge). Above the cap (or with
+    * `localEdgeCap = 0`), distributed min-label propagation: every node
+    * starts as its own label; each round pulls the minimum neighbor
+    * label; fixpoint when no label changes. Rounds are bounded by the
+    * component diameter — near-dup components are dense (near-cliques
+    * through shared buckets), so convergence is fast; the iteration cap
+    * guards pathological chains and is logged if hit. Propagation state
+    * is a (id, label) frame, each round one join + one aggregation,
+    * checkpoint-free because the label frame is re-persisted and the
+    * old cache released per round.
     *
     * Returns (id, cluster_id) where cluster_id = min id reachable. */
   def dupClusters(pairs: DataFrame, aCol: String, bCol: String,
                   maxIter: Int = 25, localEdgeCap: Long = 500000L): DataFrame = {
     val spark = pairs.sparkSession
+    val ab = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+    if (org.apache.spark.sql.graft.shim.isLocalRelation(pairs)) {
+      val es = ab.collect().flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Seq((a, b), (b, a))
+      }.distinct
+      if (es.length <= localEdgeCap) return unionFind(spark, es)
+    }
     val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val edges = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
+    val edges = ab.unionByName(ab.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist()
     persisted += edges
-    // Small-graph fast path (the q15 In-pushdown pattern): a dedup pair
-    // graph under the cap collects once and union-finds on the driver —
-    // one action instead of 2 per propagation round. The distributed
-    // propagation below is the scale path for pair graphs that do not
-    // fit a driver collect (the cap bounds memory at ~16 B/edge).
-    val edgeCount = edges.count()
-    if (edgeCount <= localEdgeCap) {
+    if (edges.count() <= localEdgeCap) {
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
       edges.unpersist(false)
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      import spark.implicits._
-      // snapshot the keys before mapping: find() path-compresses into the
-      // same HashMap, and iterating a map while mutating it (even
-      // value-only updates) is not contractually defined behavior
-      val ks = parent.keysIterator.toArray
-      return ks.map(id => (id, find(id))).toSeq.sorted
-        .toDF("id", "cluster_id")
+      return unionFind(spark, es)
     }
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster_id", col("id"))
@@ -394,6 +381,30 @@ object TextOps {
     result.count()
     persisted.foreach(_.unpersist(false))
     result
+  }
+
+  /** Driver-side union-find over an edge list: (id, min id of its
+    * component) as a local frame. */
+  private def unionFind(spark: SparkSession, es: Array[(Long, Long)]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    es.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    import spark.implicits._
+    // snapshot the keys before mapping: find() path-compresses into the
+    // same HashMap, and iterating a map while mutating it (even
+    // value-only updates) is not contractually defined behavior
+    val ks = parent.keysIterator.toArray
+    ks.map(id => (id, find(id))).toSeq.sorted.toDF("id", "cluster_id")
   }
 
   /** SimHash (64-bit) over word hashes: per-bit majority vote of the

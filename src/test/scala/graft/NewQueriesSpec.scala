@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.core.{Htm, Sid}
+import graft.pipeline.TextOps
 
 /** Specs for the q33-q37 driver queries added in round 3: the soundness
   * properties the DuckDB oracles rely on (prune ⊇ decide), plus smoke
@@ -67,6 +68,64 @@ class NewQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
          lat <- (-90 to 90).map(_.toDouble); lon <- (-180 to 180).map(_.toDouble))
       assert(SparkEntry.sharedBoxes(a, b).exists(inBox(_, lat, lon)) === (inBox(a, lat, lon) && inBox(b, lat, lon)),
         s"${a.name}|${b.name} ($lat, $lon)")
+  }
+
+  test("regionCover is keyed by the region, not its name") {
+    val brazil = SparkEntry.regionCover(SparkEntry.region("brazil"))
+    val other = SparkEntry.regionCover(SparkEntry.Region("brazil", 0, 10, 0, 10))
+    assert(Sid.anyIntersects(Array(Htm.latLonToSid(5, 5, 26)), Sid.mergedIntervals(other)))
+    assert(!(other sameElements brazil))
+  }
+
+  test("q15/q45 answer from the table as it is now: a rewritten documents.parquet gets new pairs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    def text(words: Int) = Seq.fill(words)(s"w${rnd.nextInt(1000000)}").mkString(" ")
+    // 30 unrelated 40-word texts, then each planted (id -> source id)
+    // becomes its source's text plus one word: J = 38/39 per link
+    def table(planted: Seq[(Long, Long)]): Seq[(Long, String)] = {
+      val ts = scala.collection.mutable.LinkedHashMap((1L to 30L).map(_ -> text(40)): _*)
+      planted.foreach { case (id, src) => ts(id) = ts(src) + " " + text(1) }
+      ts.toSeq
+    }
+    def bruteForce(docs: Seq[(Long, String)]): (Map[(Long, Long), Double], Map[Long, Long]) = {
+      val d = docs.toDF("doc_id", "text")
+      val pairs = d.select(col("doc_id").as("a"), col("text").as("ta"))
+        .crossJoin(d.select(col("doc_id").as("b"), col("text").as("tb")))
+        .filter(col("a") < col("b"))
+        .select(col("a"), col("b"), TextOps.shingleJaccard(col("ta"), col("tb")).as("j"))
+        .filter(col("j") >= 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      // components: label each node by the min id reachable
+      var label = pairs.keys.flatMap { case (a, b) => Seq(a -> a, b -> b) }.toMap
+      var moved = true
+      while (moved) {
+        val next = pairs.keys.foldLeft(label) { case (l, (a, b)) =>
+          val m = math.min(l(a), l(b)); l.updated(a, m).updated(b, m)
+        }
+        moved = next != label; label = next
+      }
+      (pairs, label)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-dups").toString
+    try {
+      // the second table plants a chain 9~2~25 on other ids
+      for ((planted, expected) <- Seq(
+        Seq(17L -> 4L) -> Set((4L, 17L)),
+        Seq(2L -> 9L, 25L -> 2L) -> Set((2L, 9L), (2L, 25L), (9L, 25L)))) {
+        val docs = table(planted)
+        docs.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        val (pairs, clusters) = bruteForce(docs)
+        assert(pairs.keySet === expected)
+        val q15 = SparkEntry.queries("q15_minhash_dups")(spark, dir).collect()
+          .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+        assert(q15.keySet === pairs.keySet)
+        q15.foreach { case (p, j) => assert(math.abs(j - pairs(p)) < 1e-6, s"$p") }
+        val q45 = SparkEntry.queries("q45_dup_clusters")(spark, dir).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(q45 === clusters)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("q34 soundness: every point satisfying the ellipse predicate intersects the prune cover") {

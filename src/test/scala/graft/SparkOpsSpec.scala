@@ -251,8 +251,13 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // propagate transitively, not just one hop), {5,6}, {7,8}
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 6L), (8L, 7L)).toDF("doc_a", "doc_b")
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    val got = TextOps.dupClusters(pairs, "doc_a", "doc_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // a toDF frame is a LocalRelation: its pairs are union-found on the
+    // driver, and neither the call nor collecting its answer runs a job
+    val (got, rec) = SparkJobProbe.record(spark) {
+      TextOps.dupClusters(pairs, "doc_a", "doc_b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(rec.jobs === 0)
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 7L))
     // intermediates are released: relative to the suite session's
